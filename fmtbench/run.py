@@ -17,7 +17,9 @@ The last line of stdout is one JSON object with the keys `correct`,
 `attempted`, `failed` and `metrics`. `--trace 0` reports the end-to-end
 metrics; `--trace 1` turns on spans and listeners and reports the
 per-layer metrics, and writes the full trace (spans, per-layer self
-time, every layer metric) to .bench_build/fmtbench/traces/.
+time, every layer metric) to .bench_build/fmtbench/traces/. A traced
+run first makes an untraced run of the same seed; the difference of
+their end-to-end figures is the tracing overhead.
 """
 import argparse
 import glob
@@ -25,6 +27,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -41,7 +44,8 @@ WORKLOADS = ("ingest", "analytics", "cdc_upsert")
 # sizes task parallelism; 4 keeps runs comparable on a 4-core host.
 CORES = 4
 JVM_HEAP = "3g"
-RUN_TIMEOUT_S = 170
+# all measured JVMs of one invocation (two when tracing) end within this
+RUN_TIMEOUT_S = 172
 BUILD_TIMEOUT_S = 700
 
 ADD_OPENS = [
@@ -144,7 +148,7 @@ def build(jars):
     return out
 
 
-def run_jvm(jars, build_dir, args, trace):
+def run_jvm(jars, build_dir, args, trace, deadline):
     """One measured run in a fresh JVM; returns its result document."""
     work = os.path.join(BUILD_ROOT, f"run-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -161,11 +165,14 @@ def run_jvm(jars, build_dir, args, trace):
         with open(log, "w") as lf:
             p = subprocess.Popen(cmd, stdout=lf, stderr=subprocess.STDOUT)
             try:
-                rc = p.wait(timeout=RUN_TIMEOUT_S)
+                rc = p.wait(timeout=max(1.0, deadline - time.time()))
             except subprocess.TimeoutExpired:
-                p.kill()
-                p.wait()
                 rc = None
+            finally:
+                # also on SIGTERM: never leave the JVM behind
+                if p.poll() is None:
+                    p.kill()
+                    p.wait()
         if rc != 0 or not os.path.exists(result):
             with open(log, errors="replace") as lf:
                 sys.stderr.write(lf.read()[-6000:])
@@ -176,37 +183,6 @@ def run_jvm(jars, build_dir, args, trace):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def untraced_e2e(jars, build_dir, args):
-    """End-to-end figures of an untraced run of the same workload and run
-    length, for the tracing overhead: the same seed's if an earlier run
-    in this checkout saved one, else the latest one's, else a fresh run."""
-    saved = os.path.join(BUILD_ROOT, "untraced", f"{args.workload}-{args.seconds}s.json")
-    runs = {}
-    if os.path.exists(saved):
-        with open(saved) as fh:
-            runs = json.load(fh)
-    if str(args.seed) in runs:
-        return args.seed, runs[str(args.seed)]
-    if runs:
-        seed = max(runs, key=lambda s: runs[s]["at"])
-        return int(seed), runs[seed]
-    return args.seed, save_untraced(args, run_jvm(jars, build_dir, args, 0))
-
-
-def save_untraced(args, res):
-    saved = os.path.join(BUILD_ROOT, "untraced", f"{args.workload}-{args.seconds}s.json")
-    os.makedirs(os.path.dirname(saved), exist_ok=True)
-    runs = {}
-    if os.path.exists(saved):
-        with open(saved) as fh:
-            runs = json.load(fh)
-    entry = dict(res["e2e"], at=time.time())
-    runs[str(args.seed)] = entry
-    with open(saved, "w") as fh:
-        json.dump(runs, fh)
-    return entry
-
-
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
@@ -214,28 +190,29 @@ def main():
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if args.seconds < 1:
         fail("--seconds must be at least 1")
 
     jars = spark_jars()
     build_dir = build(jars)
+    deadline = time.time() + RUN_TIMEOUT_S
     if args.trace:
-        base_seed, base = untraced_e2e(jars, build_dir, args)
-    res = run_jvm(jars, build_dir, args, args.trace)
-    if not args.trace:
-        save_untraced(args, res)
+        # the reference for the tracing overhead: the same seed and build, untraced
+        base = run_jvm(jars, build_dir, args, 0, deadline)["e2e"]
+    res = run_jvm(jars, build_dir, args, args.trace, deadline)
 
     for line in res.get("report", []):
         print(line)
     if args.trace:
         over = {k: res["e2e"][k] - base[k] for k in res["e2e"] if k in base}
-        print(f"  tracing overhead (traced seed {args.seed} minus untraced seed {base_seed}):")
+        print(f"  tracing overhead (traced minus untraced run of seed {args.seed}):")
         for k in sorted(over):
             print(f"    {k:<14} {over[k]:+.4f} ({over[k] / base[k] * 100 if base[k] else 0:+.1f}%)")
         trace_file = os.path.join(BUILD_ROOT, "traces", f"{args.workload}-seed{args.seed}.json")
         with open(trace_file) as fh:
             doc = json.load(fh)
-        doc["tracing_overhead"] = {"untraced_seed": base_seed, "untraced_e2e": base,
+        doc["tracing_overhead"] = {"untraced_e2e": base,
                                    "traced_minus_untraced": over}
         with open(trace_file, "w") as fh:
             json.dump(doc, fh)

@@ -18,7 +18,8 @@ import scala.collection.mutable
   *  - read: one aggregate over `events`, which must apply the live
   *    delete files.
   * Every [[MaintEvery]] cycles, `rewrite_position_deletes` and
-  * `expire_snapshots` run (timed on their own, not in the cycle).
+  * `expire_snapshots` run (timed on their own, not in the cycle). The
+  * window is a fixed number of cycles ([[windowOps]]).
   *
   * A change that makes DML cheaper by moving work onto reads shows up
   * in the read time. The final table is compared with an in-memory
@@ -28,6 +29,8 @@ import scala.collection.mutable
   */
 final class CdcUpsert(spark: SparkSession, rec: Recorder, seed: Long) extends Workload {
   private val Rows = 100000
+  // the first set-up also pays JVM warm-up: five keep it off the median
+  override def setupReps: Int = 5
   private val MaintEvery = 4
   private val rnd = new java.util.SplittableRandom(seed)
   private var cat = ""
@@ -70,7 +73,7 @@ final class CdcUpsert(spark: SparkSession, rec: Recorder, seed: Long) extends Wo
 
   private var warmCkpt = ""
 
-  /** On its own small table: one DML of each kind, each followed by a
+  /** On its own small table: two DMLs of each kind, each followed by a
     * CDC drain and a MOR read. */
   override def warmup(): Unit = {
     val w = s"$cat.cdc.warm"
@@ -78,7 +81,7 @@ final class CdcUpsert(spark: SparkSession, rec: Recorder, seed: Long) extends Wo
     spark.table("fmtbench_initial").filter(col("id") < 2000).writeTo(w).append()
     val warmModel = mutable.LongMap[Row]()
     val wq = consumer(w, s"$cat.cdc.warm_log", warmCkpt, 0L)
-    try Seq(0, 1, 2).foreach { kind =>
+    try Seq(0, 1, 2, 0, 1, 2).foreach { kind =>
       rec.op("warmup", "dml")(dml(w, kind, wr, warmModel, 2000L))
       rec.op("warmup", "drain")(drain(wq))
       rec.op("warmup", "read")(Trace.query("mor-read")(spark.sql(readSql(w))))
@@ -192,6 +195,12 @@ final class CdcUpsert(spark: SparkSession, rec: Recorder, seed: Long) extends Wo
   /** DML kinds in a fixed order (2 MERGE, 2 UPDATE, 1 DELETE per 5), so
     * every run has the same shares; keys and values come from the seed. */
   private val Mix = Seq(0, 1, 2, 0, 1)
+
+  /** Whole mix periods, 2 cycles per 5 s of `--seconds` (10 at 25 s):
+    * with a time window, a run's median would fall on whichever DML
+    * kind its last few cycles added. */
+  override def windowOps(seconds: Int): Option[Int] =
+    Some((math.round(seconds * 2.0 / 5 / Mix.size).toInt max 1) * Mix.size)
 
   override def step(): Unit = {
     val kind = Mix(cycles % Mix.size)

@@ -9,7 +9,8 @@ import scala.collection.mutable
   * Protocol: build the workload's tables [[Workload.setupReps]] times
   * (fresh warehouse each time, timed; the median is `setup_s`), warm
   * up once, untimed, then run the closed loop — one client thread, next operation only after
-  * the previous one returned — until `--seconds` have elapsed, then
+  * the previous one returned — until `--seconds` have elapsed, or
+  * until a fixed-work workload has made its [[Workload.windowOps]], then
   * check every output against its oracle and take the end-of-run
   * measurements (space, live heap, and with `--trace 1` the per-layer
   * probes). The result goes to `--out` as JSON; `run.py` prints it.
@@ -117,13 +118,18 @@ object Main {
     rec.measuring = true
     val cpu0 = Jvm.cpuMs()
     val t0 = System.nanoTime()
-    val deadline = t0 + a.seconds * 1000000000L
-    while (System.nanoTime() < deadline) wl.step()
-    val windowS = (System.nanoTime() - t0) / 1e9
+    val target = wl.windowOps(a.seconds)
+    def elapsedS = (System.nanoTime() - t0) / 1e9
+    // a fixed-work window that takes 4x its nominal time ends short,
+    // and the shortfall is a failure
+    while (target.fold(elapsedS < a.seconds)(n => rec.count("op") < n && elapsedS < 4 * a.seconds))
+      wl.step()
+    val windowS = elapsedS
     val windowCpuMs = Jvm.cpuMs() - cpu0
     rec.measuring = false
 
-    val mismatches = wl.verify()
+    val mismatches = wl.verify() ++ target.filter(rec.count("op") < _)
+      .map(n => s"window made ${rec.count("op")} of its $n operations")
     val layers = if (a.trace) wl.layerProbes() else Map.empty[String, Double]
     val spaceAmp = wl.spaceAmp()
     val heapMb = Jvm.liveHeapMb()
@@ -134,14 +140,14 @@ object Main {
     val (tailV, tailPct, tailN) = Stats.tail(primary)
     val e2e: Map[String, (Double, String)] = Map(
       "setup_s" -> (Stats.median(setups) -> "s"),
-      "ops_per_s" -> ((primary.size / (rec.busyMs("op") / 1000.0)) -> "1/s"),
+      "ops_per_s" -> ((primary.size / windowS) -> "1/s"),
       "op_p50_ms" -> (Stats.median(primary) -> "ms"),
       "op_tail_ms" -> (tailV -> "ms"),
       "follow_p50_ms" -> (Stats.median(s.getOrElse("follow", Nil)) -> "ms"),
       "read_p50_ms" -> (Stats.median(s.getOrElse("read", Nil)) -> "ms"),
       "space_amp" -> (spaceAmp -> "ratio"),
       "live_heap_mb" -> (heapMb -> "MB"))
-    val attempted = rec.attempted + wl.oracleChecks
+    val attempted = rec.attempted + wl.oracleChecks + target.size
     val failed = rec.failed + mismatches.size
     val counts = s.map { case (k, v) => k -> v.size }
     val report = mutable.ArrayBuffer[String]()
@@ -186,6 +192,10 @@ trait Workload {
   /** Untimed, once before set-up: inputs the oracle needs beside the program's. */
   def prepare(work: Path): Unit = ()
   def setup(warehouse: Path, rep: Int): Unit
+  /** A workload whose samples depend on how far its history or its op
+    * mix got runs a fixed amount of work instead of `--seconds`: this
+    * many primary operations (class `op`), sized from `--seconds`. */
+  def windowOps(seconds: Int): Option[Int] = None
   /** One step of the closed loop; records its timed operations in the [[Recorder]]. */
   def step(): Unit
   /** Oracle checks after the window: one message per mismatch. */
@@ -221,7 +231,8 @@ final class Recorder(val spark: SparkSession) {
   val maint = mutable.Map[String, Double]().withDefaultValue(0.0)
 
   def samples: Map[String, Seq[Double]] = lat.map { case (k, v) => k -> v.toSeq }.toMap
-  def busyMs(cls: String): Double = lat.get(cls).map(_.sum).getOrElse(0.0)
+  /** Successful operations of class `cls` in the window so far. */
+  def count(cls: String): Int = lat.get(cls).map(_.size).getOrElse(0)
   def currentOp: Option[String] = current
 
   /** Time `body` as one operation of class `cls`. Outside the window the
@@ -345,9 +356,9 @@ object Fs {
 object Json {
   def write(v: Any): String = v match {
     case null => "null"
-    case m: Map[_, _] =>
+    case m: scala.collection.Map[_, _] =>
       m.toSeq.map { case (k, x) => quote(k.toString) + ":" + write(x) }.mkString("{", ",", "}")
-    case s: Seq[_] => s.map(write).mkString("[", ",", "]")
+    case s: scala.collection.Seq[_] => s.map(write).mkString("[", ",", "]")
     case s: String => quote(s)
     case b: Boolean => b.toString
     case d: Double => if (d.isNaN || d.isInfinite) "null" else BigDecimal(d).bigDecimal.toPlainString
