@@ -159,12 +159,8 @@ class GraftTable(
     * schema drift O(1) on a 100 TB table. Anything else (narrowing,
     * incompatible types) is refused loudly. A no-op when the schemas
     * already agree. OCC-committed; returns the table to write against. */
-  def mergedForWrite(incoming: StructType): GraftTable = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val (v, m) = ops.refresh()
-        .getOrElse(throw new IllegalStateException(s"table ${name()} vanished"))
+  def mergedForWrite(incoming: StructType): GraftTable =
+    ops.commitRetrying("merge-schema") { (v, m) =>
       val byName = m.schema.fields.map(f => f.name -> f).toMap
       var lastId = m.lastColumnId
       var changed = false
@@ -189,22 +185,17 @@ class GraftTable(
                 "widens the other")
         }
       }
-      if (!changed) return new GraftTable(catalogName, ident, ops, m, v)
-      val sid = m.currentSchemaId + 1
-      val next = m.copy(
-        lastUpdatedMs = System.currentTimeMillis(),
-        lastColumnId = lastId,
-        currentSchemaId = sid,
-        schemas = m.schemas :+ SchemaDef(sid, fields))
-      try {
-        val v2 = ops.commit(v, next)
-        return new GraftTable(catalogName, ident, ops, next, v2)
-      } catch {
-        case _: CommitFailedException => // refresh + retry
+      if (!changed) TableOps.Done(new GraftTable(catalogName, ident, ops, m, v))
+      else {
+        val sid = m.currentSchemaId + 1
+        val next = m.copy(
+          lastUpdatedMs = System.currentTimeMillis(),
+          lastColumnId = lastId,
+          currentSchemaId = sid,
+          schemas = m.schemas :+ SchemaDef(sid, fields))
+        TableOps.Commit(next, v2 => new GraftTable(catalogName, ident, ops, next, v2))
       }
     }
-    throw new CommitFailedException("merge-schema: commit retries exhausted")
-  }
 
   def readSnapshot: Option[Snapshot] =
     pinnedSnapshot.flatMap(meta.snapshot).orElse(meta.currentSnapshot)

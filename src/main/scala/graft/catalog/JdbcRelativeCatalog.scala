@@ -1,10 +1,9 @@
 package graft.catalog
 
 import graft.meta.TableMeta
-import java.nio.file.{Files, Paths}
 import java.sql.{Connection, DriverManager, SQLException}
 import java.util
-import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NonEmptyNamespaceException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
@@ -17,14 +16,20 @@ import scala.jdk.CollectionConverters._
   *
   *  - bootstrap DDL creates the catalog + namespace-properties tables
   *    if missing (ref JdbcRelativeCatalog.java:119-155)
-  *  - commits CAS the pointer row
+  *  - commits run the shared half of [[TableOps.commit]] unchanged
+  *    (relative-path checks, chunk/list spill, metadata codec, cleanup
+  *    of a lost attempt); only the commit point differs
+  *    ([[JdbcTableOps]]): the temp file moves to a unique
+  *    `v<N>-<tag>[.gz].metadata.json`, then the pointer row is
+  *    INSERTed (create) or CASed
   *    (`UPDATE … SET metadata_location=? WHERE metadata_location=?`) —
   *    losers see 0 updated rows → CommitFailedException and retry
   *  - namespaces are property rows with an `exists` marker
   *    (ref :297-311); namespace properties ARE persisted (C5,
   *    ref :405-457), unlike the path catalog
-  *  - renameTable is a guarded UPDATE; a primary-key violation maps to
-  *    TableAlreadyExists (ref :247-284)
+  *  - renameTable is the path catalog's, committing the remapped
+  *    metadata as a new version; its commit point is the guarded row
+  *    UPDATE that also moves the row's name (ref :247-284)
   *
   * Default store is embedded Derby under the warehouse; any JDBC url
   * works via the `uri` option.
@@ -151,12 +156,24 @@ class JdbcRelativeCatalog extends RelativeCatalog {
 
   private def nsKey(ns: Seq[String]): String = ns.mkString("/")
 
-  /** Pointer-CAS table operations: metadata files keep the vN naming,
-    * but currency is the DB row, not version-hint.text. */
-  class JdbcTableOps(location: String, nsStr: String, tblName: String)
+  /** The TABLE row for a new table (V1 stores tag it 'TABLE'). */
+  private def insertTableRow(ns: String, tbl: String, metadataLocation: String): Int =
+    if (isV1) update(
+      "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'TABLE')",
+      name(), ns, tbl, metadataLocation)
+    else update(
+      "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location) VALUES (?,?,?,?,NULL)",
+      name(), ns, tbl, metadataLocation)
+
+  /** Pointer-CAS table operations: metadata files keep the vN naming
+    * (plus a per-attempt tag), but currency is the DB row, not
+    * version-hint.text. `movesTo` (rename) makes the commit point's
+    * CAS also move the row to that identifier. */
+  class JdbcTableOps(location: String, nsStr: String, tblName: String,
+      movesTo: Option[Identifier] = None)
     extends TableOps(warehouse, location) {
 
-    private def pointer: Option[String] =
+    private[graft] def pointer: Option[String] =
       queryList(
         "SELECT metadata_location FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=?" + tableRowCond,
         name(), nsStr, tblName)(_.getString(1)).headOption
@@ -173,50 +190,38 @@ class JdbcRelativeCatalog extends RelativeCatalog {
         graft.meta.RelPaths.absolutize(warehouse, loc))))
     }
 
-    override def commit(base: Int, meta: TableMeta): Int = {
-      require(!meta.location.startsWith("/") && !meta.location.contains(":/"),
-        s"table location must be warehouse-relative: ${meta.location}")
-      Io.mkdirs(metadataDir)
-      // unique filename per attempt: a losing committer must only ever
-      // delete its OWN file, never the winner's
-      val unique = s"v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}.metadata.json"
-      val target = s"$metadataDir/$unique"
-      val (json, newManifests) = spillAndSerialize(meta)
-      def loseCleanup(): Unit = {
-        Io.deleteIfExists(target)
-        newManifests.foreach(Io.deleteIfExists)
-      }
-      Io.writeString(target, json)
-      val newLoc = s"$location/metadata/$unique"
-      val prevLoc = pointer.orNull
-      if (base != 0 && (prevLoc == null || versionOf(prevLoc) != base)) {
-        loseCleanup()
+    /** Unique file per attempt (a losing committer only ever deletes
+      * its OWN file, never the winner's), then one pointer INSERT
+      * (base 0) or CAS UPDATE. An integrity violation — a racer's row
+      * under the same name — is a lost race like a failed CAS. */
+    override protected def commitPoint(base: Int, tmp: String, gzip: Boolean): Unit = {
+      val prevLoc = pointer
+      if (prevLoc.map(versionOf).getOrElse(0) != base)
         throw new CommitFailedException(s"stale base $base for $nsStr.$tblName")
-      }
+      val unique = s"v${base + 1}-${java.util.UUID.randomUUID().toString.take(8)}" +
+        (if (gzip) ".gz" else "") + ".metadata.json"
+      val target = s"$metadataDir/$unique"
+      if (!Io.renameNoReplace(tmp, target))
+        throw new CommitFailedException(s"metadata file $unique already exists")
+      val newLoc = s"$location/metadata/$unique"
+      val (move, moveArgs) = movesTo.fold(("", Seq.empty[String]))(i =>
+        ("table_namespace=?, table_name=?, ", Seq(nsKey(i.namespace().toSeq), i.name())))
       val changed =
-        if (base == 0) {
-          try {
-            if (isV1) update(
-              "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'TABLE')",
-              name(), nsStr, tblName, newLoc)
-            else update(
-              "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location) VALUES (?,?,?,?,NULL)",
-              name(), nsStr, tblName, newLoc)
-          }
-          catch { case e: SQLException =>
-            loseCleanup()
-            throw new CommitFailedException(s"create race: ${e.getMessage}")
-          }
-        } else update(
-          "UPDATE graft_tables SET metadata_location=?, previous_metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=? AND metadata_location=?",
-          newLoc, prevLoc, name(), nsStr, tblName, prevLoc)
-      // (CAS: 0 rows changed = another writer moved the pointer first)
+        try prevLoc match {
+          case None => insertTableRow(nsStr, tblName, newLoc)
+          case Some(prev) => update(
+            s"UPDATE graft_tables SET ${move}metadata_location=?, previous_metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=? AND metadata_location=?",
+            moveArgs ++ Seq(newLoc, prev, name(), nsStr, tblName, prev): _*)
+        } catch {
+          case e: SQLException if Option(e.getSQLState).exists(_.startsWith("23")) =>
+            Io.deleteIfExists(target)
+            throw new CommitFailedException(s"$nsStr.$tblName: ${e.getMessage}")
+        }
       if (changed != 1) {
-        loseCleanup()
+        Io.deleteIfExists(target)
         throw new CommitFailedException(
           s"concurrent update to $nsStr.$tblName (pointer CAS failed)")
       }
-      base + 1
     }
   }
 
@@ -352,74 +357,14 @@ class JdbcRelativeCatalog extends RelativeCatalog {
     } else false
   }
 
-  /** Guarded catalog-row UPDATE; PK violation → AlreadyExists
-    * (ref JdbcRelativeCatalog.java:247-284). The data directory moves
-    * with it and embedded relative paths are rewritten. */
-  override def renameTable(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
-    val newIdent =
-      if (rawNewIdent.namespace().headOption.contains(name()))
-        Identifier.of(rawNewIdent.namespace().drop(1), rawNewIdent.name())
-      else rawNewIdent
-    if (!tableExists(oldIdent)) throw new NoSuchTableException(oldIdent)
-    if (tableExists(newIdent)) throw new TableAlreadyExistsException(newIdent)
-    if (isV1 && viewExists(newIdent)) throw new TableAlreadyExistsException(newIdent)
-    val from = dirOf(oldIdent.namespace().toSeq :+ oldIdent.name())
-    val to = dirOf(newIdent.namespace().toSeq :+ newIdent.name())
-    Io.mkdirs(to.substring(0, to.lastIndexOf('/')))
-    if (!Io.renameNoReplace(from, to)) throw new TableAlreadyExistsException(newIdent)
-    val prefixOld = tableLocation(oldIdent)
-    val prefixNew = tableLocation(newIdent)
-    def remap(p: String) = if (p.startsWith(prefixOld)) prefixNew + p.stripPrefix(prefixOld) else p
-    try {
-      // rewrite the metadata under the moved directory (raw parse —
-      // spilled prefixes stay spilled; their chunk files are remapped
-      // in place below)
-      RelativeCatalog.remapManifestContents(s"$to/metadata", remap)
-      val loc = queryList(
-        "SELECT metadata_location FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=?",
-        name(), nsKey(oldIdent.namespace().toSeq), oldIdent.name())(_.getString(1)).head
-      val metaPath = graft.meta.RelPaths.absolutize(warehouse, remap(loc))
-      val meta = TableMeta.fromJson(Io.readString(metaPath))
-      // list-spilled snapshots: MATERIALIZE the stamps from the moved
-      // directory first (the raw pointer still carries the old prefix;
-      // remap resolves it to the moved file), strip the old-reader
-      // sentinel, remap the stamp paths with everything else, then
-      // re-spill through the NEW location's TableOps so the rewritten
-      // metadata points at freshly content-addressed lists under the
-      // new prefix — without this, the pointer keeps naming the
-      // pre-rename location and every refresh after the move fails
-      val materialized = meta.snapshots.map { s =>
-        s.manifestList match {
-          case Some(p) =>
-            val abs = graft.meta.RelPaths.absolutize(warehouse, remap(p))
-            s.copy(
-              manifests = graft.meta.TableMeta.stampsFromJson(Io.readString(abs)) ++
-                s.manifests.filterNot(_.path == p),
-              manifestList = None)
-          case None => s
-        }
-      }
-      val opsNew = new TableOps(warehouse, prefixNew)
-      Io.writeString(metaPath, TableMeta.toJson(meta.copy(
-        location = prefixNew,
-        snapshots = materialized.map(s =>
-          opsNew.spillStampList(s.copy(
-            files = s.files.map(f => f.copy(path = remap(f.path))),
-            deleteFiles = s.deleteFiles.map(f => f.copy(path = remap(f.path))),
-            manifests = s.manifests.map(m => m.copy(path = remap(m.path))),
-            deleteManifests = s.deleteManifests.map(m => m.copy(path = remap(m.path)))))),
-        metadataLog = meta.metadataLog.map(e => e.copy(metadataFile = remap(e.metadataFile))))))
-      val n = update(
-        "UPDATE graft_tables SET table_namespace=?, table_name=?, metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=?",
-        nsKey(newIdent.namespace().toSeq), newIdent.name(), remap(loc),
-        name(), nsKey(oldIdent.namespace().toSeq), oldIdent.name())
-      if (n != 1) throw new IllegalStateException("rename row update failed")
-    } catch {
-      case e: SQLException =>
-        Io.renameNoReplace(to, from)
-        throw new TableAlreadyExistsException(newIdent)
-    }
-  }
+  /** The rename's commit point: the remapped metadata lands as a new
+    * version under the moved directory through the normal commit path,
+    * with the pointer CAS also moving the row to the new name
+    * (ref JdbcRelativeCatalog.java:247-284). */
+  override protected def commitRename(oldIdent: Identifier, newIdent: Identifier,
+      base: Int, meta: TableMeta): Unit =
+    new JdbcTableOps(tableLocation(newIdent), nsKey(oldIdent.namespace().toSeq),
+      oldIdent.name(), movesTo = Some(newIdent)).commit(base, meta): Unit
 
   /** Attach an EXISTING on-disk table to this catalog — Iceberg's
     * `register_table`, the disaster-recovery path when the warehouse
@@ -460,14 +405,8 @@ class JdbcRelativeCatalog extends RelativeCatalog {
     require(Io.exists(abs), s"metadata file not found: $metadataLocation")
     ops.parseMeta(ops.readMetadataString(abs)) // must parse, or refuse
     try {
-      val n =
-        if (isV1) update(
-          "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'TABLE')",
-          name(), nsKey(ident.namespace().toSeq), ident.name(), metadataLocation)
-        else update(
-          "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location) VALUES (?,?,?,?,NULL)",
-          name(), nsKey(ident.namespace().toSeq), ident.name(), metadataLocation)
-      if (n != 1) throw new TableAlreadyExistsException(ident)
+      if (insertTableRow(nsKey(ident.namespace().toSeq), ident.name(), metadataLocation) != 1)
+        throw new TableAlreadyExistsException(ident)
     } catch {
       case e: SQLException if Option(e.getSQLState).exists(_.startsWith("23")) =>
         throw new TableAlreadyExistsException(ident)
@@ -546,11 +485,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
       throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
     if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
       throw new NoSuchNamespaceException(ident.namespace())
-    val d = ViewDef(ident.name(), info.sql(), info.currentCatalog(),
-      info.currentNamespace().toList, info.schema().json,
-      info.queryColumnNames().toList, info.columnAliases().toList,
-      info.columnComments().toList.map(c => if (c == null) "" else c),
-      info.properties().asScala.toMap)
+    val d = mkViewDef(info)
     val loc = writeViewDef(ident, d)
     try update(
       "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'VIEW')",
@@ -584,11 +519,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
     // API replace of an absent view, or a drop racing the replace)
     if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
       throw new NoSuchNamespaceException(ident.namespace())
-    val d = ViewDef(ident.name(), info.sql(), info.currentCatalog(),
-      info.currentNamespace().toList, info.schema().json,
-      info.queryColumnNames().toList, info.columnAliases().toList,
-      info.columnComments().toList.map(c => if (c == null) "" else c),
-      info.properties().asScala.toMap)
+    val d = mkViewDef(info)
     val newLoc = writeViewDef(ident, d)
     // Any error escaping the CAS below — UPDATE branch included — must
     // first delete the just-written definition file: no row will ever
@@ -671,10 +602,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
 
   override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
     requireV1()
-    val newIdent =
-      if (rawNewIdent.namespace().headOption.contains(name()))
-        Identifier.of(rawNewIdent.namespace().drop(1), rawNewIdent.name())
-      else rawNewIdent
+    val newIdent = unqualified(rawNewIdent)
     val oldLoc = viewPointer(oldIdent).getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent))
     if (viewPointer(newIdent).isDefined || tableExists(newIdent))

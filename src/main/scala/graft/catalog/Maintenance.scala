@@ -1,7 +1,6 @@
 package graft.catalog
 
 import graft.meta.RelPaths
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Table maintenance — the C16 bulk-IO analogs (RelativeFileIO.java
@@ -22,12 +21,6 @@ object Maintenance {
         "references — drop the table instead, or flip gc.enabled after " +
         "compacting it onto its own files")
 
-  /** Drop all but the newest `keepLast` snapshots, then delete data
-    * files that no surviving snapshot references. Returns the number
-    * of files deleted. Metadata-only commit + physical delete AFTER
-    * the commit point, so a crash mid-delete leaves only harmless
-    * orphans (never a broken table).
-    */
   /** Refs that outlived their retention — Iceberg's max-ref-age-ms:
     * a non-main ref whose TARGET snapshot's timestamp is older than
     * the ref's own `maxRefAgeMs` (or the table's
@@ -46,54 +39,62 @@ object Maintenance {
     }.flatten.toSet
   }
 
-  def expireSnapshots(ops: TableOps, keepLast: Int): Int = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val (v, meta0) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+  /** Drop all but the newest `keepLast` snapshots, then delete data
+    * files that no surviving snapshot references. Returns the number
+    * of files deleted. Metadata-only commit + physical delete AFTER
+    * the commit point, so a crash mid-delete leaves only harmless
+    * orphans (never a broken table).
+    */
+  def expireSnapshots(ops: TableOps, keepLast: Int): Int =
+    expire(ops, "expireSnapshots") { meta =>
+      // ref-pinned snapshots (surviving tags/branches) are never expired
+      val pinned = meta.refs.values.map(_.snapshotId).toSet
+      (meta.snapshots.sortBy(_.sequenceNumber).takeRight(keepLast) ++
+        meta.snapshots.filter(s => pinned(s.snapshotId))).distinct
+    }
+
+  /** The one expiry body behind [[expireSnapshots]] and
+    * [[expireOlderThan]], which differ only in `keep`: the snapshots
+    * that survive, chosen from the metadata with aged-out refs already
+    * dropped. Metadata commit first, physical deletes after. */
+  private def expire(ops: TableOps, op: String)(
+      keep: graft.meta.TableMeta => List[graft.meta.Snapshot]): Int =
+    ops.commitRetrying(op) { (_, meta0) =>
       requireGcEnabled(meta0)
       // aged-out refs drop FIRST so they stop pinning their snapshots
       val meta = meta0.copy(
         refs = meta0.refs -- agedOutRefs(meta0, System.currentTimeMillis()))
-      // ref-pinned snapshots (surviving tags/branches) are never expired
-      val pinned = meta.refs.values.map(_.snapshotId).toSet
-      val kept = (meta.snapshots.sortBy(_.sequenceNumber).takeRight(keepLast) ++
-        meta.snapshots.filter(s => pinned(s.snapshotId))).distinct
+      val kept = keep(meta)
       if (kept.size == meta.snapshots.size && meta.refs.size == meta0.refs.size)
-        return 0
-      val keptIds = kept.map(_.snapshotId).toSet
-      // expiry decides physical deletion → full lists (chunk cache
-      // dedups the shared majority between adjacent snapshots)
-      val keptFiles = kept.flatMap(s =>
-        ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path)).toSet
-      val expired = meta.snapshots.filterNot(s => keptIds(s.snapshotId))
-      val orphans = expired
-        .flatMap(s => ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path))
-        .distinct.filterNot(keptFiles)
-      // manifest chunks referenced only by expired snapshots go too,
-      // and so do manifest-LIST files (content-addressed stamp sets;
-      // shared lists survive because a kept snapshot still names them)
-      val keptManifests = kept.flatMap(s =>
-        (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList).toSet
-      val orphanManifests = expired
-        .flatMap(s => (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList)
-        .distinct.filterNot(keptManifests)
-      val next = meta.copy(
-        lastUpdatedMs = System.currentTimeMillis(),
-        snapshots = kept,
-        snapshotLog = meta.snapshotLog.filter(e => keptIds(e.snapshotId)))
-      try {
-        ops.commit(v, next)
-        (orphans ++ orphanManifests).foreach(p =>
-          Io.deleteIfExists(RelPaths.absolutize(ops.warehouse, p)))
-        return orphans.size
-      } catch {
-        case _: CommitFailedException => // refresh + retry
+        TableOps.Done(0)
+      else {
+        val keptIds = kept.map(_.snapshotId).toSet
+        // expiry decides physical deletion → full lists (chunk cache
+        // dedups the shared majority between adjacent snapshots)
+        val keptFiles = kept.flatMap(s =>
+          ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path)).toSet
+        val expired = meta.snapshots.filterNot(s => keptIds(s.snapshotId))
+        val orphans = expired
+          .flatMap(s => ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path))
+          .distinct.filterNot(keptFiles)
+        // manifest chunks referenced only by expired snapshots go too,
+        // and so do manifest-LIST files (content-addressed stamp sets;
+        // shared lists survive because a kept snapshot still names them)
+        val keptManifests = kept.flatMap(s =>
+          (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList).toSet
+        val orphanManifests = expired
+          .flatMap(s => (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList)
+          .distinct.filterNot(keptManifests)
+        TableOps.Commit(meta.copy(
+          lastUpdatedMs = System.currentTimeMillis(),
+          snapshots = kept,
+          snapshotLog = meta.snapshotLog.filter(e => keptIds(e.snapshotId))), _ => {
+          (orphans ++ orphanManifests).foreach(p =>
+            Io.deleteIfExists(RelPaths.absolutize(ops.warehouse, p)))
+          orphans.size
+        })
       }
     }
-    throw new CommitFailedException("expireSnapshots: commit retries exhausted")
-  }
 
   /** Metadata-only manifest rewrite (Iceberg's rewrite_manifests):
     * materialize the current snapshot's file list, re-sort it by the
@@ -106,56 +107,53 @@ object Maintenance {
     * commit point (a crash leaves only harmless orphans). Returns the
     * number of chunks dissolved.
     */
-  def rewriteManifests(ops: TableOps): Int = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val (v, meta) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
-      val cur = meta.currentSnapshot.getOrElse(return 0)
-      if (cur.manifests.size <= 1) return 0
-      val keyCols = ops.partitionKeyCols(meta).toSeq.sortBy(_._1)
-      def cmpVal(num: Boolean, x: String, y: String): Int =
-        if (num) scala.util.Try(BigDecimal(x).compare(BigDecimal(y)))
-          .getOrElse(x.compareTo(y))
-        else x.compareTo(y)
-      val ord = new Ordering[graft.meta.DataFile] {
-        override def compare(a: graft.meta.DataFile, b: graft.meta.DataFile): Int = {
-          var i = 0
-          while (i < keyCols.size) {
-            val (c, num) = keyCols(i)
-            val r = (a.minBound.get(c), b.minBound.get(c)) match {
-              case (Some(x), Some(y)) => cmpVal(num, x, y)
-              case (None, Some(_)) => 1 // unbounded files sort last
-              case (Some(_), None) => -1
-              case (None, None) => 0
-            }
-            if (r != 0) return r
-            i += 1
-          }
-          a.path.compareTo(b.path)
-        }
-      }
-      val sorted = ops.allFiles(cur).sorted(ord)
-      val next = meta.copy(
-        lastUpdatedMs = System.currentTimeMillis(),
-        snapshots = meta.snapshots.map(s =>
-          if (s.snapshotId == cur.snapshotId) s.copy(files = sorted, manifests = Nil)
-          else s))
-      try {
-        ops.commit(v, next)
-        val refreshed = ops.refresh().map(_._2).toList
-        val live = refreshed
-          .flatMap(_.snapshots.flatMap(s => s.manifests.map(_.path) ++ s.manifestList))
-          .toSet
-        (cur.manifests.map(_.path) ++ cur.manifestList).filterNot(live)
-          .foreach(p => Io.deleteIfExists(RelPaths.absolutize(ops.warehouse, p)))
-        return cur.manifests.size
-      } catch {
-        case _: CommitFailedException => // refresh + retry
+  def rewriteManifests(ops: TableOps): Int =
+    ops.commitRetrying("rewriteManifests") { (_, meta) =>
+      meta.currentSnapshot.filter(_.manifests.size > 1) match {
+        case None => TableOps.Done(0)
+        case Some(cur) =>
+          val sorted = ops.allFiles(cur).sorted(partitionOrder(ops, meta))
+          TableOps.Commit(meta.copy(
+            lastUpdatedMs = System.currentTimeMillis(),
+            snapshots = meta.snapshots.map(s =>
+              if (s.snapshotId == cur.snapshotId) s.copy(files = sorted, manifests = Nil)
+              else s)), _ => {
+            val live = ops.refresh().map(_._2).toList
+              .flatMap(_.snapshots.flatMap(s => s.manifests.map(_.path) ++ s.manifestList))
+              .toSet
+            (cur.manifests.map(_.path) ++ cur.manifestList).filterNot(live)
+              .foreach(p => Io.deleteIfExists(RelPaths.absolutize(ops.warehouse, p)))
+            cur.manifests.size
+          })
       }
     }
-    throw new CommitFailedException("rewriteManifests: commit retries exhausted")
+
+  /** Files ordered by the lower bounds of the partition source
+    * columns (unbounded last), then by path. */
+  private def partitionOrder(ops: TableOps,
+      meta: graft.meta.TableMeta): Ordering[graft.meta.DataFile] = {
+    val keyCols = ops.partitionKeyCols(meta).toSeq.sortBy(_._1)
+    def cmpVal(num: Boolean, x: String, y: String): Int =
+      if (num) scala.util.Try(BigDecimal(x).compare(BigDecimal(y)))
+        .getOrElse(x.compareTo(y))
+      else x.compareTo(y)
+    new Ordering[graft.meta.DataFile] {
+      override def compare(a: graft.meta.DataFile, b: graft.meta.DataFile): Int = {
+        var i = 0
+        while (i < keyCols.size) {
+          val (c, num) = keyCols(i)
+          val r = (a.minBound.get(c), b.minBound.get(c)) match {
+            case (Some(x), Some(y)) => cmpVal(num, x, y)
+            case (None, Some(_)) => 1 // unbounded files sort last
+            case (Some(_), None) => -1
+            case (None, None) => 0
+          }
+          if (r != 0) return r
+          i += 1
+        }
+        a.path.compareTo(b.path)
+      }
+    }
   }
 
   /** Create (or move) a named ref — `tag` pins a snapshot, `branch`
@@ -165,29 +163,18 @@ object Maintenance {
     * expiry once its target snapshot ages — see [[agedOutRefs]].
     */
   def createRef(ops: TableOps, refName: String, refType: String = "tag",
-      snapshotId: Option[Long] = None, maxRefAgeMs: Option[Long] = None): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (v, meta) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+      snapshotId: Option[Long] = None, maxRefAgeMs: Option[Long] = None): Unit =
+    ops.commitRetrying("createRef") { (_, meta) =>
       val sid = snapshotId.orElse(meta.currentSnapshotId)
         .getOrElse(throw new IllegalStateException("table has no snapshot"))
       require(meta.snapshot(sid).isDefined, s"unknown snapshot $sid")
-      try {
-        ops.commit(v, meta.copy(
-          lastUpdatedMs = System.currentTimeMillis(),
-          // moving an existing ref PRESERVES its retention unless a
-          // new value is passed (clearing = drop_ref + create_ref)
-          refs = meta.refs + (refName -> graft.meta.Ref(sid, refType,
-            maxRefAgeMs.orElse(meta.refs.get(refName).flatMap(_.maxRefAgeMs))))))
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-      }
+      TableOps.Commit(meta.copy(
+        lastUpdatedMs = System.currentTimeMillis(),
+        // moving an existing ref PRESERVES its retention unless a
+        // new value is passed (clearing = drop_ref + create_ref)
+        refs = meta.refs + (refName -> graft.meta.Ref(sid, refType,
+          maxRefAgeMs.orElse(meta.refs.get(refName).flatMap(_.maxRefAgeMs))))))
     }
-  }
 
   /** Drop a named ref (branch or tag). Snapshots it pinned become
     * expirable on the next retention pass — nothing is deleted here
@@ -195,21 +182,11 @@ object Maintenance {
     */
   def dropRef(ops: TableOps, refName: String): Unit = {
     require(refName != "main", "cannot drop the main branch")
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (v, meta) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+    ops.commitRetrying("dropRef") { (_, meta) =>
       require(meta.refs.contains(refName), s"no ref $refName")
-      try {
-        ops.commit(v, meta.copy(
-          lastUpdatedMs = System.currentTimeMillis(),
-          refs = meta.refs - refName))
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-      }
+      TableOps.Commit(meta.copy(
+        lastUpdatedMs = System.currentTimeMillis(),
+        refs = meta.refs - refName))
     }
   }
 
@@ -224,27 +201,21 @@ object Maintenance {
   /** Publish a branch: point `main` (the current snapshot) at the
     * branch head.
     */
-  def fastForward(ops: TableOps, branch: String): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (v, meta) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+  def fastForward(ops: TableOps, branch: String): Unit =
+    ops.commitRetrying("fastForward") { (_, meta) =>
       val head = meta.refs.getOrElse(branch,
         throw new IllegalArgumentException(s"no branch $branch")).snapshotId
-      val now = System.currentTimeMillis()
-      try {
-        ops.commit(v, meta.copy(
-          lastUpdatedMs = now,
-          currentSnapshotId = Some(head),
-          snapshotLog = meta.snapshotLog :+ graft.meta.SnapshotLogEntry(now, head),
-          refs = meta.refs + graft.meta.Ref.moved(meta.refs, "main", head)))
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-      }
+      TableOps.Commit(setCurrent(meta, head))
     }
+
+  /** `meta` with `main` and the current pointer moved to `snapshotId`. */
+  private def setCurrent(meta: graft.meta.TableMeta, snapshotId: Long): graft.meta.TableMeta = {
+    val now = System.currentTimeMillis()
+    meta.copy(
+      lastUpdatedMs = now,
+      currentSnapshotId = Some(snapshotId),
+      snapshotLog = meta.snapshotLog :+ graft.meta.SnapshotLogEntry(now, snapshotId),
+      refs = meta.refs + graft.meta.Ref.moved(meta.refs, "main", snapshotId))
   }
 
   /** Roll the table back to a previous (still-retained) snapshot —
@@ -254,28 +225,12 @@ object Maintenance {
     * target may be any retained snapshot (also covers Iceberg's
     * `set_current_snapshot`).
     */
-  def rollbackTo(ops: TableOps, snapshotId: Long): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (v, meta) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+  def rollbackTo(ops: TableOps, snapshotId: Long): Unit =
+    ops.commitRetrying("rollbackTo") { (_, meta) =>
       require(meta.snapshot(snapshotId).isDefined,
         s"unknown or expired snapshot $snapshotId")
-      val now = System.currentTimeMillis()
-      try {
-        ops.commit(v, meta.copy(
-          lastUpdatedMs = now,
-          currentSnapshotId = Some(snapshotId),
-          snapshotLog = meta.snapshotLog :+ graft.meta.SnapshotLogEntry(now, snapshotId),
-          refs = meta.refs + graft.meta.Ref.moved(meta.refs, "main", snapshotId)))
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-      }
+      TableOps.Commit(setCurrent(meta, snapshotId))
     }
-  }
 
   /** Cherry-pick an APPEND snapshot onto the current state — Iceberg's
     * `cherrypick_snapshot`, the second half of write-audit-publish
@@ -338,12 +293,8 @@ object Maintenance {
     * `published-wap-id`) is refused — publish is exactly-once.
     * Returns the snapshot id the table lands on.
     */
-  def publishChanges(table: GraftTable, wapId: String): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val (v, meta) = table.ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+  def publishChanges(table: GraftTable, wapId: String): Long =
+    table.ops.commitRetrying("publishChanges") { (_, meta) =>
       val lineage = meta.mainLineage
       require(!lineage.exists(s => s.summary.get("wap.id").contains(wapId) ||
           s.summary.get("published-wap-id").contains(wapId)),
@@ -353,33 +304,21 @@ object Maintenance {
       require(staged.size == 1,
         s"wap.id '$wapId' is ambiguous: ${staged.size} staged snapshots carry it")
       val s = staged.head
-      if (s.parentId == meta.currentSnapshotId) {
-        val now = System.currentTimeMillis()
-        try {
-          table.ops.commit(v, meta.copy(
-            lastUpdatedMs = now,
-            currentSnapshotId = Some(s.snapshotId),
-            snapshotLog = meta.snapshotLog :+ graft.meta.SnapshotLogEntry(now, s.snapshotId),
-            refs = meta.refs + graft.meta.Ref.moved(meta.refs, "main", s.snapshotId)))
-          return s.snapshotId
-        } catch {
-          // main may have moved mid-publish: refresh and re-evaluate
-          // (the re-check may switch to the cherry-pick path)
-          case _: CommitFailedException if attempts < 10 =>
-        }
-      } else {
+      // a lost commit re-evaluates on the refreshed base: main may have
+      // moved mid-publish, switching to the cherry-pick path
+      if (s.parentId == meta.currentSnapshotId)
+        TableOps.Commit(setCurrent(meta, s.snapshotId), _ => s.snapshotId)
+      else {
         require(s.operation == "append",
           s"staged snapshot ${s.snapshotId} is '${s.operation}' and main has " +
             "moved since the stage; only append snapshots can be published " +
             "onto a moved base")
         cherryPick(table, s.snapshotId,
           extraSummary = Map("published-wap-id" -> wapId))
-        return table.ops.refresh().flatMap(_._2.currentSnapshotId)
-          .getOrElse(s.snapshotId)
+        TableOps.Done(table.ops.refresh().flatMap(_._2.currentSnapshotId)
+          .getOrElse(s.snapshotId))
       }
     }
-    throw new CommitFailedException("publishChanges: commit retries exhausted")
-  }
 
   /** Compute table-level statistics (ref README.md:99-100 `statistics`
     * slot) for the CURRENT snapshot and commit them into the metadata:
@@ -419,20 +358,10 @@ object Maintenance {
             row.getAs[Long](s"__ndv_$c"), row.getAs[Long](s"__nulls_$c"))).toMap,
           partitions = partitionStats(spark, table, files, deleteFiles))
       }
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (v, meta) = table.ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
-      try {
-        table.ops.commit(v, meta.copy(
-          lastUpdatedMs = System.currentTimeMillis(),
-          statistics = Some(stats)))
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-      }
+    table.ops.commitRetrying("computeStats") { (_, meta) =>
+      TableOps.Commit(meta.copy(
+        lastUpdatedMs = System.currentTimeMillis(),
+        statistics = Some(stats)))
     }
   }
 
@@ -644,47 +573,11 @@ object Maintenance {
     * `expireSnapshots(keepLast)` stays for exact-count tests). Same
     * crash-safety order: metadata commit first, physical deletes
     * after. */
-  def expireOlderThan(ops: TableOps, olderThanMs: Long): Int = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val (v, meta0) = ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
-      requireGcEnabled(meta0)
-      val meta = meta0.copy(
-        refs = meta0.refs -- agedOutRefs(meta0, System.currentTimeMillis()))
+  def expireOlderThan(ops: TableOps, olderThanMs: Long): Int =
+    expire(ops, "expireOlderThan") { meta =>
       val pinned = meta.refs.values.map(_.snapshotId).toSet ++ meta.currentSnapshotId
-      val kept = meta.snapshots.filter(s =>
-        s.timestampMs >= olderThanMs || pinned(s.snapshotId))
-      if (kept.size == meta.snapshots.size && meta.refs.size == meta0.refs.size)
-        return 0
-      val keptIds = kept.map(_.snapshotId).toSet
-      val keptFiles = kept.flatMap(s =>
-        ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path)).toSet
-      val expired = meta.snapshots.filterNot(s => keptIds(s.snapshotId))
-      val orphans = expired
-        .flatMap(s => ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path))
-        .distinct.filterNot(keptFiles)
-      val keptManifests = kept.flatMap(s =>
-        (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList).toSet
-      val orphanManifests = expired
-        .flatMap(s => (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList)
-        .distinct.filterNot(keptManifests)
-      val next = meta.copy(
-        lastUpdatedMs = System.currentTimeMillis(),
-        snapshots = kept,
-        snapshotLog = meta.snapshotLog.filter(e => keptIds(e.snapshotId)))
-      try {
-        ops.commit(v, next)
-        (orphans ++ orphanManifests).foreach(p =>
-          Io.deleteIfExists(RelPaths.absolutize(ops.warehouse, p)))
-        return orphans.size
-      } catch {
-        case _: CommitFailedException => // refresh + retry
-      }
+      meta.snapshots.filter(s => s.timestampMs >= olderThanMs || pinned(s.snapshotId))
     }
-    throw new CommitFailedException("expireOlderThan: commit retries exhausted")
-  }
 
   /** Orphan-file VACUUM: delete files under the table's data/deletes
     * directories that NO snapshot references (debris from crashed
@@ -737,12 +630,8 @@ object Maintenance {
     * `transforms`: (source column, "identity" | "days" | "bucket[N]").
     */
   def updateSpec(table: GraftTable,
-      transforms: Seq[(String, String)]): Unit = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val (v, meta) = table.ops.refresh()
-        .getOrElse(throw new IllegalStateException("no such table"))
+      transforms: Seq[(String, String)]): Unit =
+    table.ops.commitRetrying("updateSpec") { (_, meta) =>
       val byName = meta.schema.fields.map(f => f.name -> f.id).toMap
       val newSpecId = meta.partitionSpecs.map(_.specId).max + 1
       var nextFieldId = meta.lastPartitionId
@@ -755,35 +644,16 @@ object Maintenance {
           .find(pf => pf.sourceId == srcId && pf.transform == t)
         existing.getOrElse {
           nextFieldId += 1
-          val pname = t match {
-            case "identity" => colName
-            case "days" => s"${colName}_day"
-            case "years" => s"${colName}_year"
-            case "months" => s"${colName}_month"
-            case "hours" => s"${colName}_hour"
-            case b if b.startsWith("bucket[") =>
-              require(b.stripPrefix("bucket[").stripSuffix("]").toInt >= 1,
-                s"$b: bucket count must be >= 1")
-              s"${colName}_bucket"
-            case tr if tr.startsWith("truncate[") =>
-              require(tr.stripPrefix("truncate[").stripSuffix("]").toInt >= 1,
-                s"$tr: width must be >= 1")
-              s"${colName}_trunc"
-            case other => throw new IllegalArgumentException(s"unsupported transform $other")
-          }
-          graft.meta.PartField(srcId, nextFieldId, pname, t)
+          graft.meta.PartField(srcId, nextFieldId,
+            RelativeCatalog.partitionFieldName(colName, t), t)
         }
       }
-      val next = meta.copy(
+      TableOps.Commit(meta.copy(
         lastUpdatedMs = System.currentTimeMillis(),
         defaultSpecId = newSpecId,
         partitionSpecs = meta.partitionSpecs :+ graft.meta.PartSpec(newSpecId, fields),
-        lastPartitionId = nextFieldId)
-      try { table.ops.commit(v, next); return }
-      catch { case _: CommitFailedException => /* refresh + retry */ }
+        lastPartitionId = nextFieldId))
     }
-    throw new CommitFailedException("updateSpec: commit retries exhausted")
-  }
 
   /** Z-ORDER compaction: rewrite the table range-partitioned and
     * sorted by the Morton interleave of `cols`

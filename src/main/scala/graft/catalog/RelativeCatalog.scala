@@ -1,7 +1,6 @@
 package graft.catalog
 
 import graft.meta._
-import java.nio.file.{Files, Path, Paths}
 import java.util
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
@@ -280,29 +279,18 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
       val ref = t.references().head.fieldNames().mkString(".")
       val srcId = byName.getOrElse(ref,
         throw new IllegalArgumentException(s"unknown partition column $ref"))
-      val (tname, pname) = t.name() match {
-        case "identity" => ("identity", ref)
-        case "days" => ("days", s"${ref}_day")
-        case "years" => ("years", s"${ref}_year")
-        case "months" => ("months", s"${ref}_month")
-        case "hours" => ("hours", s"${ref}_hour")
-        case "bucket" =>
-          val n = t.arguments()(0).toString.toInt
-          // reject a broken width NOW — otherwise the spec commits and
-          // only blows up at first write (floorMod ArithmeticException)
-          require(n >= 1, s"bucket($n, $ref): bucket count must be >= 1")
-          (s"bucket[$n]", s"${ref}_bucket")
+      val transform = t.name() match {
+        case "bucket" => s"bucket[${t.arguments()(0)}]"
         case "truncate" =>
           // SQL truncate(w, col): the width is the literal argument
           val w = t.arguments().collectFirst {
-            case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-              l.value().toString.toInt
+            case l: org.apache.spark.sql.connector.expressions.Literal[_] => l.value()
           }.getOrElse(throw new IllegalArgumentException("truncate needs a width"))
-          require(w >= 1, s"truncate($w, $ref): width must be >= 1")
-          (s"truncate[$w]", s"${ref}_trunc")
-        case other => throw new IllegalArgumentException(s"unsupported transform $other")
+          s"truncate[$w]"
+        case other => other
       }
-      PartField(srcId, firstPartId + i, pname, tname)
+      PartField(srcId, firstPartId + i,
+        RelativeCatalog.partitionFieldName(ref, transform), transform)
     }
     val specId = base.map(_.partitionSpecs.map(_.specId).max + 1).getOrElse(0)
     // optional write-time sort order, e.g.
@@ -483,41 +471,59 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     true
   }
 
+  /** RENAME TO may arrive catalog-qualified — strip our own name. */
+  protected def unqualified(ident: Identifier): Identifier =
+    if (ident.namespace().headOption.contains(name()))
+      Identifier.of(ident.namespace().drop(1), ident.name())
+    else ident
+
+  /** Rename = move the table directory, then commit the path-remapped
+    * metadata as a NEW version through the normal commit path (no
+    * existing metadata file is ever rewritten). Chunk CONTENTS embed
+    * table-prefixed data-file paths, so the moved chunks are remapped
+    * in place; the manifest list re-spills under the new prefix at
+    * commit. A failed commit moves everything back.
+    */
   override def renameTable(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
-    // RENAME TO may arrive catalog-qualified — strip our own name
-    val newIdent =
-      if (rawNewIdent.namespace().headOption.contains(name()))
-        Identifier.of(rawNewIdent.namespace().drop(1), rawNewIdent.name())
-      else rawNewIdent
+    val newIdent = unqualified(rawNewIdent)
     val from = dirOf(oldIdent.namespace().toSeq :+ oldIdent.name())
     val to = dirOf(newIdent.namespace().toSeq :+ newIdent.name())
-    if (!isTableDir(from)) throw new NoSuchTableException(oldIdent)
-    if (Io.exists(to)) throw new TableAlreadyExistsException(newIdent)
+    if (!tableExists(oldIdent)) throw new NoSuchTableException(oldIdent)
+    if (Io.exists(to) || tableExists(newIdent) || viewExists(newIdent))
+      throw new TableAlreadyExistsException(newIdent)
     if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
       throw new NoSuchNamespaceException(newIdent.namespace())
-    // read the metadata BEFORE the move (snapshots stay inline-only;
-    // chunk CONTENTS are remapped in place after the move)
-    val (v, meta) = new TableOps(warehouse, tableLocation(oldIdent), catalogProps).refresh()
+    val (v, meta) = opsFor(oldIdent).refresh()
       .getOrElse(throw new NoSuchTableException(oldIdent))
-    if (!Io.renameNoReplace(from, to))
-      throw new TableAlreadyExistsException(newIdent)
-    // the stored location must track the new path: rewrite + commit
-    val prefixOld = tableLocation(oldIdent)
-    val prefixNew = tableLocation(newIdent)
-    def remap(p: String) = if (p.startsWith(prefixOld)) prefixNew + p.stripPrefix(prefixOld) else p
-    // chunk CONTENTS embed table-prefixed data-file paths — remap the
-    // moved files in place
-    RelativeCatalog.remapManifestContents(s"$to/metadata", remap)
-    val ops = new TableOps(warehouse, tableLocation(newIdent), catalogProps)
-    ops.commit(v, meta.copy(
-      location = prefixNew,
-      snapshots = meta.snapshots.map(s => s.copy(
-        files = s.files.map(f => f.copy(path = remap(f.path))),
-        deleteFiles = s.deleteFiles.map(f => f.copy(path = remap(f.path))),
-        manifests = s.manifests.map(m => m.copy(path = remap(m.path))),
-        deleteManifests = s.deleteManifests.map(m => m.copy(path = remap(m.path))))),
-      metadataLog = meta.metadataLog.map(e => e.copy(metadataFile = remap(e.metadataFile)))))
+    Io.mkdirs(to.substring(0, to.lastIndexOf('/')))
+    if (!Io.renameNoReplace(from, to)) throw new TableAlreadyExistsException(newIdent)
+    def mover(a: String, b: String)(p: String) =
+      if (p.startsWith(s"$a/")) b + p.stripPrefix(a) else p
+    val (prefixOld, prefixNew) = (tableLocation(oldIdent), tableLocation(newIdent))
+    val remap = mover(prefixOld, prefixNew) _
+    try {
+      RelativeCatalog.remapManifestContents(s"$to/metadata", remap)
+      commitRename(oldIdent, newIdent, v, meta.copy(
+        location = prefixNew,
+        snapshots = meta.snapshots.map(s => s.copy(
+          files = s.files.map(f => f.copy(path = remap(f.path))),
+          deleteFiles = s.deleteFiles.map(f => f.copy(path = remap(f.path))),
+          manifests = s.manifests.map(m => m.copy(path = remap(m.path))),
+          deleteManifests = s.deleteManifests.map(m => m.copy(path = remap(m.path))))),
+        metadataLog = meta.metadataLog.map(e => e.copy(metadataFile = remap(e.metadataFile)))))
+    } catch {
+      case e: Throwable =>
+        RelativeCatalog.remapManifestContents(s"$to/metadata", mover(prefixNew, prefixOld))
+        Io.renameNoReplace(to, from)
+        throw e
+    }
   }
+
+  /** Commit a rename's remapped metadata as version `base + 1` of the
+    * moved table. The JDBC catalog's commit point also moves its row. */
+  protected def commitRename(oldIdent: Identifier, newIdent: Identifier,
+      base: Int, meta: TableMeta): Unit =
+    opsFor(newIdent).commit(base, meta): Unit
 
   /** Iceberg's `snapshot` procedure: a zero-copy "dev copy" — a NEW
     * independent table whose initial snapshot references the SOURCE's
@@ -621,7 +627,7 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     new GraftView(ViewDef.fromJson(Io.readString(viewFile(ident))))
   }
 
-  private def mkViewDef(info: ViewInfo): ViewDef =
+  protected def mkViewDef(info: ViewInfo): ViewDef =
     ViewDef(info.ident().name(), info.sql(), info.currentCatalog(),
       info.currentNamespace().toList, info.schema().json,
       info.queryColumnNames().toList, info.columnAliases().toList,
@@ -690,10 +696,7 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
   }
 
   override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
-    val newIdent =
-      if (rawNewIdent.namespace().headOption.contains(name()))
-        Identifier.of(rawNewIdent.namespace().drop(1), rawNewIdent.name())
-      else rawNewIdent
+    val newIdent = unqualified(rawNewIdent)
     // fresh probes on both sides — see createView
     if (!Io.exists(viewFile(oldIdent)))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent)
@@ -866,6 +869,29 @@ object RelativeCatalog {
     case (f: DecimalType, t: DecimalType) =>
       t.scale == f.scale && t.precision >= f.precision
     case _ => false
+  }
+
+  /** The one partition-field naming rule (CREATE TABLE … PARTITIONED
+    * BY and spec evolution): the field name for `transform`
+    * ("identity", "days", "bucket[N]", "truncate[W]", …) over column
+    * `source`. A bucket count or truncate width below 1 is rejected
+    * NOW — otherwise the spec commits and only blows up at first write
+    * (floorMod ArithmeticException). */
+  def partitionFieldName(source: String, transform: String): String = {
+    def checkWidth(what: String): Unit = {
+      val n = transform.substring(transform.indexOf('[') + 1).stripSuffix("]").toInt
+      require(n >= 1, s"$transform on $source: $what must be >= 1")
+    }
+    transform match {
+      case "identity" => source
+      case "days" => s"${source}_day"
+      case "years" => s"${source}_year"
+      case "months" => s"${source}_month"
+      case "hours" => s"${source}_hour"
+      case b if b.startsWith("bucket[") => checkWidth("bucket count"); s"${source}_bucket"
+      case tr if tr.startsWith("truncate[") => checkWidth("width"); s"${source}_trunc"
+      case other => throw new IllegalArgumentException(s"unsupported transform $other")
+    }
   }
 
   /** Rewrite every spilled manifest chunk under `metadataDir` with

@@ -21,15 +21,33 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   *    best-effort `version-hint.text` (ref :253-263, :278-281)
   *  - refresh: read hint, forward-scan to the newest version, parse,
   *    UUID continuity check (ref :96-141, checkUUID :79-85)
-  *  - commit: stale-base check, no-absolute-path invariant, temp
-  *    `<UUID>.metadata.json`, lock + exists-check + rename-no-replace
-  *    to `v<N+1>` — the commit point; losers of the rename race get
-  *    CommitFailedException and retry on a refreshed base
-  *    (ref :144-180, renameToFinal :346-376)
   *  - findVersion crash recovery: if the hint is corrupt/missing, scan
   *    `v*.metadata.json` and take the max that parses (ref :302-337)
-  *  - metadata GC: drop all but the newest K metadata files after a
-  *    successful commit (ref deleteRemovedMetadataFiles :400-416)
+  *
+  * Every metadata change takes ONE commit path, in three layers (the
+  * shape of Iceberg's BaseMetastoreTableOperations):
+  *
+  *  - [[commitRetrying]], the OCC retry loop every read-modify-write
+  *    change runs in: refresh, build the next metadata from
+  *    `(version, metadata)`, commit it, and on CommitFailedException
+  *    retry on a refreshed base with jittered backoff — ten attempts,
+  *    then one "commit retries exhausted". Single-shot commits
+  *    (CREATE/ALTER/RENAME TABLE, staged CTAS) call [[commit]]
+  *    directly and surface a lost race to the caller
+  *  - [[commit]], the shared half every catalog runs: the
+  *    no-absolute-path invariant (ref :155-158), manifest-chunk and
+  *    manifest-list spill, the `write.metadata.compression-codec`
+  *    codec, a temp `.<UUID>.metadata.json`, and — when the commit
+  *    loses — deletion of that temp file and of the chunk files this
+  *    attempt wrote
+  *  - [[commitPoint]], the one per-catalog decision: make the temp file
+  *    version `base + 1` or throw CommitFailedException. Here (the path
+  *    catalog) it is the stale-base check, lock + exists re-check +
+  *    rename-no-replace to `v<N+1>` (ref :144-180, renameToFinal
+  *    :346-376), then the version hint and metadata GC — drop all but
+  *    the newest 10 metadata files (ref deleteRemovedMetadataFiles
+  *    :400-416). The JDBC catalog moves the file to a unique
+  *    `v<N+1>-<tag>` name and CASes its pointer row instead.
   *
   * All byte IO routes through [[Io]], so the warehouse may be a plain
   * posix dir or any Hadoop FileSystem URI (file://, hdfs://, s3a://…
@@ -158,10 +176,9 @@ class TableOps(val warehouse: String, val tableLocation: String,
     * rewrite_manifests, and the orphan vacuum. Below the threshold,
     * stamps inline exactly as before (manifestList force-cleared so a
     * stale pointer from a path-remapping op can never resurrect old
-    * stamps). Shared by [[spillAndSerialize]] and the JDBC catalog's
-    * rename rewrite.
+    * stamps).
     */
-  def spillStampList(s: Snapshot): Snapshot =
+  private def spillStampList(s: Snapshot): Snapshot =
     if (s.manifests.size <= listSpillMin) s.copy(manifestList = None)
     else {
       // POISON PILL for pre-list readers: the serialized snapshot
@@ -347,11 +364,15 @@ class TableOps(val warehouse: String, val tableLocation: String,
     }
   }
 
+  /** The newest version at or after `v` (the hint may lag). */
+  private def scanForward(v: Int): Int =
+    if (existingMetadataFile(v + 1).isDefined) scanForward(v + 1) else v
+
   /** Newest committed (version, metadata); None if the table doesn't exist. */
   def refresh(): Option[(Int, TableMeta)] = {
-    var v = findVersion()
-    if (v == 0) return None
-    while (existingMetadataFile(v + 1).isDefined) v += 1
+    val hinted = findVersion()
+    if (hinted == 0) return None
+    val v = scanForward(hinted)
     val meta = parseMeta(readMetadataString(existingMetadataFile(v).get))
     cachedUuid match {
       case Some(u) if u != meta.tableUuid =>
@@ -362,29 +383,56 @@ class TableOps(val warehouse: String, val tableLocation: String,
     Some((v, meta))
   }
 
-  /** Commit `meta` as version `base + 1`. Throws CommitFailedException
-    * when a concurrent committer won the rename race or `base` is stale.
+  /** The OCC retry loop every metadata change goes through: refresh,
+    * hand `(version, metadata)` to `attempt`, then commit what it
+    * returns ([[TableOps.Commit]] — its `after` runs once the commit
+    * has landed) or finish without committing ([[TableOps.Done]]). A
+    * lost commit retries on a fresh base after a jittered exponential
+    * backoff — many concurrent committers (a 1000-executor ingest
+    * fan-in) otherwise re-collide on every round — and the last lost
+    * attempt ends in one `"<op>: commit retries exhausted"`
+    * CommitFailedException. Whatever `attempt` or `after` throws,
+    * CommitConflictException included, passes through untouched.
+    */
+  def commitRetrying[A](op: String)(attempt: (Int, TableMeta) => TableOps.Step[A]): A = {
+    @annotation.tailrec
+    def loop(tries: Int): A = {
+      val (v, meta) = refresh()
+        .getOrElse(throw new IllegalStateException(s"$op: no such table $tableLocation"))
+      attempt(v, meta) match {
+        case TableOps.Done(result) => result
+        case TableOps.Commit(next, after) =>
+          val won = try Some(commit(v, next)) catch { case _: CommitFailedException => None }
+          won match {
+            case Some(nv) => after(nv)
+            case None if tries == TableOps.MaxAttempts =>
+              throw new CommitFailedException(s"$op: commit retries exhausted")
+            case None =>
+              val cap = math.min(1000L, 10L << tries)
+              Thread.sleep(cap / 2 + scala.util.Random.nextLong(cap / 2 + 1))
+              loop(tries + 1)
+          }
+      }
+    }
+    loop(1)
+  }
+
+  private def requireRelative(what: String, p: String): Unit =
+    require(!p.startsWith("/") && !p.contains(":/"), s"$what must be warehouse-relative: $p")
+
+  /** Commit `meta` as version `base + 1` — the half of the commit
+    * protocol every catalog shares. Throws CommitFailedException when
+    * [[commitPoint]] loses (concurrent winner, stale `base`), after
+    * deleting everything this attempt wrote.
     */
   def commit(base: Int, meta: TableMeta): Int = {
-    val current = { var v = findVersion(); while (existingMetadataFile(v + 1).isDefined) v += 1; v }
-    if (base != current)
-      throw new CommitFailedException(s"stale base: committed=$current, attempted base=$base")
-
     // Relocation invariant (ref :155-158): nothing absolute may reach
     // the metadata file, or a warehouse move would break the table.
-    require(!meta.location.startsWith("/") && !meta.location.contains(":/"),
-      s"table location must be warehouse-relative: ${meta.location}")
-    meta.snapshots.flatMap(s => s.files ++ s.deleteFiles).foreach { f =>
-      require(!f.path.startsWith("/") && !f.path.contains(":/"),
-        s"data/delete file path must be warehouse-relative: ${f.path}")
-    }
-    meta.snapshots.flatMap(_.manifests).foreach { m =>
-      require(!m.path.startsWith("/") && !m.path.contains(":/"),
-        s"manifest path must be warehouse-relative: ${m.path}")
-    }
-    meta.snapshots.flatMap(_.manifestList).foreach { p =>
-      require(!p.startsWith("/") && !p.contains(":/"),
-        s"manifest-list path must be warehouse-relative: $p")
+    requireRelative("table location", meta.location)
+    meta.snapshots.foreach { s =>
+      (s.files ++ s.deleteFiles).foreach(f => requireRelative("data/delete file path", f.path))
+      (s.manifests ++ s.deleteManifests).foreach(m => requireRelative("manifest path", m.path))
+      s.manifestList.foreach(requireRelative("manifest-list path", _))
     }
 
     Io.mkdirs(metadataDir)
@@ -393,9 +441,6 @@ class TableOps(val warehouse: String, val tableLocation: String,
     // probe, so mixed-codec version chains are fine
     val gzip = meta.properties.get("write.metadata.compression-codec")
       .exists(_.equalsIgnoreCase("gzip"))
-    val target =
-      if (gzip) s"$metadataDir/v${base + 1}.gz.metadata.json"
-      else metadataFile(base + 1)
     val tmp = s"$metadataDir/.${java.util.UUID.randomUUID()}.metadata.json"
     if (gzip) {
       val out = new java.util.zip.GZIPOutputStream(Io.outputStream(tmp))
@@ -403,10 +448,28 @@ class TableOps(val warehouse: String, val tableLocation: String,
       finally out.close()
     } else Io.writeString(tmp, json)
 
-    def loseCleanup(): Unit = {
-      Io.deleteIfExists(tmp)
-      newManifests.foreach(Io.deleteIfExists)
+    try commitPoint(base, tmp, gzip)
+    catch {
+      case e: CommitFailedException =>
+        Io.deleteIfExists(tmp)
+        newManifests.foreach(Io.deleteIfExists)
+        throw e
     }
+    base + 1
+  }
+
+  /** The commit point: publish the fully written metadata file `tmp`
+    * as version `base + 1`, or throw CommitFailedException and leave
+    * no other trace (the caller deletes `tmp`). `gzip` = `tmp` holds
+    * gzip bytes, so the published name takes the `.gz` spelling.
+    */
+  protected def commitPoint(base: Int, tmp: String, gzip: Boolean): Unit = {
+    val current = scanForward(findVersion())
+    if (base != current)
+      throw new CommitFailedException(s"stale base: committed=$current, attempted base=$base")
+    val target =
+      if (gzip) s"$metadataDir/v${base + 1}.gz.metadata.json"
+      else metadataFile(base + 1)
     // the reference's renameToFinal double guard (:346-376): lock,
     // re-check the target, then a rename that must not clobber.
     // In lock-only mode (rename-atomic=false) the rename primitive is
@@ -414,34 +477,24 @@ class TableOps(val warehouse: String, val tableLocation: String,
     // critical section is then the whole CAS, so refusing to run
     // without a real lock is the difference between "safe" and
     // "silently loses one of two racing commits".
-    if (!renameAtomic && (commitLock eq NoopCommitLock)) {
-      loseCleanup()
+    if (!renameAtomic && (commitLock eq NoopCommitLock))
       throw new CommitFailedException(
         "commit.rename-atomic=false requires a commit lock: set commit.lock-impl")
-    }
-    if (!commitLock.acquire(target, tmp)) {
-      loseCleanup()
+    if (!commitLock.acquire(target, tmp))
       throw new CommitFailedException(s"failed to acquire commit lock on $target")
-    }
     try {
-      if (existingMetadataFile(base + 1).isDefined) {
-        loseCleanup()
+      if (existingMetadataFile(base + 1).isDefined)
         throw new CommitFailedException(s"version ${base + 1} already committed")
-      }
-      if (!finalizeRename(tmp, target)) {
-        loseCleanup()
+      if (!finalizeRename(tmp, target))
         throw new CommitFailedException(s"rename to $target lost the commit race")
-      }
     } catch {
       case e: CommitFailedException => throw e
       case e: Throwable =>
-        loseCleanup()
         throw new CommitFailedException(s"rename to $target failed: ${e.getMessage}")
     } finally commitLock.release(target, tmp)
 
     writeVersionHint(base + 1)
     gcOldMetadata(keep = 10)
-    base + 1
   }
 
   /** Best-effort hint rewrite via temp + atomic replace (ref :283-300). */
@@ -458,6 +511,25 @@ class TableOps(val warehouse: String, val tableLocation: String,
     vs.dropRight(keep).filter(_ > 0)
       .foreach(v => metadataCandidates(v).foreach(Io.deleteIfExists))
   }
+}
+
+object TableOps {
+  /** Commit attempts [[TableOps.commitRetrying]] makes before giving up. */
+  val MaxAttempts = 10
+
+  /** What one attempt of [[TableOps.commitRetrying]] decided. */
+  sealed trait Step[+A]
+
+  /** Commit `meta` as the next version; once it has landed,
+    * `after(newVersion)` is the result. */
+  final case class Commit[A](meta: TableMeta, after: Int => A) extends Step[A]
+
+  object Commit {
+    def apply(meta: TableMeta): Commit[Unit] = Commit(meta, _ => ())
+  }
+
+  /** Finish without committing. */
+  final case class Done[A](result: A) extends Step[A]
 }
 
 /** Process-wide cache of loaded manifest chunks, keyed by ABSOLUTE

@@ -511,8 +511,9 @@ object Writer {
     }.toList
   }
 
-  /** OCC commit loop (ref HadoopRelativeTableOperations.java:144-180;
-    * Iceberg retries on CommitFailedException with a refreshed base).
+  /** Commit a new snapshot through the OCC retry loop
+    * ([[TableOps.commitRetrying]]; ref
+    * HadoopRelativeTableOperations.java:144-180).
     *
     * `validateFrom` (overwrite ops only) is the snapshot id the
     * operation's SCAN was based on (`Some(None)` = table was empty at
@@ -559,12 +560,8 @@ object Writer {
     require(branch.isEmpty || wapId.isEmpty,
       "spark.wap.id staging and an explicit branch write don't compose: " +
         "pick one (wap.id stages refless; a branch write IS the audit ref)")
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      val (baseV, baseMeta) = table.ops.refresh()
-        .getOrElse(throw new IllegalStateException(s"table ${table.name()} vanished"))
+    val opName = Option(operation).getOrElse(if (overwrite) "overwrite" else "append")
+    table.ops.commitRetrying(s"$opName on ${table.name()}") { (baseV, baseMeta) =>
       val now = System.currentTimeMillis()
       val snapId = now * 1000 + scala.util.Random.nextInt(1000)
       // branch writes (write-audit-publish) chain off the BRANCH head
@@ -681,7 +678,7 @@ object Writer {
         parentId = baseSnap.map(_.snapshotId),
         sequenceNumber = seqNo,
         timestampMs = now,
-        operation = Option(operation).getOrElse(if (overwrite) "overwrite" else "append"),
+        operation = opName,
         summary = Map(
           "added-data-files" -> newFiles.size.toString,
           "added-records" -> addedRecords.toString,
@@ -740,17 +737,7 @@ object Writer {
             MetadataLogEntry(now, s"${baseMeta.location}/metadata/v$baseV.metadata.json"),
           refs = baseMeta.refs + graft.meta.Ref.moved(baseMeta.refs, "main", snapId))
       }
-      try {
-        table.ops.commit(baseV, next)
-        done = true
-      } catch {
-        case _: CommitFailedException if attempts < 10 =>
-          // refresh + retry with jittered exponential backoff: many
-          // concurrent committers (a 1000-executor ingest fan-in)
-          // otherwise re-collide on every round
-          Thread.sleep(math.min(1000L, 10L << attempts) / 2 +
-            scala.util.Random.nextLong(math.min(1000L, 10L << attempts) / 2 + 1))
-      }
+      TableOps.Commit(next)
     }
   }
 }

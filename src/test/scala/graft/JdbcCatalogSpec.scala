@@ -305,13 +305,17 @@ class JdbcCatalogSpec extends AnyFunSuite {
       "TBLPROPERTIES ('write.metadata.manifest-chunk-size'='1')")
     spark.sql(s"INSERT INTO $c.r.big SELECT id FROM range(0, 40, 1, 40)")
     // the JDBC catalog names metadata files v<N>-<uuid> with the DB
-    // row as pointer — read the newest raw JSON straight off disk
-    def rawMeta(dir: String): graft.meta.TableMeta =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".metadata.json"))
-        .map(f => graft.meta.TableMeta.fromJson(graft.catalog.Io.readString(f.getPath)))
-        .maxBy(_.lastSequenceNumber)
-    val raw0 = rawMeta(s"$wh/r/big/metadata")
+    // row as pointer — read the raw JSON of the file the pointer names
+    def pointed(t: String): String = {
+      val ops = spark.sessionState.catalogManager.catalog(c)
+        .asInstanceOf[graft.catalog.JdbcRelativeCatalog]
+        .loadTable(Identifier.of(Array("r"), t)).asInstanceOf[graft.catalog.GraftTable].ops
+      graft.meta.RelPaths.absolutize(wh,
+        ops.asInstanceOf[graft.catalog.JdbcRelativeCatalog#JdbcTableOps].pointer.get)
+    }
+    def rawMeta(t: String): graft.meta.TableMeta =
+      graft.meta.TableMeta.fromJson(graft.catalog.Io.readString(pointed(t)))
+    val raw0 = rawMeta("big")
     assert(raw0.currentSnapshot.get.manifestList.exists(_.startsWith("r/big/")),
       s"fixture must be list-spilled, got ${raw0.currentSnapshot.get.manifestList}")
 
@@ -321,19 +325,15 @@ class JdbcCatalogSpec extends AnyFunSuite {
     graft.catalog.ManifestListCache.invalidateAll()
     assert(spark.sql(s"SELECT COUNT(*), SUM(id) FROM $c.r.big2").collect()(0) ==
       org.apache.spark.sql.Row(40L, (0L until 40L).sum))
-    val raw = rawMeta(s"$wh/r/big2/metadata")
+    val raw = rawMeta("big2")
     val lp = raw.currentSnapshot.get.manifestList
     assert(lp.exists(_.startsWith("r/big2/metadata/manifest-list-")),
       s"list pointer still carries the old prefix: $lp")
     // and the re-derived list's stamps point at the moved chunks
-    // (materialize through a plain TableOps parse over the rewritten
-    // metadata — the JDBC pointer resolves to the same file)
+    // (materialize through a plain TableOps parse of the file the
+    // renamed table's pointer names)
     val ops = new graft.catalog.TableOps(wh, "r/big2")
-    val parsed = ops.parseMeta(graft.catalog.Io.readString(
-      new java.io.File(s"$wh/r/big2/metadata").listFiles()
-        .filter(_.getName.endsWith(".metadata.json"))
-        .maxBy(f => graft.meta.TableMeta.fromJson(
-          graft.catalog.Io.readString(f.getPath)).lastSequenceNumber).getPath))
+    val parsed = ops.parseMeta(graft.catalog.Io.readString(pointed("big2")))
     val snap = parsed.currentSnapshot.get
     assert(snap.manifests.size == 40 && snap.manifests.forall(_.path.startsWith("r/big2/")))
     assert(ops.allFiles(snap).forall(_.path.startsWith("r/big2/")))
