@@ -169,16 +169,9 @@ object Changes {
     * (None = the empty pre-genesis state). */
   private def state(spark: SparkSession, warehouse: String, ops: TableOps,
       snap: Option[Snapshot], dataSchema: StructType,
-      mapping: Map[Int, String]): DataFrame = {
-    val files = snap.map(ops.allFiles).getOrElse(Nil)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dataSchema)
-    val dels = snap.get.deleteFiles
-    val raw = Mor.readData(spark, warehouse, dataSchema, files, mapping,
-      if (dels.nonEmpty) Mor.withPositions(_, warehouse) else identity)
-    Mor.applyDeletes(spark, raw, warehouse, dels, files)
-      .select(dataSchema.fieldNames.map(col).toIndexedSeq: _*)
-  }
+      mapping: Map[Int, String]): DataFrame =
+    Mor.liveRows(spark, warehouse, dataSchema, snap.map(ops.allFiles).getOrElse(Nil),
+      mapping, snap.map(_.deleteFiles).getOrElse(Nil))
 
   /** Change rows produced by the commits in (fromSeq, toSeq], tagged
     * with `_change_type` and a 1-based `_change_ordinal` within the
@@ -329,7 +322,7 @@ object Changes {
       def readAdded: Seq[DataFrame] =
         if (addedData.isEmpty) Nil
         else Seq(tag(
-          Mor.readData(spark, warehouse, dataSchema, addedData, mapping), "insert", ord))
+          Mor.liveRows(spark, warehouse, dataSchema, addedData, mapping, Nil), "insert", ord))
       val out: Seq[DataFrame] = snap.operation match {
         case "append" => readAdded
         case "replace" => Nil // compaction rewrites bytes, not rows
@@ -337,43 +330,24 @@ object Changes {
           // MOR/delta fast path (no data file removed): inserts stream
           // straight off the added data files; position-delete rows
           // resolve by reading ONLY the files the new delete records
-          // reference; equality-delete rows resolve by an anti-join of
-          // the still-alive parent rows against the post-delete
-          // survivors — one parent-side scan, never the two-sided
-          // state diff. This is what keeps a CDC tail read over a
-          // trickle-updated 100 TB table incremental.
+          // reference ([[Mor.deletedByPositions]], shared with the CDC
+          // source's deleted slices); equality-delete rows resolve by
+          // an anti-join of the still-alive parent rows against the
+          // parent rows the new deletes leave alive — never the
+          // two-sided state diff. This is what keeps a CDC tail read
+          // over a trickle-updated 100 TB table incremental.
           val (eqAdded, posAdded) = addedDels.partition(Mor.isEquality)
-          val posDeleted: Seq[DataFrame] =
-            if (posAdded.isEmpty) Nil
-            else {
-              val delSet = Mor.deleteSet(spark, warehouse, posAdded)
-              val referenced = delSet.select(col("__gf")).distinct()
-                .collect().map(_.getString(0)).toSet
-              val refFiles = prevFiles.filter(f => referenced(f.path))
-              if (refFiles.isEmpty) Nil
-              else {
-                val raw = Mor.readData(spark, warehouse, dataSchema, refFiles,
-                  mapping, Mor.withPositions(_, warehouse))
-                // rows dead BEFORE this commit must not re-die in it
-                val aliveBefore = Mor.applyDeletesKeepPositions(spark,
-                  raw, warehouse, prevDeleteFiles, refFiles)
-                Seq(tag(aliveBefore.join(delSet, Seq("__gf", "__gp"), "left_semi"),
-                  "delete", ord))
-              }
-            }
+          val posDeleted = Mor.deletedByPositions(spark, warehouse, dataSchema,
+            prevFiles, mapping, prevDeleteFiles, posAdded).map(tag(_, "delete", ord))
           val eqDeleted: Seq[DataFrame] =
             if (eqAdded.isEmpty || prevFiles.isEmpty) Nil
             else {
               // eq deletes only hit strictly-older files; the commit's
               // own added files are never candidates
-              val raw = Mor.readData(spark, warehouse, dataSchema, prevFiles,
-                mapping, Mor.withPositions(_, warehouse))
-              val aliveBefore = Mor.applyDeletesKeepPositions(spark,
-                raw, warehouse, prevDeleteFiles, prevFiles)
-              val survivors = Mor.subtractEquality(spark, aliveBefore,
-                warehouse, eqAdded, prevFiles)
-              Seq(tag(aliveBefore.join(
-                  survivors.select(col("__gf"), col("__gp")),
+              def live(dels: Seq[DataFile]) = Mor.liveRows(spark, warehouse,
+                dataSchema, prevFiles, mapping, dels, positions = true)
+              Seq(tag(live(prevDeleteFiles).join(
+                  live(eqAdded).select(col("__gf"), col("__gp")),
                   Seq("__gf", "__gp"), "left_anti"),
                 "delete", ord))
             }

@@ -316,13 +316,8 @@ class GraftTable(
       // rows matching the predicate → (relative file path, row ordinal),
       // staged as a position-delete parquet; NULL predicate = not matched.
       // Already-deleted rows are excluded so re-deleting is idempotent.
-      val annotated = Mor.readData(spark, ops.warehouse, schema(), affected,
-        meta.nameMapping, Mor.withPositions(_, ops.warehouse))
-      val (eqLive, posLive) = liveDeletes.partition(Mor.isEquality)
-      val alive0 = Mor.subtract(spark, annotated, ops.warehouse, posLive)
-      val alive = if (eqLive.isEmpty) alive0
-        else Mor.subtractEquality(spark, alive0, ops.warehouse, eqLive, affected)
-      val matches = alive
+      val matches = Mor.liveRows(spark, ops.warehouse, schema(), affected,
+          meta.nameMapping, liveDeletes, positions = true)
         .filter(coalesce(cond, lit(false)))
         .select(col("__gf").as("file_path"), col("__gp").as("pos"))
       val stagingRel = s"${meta.location}/deletes/${java.util.UUID.randomUUID()}"
@@ -355,11 +350,8 @@ class GraftTable(
       // predicate is "not matched", so it must map to keep (not drop):
       // a bare !cond is NULL for those rows and the filter would
       // silently delete them
-      val remaining = Mor.applyDeletes(spark,
-          Mor.readData(spark, ops.warehouse, schema(), affected, meta.nameMapping,
-            if (liveDeletes.nonEmpty) Mor.withPositions(_, ops.warehouse) else identity),
-          ops.warehouse, liveDeletes, affected)
-        .select(schema().fieldNames.map(col).toIndexedSeq: _*)
+      val remaining = Mor.liveRows(spark, ops.warehouse, schema(), affected,
+          meta.nameMapping, liveDeletes)
         .filter(!coalesce(cond, lit(false)))
       Writer.append(this, remaining, overwrite = true,
         operation = "delete", carryover = untouched,
@@ -419,14 +411,9 @@ object GraftTable {
     val combined =
       if (affected.isEmpty) aligned
       else {
-        val dels = snap.map(_.deleteFiles).getOrElse(Nil)
-        val keep = Mor.applyDeletes(spark,
-            Mor.readData(spark, table.ops.warehouse, schema, affected,
-              table.meta.nameMapping,
-              if (dels.nonEmpty) Mor.withPositions(_, table.ops.warehouse) else identity),
-            table.ops.warehouse, dels, affected)
+        val keep = Mor.liveRows(spark, table.ops.warehouse, schema, affected,
+            table.meta.nameMapping, snap.map(_.deleteFiles).getOrElse(Nil))
           .filter(!coalesce(cond, lit(false)))
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
         keep.unionByName(aligned)
       }
     Writer.append(table, combined, overwrite = true, operation = "overwrite",
@@ -499,36 +486,36 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // the loaded candidates
     val candidates = filesOverride.getOrElse(
       table.readSnapshot.map(s => table.ops.filesMatching(s, v1)).getOrElse(Nil))
-    val pruned = candidates.filter(f => v1.forall(keepFile(f, _)))
+    val pruned = candidates.filter(f => v1.forall(FilePruning.keepFile(f, _)))
     // only delete files whose path range can reference a surviving
     // data file ride along (file-pruned scans skip unrelated deletes)
     val prunedDeletes = Mor.relevantDeletes(liveDeletes, pruned)
-    if (required.fieldNames.exists(GraftTable.MetaColNames))
-      new MetaScan(table, required, pruned, prunedDeletes, v1)
-    // add_files imports (no parquet field ids) can't ride the raw-path
-    // parquet delegate below — the MOR-style V1 scan resolves them
-    // through the name mapping ([[Mor.readData]]); compaction rewrites
-    // them as native files and restores the delegate fast path
-    else if (prunedDeletes.nonEmpty || pruned.exists(_.nameMapped.contains(true)))
+    // the one V1 route: metadata columns, live deletes, and add_files
+    // imports (no parquet field ids — they can't ride the raw-path
+    // parquet delegate below; compaction rewrites them as native files
+    // and restores the delegate fast path)
+    if (required.fieldNames.exists(GraftTable.MetaColNames) ||
+        prunedDeletes.nonEmpty || pruned.exists(_.nameMapped.contains(true)))
       new MorScan(table, required, pruned, prunedDeletes, v1, options, pushedExprs)
     else SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark)
       // default: vectorized delegate + dynamic file pruning + streaming
       .getOrElse(new GraftStreamableScan(table, options, required, pushedExprs, pruned))
   }
-
-  private def keepFile(f: DataFile, filter: Filter): Boolean =
-    FilePruning.keepFile(f, filter)
 }
 
-/** Merge-on-read scan: the pruned data files MINUS the snapshot's
-  * position deletes, served through the V1Scan fallback. The inner
+/** The V1 fallback scan: the pruned data files MINUS their live
+  * deletes ([[Mor.liveRows]]), serving the `_file`/`_pos` metadata
+  * columns when the required schema names them. Routed here for live
+  * deletes, `add_files` imports (name-mapped reads) and metadata
+  * columns — both user queries (`SELECT _file, _pos FROM t`) and the
+  * DELTA row-level scan ([[GraftDeltaOperation]]'s rowId). The inner
   * plan is a full Catalyst DataFrame — vectorized parquet scan (with
   * the translated predicates applied below the join, so row-group
-  * pushdown still happens), then a broadcast/shuffle anti-join on
-  * (file, pos) ([[Mor.deleteSet]] chooses), then the pruned
-  * projection. Every predicate was reported residual, so Spark
-  * re-applies the full filter set above — the inner application is
-  * purely for scan efficiency.
+  * pushdown still happens), then broadcast/shuffle anti-joins, then
+  * the pruned projection. With live deletes or imports every
+  * predicate was reported residual, so Spark re-applies the full
+  * filter set above — the inner application is purely for scan
+  * efficiency.
   */
 class MorScan(table: GraftTable, required: StructType, files: Seq[DataFile],
     deletes: Seq[DataFile], filters: Seq[Filter],
@@ -545,10 +532,22 @@ class MorScan(table: GraftTable, required: StructType, files: Seq[DataFile],
     * the snapshot-chain tail — the stream itself enforces its own
     * append-only rules per micro-batch window (genesis MOR deletes
     * refuse loudly; imported files resolve through the name mapping),
-    * so the batch-path routing must not mask the streaming surface. */
+    * so the batch-path routing must not mask the streaming surface.
+    * The metadata columns are the exception: the parquet micro-batch
+    * reader has no metadata-column surface, so that projection refuses
+    * with an actionable message instead of Spark's generic
+    * unsupported-stream error. */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    val metaCols = required.fieldNames.filter(GraftTable.MetaColNames)
+    if (metaCols.nonEmpty)
+      throw new UnsupportedOperationException(
+        s"streaming read of ${table.name()} selects metadata column(s) " +
+          s"${metaCols.mkString(", ")} — " +
+          "metadata columns are batch-only; drop them from the streaming " +
+          "projection (read them with a batch query instead)")
     new GraftMicroBatchStream(table, options, required, pushedExprs)
+  }
 
   override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
     new MorRelation(ctx, table, required, files, deletes, filters).asInstanceOf[T]
@@ -574,80 +573,17 @@ class MorRelation(ctx: SQLContext, table: GraftTable, required: StructType,
   override def sizeInBytes: Long = files.map(_.bytes).sum max 1L
 
   override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    val w = table.ops.warehouse
-    if (files.isEmpty)
-      return spark.sparkContext.emptyRDD[Row]
-    val data = Mor.readData(spark, w, table.schema(), files, table.meta.nameMapping,
-      if (deletes.nonEmpty) Mor.withPositions(_, w) else identity)
-    val alive = Mor.applyDeletes(spark, data, w, deletes, files)
-    val filtered = filters.flatMap(Writer.filterToColumn)
-      .foldLeft(alive)(_.filter(_))
-    filtered.select(required.fieldNames.map(org.apache.spark.sql.functions.col(_)).toIndexedSeq: _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
-  }
-}
-
-/** Scan serving the `_file`/`_pos` METADATA columns alongside data
-  * columns, through the V1 fallback: the inner plan annotates the
-  * vectorized parquet read with (relative file, row index) via
-  * `_metadata` ([[Mor.withPositions]] — the exact encoding committed
-  * position-delete files use), subtracts live deletes, applies the
-  * translated predicates, and projects the required column order.
-  * Serves both user queries (`SELECT _file, _pos FROM t`) and the
-  * DELTA row-level scan ([[GraftDeltaOperation]]'s rowId).
-  */
-class MetaScan(table: GraftTable, required: StructType, files: Seq[DataFile],
-    deletes: Seq[DataFile], filters: Seq[Filter]) extends V1Scan {
-
-  override def readSchema(): StructType = required
-
-  /** The streaming delegate cannot serve `_file`/`_pos` (the parquet
-    * micro-batch reader has no metadata-column surface), so refuse
-    * with an actionable message instead of Spark's generic
-    * unsupported-stream error — same loud-routing contract as
-    * [[MorScan]]/[[SpjScan]], which CAN delegate. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    throw new UnsupportedOperationException(
-      s"streaming read of ${table.name()} selects metadata column(s) " +
-        s"${required.fieldNames.filter(GraftTable.MetaColNames).mkString(", ")} — " +
-        "metadata columns are batch-only; drop them from the streaming " +
-        "projection (read them with a batch query instead)")
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
-    new MetaRelation(ctx, table, required, files, deletes, filters).asInstanceOf[T]
-}
-
-class MetaRelation(ctx: SQLContext, table: GraftTable, required: StructType,
-    files: Seq[DataFile], deletes: Seq[DataFile], filters: Seq[Filter])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  // serve the inner plan's InternalRows directly (see [[MorRelation]])
-  override def needConversion: Boolean = false
-
-  // exact committed bytes (see [[MorRelation.sizeInBytes]])
-  override def sizeInBytes: Long = files.map(_.bytes).sum max 1L
-
-  override def buildScan(): RDD[Row] = {
     import org.apache.spark.sql.functions.col
     val spark = ctx.sparkSession
-    val w = table.ops.warehouse
     if (files.isEmpty)
       return spark.sparkContext.emptyRDD[Row]
-    val annotated = Mor.readData(spark, w, table.schema(), files,
-      table.meta.nameMapping, Mor.withPositions(_, w))
-    val (eq, pos) = deletes.partition(Mor.isEquality)
-    var alive = Mor.subtract(spark, annotated, w, pos)
-    if (eq.nonEmpty) alive = Mor.subtractEquality(spark, alive, w, eq, files)
-    val withMeta = alive
-      .withColumn("_file", col("__gf"))
-      .withColumn("_pos", col("__gp"))
+    val alive = Mor.liveRows(spark, table.ops.warehouse, table.schema(), files,
+        table.meta.nameMapping, deletes,
+        positions = required.fieldNames.exists(GraftTable.MetaColNames))
+      .withColumnRenamed("__gf", "_file")
+      .withColumnRenamed("__gp", "_pos")
     val filtered = filters.flatMap(Writer.filterToColumn)
-      .foldLeft(withMeta)(_.filter(_))
+      .foldLeft(alive)(_.filter(_))
     filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
       .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }

@@ -334,17 +334,13 @@ object Maintenance {
     val deleteFiles = snap.map(_.deleteFiles).getOrElse(Nil)
     val snapId = snap.map(_.snapshotId).getOrElse(return)
     val schema = graft.meta.TableMeta.schemaToSpark(table.meta.schema)
-    val wh = table.ops.warehouse
     val cols = schema.fieldNames.toSeq
     val stats: graft.meta.TableStats =
       if (files.isEmpty)
         graft.meta.TableStats(snapId, 0L, 0L, cols.map(_ -> graft.meta.ColumnStats(0L, 0L)).toMap)
       else {
-        val df = Mor.applyDeletes(spark,
-          Mor.readData(spark, wh, schema, files, table.meta.nameMapping,
-            if (deleteFiles.nonEmpty) Mor.withPositions(_, wh) else identity),
-          wh, deleteFiles, files)
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        val df = Mor.liveRows(spark, table.ops.warehouse, schema, files,
+          table.meta.nameMapping, deleteFiles)
         val aggs = count(lit(1)).as("__n") +:
           cols.flatMap(c => Seq(
             approx_count_distinct(col(c)).as(s"__ndv_$c"),
@@ -380,15 +376,9 @@ object Maintenance {
     import org.apache.spark.sql.functions._
     val pexprs = Writer.specTransformExprs(table.meta)
     if (pexprs.isEmpty || files.isEmpty) return Nil
-    val wh = table.ops.warehouse
-    val schema = graft.meta.TableMeta.schemaToSpark(table.meta.schema)
-    val raw = Mor.readData(spark, wh, schema, files, table.meta.nameMapping,
-      Mor.withPositions(_, wh))
-    val annotated = raw
-    val (eq, pos) = deleteFiles.partition(Mor.isEquality)
-    val alive0 = Mor.subtract(spark, annotated, wh, pos)
-    val alive = if (eq.isEmpty) alive0
-      else Mor.subtractEquality(spark, alive0, wh, eq, files)
+    val alive = Mor.liveRows(spark, table.ops.warehouse,
+      graft.meta.TableMeta.schemaToSpark(table.meta.schema), files,
+      table.meta.nameMapping, deleteFiles, positions = true)
     val pnames = pexprs.map(_._1)
     val perFile = alive
       .groupBy((col("__gf") +: pexprs.map { case (n, e) => e.as(n) }): _*)
@@ -423,19 +413,27 @@ object Maintenance {
     val snap = table.readSnapshot
     val files = snap.map(table.ops.allFiles).getOrElse(Nil)
     if (files.isEmpty) return
-    val dels = snap.map(_.deleteFiles).getOrElse(Nil)
-    val sch = graft.meta.TableMeta.schemaToSpark(table.meta.schema)
-    val df = Mor.applyDeletes(spark,
-        Mor.readData(spark, table.ops.warehouse, sch, files, table.meta.nameMapping,
-          if (dels.nonEmpty) Mor.withPositions(_, table.ops.warehouse) else identity),
-        table.ops.warehouse, dels, files)
-      .select(sch.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      .coalesce(targetFiles)
-    // "replace": same rows, different bytes — the marker the changelog
-    // and the streaming tail both use to emit nothing for this commit
-    Writer.append(table, df, overwrite = true, operation = "replace",
-      validateFrom = Some(snap.map(_.snapshotId)),
-      clearDeletes = true)
+    rewrite(spark, table, snap, files, carryover = Nil, clearDeletes = true)(
+      _.coalesce(targetFiles))
+  }
+
+  /** The one body of the three compactions: `rewritten`'s live rows
+    * (EVERY live delete applied — a rewritten row must not escape a
+    * pending delete via its new (file, pos) identity), laid out by
+    * `arrange`, committed over `carryover` as a "replace": same rows,
+    * different bytes — the marker the changelog and the streaming tail
+    * both use to emit nothing for this commit. `clearDeletes` drops
+    * the delete files, which only a rewrite of every file may do. */
+  private def rewrite(spark: SparkSession, table: GraftTable,
+      snap: Option[graft.meta.Snapshot], rewritten: Seq[graft.meta.DataFile],
+      carryover: Seq[graft.meta.DataFile], clearDeletes: Boolean)(
+      arrange: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    val live = Mor.liveRows(spark, table.ops.warehouse,
+      graft.meta.TableMeta.schemaToSpark(table.meta.schema), rewritten,
+      table.meta.nameMapping, snap.map(_.deleteFiles).getOrElse(Nil))
+    Writer.append(table, arrange(live), overwrite = true, operation = "replace",
+      carryover = carryover, validateFrom = Some(snap.map(_.snapshotId)),
+      clearDeletes = clearDeletes)
   }
 
   /** Bin-pack small-file compaction (Iceberg's `rewrite_data_files`
@@ -454,23 +452,14 @@ object Maintenance {
       targetSizeBytes: Long, minInputFiles: Int = 2): Int = {
     val snap = table.readSnapshot
     val files = snap.map(table.ops.allFiles).getOrElse(Nil)
-    val deletes = snap.map(_.deleteFiles).getOrElse(Nil)
     val small = files.filter(_.bytes < targetSizeBytes / 2)
     if (small.size < minInputFiles) return 0
     val smallPaths = small.map(_.path).toSet
-    val untouched = files.filterNot(f => smallPaths(f.path))
     val groups = math.max(1,
       math.ceil(small.map(_.bytes).sum.toDouble / targetSizeBytes).toInt)
-    val sch = graft.meta.TableMeta.schemaToSpark(table.meta.schema)
-    val df = Mor.applyDeletes(spark,
-        Mor.readData(spark, table.ops.warehouse, sch, small, table.meta.nameMapping,
-          if (deletes.nonEmpty) Mor.withPositions(_, table.ops.warehouse) else identity),
-        table.ops.warehouse, deletes, small)
-      .select(sch.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      .coalesce(groups)
-    Writer.append(table, df, overwrite = true, operation = "replace",
-      carryover = untouched,
-      validateFrom = Some(snap.map(_.snapshotId)))
+    rewrite(spark, table, snap, small,
+      carryover = files.filterNot(f => smallPaths(f.path)), clearDeletes = false)(
+      _.coalesce(groups))
     small.size
   }
 
@@ -674,23 +663,14 @@ object Maintenance {
     val snap = table.readSnapshot
     val files = snap.map(table.ops.allFiles).getOrElse(Nil)
     if (files.isEmpty) return
-    val dels = snap.map(_.deleteFiles).getOrElse(Nil)
-    val sch = graft.meta.TableMeta.schemaToSpark(table.meta.schema)
-    val data = Mor.applyDeletes(spark,
-      Mor.readData(spark, table.ops.warehouse, sch, files, table.meta.nameMapping,
-        if (dels.nonEmpty) Mor.withPositions(_, table.ops.warehouse) else identity),
-      table.ops.warehouse, dels, files)
-      .select(sch.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    val z = graft.functions.ZOrder.zValue(data, cols)
-    val arranged = data.withColumn("__z", z)
-      .repartitionByRange(targetFiles, org.apache.spark.sql.functions.col("__z"))
-      .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
-      .drop("__z")
     // Writer.append preserves the arrangement for unpartitioned tables
     // (no spec clustering, and the projection is narrow)
-    Writer.append(table, arranged, overwrite = true, operation = "replace",
-      validateFrom = Some(snap.map(_.snapshotId)),
-      clearDeletes = true)
+    rewrite(spark, table, snap, files, carryover = Nil, clearDeletes = true) { data =>
+      data.withColumn("__z", graft.functions.ZOrder.zValue(data, cols))
+        .repartitionByRange(targetFiles, org.apache.spark.sql.functions.col("__z"))
+        .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
+        .drop("__z")
+    }
   }
 
   /** Roll back to the snapshot that was CURRENT at `tsMs` — Iceberg's

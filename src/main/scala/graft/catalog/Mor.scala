@@ -30,6 +30,21 @@ import scala.jdk.CollectionConverters._
   * shuffled anti-join on high-cardinality keys. Data files are NEVER
   * rewritten by a MOR delete — that is the point: a trickle DELETE
   * costs O(matched rows) or less, not a whole-file rewrite.
+  *
+  * ONE READ PATH. [[liveRows]] is the one entry point for reading a
+  * table's live rows: read the data files (id-resolved and name-mapped
+  * alike), annotate (file, pos) when deletes or the caller need it,
+  * subtract position deletes, then equality deletes. Every reader goes
+  * through it:
+  *  - scans: the V1 fallback [[MorScan]] (live deletes, `add_files`
+  *    imports, the `_file`/`_pos` metadata columns);
+  *  - row-level writes: COW and MOR `DELETE`, `INSERT OVERWRITE` by
+  *    filter, and the MOR rewrite scratch of UPDATE/MERGE;
+  *  - maintenance: `compute_stats` (table and partition), and the
+  *    three compactions;
+  *  - change reads: `$changes` states and fast paths, `graft-cdc`
+  *    slices — whose position-delete rows share [[deletedByPositions]].
+  * The pieces it is built from are private to this object.
   */
 object Mor {
 
@@ -37,22 +52,6 @@ object Mor {
     StructField("file_path", StringType, nullable = false),
     StructField("pos", LongType, nullable = false)))
 
-  /** Read committed DATA files with id-based column resolution,
-    * honoring the per-file name-mapping flag: a file imported by
-    * `add_files` carries NO parquet field ids and resolves through the
-    * table's frozen name mapping ([[graft.meta.TableMeta.NameMappingKey]])
-    * instead — each field id reads the column NAME the file was
-    * imported under, then aliases back to the current schema name, so
-    * post-import renames stay metadata-only for imported files too.
-    * Native files keep strict id resolution (a dropped-and-re-added
-    * name must read NULL, never resurrect stale values).
-    *
-    * The plan is at most a 2-way union (one scan per resolution mode,
-    * never per-file), and the no-imports common case is the IDENTICAL
-    * single scan as before. `perRead` runs on each underlying
-    * file-source relation BEFORE the union — where `_metadata`-derived
-    * annotations ([[withPositions]]) must attach.
-    */
   /** The column NAME a field was imported under: its field id through
     * the table's frozen name mapping, falling back to the current name
     * for columns added after import. */
@@ -81,9 +80,94 @@ object Mor {
     })
   }
 
-  def readData(spark: SparkSession, warehouse: String, schema: StructType,
-      files: Seq[DataFile], mapping: Map[Int, String] = Map.empty,
-      perRead: DataFrame => DataFrame = identity): DataFrame = {
+  /** The live rows of `files` under `deletes`: the files read with
+    * [[readData]], then position deletes subtracted, then equality
+    * deletes (sequence numbers come from `files`). Returns `schema`'s
+    * columns, plus the (relative file, position) pair as `__gf`/`__gp`
+    * when `positions` is set — for callers that key on row identity
+    * (the `_file`/`_pos` scan, the MOR DELETE's tombstones, partition
+    * stats, the change reads). The pair is only derived when deletes
+    * or the caller need it, so a delete-free read stays the plain scan.
+    */
+  def liveRows(spark: SparkSession, warehouse: String, schema: StructType,
+      files: Seq[DataFile], mapping: Map[Int, String], deletes: Seq[DataFile],
+      positions: Boolean = false): DataFrame = {
+    val out = schema.fieldNames.toSeq ++ (if (positions) Seq("__gf", "__gp") else Nil)
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(schema.fields ++ (if (positions) positionFields else Nil)))
+    val data = readData(spark, warehouse, schema, files, mapping,
+      if (positions || deletes.nonEmpty) withPositions(_, warehouse) else identity)
+    val (eq, pos) = deletes.partition(isEquality)
+    subtractEquality(spark, subtract(spark, data, warehouse, pos), warehouse, eq, files)
+      .select(out.map(col): _*)
+  }
+
+  private val positionFields = Seq(
+    StructField("__gf", StringType, nullable = false),
+    StructField("__gp", LongType, nullable = false))
+
+  /** The rows of `parents` that the position-delete files `added` kill
+    * — the change rows of a MOR position-delete commit, shared by the
+    * changelog's fast path and the `graft-cdc` deleted-slice read. Reads
+    * only the parents the entries reference, subtracts the parent
+    * snapshot's `parentDeletes` (pruned to those parents by
+    * [[relevantDeletes]]) so rows dead BEFORE the commit don't re-die,
+    * and keeps the rows an entry of `added` hits. Entries of
+    * `delivered` (an earlier slice of the same commit; two delete files
+    * may name one position) are anti-joined away, pre-filtered to the
+    * referenced parents so parquet pushdown skips their other row
+    * groups. Returns `schema`'s columns; None when `added` references
+    * none of `parents`.
+    */
+  def deletedByPositions(spark: SparkSession, warehouse: String, schema: StructType,
+      parents: Seq[DataFile], mapping: Map[Int, String], parentDeletes: Seq[DataFile],
+      added: Seq[DataFile], delivered: Seq[DataFile] = Nil): Option[DataFrame] = {
+    if (added.isEmpty) return None
+    val delSet = deleteSet(spark, warehouse, added)
+    // bounded driver collect: distinct referenced parent paths,
+    // O(the commit's target files)
+    val referenced = delSet.select(col("__gf")).distinct()
+      .collect().map(_.getString(0)).toSet
+    val refFiles = parents.filter(f => referenced(f.path))
+    if (refFiles.isEmpty) return None
+    val hit = liveRows(spark, warehouse, schema, refFiles, mapping,
+        relevantDeletes(parentDeletes, refFiles), positions = true)
+      .join(delSet, Seq("__gf", "__gp"), "left_semi")
+    val fresh =
+      if (delivered.isEmpty) hit
+      else {
+        val earlier = deleteSet(spark, warehouse, delivered)
+        // skipped when the IN-list would bloat the plan
+        val pruned = if (referenced.size <= 200)
+          earlier.where(col("__gf").isin(referenced.toSeq: _*)) else earlier
+        hit.join(pruned, Seq("__gf", "__gp"), "left_anti")
+      }
+    Some(fresh.select(schema.fieldNames.toSeq.map(col): _*))
+  }
+
+  /** Read committed DATA files with id-based column resolution,
+    * honoring the per-file name-mapping flag: a file imported by
+    * `add_files` carries NO parquet field ids and resolves through the
+    * table's frozen name mapping ([[graft.meta.TableMeta.NameMappingKey]])
+    * instead — each field id reads the column NAME the file was
+    * imported under, then aliases back to the current schema name, so
+    * post-import renames stay metadata-only for imported files too.
+    * Native files keep strict id resolution (a dropped-and-re-added
+    * name must read NULL, never resurrect stale values).
+    *
+    * The plan is at most a 2-way union (one scan per resolution mode,
+    * never per-file), and the no-imports common case is the IDENTICAL
+    * single scan as before. `perRead` runs on each underlying
+    * file-source relation BEFORE the union — where `_metadata`-derived
+    * annotations ([[withPositions]]) must attach. The name-mapped side
+    * re-stamps each field's metadata, so both sides carry the field
+    * ids [[subtractEquality]] resolves key columns by (and a rewrite
+    * writes imported rows back with ids).
+    */
+  private def readData(spark: SparkSession, warehouse: String, schema: StructType,
+      files: Seq[DataFile], mapping: Map[Int, String],
+      perRead: DataFrame => DataFrame): DataFrame = {
     val (mapped, idful) = files.partition(_.nameMapped.contains(true))
     def absOf(fs: Seq[DataFile]) = fs.map(f => RelPaths.absolutize(warehouse, f.path))
     val idRead =
@@ -92,34 +176,19 @@ object Mor {
     val nmRead =
       if (mapped.isEmpty) None
       else Some {
-        val importNames = schema.fields.map(importName(_, mapping))
         val readSchema = importSchema(schema, schema, mapping)
         val raw = perRead(spark.read.schema(readSchema).parquet(absOf(mapped): _*))
         val extra = raw.columns.filterNot(readSchema.fieldNames.contains)
-        raw.select((schema.fields.zip(importNames).map {
-          case (f, n) => col(n).as(f.name) } ++ extra.map(col)).toIndexedSeq: _*)
+        raw.select((schema.fields.zip(readSchema.fieldNames).map {
+          case (f, n) => col(n).as(f.name, f.metadata) } ++ extra.map(col)).toIndexedSeq: _*)
       }
-    (idRead, nmRead) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) =>
-        spark.createDataFrame(spark.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    (idRead ++ nmRead).reduce(_ unionByName _)
   }
 
   /** broadcast the delete side below this many bytes (parquet size —
     * generous because the decoded two-column set stays small) */
   private val BroadcastMaxBytes: Long = 64L << 20
 
-  /** `_metadata.file_path` (a URI) → warehouse-relative path, the
-    * exact representation stored in delete files. Used identically on
-    * the write and read sides so the anti-join keys always agree.
-    * Spark may spell the same location `file:/w/x`, `file:///w/x`,
-    * `/w/x`, or `s3a://bucket/w/x` — every spelling of the warehouse
-    * prefix is matched so a URI warehouse gets correct keys too.
-    */
   /** Every spelling under which `_metadata.file_path` may present the
     * warehouse prefix (pure — unit-tested for schemes the sandbox
     * can't mount). */
@@ -135,7 +204,14 @@ object Mor {
     ).distinct.map(_ + "/")
   }
 
-  def relFileCol(warehouse: String): Column = {
+  /** `_metadata.file_path` (a URI) → warehouse-relative path, the
+    * exact representation stored in delete files. Used identically on
+    * the write and read sides so the anti-join keys always agree.
+    * Spark may spell the same location `file:/w/x`, `file:///w/x`,
+    * `/w/x`, or `s3a://bucket/w/x` — every spelling of the warehouse
+    * prefix is matched so a URI warehouse gets correct keys too.
+    */
+  private def relFileCol(warehouse: String): Column = {
     val prefixes = warehousePrefixes(warehouse)
     val raw = col("_metadata.file_path")
     val relChain = prefixes.foldLeft(when(lit(false), lit(""))) { (acc, w) =>
@@ -146,7 +222,7 @@ object Mor {
   }
 
   /** The committed delete set as (__gf relative-path, __gp position). */
-  def deleteSet(spark: SparkSession, warehouse: String,
+  private def deleteSet(spark: SparkSession, warehouse: String,
       deletes: Seq[DataFile]): DataFrame = {
     val paths = deletes.map(d => RelPaths.absolutize(warehouse, d.path))
     val raw = spark.read.schema(deleteSchema).parquet(paths: _*)
@@ -157,17 +233,13 @@ object Mor {
   /** Annotate a parquet file-source DataFrame with its (relative file,
     * position) as __gf/__gp — materialized BEFORE any join so `_metadata`
     * never needs to resolve through one. */
-  def withPositions(data: DataFrame, warehouse: String): DataFrame =
-    // idempotent: [[readData]] pre-annotates each underlying file
-    // relation (a union can't resolve `_metadata` after the fact), and
-    // delete application must not re-derive over the annotated frame
-    if (data.columns.contains("__gf")) data
-    else data.withColumn("__gf", relFileCol(warehouse))
+  private def withPositions(data: DataFrame, warehouse: String): DataFrame =
+    data.withColumn("__gf", relFileCol(warehouse))
       .withColumn("__gp", col("_metadata.row_index"))
 
   /** Anti-join a __gf/__gp-annotated frame against the POSITION delete
     * set; keeps the annotation columns. */
-  def subtract(spark: SparkSession, annotated: DataFrame, warehouse: String,
+  private def subtract(spark: SparkSession, annotated: DataFrame, warehouse: String,
       deletes: Seq[DataFile]): DataFrame =
     if (deletes.isEmpty) annotated
     else annotated.join(deleteSet(spark, warehouse, deletes), Seq("__gf", "__gp"), "left_anti")
@@ -263,7 +335,7 @@ object Mor {
     * strictly-older files). Key columns are resolved from the frame's
     * field-id metadata, so they track renames.
     */
-  def subtractEquality(spark: SparkSession, annotated: DataFrame,
+  private def subtractEquality(spark: SparkSession, annotated: DataFrame,
       warehouse: String, deletes: Seq[DataFile],
       dataFiles: Seq[DataFile]): DataFrame = {
     if (deletes.isEmpty) return annotated
@@ -359,32 +431,5 @@ object Mor {
     case (n: java.lang.Number, FloatType) => n.floatValue
     case (n: java.lang.Number, _: DecimalType) => new java.math.BigDecimal(n.toString)
     case _ => v // strings/booleans/dates/timestamps already external
-  }
-
-  /** Subtract `deletes` (position AND equality) from `data` (a parquet
-    * file-source DataFrame over this table's data files, so `_metadata`
-    * resolves). `dataFiles` is the snapshot's file list — required when
-    * equality deletes are present (per-file sequence numbers). No-op
-    * when the delete list is empty.
-    */
-  def applyDeletes(spark: SparkSession, data: DataFrame, warehouse: String,
-      deletes: Seq[DataFile], dataFiles: Seq[DataFile] = Nil): DataFrame =
-    if (deletes.isEmpty) data
-    else {
-      val cols = data.columns
-      applyDeletesKeepPositions(spark, data, warehouse, deletes, dataFiles)
-        .select(cols.map(col).toIndexedSeq: _*)
-    }
-
-  /** Like [[applyDeletes]] but keeps the __gf/__gp annotation columns
-    * (for consumers that join on row identity afterwards, e.g. the
-    * changelog's position-delete fast path). */
-  def applyDeletesKeepPositions(spark: SparkSession, data: DataFrame, warehouse: String,
-      deletes: Seq[DataFile], dataFiles: Seq[DataFile] = Nil): DataFrame = {
-    val annotated = withPositions(data, warehouse)
-    val (eq, pos) = deletes.partition(isEquality)
-    var df = subtract(spark, annotated, warehouse, pos)
-    if (eq.nonEmpty) df = subtractEquality(spark, df, warehouse, eq, dataFiles)
-    df
   }
 }

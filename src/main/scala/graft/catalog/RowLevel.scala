@@ -12,9 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.GraftFilterShim
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.{GraftFilterShim, GraftManifestIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -132,29 +131,16 @@ class RowLevelScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
         // vectorized delegate. Cost is one extra copy of the AFFECTED
         // files only (the carryover majority is untouched).
         val scratch = Files.createTempDirectory("graft_mor_rewrite")
-        val sch = table.schema()
-        Mor.applyDeletes(spark,
-            Mor.readData(spark, table.ops.warehouse, sch, affected,
-              table.meta.nameMapping,
-              if (deletes.nonEmpty) Mor.withPositions(_, table.ops.warehouse)
-              else identity),
-            table.ops.warehouse, deletes, affected)
-          // re-stamp field-id metadata (a name-mapped read strips it)
-          // so the scratch files resolve by id like any native file
-          .select(sch.fields.map(f =>
-            org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata))
-            .toIndexedSeq: _*)
+        Mor.liveRows(spark, table.ops.warehouse, table.schema(), affected,
+            table.meta.nameMapping, deletes)
           .write.mode("overwrite").parquet(scratch.toString)
         scala.jdk.CollectionConverters.IteratorHasAsScala(
             Files.list(scratch).iterator()).asScala
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .map(p => (p.toString, Files.size(p))).toSeq.sortBy(_._1)
       }
-    val delegate = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-      .parquetScanBuilder(spark, options, table.schema(), knownFiles)
-    delegate.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-      .pruneColumns(required)
-    delegate.build()
+    GraftManifestIndex.delegateScan(spark, options, table.schema(), knownFiles,
+      Nil, required)
   }
 }
 
@@ -251,15 +237,11 @@ class GroupFilterScan(table: GraftTable, options: CaseInsensitiveStringMap,
     }
   }
 
-  private def delegate: Scan = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val sb = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-      .parquetScanBuilder(spark, options, table.schema(),
-        files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)))
-    sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-      .pruneColumns(required)
-    sb.build()
-  }
+  private def delegate: Scan =
+    GraftManifestIndex.delegateScan(org.apache.spark.sql.SparkSession.active,
+      options, table.schema(),
+      files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
+      Nil, required)
 
   override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
     if (files.isEmpty) Array.empty else delegate.toBatch.planInputPartitions()
@@ -831,15 +813,11 @@ class FileGroupScan(table: GraftTable, options: CaseInsensitiveStringMap,
     op.carryover = untouched ++ initialAffected.filterNot(f => keptPaths(f.path))
   }
 
-  private def delegate(f: DataFile): Scan = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val sb = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-      .parquetScanBuilder(spark, options, table.schema(),
-        Seq((RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)))
-    sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-      .pruneColumns(dataSchema)
-    sb.build()
-  }
+  private def delegate(f: DataFile): Scan =
+    GraftManifestIndex.delegateScan(org.apache.spark.sql.SparkSession.active,
+      options, table.schema(),
+      Seq((RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
+      Nil, dataSchema)
 
   override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
     files.flatMap { f =>

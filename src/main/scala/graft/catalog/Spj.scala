@@ -8,9 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.execution.datasources.GraftManifestIndex
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -159,15 +157,10 @@ class SpjScan(table: GraftTable, options: CaseInsensitiveStringMap,
   override def outputPartitioning(): Partitioning =
     new KeyGroupedPartitioning(clustering.toArray, groups.size)
 
-  private def delegate(files: Seq[DataFile]): Scan = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val sb = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-      .parquetScanBuilder(spark, options, table.schema(),
-        files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)))
-    sb.asInstanceOf[SupportsPushDownCatalystFilters].pushFilters(pushedExprs)
-    sb.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(required)
-    sb.build()
-  }
+  private def delegate(files: Seq[DataFile]): Scan =
+    GraftManifestIndex.delegateScan(SparkSession.active, options, table.schema(),
+      files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
+      pushedExprs, required)
 
   override def planInputPartitions(): Array[InputPartition] =
     groups.flatMap { case (key, fs) =>

@@ -4,9 +4,7 @@ import graft.meta.{DataFile, RelPaths}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.execution.datasources.GraftManifestIndex
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -337,7 +335,7 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
     * files resolve columns by field id; files imported by `add_files`
     * (`DataFile.nameMapped`) carry NO field ids and resolve through
     * the table's frozen name mapping instead — the streaming analog of
-    * the batch path's [[Mor.readData]], deriving its read schema from
+    * the batch path's [[Mor.liveRows]], deriving its read schema from
     * the same [[Mor.importSchema]] (positionally identical renames, so
     * reader output binds to the stream's attributes unchanged).
     * Filters are pushed only on the id-resolved side: a table that
@@ -353,13 +351,9 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
         (Mor.importSchema(table.schema(), table.schema(), mapping),
           Mor.importSchema(required, table.schema(), mapping))
       else (table.schema(), required)
-    val sb = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-      .parquetScanBuilder(spark, options, tblSchema,
-        files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)))
-    if (!mapped)
-      sb.asInstanceOf[SupportsPushDownCatalystFilters].pushFilters(pushedExprs)
-    sb.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(reqSchema)
-    sb.build()
+    GraftManifestIndex.delegateScan(spark, options, tblSchema,
+      files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
+      if (mapped) Nil else pushedExprs, reqSchema)
   }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -503,13 +497,10 @@ class GraftStreamableScan(table: GraftTable, options: CaseInsensitiveStringMap,
     val memo = delegateMemo
     if (memo != null && (memo._1 eq fs)) memo._2
     else {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val sb = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-        .parquetScanBuilder(spark, options, table.schema(),
-          fs.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)))
-      sb.asInstanceOf[SupportsPushDownCatalystFilters].pushFilters(pushedExprs)
-      sb.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(required)
-      val built = sb.build()
+      val built = GraftManifestIndex.delegateScan(
+        org.apache.spark.sql.SparkSession.active, options, table.schema(),
+        fs.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
+        pushedExprs, required)
       delegateMemo = (fs, built)
       built
     }

@@ -63,7 +63,7 @@ final case class DataFile(
     nullCount: Map[String, Long] = Map.empty,
     // Some(true) = the file carries NO parquet field ids (add_files
     // import) and resolves via the table's name mapping
-    // (`schema.name-mapping.default`), not by id — see [[Mor.readData]]
+    // (`schema.name-mapping.default`), not by id — see [[Mor.liveRows]]
     nameMapped: Option[Boolean] = None)
 
 /** An immutable spilled chunk of a snapshot's file list (the analog

@@ -617,7 +617,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     }
     if (prev.map(_.dataFileCount).getOrElse(0) + added.size != s.dataFileCount)
       return None // data files removed: COW, not budgetable from stats
-    val addedDels = addedDeleteDiff(prev, s)
+    val addedDels = Changes.addedDeleteFiles(prev, s)
     if (addedDels.exists(Mor.isEquality)) return None
     Some((added.map(_.records).sum + addedDels.map(_.records).sum, addedDels))
   }
@@ -684,21 +684,16 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(outSchema.fields.map(_.copy(nullable = true))))
 
-  /** The delete files commit `s` ADDED over its parent — delegates to
-    * the ONE shared definition ([[Changes.addedDeleteFiles]], which
-    * the changelog read itself uses), so admission's seeded drain
-    * memo, a checkpoint replay, and the unsplit data path can never
-    * desync on what the `unit:"deleted"` list contains. */
-  private def addedDeleteDiff(prev: Option[Snapshot], s: Snapshot): Seq[DataFile] =
-    Changes.addedDeleteFiles(prev, s)
-
   /** The position-delete files commit `s` ADDED — the `unit:"deleted"`
-    * slice list, recomputed as the delete-list diff against the
-    * parent. Loud when the parent has been expired mid-drain: the
-    * slice indices would otherwise silently re-bind to a different
-    * list. */
+    * slice list, recomputed as the delete-list diff against the parent
+    * through the ONE shared definition ([[Changes.addedDeleteFiles]],
+    * which the changelog read and admission use too), so admission's
+    * seeded drain memo, a checkpoint replay, and the unsplit data path
+    * can never desync on what the list contains. Loud when the parent
+    * has been expired mid-drain: the slice indices would otherwise
+    * silently re-bind to a different list. */
   private def addedPosDeletes(meta: TableMeta, s: Snapshot): Seq[DataFile] =
-    addedDeleteDiff(morParentLoud(meta, s), s).filterNot(Mor.isEquality)
+    Changes.addedDeleteFiles(morParentLoud(meta, s), s).filterNot(Mor.isEquality)
 
   /** The parent snapshot a `unit:"deleted"` drain diffs and reads
     * against — LOUD when expired mid-drain (the delete-list diff and
@@ -719,16 +714,8 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
   private def sliceRead(meta: TableMeta, all: IndexedSeq[DataFile],
       from: Int, until: Int, dels: Seq[DataFile]): DataFrame = {
     val slice = all.slice(from, math.min(until.toLong, all.size.toLong).toInt)
-    val dataSchema = TableMeta.schemaToSpark(meta.schema)
-    val base =
-      if (slice.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dataSchema)
-      else {
-        val raw = Mor.readData(spark, ops.warehouse, dataSchema, slice, meta.nameMapping,
-          if (dels.nonEmpty) Mor.withPositions(_, ops.warehouse) else identity)
-        Mor.applyDeletes(spark, raw, ops.warehouse, dels, slice)
-      }
-    base.select(dataSchema.fieldNames.map(col).toIndexedSeq: _*)
+    Mor.liveRows(spark, ops.warehouse, TableMeta.schemaToSpark(meta.schema), slice,
+        meta.nameMapping, dels)
       .withColumn("_change_type", lit("insert"))
       .withColumn("_change_ordinal", lit(1))
   }
@@ -745,27 +732,26 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
   /** Delete rows produced by files [from, until) of an over-cap MOR
     * position-delete commit's ADDED delete-file set (path order) —
     * the same read [[Changes.between]]'s position-delete fast path
-    * runs, restricted to the slice's entries: parent-state rows the
-    * slice's (file, pos) entries hit, minus rows already dead BEFORE
-    * the commit, minus rows an EARLIER slice's entries already
-    * delivered (two delete files in one commit may name the same
-    * position; without the earlier-slice anti-join a duplicated
-    * entry would emit twice where the unsplit batch emits once).
-    * Exact and replayable: entries bind to (parent file, pos) —
-    * immutable coordinates of an immutable snapshot. Per slice this
-    * reads only the parent files the slice's entries reference, so a
-    * trickle of deletes over a 100 TB table stays O(touched files).
-    * The earlier-slice anti-join re-reads earlier delete ENTRIES
-    * (two columns, never parents) — O(drain²·cap) entries worst case
-    * over a whole drain, pre-filtered to this slice's referenced
-    * parents so parquet pushdown skips non-colliding row groups; an
-    * entry-to-first-file index would trade that for a full-unit read
-    * per restart, which is the same total cost paid earlier. */
+    * runs ([[Mor.deletedByPositions]]), restricted to the slice's
+    * entries: parent-state rows the slice's (file, pos) entries hit,
+    * minus rows already dead BEFORE the commit, minus rows an EARLIER
+    * slice's entries already delivered (two delete files in one
+    * commit may name the same position; without the earlier-slice
+    * anti-join a duplicated entry would emit twice where the unsplit
+    * batch emits once). Exact and replayable: entries bind to (parent
+    * file, pos) — immutable coordinates of an immutable snapshot. Per
+    * slice this reads only the parent files the slice's entries
+    * reference, and only the parent delete files whose bounds/keys can
+    * touch them, so a trickle of deletes over a 100 TB table stays
+    * O(touched files). The earlier-slice anti-join re-reads earlier
+    * delete ENTRIES (two columns, never parents) — O(drain²·cap)
+    * entries worst case over a whole drain; an entry-to-first-file
+    * index would trade that for a full-unit read per restart, which is
+    * the same total cost paid earlier. */
   private def deletedSlice(meta: TableMeta, seq: Long, from: Int, until: Int): DataFrame = {
     val s = unitSnap(meta, seq)
     val all = unitFiles(meta, seq, SliceOffsets.UnitDeleted)
     val slice = all.slice(from, math.min(until.toLong, all.size.toLong).toInt)
-    val dataSchema = TableMeta.schemaToSpark(meta.schema)
     if (slice.isEmpty) return emptyOut
     val prev = morParentLoud(meta, s)
     // the parent's full file list is per-DRAIN state, not per-slice:
@@ -777,41 +763,12 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
         val l = prev.map(ops.allFiles).getOrElse(Nil)
         parentFilesMemo = Some((seq, l)); l
     }
-    val delSet = Mor.deleteSet(spark, ops.warehouse, slice)
-    // bounded driver collect: distinct referenced parent paths — the
-    // same pattern as the unsplit fast path, O(slice's target files)
-    val referenced = delSet.select(col("__gf")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val refFiles = prevFiles.filter(f => referenced(f.path))
-    if (refFiles.isEmpty) return emptyOut
-    val raw = Mor.readData(spark, ops.warehouse, dataSchema, refFiles,
-      meta.nameMapping, Mor.withPositions(_, ops.warehouse))
-    // rows dead BEFORE this commit must not re-die in it (the same
-    // aliveBefore rule as the unsplit fast path) — pruned to the
-    // delete files whose bounds/keys can touch the slice's parents,
-    // so a slice never re-reads the parent's whole historical delete
-    // set (the unsplit path pays that read once; a K-slice drain
-    // would otherwise pay it K times)
-    val aliveBefore = Mor.applyDeletesKeepPositions(spark, raw, ops.warehouse,
-      Mor.relevantDeletes(prev.map(_.deleteFiles).getOrElse(Nil), refFiles),
-      refFiles)
-    val hit = aliveBefore.join(delSet, Seq("__gf", "__gp"), "left_semi")
-    val dedup =
-      if (from == 0) hit
-      else {
-        val earlier = Mor.deleteSet(spark, ops.warehouse, all.slice(0, from))
-        // entries for parents this slice never reads can't collide
-        // with `hit` (every hit row has __gf ∈ referenced) — filter
-        // them out before the anti-join so the pushed file_path
-        // predicate skips whole row groups of the earlier delete
-        // files; skipped when the IN-list would bloat the plan
-        val pruned = if (referenced.size <= 200)
-          earlier.where(col("__gf").isin(referenced.toSeq: _*)) else earlier
-        hit.join(pruned, Seq("__gf", "__gp"), "left_anti")
-      }
-    dedup.select(dataSchema.fieldNames.map(col).toIndexedSeq: _*)
-      .withColumn("_change_type", lit("delete"))
-      .withColumn("_change_ordinal", lit(1))
+    Mor.deletedByPositions(spark, ops.warehouse, TableMeta.schemaToSpark(meta.schema),
+        prevFiles, meta.nameMapping, prev.map(_.deleteFiles).getOrElse(Nil), slice,
+        delivered = all.slice(0, from))
+      .map(_.withColumn("_change_type", lit("delete"))
+        .withColumn("_change_ordinal", lit(1)))
+      .getOrElse(emptyOut)
   }
 
   // ---- materialized row-level units (opt-in split-row-level) -------

@@ -2,6 +2,8 @@ package org.apache.spark.sql.execution.datasources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -54,11 +56,30 @@ class GraftManifestIndex(
 
 object GraftManifestIndex {
 
+  /** The parquet delegate over committed files — the one place every
+    * DSv2 graft scan (the batch and streaming table scans, the
+    * storage-partitioned scan, and the three row-level rewrite scans)
+    * hands a manifest-known (absolute path, exact bytes) set to Spark's
+    * vectorized parquet reader: pushes `filters` (row-group skipping;
+    * Nil pushes nothing), prunes to `required`, builds. */
+  def delegateScan(
+      spark: SparkSession,
+      options: CaseInsensitiveStringMap,
+      schema: StructType,
+      files: Seq[(String, Long)],
+      filters: Seq[Expression],
+      required: StructType): Scan = {
+    val sb = parquetScanBuilder(spark, options, schema, files)
+    sb.pushFilters(filters)
+    sb.pruneColumns(required)
+    sb.build()
+  }
+
   /** Parquet ScanBuilder over a manifest-known file set; byte-for-byte
     * the ScanBuilder `ParquetTable(...).newScanBuilder(options)` would
     * return (same schema/dataSchema/options wiring — `mergedOptions`
     * merges the same map with itself), minus the file listing. */
-  def parquetScanBuilder(
+  private def parquetScanBuilder(
       spark: SparkSession,
       options: CaseInsensitiveStringMap,
       schema: StructType,

@@ -83,11 +83,25 @@ class AddFilesSpec extends AnyFunSuite {
       .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Map.of())).build()
     assert(scanOf().isInstanceOf[MorScan])
+    // the `_file`/`_pos` metadata-column scan takes the same V1 route
+    def metaScanOf() = {
+      val sb = gt("tcAfm", "a", "t")
+        .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          java.util.Map.of()))
+      sb.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
+        .pruneColumns(org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("_pos", org.apache.spark.sql.types.LongType))))
+      sb.build()
+    }
+    assert(metaScanOf().isInstanceOf[MorScan])
     // ...until compaction rewrites imports as native id-ful files
     Maintenance.compact(spark, gt("tcAfm", "a", "t"), targetFiles = 1)
     assert(!snap.files.exists(_.nameMapped.contains(true)))
     assert(!scanOf().isInstanceOf[MorScan],
       "post-compaction scan should return to the parquet delegate")
+    assert(metaScanOf().isInstanceOf[MorScan],
+      "metadata columns are served by the V1 scan on any table")
     assert(spark.sql("SELECT COUNT(*), SUM(id) FROM tcAfm.a.t").collect()(0)
       .toSeq == Seq(3L, 23L))
 

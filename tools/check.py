@@ -1,11 +1,14 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's DuckDB-oracle compare (dev tool only; the
 shipped library is Scala). Usage:
-  python3 tools/check.py [sfdir] [verify_outdir]
+  python3 tools/check.py [sfdir] [verify_outdir] [query ...]
 Loads each SparkEntry query's parquet dump, runs the corresponding
 oracle SQL in DuckDB over the same source tables, sorts columns by
-name, and compares row-by-row exactly (the driver hash-compares)."""
-import sys, json, glob, math
+name, and compares row-by-row exactly (the driver hash-compares).
+Query names (shell-style patterns allowed, e.g. 'q_str_cdc*') limit the
+compare to that subset -- the companion of a
+`graft.Verify <sf> <out> <names...>` subset dump."""
+import sys, json, glob, fnmatch
 from decimal import Decimal
 
 import duckdb
@@ -22,6 +25,13 @@ for t in TABLES:
         f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 
 oracle = json.load(open(f"{OUT}/oracle_sql.json"))
+PATTERNS = sys.argv[3:]
+if PATTERNS:
+    unmatched = [p for p in PATTERNS if not fnmatch.filter(oracle, p)]
+    if unmatched:
+        sys.exit(f"no declared query matches: {' '.join(unmatched)}")
+    oracle = {n: q for n, q in oracle.items()
+              if any(fnmatch.fnmatchcase(n, p) for p in PATTERNS)}
 
 def norm(v):
     if isinstance(v, Decimal):
