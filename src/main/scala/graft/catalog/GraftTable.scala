@@ -297,21 +297,12 @@ class GraftTable(
         keys.map(k => sparkSchema.fields.find(_.name == k).get))
       val rows = tuples.map(t => org.apache.spark.sql.Row.fromSeq(
         delSchema.fields.map(f => Mor.coerce(t(f.name), f.dataType)).toIndexedSeq))
-      val stagingRel = s"${meta.location}/deletes/${java.util.UUID.randomUUID()}"
-      val stagingAbs = RelPaths.absolutize(ops.warehouse, stagingRel)
-      spark.createDataFrame(rows.asJava, delSchema).coalesce(1)
-        .write.mode("errorifexists").option("compression", "zstd").parquet(stagingAbs)
-      val delFiles = Writer.collectStats(spark, delSchema, ops.warehouse, stagingAbs)
-        .filter(_.records > 0)
-        .map(_.copy(content = Some("equality"), equalityIds = Some(ids)))
-      try Writer.commitSnapshot(this, Nil, overwrite = false,
+      val staging = Staging(meta, ops.warehouse, "deletes")
+      val delFiles = Writer.writeFiles(spark.createDataFrame(rows.asJava, delSchema).coalesce(1),
+        staging, Writer.equalityDeleteSpec(ops.warehouse, delSchema, ids))
+      staging.discardOnFailure(Writer.commitSnapshot(this, Nil, overwrite = false,
         operation = "delete", carryover = Nil, newDeletes = delFiles,
-        wapId = Writer.sessionWapId(meta))
-      catch {
-        case e: Throwable =>
-          Io.deleteRecursiveQuietly(stagingAbs)
-          throw e
-      }
+        wapId = Writer.sessionWapId(meta)))
     } else if (morMode) {
       // rows matching the predicate → (relative file path, row ordinal),
       // staged as a position-delete parquet; NULL predicate = not matched.
@@ -320,31 +311,19 @@ class GraftTable(
           meta.nameMapping, liveDeletes, positions = true)
         .filter(coalesce(cond, lit(false)))
         .select(col("__gf").as("file_path"), col("__gp").as("pos"))
-      val stagingRel = s"${meta.location}/deletes/${java.util.UUID.randomUUID()}"
-      val stagingAbs = RelPaths.absolutize(ops.warehouse, stagingRel)
+      val staging = Staging(meta, ops.warehouse, "deletes")
       // range-cluster the delete rows by the file they reference:
       // each delete file then covers a TIGHT, disjoint file_path range
       // — the unit scan-side delete pruning works at — instead of a
       // hash-spray across the whole path space
-      matches.repartitionByRange(col("file_path"))
-        .sortWithinPartitions(col("file_path"), col("pos"))
-        .write.mode("errorifexists").option("compression", "zstd").parquet(stagingAbs)
-      val delFiles = Writer.collectStats(spark, Mor.deleteSchema, ops.warehouse, stagingAbs,
-        exactBoundCols = Set("file_path"))
-        .filter(_.records > 0)
-      if (delFiles.isEmpty) {
-        Io.deleteRecursiveQuietly(stagingAbs): Unit
-        return
-      }
-      try Writer.commitSnapshot(this, Nil, overwrite = false,
+      val delFiles = Writer.writeFiles(matches.repartitionByRange(col("file_path"))
+          .sortWithinPartitions(col("file_path"), col("pos")),
+        staging, Writer.positionDeleteSpec(ops.warehouse))
+      if (delFiles.isEmpty) { staging.discard(); return }
+      staging.discardOnFailure(Writer.commitSnapshot(this, Nil, overwrite = false,
         operation = "delete", carryover = Nil,
         newDeletes = delFiles, mustExist = affected.map(_.path).toSet,
-        wapId = Writer.sessionWapId(meta))
-      catch {
-        case e: Throwable =>
-          Io.deleteRecursiveQuietly(stagingAbs)
-          throw e
-      }
+        wapId = Writer.sessionWapId(meta)))
     } else {
       // SQL DELETE keeps rows the predicate does NOT match; a NULL
       // predicate is "not matched", so it must map to keep (not drop):
@@ -798,61 +777,38 @@ class GraftDynamicOverwriteWrite(val table: GraftTable, rowSchema: StructType)
 
   import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 
-  // re-stamp field ids by name (plan-derived schemas lose them)
-  private val schema = {
-    val metaByName = table.schema().fields.map(f => f.name -> f.metadata).toMap
-    StructType(rowSchema.fields.map(f =>
-      metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
-  }
-  private val stagingRel = s"${table.meta.location}/data/${java.util.UUID.randomUUID()}"
-  private val stagingAbs = RelPaths.absolutize(table.ops.warehouse, stagingRel)
+  private val staging = Staging(table.meta, table.ops.warehouse, "data")
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = this
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    Io.mkdirs(stagingAbs)
-    new GraftDataWriterFactory(stagingAbs,
-      new org.apache.spark.util.SerializableConfiguration(
-        Writer.writerHadoopConf(spark, schema, Writer.bloomColumns(table.meta))),
-      schema, keyFromEnd = KeySpec.forSpec(table, schema), dataLeading = false,
-      targetBytes = Writer.targetFileSize(table.meta))
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftDataWriterFactory(staging.abs, Writer.fileSpec(table, rowSchema))
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
+  override def commit(messages: Array[WriterCommitMessage]): Unit = staging.discardOnFailure {
     val specNames = table.meta.spec.fields.map(_.name)
-    val fileKeys = messages.collect { case m: GraftCommitMessage => m }
-      .flatMap(_.fileKeys).toMap
-    val newFiles = Writer.collectStats(spark, table.schema(), table.ops.warehouse, stagingAbs)
-      .filter(_.records > 0)
-      .map(f => Writer.stampPartition(f, fileKeys, specNames, table.ops.warehouse))
+    val newFiles = GraftCommitMessage.files(messages)
     val snap = table.readSnapshot
-    val files = snap.map(_.files).getOrElse(Nil)
-    def fail(e: Throwable): Nothing = {
-      Io.deleteRecursiveQuietly(stagingAbs)
-      throw e
-    }
+    // the FULL file list: chunked files must carry over (or be
+    // classified as unstamped) just like the inline tail
+    val files = snap.map(table.ops.allFiles).getOrElse(Nil)
     val carryover =
       if (specNames.isEmpty) Nil // unpartitioned: replace everything
       else {
         val unstamped = files.filter(f => f.partition.keySet != specNames.toSet)
-        if (unstamped.nonEmpty) fail(new UnsupportedOperationException(
+        if (unstamped.nonEmpty) throw new UnsupportedOperationException(
           s"dynamic overwrite needs writer-stamped partition tuples on every file; " +
             s"${unstamped.size} file(s) predate stamping (e.g. ${unstamped.head.path}) — " +
-            "compact the table once to stamp them"))
+            "compact the table once to stamp them")
         val incoming = newFiles.map(_.partition).toSet
         files.filterNot(f => incoming(f.partition))
       }
-    try Writer.commitSnapshot(table, newFiles, overwrite = true,
+    Writer.commitSnapshot(table, newFiles, overwrite = true,
       operation = "overwrite", carryover = carryover,
       validateFrom = Some(snap.map(_.snapshotId)),
       wapId = Writer.sessionWapId(table.meta))
-    catch { case e: Throwable => fail(e) }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    Io.deleteRecursiveQuietly(stagingAbs): Unit
+  override def abort(messages: Array[WriterCommitMessage]): Unit = staging.discard()
 }
 
 /** In-memory metadata tables (`t$snapshots` / `t$files` / `t$history`)

@@ -485,27 +485,18 @@ object Maintenance {
     val (eq, pos) = deletes.partition(Mor.isEquality)
     if (pos.size < minInputFiles) return 0
     val paths = pos.map(f => RelPaths.absolutize(table.ops.warehouse, f.path))
-    val stagingRel = s"${table.meta.location}/deletes/${java.util.UUID.randomUUID()}"
-    val stagingAbs = RelPaths.absolutize(table.ops.warehouse, stagingRel)
-    spark.read.schema(Mor.deleteSchema).parquet(paths: _*)
-      .distinct()
-      .repartitionByRange(math.max(1, targetFiles), col("file_path"))
-      .sortWithinPartitions(col("file_path"), col("pos"))
-      .write.mode("errorifexists").option("compression", "zstd").parquet(stagingAbs)
-    val consolidated = Writer.collectStats(spark, Mor.deleteSchema,
-        table.ops.warehouse, stagingAbs, exactBoundCols = Set("file_path"))
-      .filter(_.records > 0)
-    try Writer.commitSnapshot(table, Nil, overwrite = true,
+    val staging = Staging(table.meta, table.ops.warehouse, "deletes")
+    val consolidated = Writer.writeFiles(spark.read.schema(Mor.deleteSchema).parquet(paths: _*)
+        .distinct()
+        .repartitionByRange(math.max(1, targetFiles), col("file_path"))
+        .sortWithinPartitions(col("file_path"), col("pos")),
+      staging, Writer.positionDeleteSpec(table.ops.warehouse))
+    staging.discardOnFailure(Writer.commitSnapshot(table, Nil, overwrite = true,
       operation = "replace",
       carryover = snap.map(table.ops.allFiles).getOrElse(Nil),
       validateFrom = Some(snap.map(_.snapshotId)),
       newDeletes = eq.toList ++ consolidated,
-      clearDeletes = true)
-    catch {
-      case e: Throwable =>
-        Io.deleteRecursiveQuietly(stagingAbs)
-        throw e
-    }
+      clearDeletes = true))
     pos.size
   }
 
@@ -731,7 +722,8 @@ object Maintenance {
     * without rewriting a byte — Iceberg's `add_files`, the bulk-onboard
     * path for data produced outside the catalog. Metadata-only and
     * footer-driven: row counts, sizes, and column bounds come from
-    * parquet footers ([[Writer.collectStats]], parallel, O(files)); the
+    * parquet footers ([[Writer.collectStatsFromFooters]], parallel,
+    * O(files) — the one footer re-read on a write path); the
     * data itself is never scanned. Files must already live INSIDE the
     * warehouse (the relative-path invariant is the whole catalog
     * design — an absolute reference would break warehouse relocation),
@@ -775,12 +767,11 @@ object Maintenance {
           "files imported now would resolve through the old names")
     }
     val schema = graft.meta.TableMeta.schemaToSpark(meta.schema)
-    // the read path resolves imported files by name, so the bound
-    // collector gets the id-LESS spelling (its footer path only uses
-    // names; this keeps the scan fallback consistent too)
+    // the read path resolves imported files by name, and so does the
+    // footer encoder: the id-LESS spelling is all it needs
     val schemaNoIds = org.apache.spark.sql.types.StructType(
       schema.fields.map(_.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
-    val stats = Writer.collectStats(spark, schemaNoIds, ops.warehouse, abs)
+    val stats = Writer.collectStatsFromFooters(schemaNoIds, ops.warehouse, abs)
     require(stats.nonEmpty, s"no parquet files under $sourceDir")
     // a file sharing NO column name with the table would import as
     // all-NULL rows — catch it loudly (bounds/nullCount keys exist

@@ -307,7 +307,7 @@ object Mor {
     }
 
   /** Whether the closed intervals [dmin,dmax] and [fmin,fmax] may
-    * intersect. Bounds are the string encodings `collectStats` writes
+    * intersect. Bounds are the string encodings [[Writer.entryOf]] makes
     * and carry no type tag, so two orderings are candidates: numeric
     * (when every present bound parses as a decimal — numbers, and
     * digit-strings in a string column) and lexicographic (strings,

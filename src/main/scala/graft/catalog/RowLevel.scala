@@ -17,7 +17,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 /** Group-based (copy-on-write) UPDATE / MERGE INTO / DELETE support —
   * the Spark row-level-operation API over our snapshot format.
@@ -314,10 +313,6 @@ trait PartitionedWriteLayout extends RequiresDistributionAndOrdering {
       }
     }
   }
-
-  /** Fanout roll keys for the write schema (transform-aware). */
-  protected def specKeySpecs(schema: StructType): Seq[KeySpec] =
-    KeySpec.forSpec(table, schema)
 }
 
 class GraftBatchWrite(val table: GraftTable, operation: String,
@@ -325,66 +320,37 @@ class GraftBatchWrite(val table: GraftTable, operation: String,
     writeSchema: StructType = null) extends Write with BatchWrite
   with PartitionedWriteLayout {
 
-  // the replace query may carry extra (metadata) columns; write what
-  // Spark hands us. The plan-derived schema can lose our field-id
-  // metadata, so re-stamp it by name from the table schema — every
-  // data file must carry ids for id-based read resolution.
-  private val schema = {
-    val base = Option(writeSchema).getOrElse(table.schema())
-    val metaByName = table.schema().fields.map(f => f.name -> f.metadata).toMap
-    StructType(base.fields.map(f =>
-      metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
-  }
-  private val stagingRel = s"${table.meta.location}/data/${java.util.UUID.randomUUID()}"
-  private val stagingAbs = RelPaths.absolutize(table.ops.warehouse, stagingRel)
+  private val staging = Staging(table.meta, table.ops.warehouse, "data")
 
   override def toBatch: BatchWrite = this
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    Io.mkdirs(stagingAbs)
-    // session-derived hadoop conf: carries every SQL conf
-    // ParquetWriteSupport.init expects (rebase modes, legacy format,
-    // timestamp type, …)
-    val conf = Writer.writerHadoopConf(org.apache.spark.sql.SparkSession.active, schema,
-      Writer.bloomColumns(table.meta))
-    // partitioned tables: roll to a new file whenever the partition
-    // key changes (input is clustered + ordered by it via
-    // RequiresDistributionAndOrdering), keeping rewritten files
-    // partition-local
-    new GraftDataWriterFactory(stagingAbs, new SerializableConfiguration(conf), schema,
-      keyFromEnd = specKeySpecs(schema), dataLeading = false,
-      targetBytes = Writer.targetFileSize(table.meta))
-  }
+  // the replace query may carry extra (metadata) columns; write what
+  // Spark hands us. Partitioned tables roll to a new file whenever the
+  // partition key changes (input is clustered + ordered by it via
+  // RequiresDistributionAndOrdering), keeping rewritten files
+  // partition-local
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftDataWriterFactory(staging.abs,
+      Writer.fileSpec(table, Option(writeSchema).getOrElse(table.schema())))
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val written = messages.collect { case m: GraftCommitMessage if m.records > 0 => m }
-    val fileKeys = written.flatMap(_.fileKeys).toMap
-    val specNames = table.meta.spec.fields.map(_.name)
-    // stats over the TABLE schema subset (bounds drive file skipping)
-    val newFiles =
-      if (written.isEmpty) Nil
-      else Writer.collectStats(spark, table.schema(), table.ops.warehouse, stagingAbs)
-        .filter(_.records > 0)
-        .map(f => Writer.stampPartition(f, fileKeys, specNames, table.ops.warehouse))
-    // a conflicted commit must not leak the staged rewrite as orphans
-    try Writer.commitSnapshot(table, newFiles, overwrite = true,
-      operation = operation, carryover = carryover(),
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    staging.discardOnFailure(Writer.commitSnapshot(table, GraftCommitMessage.files(messages),
+      overwrite = true, operation = operation, carryover = carryover(),
       validateFrom = Some(table.readSnapshot.map(_.snapshotId)),
-      wapId = Writer.sessionWapId(table.meta))
-    catch {
-      case e: Throwable =>
-        Io.deleteRecursiveQuietly(stagingAbs)
-        throw e
-    }
-  }
+      wapId = Writer.sessionWapId(table.meta)))
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    Io.deleteRecursiveQuietly(stagingAbs): Unit
+  override def abort(messages: Array[WriterCommitMessage]): Unit = staging.discard()
 }
 
-case class GraftCommitMessage(records: Long,
-    fileKeys: List[(String, List[String])] = Nil) extends WriterCommitMessage
+/** What a [[GraftDataWriter]] task reports: one entry per file it
+  * wrote, stats and partition tuple included — the driver commits
+  * exactly these, never a listing of the staging dir. */
+case class GraftCommitMessage(files: List[DataFile]) extends WriterCommitMessage
+
+object GraftCommitMessage {
+  def files(messages: Array[WriterCommitMessage]): List[DataFile] =
+    messages.toList.collect { case m: GraftCommitMessage => m.files }.flatten
+}
 
 /** One partition-key field for the fanout writer, addressed as an
   * offset from the END of the incoming record — end-relative because
@@ -484,46 +450,38 @@ case class TruncateKey(fromEnd: Int, dt: org.apache.spark.sql.types.DataType,
     }
 }
 
-class GraftDataWriterFactory(stagingAbs: String, conf: SerializableConfiguration,
-    schema: StructType, keyFromEnd: Seq[KeySpec] = Nil,
-    dataLeading: Boolean = false,
-    targetBytes: Long = Long.MaxValue) extends DataWriterFactory {
+class GraftDataWriterFactory(dir: String, spec: FileSpec) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(stagingAbs, s"part-$partitionId-$taskId", conf.value, schema,
-      keyFromEnd, dataLeading, targetBytes)
+    new GraftDataWriter(dir, s"part-$partitionId-$taskId", spec)
 }
 
-/** Fanout parquet writer (the clustered-writer pattern): input arrives
-  * sorted by the partition key, and the writer ROLLS to a fresh file
-  * whenever the key changes — so every data file holds exactly one
-  * partition value (partition-local files → tight min/max bounds,
-  * exact partition stats, and the uniformity invariant runtime group
-  * filtering needs). One parquet writer open at a time, O(1) memory.
+/** THE table-file writer — data, position-delete and equality-delete
+  * files all go through it. Fanout (the clustered-writer pattern):
+  * input arrives sorted by the partition key, and the writer ROLLS to
+  * a fresh file whenever the key changes — so every data file holds
+  * exactly one partition value (partition-local files → tight min/max
+  * bounds, exact partition stats, and the uniformity invariant runtime
+  * group filtering needs). It also rolls once the open file's
+  * buffered+flushed size passes `spec.targetBytes`: a skewed 10 GB
+  * partition lands as target-sized files, not one monolith (several
+  * files may share one partition value, which every consumer already
+  * handles). One parquet writer open at a time, O(1) memory.
+  *
+  * Closing a file turns the footer it just wrote into that file's
+  * [[DataFile]] entry ([[Writer.entryOf]]); `commit` reports them all.
   */
-class GraftDataWriter(dir: String, prefix: String, conf: Configuration,
-    schema: StructType, keyFromEnd: Seq[KeySpec],
-    dataLeading: Boolean,
-    // roll to a fresh file once the open one's buffered+flushed size
-    // passes this (`write.target-file-size-bytes`): a skewed 10 GB
-    // partition lands as target-sized files, not one monolith. Files
-    // stay partition-LOCAL — several files may share one partition
-    // value, which every consumer (SPJ, stats, group filtering)
-    // already handles.
-    targetBytes: Long = Long.MaxValue) extends DataWriter[InternalRow] {
+class GraftDataWriter(dir: String, prefix: String, spec: FileSpec)
+  extends DataWriter[InternalRow] {
 
-  private var count = 0L
+  private val conf = spec.conf.value
   private var fileSeq = 0
   private var writer: ParquetWriter[InternalRow] = _
   private var curPath: String = _
   private var curCount = 0L
-  private val written = scala.collection.mutable.ListBuffer.empty[String]
-  private val fileKeys = scala.collection.mutable.Map.empty[String, List[String]]
+  private val opened = scala.collection.mutable.ListBuffer.empty[String]
+  private val files = scala.collection.mutable.ListBuffer.empty[DataFile]
   private var prevKey: Array[AnyRef] = _
   private var proj: org.apache.spark.sql.catalyst.ProjectingInternalRow = _
-
-  /** (path → partition-value strings) for every non-empty file. */
-  def writtenFileKeys: Map[String, List[String]] =
-    fileKeys.view.filterKeys(written.contains).toMap
 
   private def openNext(): Unit = {
     curPath = s"$dir/$prefix-$fileSeq.parquet"; fileSeq += 1; curCount = 0
@@ -547,64 +505,75 @@ class GraftDataWriter(dir: String, prefix: String, conf: Configuration,
           e.getKey.substring(bloomPrefix.length), e.getValue.toBoolean): Unit
     }
     writer = builder.build()
-    written += curPath
+    opened += curPath
   }
 
   private def closeCurrent(): Unit = if (writer != null) {
     writer.close()
-    if (curCount == 0) { deleteFile(curPath); written -= curPath }
+    if (curCount == 0) deleteFile(curPath)
+    else {
+      val vals = Option(prevKey).toList.flatMap(k =>
+        spec.keys.zip(k).flatMap { case (ks, v) => ks.repr(v) })
+      files += Writer.entryOf(writer.getFooter, RelPaths.relativize(spec.warehouse, curPath),
+        fileSize(curPath), spec.schema, spec.exactBoundCols).copy(
+        partition =
+          if (vals.size == spec.partitionNames.size)
+            spec.partitionNames.zip(vals).toMap
+          else Map.empty,
+        content = spec.equalityIds.map(_ => "equality"), equalityIds = spec.equalityIds)
+    }
     writer = null
   }
 
   private def keyOf(record: InternalRow): Array[AnyRef] =
-    keyFromEnd.map(k => k.eval(record, record.numFields - k.fromEnd)).toArray
+    spec.keys.map(k => k.eval(record, record.numFields - k.fromEnd)).toArray
 
   override def write(record: InternalRow): Unit = {
-    if (keyFromEnd.nonEmpty) {
+    if (spec.keys.nonEmpty) {
       val k = keyOf(record)
       if (prevKey == null || !prevKey.indices.forall(i =>
           java.util.Objects.equals(prevKey(i), k(i)))) {
         closeCurrent(); openNext(); prevKey = k
-        fileKeys(curPath) = keyFromEnd.zip(k).flatMap { case (ks, v) => ks.repr(v) }.toList
       }
     } else if (writer == null) openNext()
     val out =
-      if (record.numFields == schema.length) record
+      if (record.numFields == spec.schema.length) record
       else {
         if (proj == null) {
           val ords =
-            if (dataLeading) 0 until schema.length
-            else (record.numFields - schema.length) until record.numFields
-          proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(schema, ords.toIndexedSeq)
+            if (spec.dataLeading) 0 until spec.schema.length
+            else (record.numFields - spec.schema.length) until record.numFields
+          proj = org.apache.spark.sql.catalyst.ProjectingInternalRow(spec.schema, ords.toIndexedSeq)
         }
         proj.project(record)
         proj
       }
-    writer.write(out); count += 1; curCount += 1
-    if (targetBytes != Long.MaxValue && (curCount & 1023) == 0 &&
-        writer.getDataSize > targetBytes) {
+    writer.write(out); curCount += 1
+    if (spec.targetBytes != Long.MaxValue && (curCount & 1023) == 0 &&
+        writer.getDataSize > spec.targetBytes) {
       closeCurrent(); openNext()
-      if (prevKey != null)
-        fileKeys(curPath) = keyFromEnd.zip(prevKey).flatMap {
-          case (ks, v) => ks.repr(v) }.toList
     }
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): GraftCommitMessage = {
     closeCurrent()
-    GraftCommitMessage(count, writtenFileKeys.toList)
+    GraftCommitMessage(files.toList)
   }
 
   override def abort(): Unit = {
     scala.util.Try(if (writer != null) writer.close())
-    written.foreach(deleteFile)
+    opened.foreach(deleteFile)
   }
 
-  /** Executor-safe delete: scheme paths go through the task's Hadoop
+  /** Executor-safe file ops: scheme paths go through the task's Hadoop
     * conf (credentials!), posix through java.nio. */
   private def deleteFile(p: String): Unit =
     if (Io.hasScheme(p)) { scala.util.Try(new Path(p).getFileSystem(conf).delete(new Path(p), false)): Unit }
     else { Files.deleteIfExists(Paths.get(p)): Unit }
+
+  private def fileSize(p: String): Long =
+    if (Io.hasScheme(p)) new Path(p).getFileSystem(conf).getFileStatus(new Path(p)).getLen
+    else Files.size(Paths.get(p))
 
   override def close(): Unit = ()
 }
@@ -649,111 +618,79 @@ class GraftDeltaWrite(val table: GraftTable, operation: String, rowSchema: Struc
   with org.apache.spark.sql.connector.write.DeltaBatchWrite
   with PartitionedWriteLayout {
 
-  // re-stamp field ids by name (the plan-derived row schema loses them)
-  private val schema = {
-    val metaByName = table.schema().fields.map(f => f.name -> f.metadata).toMap
-    StructType(rowSchema.fields.map(f =>
-      metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
-  }
-  private val dataRel = s"${table.meta.location}/data/${java.util.UUID.randomUUID()}"
-  private val dataAbs = RelPaths.absolutize(table.ops.warehouse, dataRel)
-  private val delRel = s"${table.meta.location}/deletes/${java.util.UUID.randomUUID()}"
-  private val delAbs = RelPaths.absolutize(table.ops.warehouse, delRel)
+  private val data = Staging(table.meta, table.ops.warehouse, "data")
+  private val deletes = Staging(table.meta, table.ops.warehouse, "deletes")
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
-    Io.mkdirs(dataAbs)
-    Io.mkdirs(delAbs)
-    val spark = org.apache.spark.sql.SparkSession.active
-    new GraftDeltaWriterFactory(dataAbs, delAbs,
-      new SerializableConfiguration(Writer.writerHadoopConf(spark, schema,
-        Writer.bloomColumns(table.meta))),
-      new SerializableConfiguration(Writer.writerHadoopConf(spark, Mor.deleteSchema)),
-      schema, specKeySpecs(schema))
-  }
+      : org.apache.spark.sql.connector.write.DeltaWriterFactory =
+    new GraftDeltaWriterFactory(data.abs, deletes.abs,
+      Writer.fileSpec(table, rowSchema), Writer.positionDeleteSpec(table.ops.warehouse))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
     val ms = messages.collect { case m: GraftDeltaMessage => m }
-    val newFiles =
-      if (ms.forall(_.dataRecords == 0)) Nil
-      else Writer.collectStats(spark, table.schema(), table.ops.warehouse, dataAbs)
-        .filter(_.records > 0)
-        .map(f => Writer.stampPartition(f, ms.flatMap(_.fileKeys).toMap,
-          table.meta.spec.fields.map(_.name), table.ops.warehouse))
-    val delFiles =
-      if (ms.forall(_.deleteRecords == 0)) Nil
-      else Writer.collectStats(spark, Mor.deleteSchema, table.ops.warehouse, delAbs,
-        exactBoundCols = Set("file_path"))
-        .filter(_.records > 0)
+    val newFiles = ms.toList.flatMap(_.data)
+    val delFiles = ms.toList.flatMap(_.deletes)
     if (newFiles.isEmpty && delFiles.isEmpty) { abort(messages); return }
     // a concurrent rewrite/compaction of a file our deletes reference
     // would orphan those deletes → conflict on exactly that set
-    val mustExist: Set[String] =
-      if (delFiles.isEmpty) Set.empty
-      else spark.read.schema(Mor.deleteSchema)
-        .parquet(delFiles.map(f => RelPaths.absolutize(table.ops.warehouse, f.path)): _*)
-        .select("file_path").distinct().collect().map(_.getString(0)).toSet
     try Writer.commitSnapshot(table, newFiles, overwrite = false,
       operation = operation, carryover = Nil,
-      newDeletes = delFiles, mustExist = mustExist,
+      newDeletes = delFiles, mustExist = ms.flatMap(_.referenced).toSet,
       wapId = Writer.sessionWapId(table.meta))
-    catch {
-      case e: Throwable =>
-        Io.deleteRecursiveQuietly(dataAbs)
-        Io.deleteRecursiveQuietly(delAbs)
-        throw e
-    }
+    catch { case e: Throwable => abort(messages); throw e }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    Io.deleteRecursiveQuietly(dataAbs)
-    Io.deleteRecursiveQuietly(delAbs): Unit
+    data.discard(); deletes.discard()
   }
 }
 
-case class GraftDeltaMessage(dataRecords: Long, deleteRecords: Long,
-    fileKeys: List[(String, List[String])] = Nil) extends WriterCommitMessage
+/** A delta task's report: its data and position-delete file entries,
+  * and the data files its delete rows reference. */
+case class GraftDeltaMessage(data: List[DataFile], deletes: List[DataFile],
+    referenced: Set[String]) extends WriterCommitMessage
 
 class GraftDeltaWriterFactory(dataDir: String, delDir: String,
-    dataConf: SerializableConfiguration, delConf: SerializableConfiguration,
-    schema: StructType, keySpecs: Seq[KeySpec])
+    dataSpec: FileSpec, delSpec: FileSpec)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new GraftDeltaWriter(
-      new GraftDataWriter(dataDir, s"part-$partitionId-$taskId", dataConf.value,
-        schema, keySpecs, dataLeading = false),
-      new GraftDataWriter(delDir, s"del-$partitionId-$taskId", delConf.value,
-        Mor.deleteSchema, Nil, dataLeading = false))
+      new GraftDataWriter(dataDir, s"part-$partitionId-$taskId", dataSpec),
+      new GraftDataWriter(delDir, s"del-$partitionId-$taskId", delSpec))
 }
 
 /** Routes the WriteDelta stream: inserts (and the insert half of
   * updates) into the fanout data writer, deletes as (file, pos) rows
-  * into the position-delete writer. */
+  * into the position-delete writer — noting each data file a delete
+  * references, so the commit can validate them without re-reading
+  * the delete files. */
 class GraftDeltaWriter(dataW: GraftDataWriter, delW: GraftDataWriter)
   extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
-  private var dataN = 0L
-  private var delN = 0L
+  private val referenced =
+    scala.collection.mutable.HashSet.empty[org.apache.spark.unsafe.types.UTF8String]
+  private var lastRef: org.apache.spark.unsafe.types.UTF8String = _
 
-  override def insert(row: InternalRow): Unit = { dataW.write(row); dataN += 1 }
+  override def insert(row: InternalRow): Unit = dataW.write(row)
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
-    delW.write(id); delN += 1
+    delW.write(id)
+    // rows of one file mostly arrive together: skip the set probe (and
+    // the copy out of the reused row buffer) while the file repeats
+    val f = id.getUTF8String(0)
+    if (f != lastRef) { lastRef = f.clone(); referenced += lastRef }
   }
 
   override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
     delete(meta, id); insert(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    val dm = dataW.commit().asInstanceOf[GraftCommitMessage]
-    delW.commit()
-    GraftDeltaMessage(dataN, delN, dm.fileKeys)
-  }
+  override def commit(): WriterCommitMessage =
+    GraftDeltaMessage(dataW.commit().files, delW.commit().files,
+      referenced.iterator.map(_.toString).toSet)
 
   override def abort(): Unit = { dataW.abort(); delW.abort() }
 

@@ -121,7 +121,7 @@ object SpjScan {
     .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(java.time.ZoneOffset.UTC)
 
   /** String-encoded bound → catalyst value (inverse of the stats
-    * encoding in [[Writer.collectStatsFromFooters]]). */
+    * encoding in [[Writer.entryOf]]). */
   private def decode(s: String, dt: DataType): Any = dt match {
     case _: IntegerType => s.toInt
     case _: LongType => s.toLong

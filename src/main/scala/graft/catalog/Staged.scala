@@ -39,8 +39,8 @@ class GraftStagedTable(catalogName: String, ident: Identifier, ops: TableOps,
     stagedMeta: TableMeta, base: Option[TableMeta])
   extends StagedTable with SupportsWrite {
 
-  // staging result: (staging dir abs path, stats-stamped file entries)
-  @volatile private var staged: Option[(String, List[DataFile])] = None
+  // staging result: (staging dir, writer-reported file entries)
+  @volatile private var staged: Option[(Staging, List[DataFile])] = None
 
   override def name(): String =
     (catalogName +: ident.namespace().toSeq :+ ident.name()).mkString(".")
@@ -70,14 +70,11 @@ class GraftStagedTable(catalogName: String, ident: Identifier, ops: TableOps,
     }
 
   override def commitStagedChanges(): Unit = {
-    val (stagingAbs, files) = staged.getOrElse(("", Nil))
-    def cleanup(): Unit =
-      if (stagingAbs.nonEmpty)
-        Io.deleteRecursiveQuietly(stagingAbs): Unit
+    val files = staged.map(_._2).getOrElse(Nil)
     base match {
       case Some(b) =>
         val (v, cur) = ops.refresh().getOrElse {
-          cleanup()
+          abortStagedChanges()
           throw new CommitConflictException(
             s"table ${name()} was dropped while REPLACE TABLE was staging")
         }
@@ -103,7 +100,7 @@ class GraftStagedTable(catalogName: String, ident: Identifier, ops: TableOps,
               sortOrders = stagedMeta.sortOrders,
               properties = stagedMeta.properties)
           })
-        catch { case e: Throwable => cleanup(); throw e }
+        catch { case e: Throwable => abortStagedChanges(); throw e }
       case None =>
         // first version carries the snapshot: publish-all-or-nothing
         val now = System.currentTimeMillis()
@@ -133,15 +130,12 @@ class GraftStagedTable(catalogName: String, ident: Identifier, ops: TableOps,
         try ops.commit(0, metaWithSnap)
         catch {
           case _: CommitFailedException =>
-            cleanup()
+            abortStagedChanges()
             throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-          case e: Throwable => cleanup(); throw e
+          case e: Throwable => abortStagedChanges(); throw e
         }
     }
   }
 
-  override def abortStagedChanges(): Unit =
-    staged.foreach { case (dir, _) =>
-      Io.deleteRecursiveQuietly(dir): Unit
-    }
+  override def abortStagedChanges(): Unit = staged.foreach(_._1.discard())
 }

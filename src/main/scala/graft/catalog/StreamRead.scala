@@ -619,72 +619,36 @@ class GraftStreamingWrite(table: GraftTable, queryId: String,
 
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
 
-  // re-stamp field ids by name (plan-derived schemas lose them)
-  private val schema = {
-    val metaByName = table.schema().fields.map(f => f.name -> f.metadata).toMap
-    StructType(rowSchema.fields.map(f =>
-      metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
-  }
-  private val stagingRel = s"${table.meta.location}/data/${java.util.UUID.randomUUID()}"
-  private val stagingAbs = RelPaths.absolutize(table.ops.warehouse, stagingRel)
+  private val staging = Staging(table.meta, table.ops.warehouse, "data")
 
-  private def epochDir(epochId: Long) = s"$stagingAbs/ep-$epochId"
+  private def epoch(epochId: Long) = new Staging(s"${staging.abs}/ep-$epochId")
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      Writer.writerHadoopConf(spark, schema))
-    new GraftStreamingWriterFactory(stagingAbs, conf, schema,
-      KeySpec.forSpec(table, schema), Writer.targetFileSize(table.meta))
-  }
+      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
+    new GraftStreamingWriterFactory(staging.abs, Writer.fileSpec(table, rowSchema))
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val dir = epochDir(epochId)
+    val staging = epoch(epochId)
     // replayed epoch after a driver restart → already in the chain
     val (_, meta) = table.ops.refresh().getOrElse((0, table.meta))
     val committed = meta.snapshots.exists(s =>
       s.summary.get("streaming-query-id").contains(queryId) &&
         s.summary.get("streaming-epoch-id").exists(_.toLong >= epochId))
-    if (committed) {
-      Io.deleteRecursiveQuietly(dir): Unit
-      return
-    }
-    val epochKeys = messages.collect { case m: GraftCommitMessage => m }
-      .flatMap(_.fileKeys).toMap
-    val newFiles =
-      if (!Io.isDir(dir)) Nil
-      else Writer.collectStats(spark, table.schema(), table.ops.warehouse, dir)
-        .filter(_.records > 0)
-        .map(f => Writer.stampPartition(f, epochKeys,
-          table.meta.spec.fields.map(_.name), table.ops.warehouse))
-    try Writer.commitSnapshot(table, newFiles, overwrite = false,
-      operation = "append", carryover = Nil,
+    if (committed) { staging.discard(); return }
+    staging.discardOnFailure(Writer.commitSnapshot(table, GraftCommitMessage.files(messages),
+      overwrite = false, operation = "append", carryover = Nil,
       extraSummary = Map(
         "streaming-query-id" -> queryId,
-        "streaming-epoch-id" -> epochId.toString))
-    catch {
-      case e: Throwable =>
-        Io.deleteRecursiveQuietly(dir)
-        throw e
-    }
+        "streaming-epoch-id" -> epochId.toString)))
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    Io.deleteRecursiveQuietly(epochDir(epochId)): Unit
+    epoch(epochId).discard()
 }
 
-class GraftStreamingWriterFactory(stagingAbs: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    schema: StructType, keySpecs: Seq[KeySpec],
-    targetBytes: Long = Long.MaxValue)
+class GraftStreamingWriterFactory(stagingAbs: String, spec: FileSpec)
   extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] = {
-    val dir = s"$stagingAbs/ep-$epochId"
-    Io.mkdirs(dir)
-    new GraftDataWriter(dir, s"part-$partitionId-$taskId", conf.value, schema,
-      keySpecs, dataLeading = false, targetBytes = targetBytes)
-  }
+      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
+    new GraftDataWriter(s"$stagingAbs/ep-$epochId", s"part-$partitionId-$taskId", spec)
 }

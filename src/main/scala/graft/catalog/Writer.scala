@@ -1,17 +1,17 @@
 package graft.catalog
 
 import graft.meta._
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
-/** Append/overwrite writer: stage parquet → collect per-file stats →
-  * OCC commit with retry (the Spark-native equivalent of the
-  * reference's insert flow, SURVEY §3.2: executors write bytes at
-  * absolute paths, metadata records relative paths, the driver
-  * commits v(N+1) with atomic rename and retries on conflict).
+/** Append/overwrite writer: stage parquet (each task reports its
+  * files' stats in its commit message) → OCC commit with retry (the
+  * Spark-native equivalent of the reference's insert flow, SURVEY
+  * §3.2: executors write bytes at absolute paths, metadata records
+  * relative paths, the driver commits v(N+1) with atomic rename and
+  * retries on conflict).
   */
 object Writer {
 
@@ -115,29 +115,21 @@ object Writer {
       validateFrom: Option[Option[Long]] = None,
       clearDeletes: Boolean = false,
       wapId: Option[String] = None): Unit = {
-    val (stagingAbs, newFiles) = stageFiles(table.meta, table.ops.warehouse, data)
-    // a conflicted (or retry-exhausted) commit must not leak its staged
-    // rewrite output as orphan files
-    try commitSnapshot(table, newFiles, overwrite, operation, carryover, branch,
-      validateFrom, clearDeletes = clearDeletes, wapId = wapId)
-    catch {
-      case e: Throwable =>
-        Io.deleteRecursiveQuietly(stagingAbs)
-        throw e
-    }
+    val (staging, newFiles) = stageFiles(table.meta, table.ops.warehouse, data)
+    staging.discardOnFailure(commitSnapshot(table, newFiles, overwrite, operation, carryover, branch,
+      validateFrom, clearDeletes = clearDeletes, wapId = wapId))
   }
 
   /** Stage `data` as committed-shape parquet under `<table>/data/<uuid>`
     * WITHOUT committing: align to the schema (field-id stamping),
-    * cluster + fan out by the partition spec, collect footer stats,
-    * stamp partition tuples. Returns the staging dir (for cleanup on a
-    * failed commit — the files stay in place on success, metadata just
-    * starts referencing them) and the stats-carrying file entries.
-    * Shared by the normal append path and the atomic CTAS/RTAS staged
-    * commit ([[GraftStagedTable]]).
+    * cluster + fan out by the partition spec; the writer reports each
+    * file's stats and partition tuple. Returns the staging dir (the
+    * files stay in place on success, metadata just starts referencing
+    * them) and the reported file entries. Shared by the normal append
+    * path and the atomic CTAS/RTAS staged commit ([[GraftStagedTable]]).
     */
   def stageFiles(meta: TableMeta, warehouse: String,
-      data: DataFrame): (String, List[DataFile]) = {
+      data: DataFrame): (Staging, List[DataFile]) = {
     val spark = data.sparkSession
     val schema = TableMeta.schemaToSpark(meta.schema)
 
@@ -189,41 +181,42 @@ object Writer {
       else if (sortCols.nonEmpty) clustered.sortWithinPartitions(sortCols: _*)
       else clustered
 
-    val stagingRel = s"${meta.location}/data/${java.util.UUID.randomUUID()}"
-    val stagingAbs = RelPaths.absolutize(warehouse, stagingRel)
-    val fileKeys: Map[String, List[String]] =
-      if (specExprs.isEmpty) {
-        val w = sorted.write.mode("errorifexists").option("compression", "zstd")
-        bloomColumns(meta).foldLeft(w)((w, c) =>
-          w.option(s"parquet.bloom.filter.enabled#$c", "true")).parquet(stagingAbs)
-        Map.empty
-      } else
-        fanoutWrite(sorted.withColumn("__gpk", struct(specExprs.toIndexedSeq: _*)),
-          schema, stagingAbs, targetFileSize(meta), bloomColumns(meta))
-
-    val specNames = meta.spec.fields.map(_.name)
-    val newFiles = collectStats(spark, schema, warehouse, stagingAbs)
-      .filter(_.records > 0)
-      .map(f => stampPartition(f, fileKeys, specNames, warehouse))
-    (stagingAbs, newFiles)
+    val staging = Staging(meta, warehouse, "data")
+    val files =
+      if (specExprs.isEmpty) writeFiles(sorted, staging, fileSpec(meta, warehouse, schema))
+      else {
+        // one TRAILING struct of the transformed key values: it already
+        // IS the partition tuple, so the writer compares it raw
+        val keyed = sorted.withColumn("__gpk", struct(specExprs.toIndexedSeq: _*))
+        writeFiles(keyed, staging, fileSpec(meta, warehouse, schema,
+          keys = Seq(RawKey(1, keyed.schema.last.dataType)), dataLeading = true))
+      }
+    (staging, files)
   }
 
-  /** Attach the writer-reported partition tuple (field name → value
-    * string) to a stats-collected data file. Bucket SPJ depends on
-    * this: bucket membership is not provable from value bounds, only
-    * the writer that clustered the rows knows it. */
-  def stampPartition(f: DataFile, fileKeys: Map[String, List[String]],
-      specNames: Seq[String], warehouse: String): DataFile =
-    fileKeys.collectFirst {
-      case (abs, vals) if RelPaths.relativize(warehouse, abs) == f.path &&
-          vals.size == specNames.size =>
-        f.copy(partition = specNames.zip(vals).toMap)
-    }.getOrElse(f)
-
-  /** Hadoop conf a [[GraftDataWriter]] needs to drive Spark's
-    * ParquetWriteSupport outside a FileFormatWriter (the same settings
-    * ParquetFileFormat.prepareWrite would install).
+  /** Write `data` — rows in `spec.schema` order, plus the trailing key
+    * columns `spec.keys` address — through one [[GraftDataWriter]] per
+    * task under `staging`, and return the entries the tasks reported.
+    * The V1 write path: appends, CTAS/RTAS, compactions, and the
+    * delete files of `deleteWhere` and `rewrite_position_deletes`.
     */
+  def writeFiles(data: DataFrame, staging: Staging, spec: FileSpec): List[DataFile] = {
+    val dir = staging.abs
+    staging.discardOnFailure(data.queryExecution.toRdd.mapPartitions {
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        val tc = org.apache.spark.TaskContext.get()
+        val w = new GraftDataWriter(dir, s"part-${tc.partitionId()}-${tc.taskAttemptId()}", spec)
+        var ok = false
+        try {
+          it.foreach(w.write)
+          val m = w.commit()
+          ok = true
+          Iterator.single(m.files)
+        }
+        finally if (!ok) w.abort()
+    }.collect().toList.flatten)
+  }
+
   /** `write.parquet.bloom-filter-columns` table property: columns that
     * get a parquet bloom filter stamped per row group. At 100 TB a
     * point lookup on a high-cardinality NON-sort column (doc_id,
@@ -232,11 +225,15 @@ object Writer {
     * whole row groups on the pushed equality predicate with no false
     * negatives.
     */
-  def bloomColumns(meta: TableMeta): Seq[String] =
+  private def bloomColumns(meta: TableMeta): Seq[String] =
     meta.properties.get("write.parquet.bloom-filter-columns")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
 
+  /** Hadoop conf a [[GraftDataWriter]] needs to drive Spark's
+    * ParquetWriteSupport outside a FileFormatWriter (the same settings
+    * ParquetFileFormat.prepareWrite would install).
+    */
   def writerHadoopConf(spark: org.apache.spark.sql.SparkSession,
       schema: StructType,
       bloomCols: Seq[String] = Nil): org.apache.hadoop.conf.Configuration = {
@@ -257,62 +254,52 @@ object Writer {
     conf
   }
 
-  /** Executor-side fanout write of `data` (= the write schema plus one
-    * TRAILING `__gpk` partition-key struct): each task streams its
-    * sorted rows through a [[GraftDataWriter]] that starts a fresh
-    * parquet file whenever the key changes. Used by the V1 append path
-    * for partitioned tables.
-    */
   /** `write.target-file-size-bytes` table property (no cap if unset). */
-  def targetFileSize(meta: TableMeta): Long =
+  private def targetFileSize(meta: TableMeta): Long =
     meta.properties.get("write.target-file-size-bytes")
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(Long.MaxValue)
 
-  private def fanoutWrite(data: org.apache.spark.sql.DataFrame, schema: StructType,
-      stagingAbs: String, targetBytes: Long,
-      bloomCols: Seq[String] = Nil): Map[String, List[String]] = {
-    val spark = data.sparkSession
-    Io.mkdirs(stagingAbs)
-    val keyType = data.schema.fields.last.dataType
-    val ser = new org.apache.spark.util.SerializableConfiguration(
-      writerHadoopConf(spark, schema, bloomCols))
-    // __gpk already IS the transformed key (specTransformExprs), so
-    // the writer compares it raw
-    val factory = new GraftDataWriterFactory(stagingAbs, ser, schema,
-      keyFromEnd = Seq(RawKey(1, keyType)), dataLeading = true,
-      targetBytes = targetBytes)
-    // per-file partition keys flow back with the commit messages
-    data.queryExecution.toRdd.mapPartitions {
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-        val tc = org.apache.spark.TaskContext.get()
-        val w = factory.createWriter(tc.partitionId(), tc.taskAttemptId())
-        var ok = false
-        try {
-          it.foreach(w.write)
-          val m = w.commit().asInstanceOf[GraftCommitMessage]
-          ok = true
-          Iterator.single(m.fileKeys)
-        }
-        finally if (!ok) w.abort()
-    }.collect().flatten.toMap
+  /** A plan-derived write schema with the table's field ids re-stamped
+    * by name: plan schemas lose the id metadata, and every data file
+    * must carry ids for id-based read resolution. Columns the table
+    * doesn't have (rewrite-internal ones) keep their own metadata. */
+  private def withFieldIds(table: GraftTable, rowSchema: StructType): StructType = {
+    val metaByName = table.schema().fields.map(f => f.name -> f.metadata).toMap
+    StructType(rowSchema.fields.map(f =>
+      metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
   }
 
-  /** Per-file record counts + min/max bounds for every boundable
-    * primitive column (drives file skipping) — read from the parquet
-    * FOOTERS the write already produced, so committing never re-reads
-    * the data (a 2× read amplification at 100 TB ingest otherwise).
-    * Falls back to a Spark aggregation pass if a footer can't serve.
-    */
-  def collectStats(spark: org.apache.spark.sql.SparkSession, schema: StructType,
-      warehouse: String, stagingAbs: String,
-      exactBoundCols: Set[String] = Set.empty): List[DataFile] =
-    try collectStatsFromFooters(schema, warehouse, stagingAbs, exactBoundCols)
-    catch {
-      case e: Throwable =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"footer stats failed (${e.getMessage}); falling back to scan")
-        collectStatsByScan(spark, schema, warehouse, stagingAbs, exactBoundCols)
-    }
+  private def confFor(schema: StructType, bloomCols: Seq[String] = Nil) =
+    new org.apache.spark.util.SerializableConfiguration(writerHadoopConf(
+      org.apache.spark.sql.SparkSession.active, schema, bloomCols))
+
+  /** The data-file spec of every table write: the table's target file
+    * size, bloom columns and partition names. `schema` must already
+    * carry the field ids. */
+  def fileSpec(meta: TableMeta, warehouse: String, schema: StructType,
+      keys: Seq[KeySpec] = Nil, dataLeading: Boolean = false): FileSpec =
+    FileSpec(schema, confFor(schema, bloomColumns(meta)), warehouse,
+      keys = keys, partitionNames = meta.spec.fields.map(_.name),
+      targetBytes = targetFileSize(meta), dataLeading = dataLeading)
+
+  /** [[fileSpec]] for a DSv2 writer: ids re-stamped onto the plan's row
+    * schema, rolling on the transform-aware partition keys. */
+  def fileSpec(table: GraftTable, rowSchema: StructType): FileSpec = {
+    val schema = withFieldIds(table, rowSchema)
+    fileSpec(table.meta, table.ops.warehouse, schema, KeySpec.forSpec(table, schema))
+  }
+
+  /** Position-delete files: `(file_path, pos)` rows, one file per task,
+    * and full-length `file_path` bounds — scan-side delete pruning
+    * needs a real range, and paths are ~100 chars, not documents. */
+  def positionDeleteSpec(warehouse: String): FileSpec =
+    FileSpec(Mor.deleteSchema, confFor(Mor.deleteSchema), warehouse,
+      exactBoundCols = Set("file_path"))
+
+  /** Equality-delete files over the key columns `schema` (field ids
+    * `ids`), one file per task. */
+  def equalityDeleteSpec(warehouse: String, schema: StructType, ids: List[Int]): FileSpec =
+    FileSpec(schema, confFor(schema), warehouse, equalityIds = Some(ids))
 
   private val tsFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(java.time.ZoneOffset.UTC)
@@ -324,11 +311,12 @@ object Writer {
     * few-hundred-file commit). */
   val DistributedFooterThreshold: Int = 10000
 
+  /** Entries for parquet files graft did NOT write (`add_files`
+    * imports), from their footers: the same [[entryOf]] encoding the
+    * writer applies to the footer it just wrote. */
   def collectStatsFromFooters(schema: StructType, warehouse: String,
-      stagingAbs: String, exactBoundCols: Set[String] = Set.empty,
-      distributeAbove: Int = DistributedFooterThreshold): List[DataFile] = {
+      stagingAbs: String, distributeAbove: Int = DistributedFooterThreshold): List[DataFile] = {
     val conf = Io.hadoopConf()
-    val boundableNames = schema.fields.map(_.name).toSet
     val files = Io.walkFiles(stagingAbs).filter(_.endsWith(".parquet")).toList
     if (files.size > distributeAbove) {
       // same per-file footer work, executor-side; collect preserves
@@ -339,19 +327,17 @@ object Writer {
       val parts = math.max(1, math.min(files.size / 256 + 1,
         spark.sparkContext.defaultParallelism * 4))
       spark.sparkContext.parallelize(files, parts)
-        .map(p => statsOfFile(p, schema, warehouse, serConf.value,
-          boundableNames, exactBoundCols))
+        .map(p => statsOfFile(p, schema, warehouse, serConf.value))
         .collect().toList
     } else {
-      // footer reads are independent and IO-bound: a 10k-file ingest
-      // commit should not pay them serially on the driver
+      // footer reads are independent and IO-bound: a 10k-file import
+      // should not pay them serially on the driver
       val par = math.max(1, math.min(16, files.size))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
       try {
         val tasks = files.map(p => pool.submit(
           new java.util.concurrent.Callable[DataFile] {
-            override def call(): DataFile =
-              statsOfFile(p, schema, warehouse, conf, boundableNames, exactBoundCols)
+            override def call(): DataFile = statsOfFile(p, schema, warehouse, conf)
           }))
         tasks.map(_.get())
       } finally pool.shutdown()
@@ -359,77 +345,85 @@ object Writer {
   }
 
   private def statsOfFile(p: String, schema: StructType,
-      warehouse: String, conf: org.apache.hadoop.conf.Configuration,
-      boundableNames: Set[String], exactBoundCols: Set[String]): DataFile = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+      warehouse: String, conf: org.apache.hadoop.conf.Configuration): DataFile = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf))
+    try entryOf(reader.getFooter, RelPaths.relativize(warehouse, p),
+      scala.util.Try(Io.size(p)).getOrElse(0L), schema, Set.empty)
+    finally reader.close()
+  }
+
+  /** THE footer → [[DataFile]] encoding: per-file record count, null
+    * counts, and min/max bounds for every boundable top-level column of
+    * `schema` (drives file skipping), as order-preserving strings.
+    * Long string bounds would embed whole documents into metadata.json:
+    * a 64-char PREFIX stays a valid lower bound; an over-long upper
+    * bound is dropped (the file is simply never skipped on that
+    * column's upper side) — except for `exactBoundCols`.
+    */
+  def entryOf(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      path: String, bytes: Long, schema: StructType,
+      exactBoundCols: Set[String]): DataFile = {
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p), conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        val records = blocks.map(_.getRowCount).sum
-        val mins = scala.collection.mutable.Map.empty[String, String]
-        val maxs = scala.collection.mutable.Map.empty[String, String]
-        val nulls = scala.collection.mutable.Map.empty[String, Long]
-        val dropped = scala.collection.mutable.Set.empty[String]
-        val nullsUnknown = scala.collection.mutable.Set.empty[String]
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val path = c.getPath.toArray
-          if (path.length == 1 && boundableNames(path(0))) {
-            val name = path(0)
-            val st = c.getStatistics
-            // null counts are independent of bound encodability: track
-            // them even for columns whose min/max we drop
-            if (st == null || !st.isNumNullsSet) nullsUnknown += name
-            else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-            if (st == null || !st.hasNonNullValue || st.isEmpty) dropped += name
-            else {
-              val ann = c.getPrimitiveType.getLogicalTypeAnnotation
-              def encode(v: AnyRef): Option[String] = (v, ann) match {
-                case (b: Binary, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                  Some(b.toStringUsingUTF8)
-                case (i: Integer, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-                  Some(java.time.LocalDate.ofEpochDay(i.longValue).toString)
-                case (l: java.lang.Long, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
-                    if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                  Some(tsFmt.format(java.time.Instant.ofEpochSecond(
-                    Math.floorDiv(l.longValue, 1000000L),
-                    Math.floorMod(l.longValue, 1000000L) * 1000L)))
-                case (n @ (_: Integer | _: java.lang.Long | _: java.lang.Double |
-                           _: java.lang.Float), null) => Some(n.toString)
-                case (n @ (_: Integer | _: java.lang.Long),
-                      _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) => Some(n.toString)
-                case _ => None // decimals/other: no bound (conservative)
-              }
-              (encode(st.genericGetMin.asInstanceOf[AnyRef]),
-               encode(st.genericGetMax.asInstanceOf[AnyRef])) match {
-                case (Some(mn), Some(mx)) =>
-                  mins(name) = minOf(mins.get(name), mn, schema, name)
-                  maxs(name) = maxOf(maxs.get(name), mx, schema, name)
-                case _ => dropped += name
-              }
-            }
+    val boundableNames = schema.fields.map(_.name).toSet
+    val blocks = footer.getBlocks.asScala
+    val records = blocks.map(_.getRowCount).sum
+    val mins = scala.collection.mutable.Map.empty[String, String]
+    val maxs = scala.collection.mutable.Map.empty[String, String]
+    val nulls = scala.collection.mutable.Map.empty[String, Long]
+    val dropped = scala.collection.mutable.Set.empty[String]
+    val nullsUnknown = scala.collection.mutable.Set.empty[String]
+    for (b <- blocks; c <- b.getColumns.asScala) {
+      val colPath = c.getPath.toArray
+      if (colPath.length == 1 && boundableNames(colPath(0))) {
+        val name = colPath(0)
+        val st = c.getStatistics
+        // null counts are independent of bound encodability: track
+        // them even for columns whose min/max we drop
+        if (st == null || !st.isNumNullsSet) nullsUnknown += name
+        else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
+        if (st == null || !st.hasNonNullValue || st.isEmpty) dropped += name
+        else {
+          val ann = c.getPrimitiveType.getLogicalTypeAnnotation
+          def encode(v: AnyRef): Option[String] = (v, ann) match {
+            case (b: Binary, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
+              Some(b.toStringUsingUTF8)
+            case (i: Integer, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
+              Some(java.time.LocalDate.ofEpochDay(i.longValue).toString)
+            case (l: java.lang.Long, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
+                if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
+              // FIXED-WIDTH, so lexicographic bound compare is chronological
+              Some(tsFmt.format(java.time.Instant.ofEpochSecond(
+                Math.floorDiv(l.longValue, 1000000L),
+                Math.floorMod(l.longValue, 1000000L) * 1000L)))
+            case (n @ (_: Integer | _: java.lang.Long | _: java.lang.Double |
+                       _: java.lang.Float), null) => Some(n.toString)
+            case (n @ (_: Integer | _: java.lang.Long),
+                  _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) => Some(n.toString)
+            case _ => None // decimals/other: no bound (conservative)
+          }
+          (encode(st.genericGetMin.asInstanceOf[AnyRef]),
+           encode(st.genericGetMax.asInstanceOf[AnyRef])) match {
+            case (Some(mn), Some(mx)) =>
+              mins(name) = minOf(mins.get(name), mn, schema, name)
+              maxs(name) = maxOf(maxs.get(name), mx, schema, name)
+            case _ => dropped += name
           }
         }
-        dropped.foreach { n => mins.remove(n); maxs.remove(n) }
-        nullsUnknown.foreach(nulls.remove)
-        DataFile(
-          path = RelPaths.relativize(warehouse, p),
-          records = records,
-          bytes = scala.util.Try(Io.size(p)).getOrElse(0L),
-          // exactBoundCols (e.g. a position-delete file's file_path)
-          // keep full-length bounds: scan-side delete pruning needs a
-          // real range, and paths are ~100 chars, not documents
-          minBound = mins.toMap.map { case (k, v) =>
-            k -> (if (v.length > 64 && !exactBoundCols(k)) v.substring(0, 64) else v) },
-          maxBound = maxs.toMap.filter { case (k, v) =>
-            v.length <= 64 || exactBoundCols(k) },
-          nullCount = nulls.toMap)
-      } finally reader.close()
+      }
     }
+    dropped.foreach { n => mins.remove(n); maxs.remove(n) }
+    nullsUnknown.foreach(nulls.remove)
+    DataFile(
+      path = path,
+      records = records,
+      bytes = bytes,
+      minBound = mins.toMap.map { case (k, v) =>
+        k -> (if (v.length > 64 && !exactBoundCols(k)) v.substring(0, 64) else v) },
+      maxBound = maxs.toMap.filter { case (k, v) =>
+        v.length <= 64 || exactBoundCols(k) },
+      nullCount = nulls.toMap)
   }
 
   /** order-aware merge of string-encoded bounds: numeric columns
@@ -458,58 +452,6 @@ object Writer {
           scala.util.Try(if (BigDecimal(v) > BigDecimal(c)) v else c).getOrElse(Seq(v, c).max)
         else Seq(v, c).max
     }
-
-  def collectStatsByScan(spark: org.apache.spark.sql.SparkSession, schema: StructType,
-      warehouse: String, stagingAbs: String,
-      exactBoundCols: Set[String] = Set.empty): List[DataFile] = {
-    val boundable = schema.fields.filter(f => f.dataType match {
-      case _: IntegerType | _: LongType | _: ShortType | _: ByteType | _: DoubleType |
-           _: FloatType | _: StringType | _: DateType | _: TimestampType |
-           _: TimestampNTZType | _: DecimalType => true
-      case _ => false
-    })
-    // timestamps use a FIXED-WIDTH encoding so lexicographic bound
-    // compare == chronological (a trimmed fraction would not sort)
-    def enc(f: org.apache.spark.sql.types.StructField) = f.dataType match {
-      case _: TimestampType | _: TimestampNTZType =>
-        (c: org.apache.spark.sql.Column) => date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      case _ => (c: org.apache.spark.sql.Column) => c.cast("string")
-    }
-    val statAggs = count(lit(1)).as("__n") +:
-      boundable.flatMap(f => Seq(
-        enc(f)(min(col(f.name))).as(s"__min_${f.name}"),
-        enc(f)(max(col(f.name))).as(s"__max_${f.name}")))
-    val stats = spark.read.schema(schema).parquet(stagingAbs)
-      .groupBy(input_file_name().as("__file"))
-      .agg(statAggs.head, statAggs.tail.toIndexedSeq: _*)
-      .collect()
-
-    stats.map { r =>
-      // input_file_name URIs: keep the scheme form for a URI warehouse
-      // (normalized to Hadoop's spelling so RelPaths prefix-matches);
-      // strip it for posix warehouses, as before
-      val rawFile = r.getAs[String]("__file")
-      val fileAbs =
-        if (Io.hasScheme(warehouse)) Io.normalize(rawFile)
-        else rawFile.replaceFirst("^file:(//)?", "")
-      // long string bounds would embed whole documents into
-      // metadata.json: a 64-char PREFIX stays a valid lower bound;
-      // an over-long upper bound is dropped (conservative: the file
-      // is simply never skipped on that column's upper side)
-      val mins = boundable.flatMap(f =>
-        Option(r.getAs[String](s"__min_${f.name}")).map(v =>
-          f.name -> (if (v.length > 64 && !exactBoundCols(f.name)) v.substring(0, 64) else v))).toMap
-      val maxs = boundable.flatMap(f =>
-        Option(r.getAs[String](s"__max_${f.name}"))
-          .filter(v => v.length <= 64 || exactBoundCols(f.name))
-          .map(f.name -> _)).toMap
-      DataFile(
-        path = RelPaths.relativize(warehouse, fileAbs),
-        records = r.getAs[Long]("__n"),
-        bytes = scala.util.Try(Io.size(fileAbs)).getOrElse(0L),
-        minBound = mins, maxBound = maxs)
-    }.toList
-  }
 
   /** Commit a new snapshot through the OCC retry loop
     * ([[TableOps.commitRetrying]]; ref
@@ -740,4 +682,44 @@ object Writer {
       TableOps.Commit(next)
     }
   }
+}
+
+/** How a [[GraftDataWriter]] writes one kind of table file and
+  * describes it: the written `schema` (field ids stamped; its columns
+  * get bounds) and its Hadoop `conf`, the `warehouse` entries are
+  * relative to, the roll keys addressed from the END of each incoming
+  * record (see [[KeySpec]]) and the partition names their values
+  * stamp, the target file size, whether the data columns LEAD the
+  * record (else they trail rewrite-internal ones), the columns whose
+  * bounds stay full length, and — for equality-delete files — the
+  * key field ids.
+  */
+case class FileSpec(
+    schema: StructType,
+    conf: org.apache.spark.util.SerializableConfiguration,
+    warehouse: String,
+    keys: Seq[KeySpec] = Nil,
+    partitionNames: Seq[String] = Nil,
+    targetBytes: Long = Long.MaxValue,
+    dataLeading: Boolean = false,
+    exactBoundCols: Set[String] = Set.empty,
+    equalityIds: Option[List[Int]] = None)
+
+/** The staging directory `<table>/<kind>/<uuid>` of one write. Its
+  * files stay in place when the commit lands — metadata just starts
+  * referencing them — and a failed write or commit (conflicted,
+  * retry-exhausted) or an aborted write deletes them instead of
+  * leaking orphans.
+  */
+final class Staging(val abs: String) {
+  def discardOnFailure[T](body: => T): T =
+    try body catch { case e: Throwable => discard(); throw e }
+
+  def discard(): Unit = Io.deleteRecursiveQuietly(abs)
+}
+
+object Staging {
+  def apply(meta: TableMeta, warehouse: String, kind: String): Staging =
+    new Staging(RelPaths.absolutize(warehouse,
+      s"${meta.location}/$kind/${java.util.UUID.randomUUID()}"))
 }

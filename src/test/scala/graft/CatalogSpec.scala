@@ -900,6 +900,19 @@ class CatalogSpec extends AnyFunSuite {
     val mrows = spark.sql("SELECT v FROM tcOv.o.m ORDER BY v").collect().map(_.getString(0)).toSeq
     assert(mrows == Seq("JAN2", "feb"), s"$mrows")
     assert(mFiles.filter(_.partition("ts_month") == "649").map(_.path).toSet == febBefore)
+
+    // a file list spilled into manifest chunks: the files held in
+    // chunks carry over exactly like the inline tail's
+    spark.sql("CREATE TABLE tcOv.o.c (k INT, v STRING) PARTITIONED BY (k) " +
+      "TBLPROPERTIES ('write.metadata.manifest-chunk-size'='2')")
+    (1 to 5).foreach(k => spark.sql(s"INSERT INTO tcOv.o.c VALUES ($k, 'old$k')"))
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try spark.sql("INSERT OVERWRITE tcOv.o.c VALUES (1, 'new1')")
+    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    val crows = spark.sql("SELECT k, v FROM tcOv.o.c ORDER BY k").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(crows == Seq((1, "new1"), (2, "old2"), (3, "old3"), (4, "old4"), (5, "old5")),
+      s"$crows")
   }
 
   test("TRUNCATE TABLE: metadata-only empty snapshot, history stays readable") {
@@ -926,18 +939,47 @@ class CatalogSpec extends AnyFunSuite {
     val wh = freshDir("tfs")
     mkCatalog("tcTf", wh)
     spark.sql("CREATE NAMESPACE tcTf.t")
-    spark.sql("CREATE TABLE tcTf.t.t (k INT, payload STRING) PARTITIONED BY (k) " +
-      "TBLPROPERTIES ('write.target-file-size-bytes'='65536')")
-    // one skewed partition: ~8 MB of rows under k=1
-    spark.sql("INSERT INTO tcTf.t.t SELECT 1, repeat(uuid(), 20) FROM range(10000)")
     import org.apache.spark.sql.connector.catalog.Identifier
     val cat = spark.sessionState.catalogManager.catalog("tcTf")
       .asInstanceOf[graft.catalog.RelativeCatalog]
-    val files = cat.loadTable(Identifier.of(Array("t"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
-    assert(files.size > 3, s"expected size-rolled files, got ${files.size}")
-    assert(files.forall(_.partition("k") == "1"), "rolled files stay partition-local")
-    assert(spark.sql("SELECT COUNT(*) FROM tcTf.t.t").collect()(0).getLong(0) == 10000)
+    def files(t: String) = {
+      val tbl = cat.loadTable(Identifier.of(Array("t"), t)).asInstanceOf[graft.catalog.GraftTable]
+      tbl.readSnapshot.map(tbl.ops.allFiles).getOrElse(Nil)
+    }
+    // ~8 MB of rows from ONE task (one range partition): every file
+    // past the first is the writer's size roll, whatever the write path
+    // (deterministic, so a copy-on-write MERGE accepts it as a source)
+    val wide = "repeat(sha2(CAST(id AS STRING), 256), 12) AS payload FROM range(0, 10000, 1, 1)"
+    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    // (table, partitioned, extra properties, seed rows, the write, rows after)
+    val cases = Seq(
+      ("part_append", true, "", Nil, s"INSERT INTO tcTf.t.part_append SELECT 1, $wide", 10000L),
+      ("flat_append", false, "", Nil, s"INSERT INTO tcTf.t.flat_append SELECT id, $wide", 10000L),
+      ("mor_merge", false, ", 'write.merge.mode'='merge-on-read'", Seq("(0, 'seed')"),
+        s"""MERGE INTO tcTf.t.mor_merge t USING (SELECT id AS k, $wide) s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET payload = s.payload
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin, 10000L),
+      ("cow_merge", false, "", Seq("(0, 'seed')"),
+        s"""MERGE INTO tcTf.t.cow_merge t USING (SELECT id AS k, $wide) s ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET payload = s.payload
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin, 10000L),
+      ("dyn_overwrite", true, "", Seq("(1, 'old')", "(2, 'kept')"),
+        s"INSERT OVERWRITE tcTf.t.dyn_overwrite SELECT 1, $wide", 10001L))
+    for ((t, partitioned, props, seed, write, rows) <- cases) {
+      spark.sql(s"CREATE TABLE tcTf.t.$t (k BIGINT, payload STRING) " +
+        (if (partitioned) "PARTITIONED BY (k) " else "") +
+        s"TBLPROPERTIES ('write.target-file-size-bytes'='65536'$props)")
+      seed.foreach(r => spark.sql(s"INSERT INTO tcTf.t.$t VALUES $r"))
+      val before = files(t).map(_.path).toSet
+      if (t == "dyn_overwrite") spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try spark.sql(write)
+      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+      val added = files(t).filterNot(f => before(f.path))
+      assert(added.size > 3, s"$t: expected size-rolled files, got ${added.size}")
+      if (partitioned)
+        assert(added.forall(_.partition("k") == "1"), s"$t: rolled files stay partition-local")
+      assert(spark.sql(s"SELECT COUNT(*) FROM tcTf.t.$t").collect()(0).getLong(0) == rows, t)
+    }
   }
 
   test("concurrent dynamic overwrites of disjoint partitions both land") {

@@ -102,22 +102,25 @@ class StatsSpec extends AnyFunSuite {
 
   test("distributed footer-stat pass produces the identical DataFile list as the driver pool") {
     import spark.implicits._
+    import graft.catalog.{FileSpec, Mor, Staging, Writer}
     val wh = java.nio.file.Files.createTempDirectory("graft_stats_dist").toString
-    // a mixed-type staged set with nulls, strings, timestamps — the
-    // shapes whose bound encoding could diverge between the two paths
+    // a mixed-type staged set with nulls, strings (one past the 64-char
+    // bound limit), doubles, timestamps, decimals — the shapes whose
+    // bound encoding could diverge between two encoders
+    def rows(i: Int) = Seq(
+      (i.toLong, if (i % 3 == 0) null else s"v$i", i * 1.5,
+        java.sql.Timestamp.valueOf(f"2026-01-${i % 28 + 1}%02d 10:00:00"),
+        BigDecimal(i) / 7, "x" * 70 + i),
+      (i.toLong + 100, s"w$i", i * -2.5,
+        java.sql.Timestamp.valueOf(f"2026-02-${i % 28 + 1}%02d 11:30:00"),
+        null, "y" * 70 + i))
+    val cols = Seq("id", "name", "score", "ts", "amount", "doc")
     (0 until 24).foreach { i =>
-      Seq(
-        (i.toLong, if (i % 3 == 0) null else s"v$i", i * 1.5,
-          java.sql.Timestamp.valueOf(f"2026-01-${i % 28 + 1}%02d 10:00:00")),
-        (i.toLong + 100, s"w$i", i * -2.5,
-          java.sql.Timestamp.valueOf(f"2026-02-${i % 28 + 1}%02d 11:30:00")))
-        .toDF("id", "name", "score", "ts")
-        .coalesce(1).write.mode("append").parquet(s"$wh/staged")
+      rows(i).toDF(cols: _*).coalesce(1).write.mode("append").parquet(s"$wh/staged")
     }
     val schema = spark.read.parquet(s"$wh/staged").schema
-    val threaded = graft.catalog.Writer.collectStatsFromFooters(
-      schema, wh, s"$wh/staged")
-    val distributed = graft.catalog.Writer.collectStatsFromFooters(
+    val threaded = Writer.collectStatsFromFooters(schema, wh, s"$wh/staged")
+    val distributed = Writer.collectStatsFromFooters(
       schema, wh, s"$wh/staged", distributeAbove = 0)
     assert(threaded.size == 24, s"setup: ${threaded.size} files (24 coalesced appends)")
     assert(distributed == threaded,
@@ -125,5 +128,35 @@ class StatsSpec extends AnyFunSuite {
     // sanity: the stats are real (bounds + null counts present)
     assert(threaded.forall(f => f.records > 0 && f.minBound.contains("id")))
     assert(threaded.exists(f => f.nullCount.get("name").exists(_ > 0)))
+
+    // the same rows through the table writer: the entries it reports
+    // from the footers it just wrote equal a re-read of those footers
+    def spec(s: org.apache.spark.sql.types.StructType) = FileSpec(s,
+      new org.apache.spark.util.SerializableConfiguration(Writer.writerHadoopConf(spark, s)),
+      wh)
+    val written = new Staging(s"$wh/written")
+    val reported = Writer.writeFiles(
+      (0 until 24).flatMap(rows).toDF(cols: _*).repartition(8), written, spec(schema))
+    val reread = Writer.collectStatsFromFooters(schema, wh, written.abs)
+    assert(reported.size == 8, s"one file per task: ${reported.size}")
+    assert(reported.sortBy(_.path) == reread.sortBy(_.path),
+      "writer-reported entries must equal the footer re-read field for field")
+    assert(reported.forall(f => f.minBound("doc").length == 64 && !f.maxBound.contains("doc")),
+      "over-long string bounds: 64-char prefix min, no max")
+    assert(reported.forall(f => !f.minBound.contains("amount") && f.nullCount.contains("amount")),
+      "decimals: no bounds, exact null counts")
+
+    // a position-delete file keeps FULL-length file_path bounds
+    val longPath = "ns/t/data/" + "p" * 80
+    val deletes = new Staging(s"$wh/deletes")
+    val Seq(del) = Writer.writeFiles(
+      Seq((s"$longPath-a.parquet", 3L), (s"$longPath-b.parquet", 1L))
+        .toDF("file_path", "pos").coalesce(1),
+      deletes, Writer.positionDeleteSpec(wh))
+    assert(del.records == 2 && del.minBound("file_path") == s"$longPath-a.parquet" &&
+      del.maxBound("file_path") == s"$longPath-b.parquet", s"$del")
+    val Seq(delReread) = Writer.collectStatsFromFooters(Mor.deleteSchema, wh, deletes.abs)
+    assert(del.copy(minBound = delReread.minBound, maxBound = delReread.maxBound) == delReread,
+      "only the exact file_path bounds differ from the default encoding")
   }
 }
