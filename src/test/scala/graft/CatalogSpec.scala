@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.TableFiles
 import graft.catalog.{CommitFailedException, TableOps}
 import graft.meta.TableMeta
 import java.nio.file.{Files, Paths}
@@ -42,8 +43,10 @@ class CatalogSpec extends AnyFunSuite {
       Paths.get(wh, "ns1", "t", "metadata", "v2.metadata.json"))
     val meta = TableMeta.fromJson(metaJson)
     assert(meta.location == "ns1/t")
-    assert(meta.snapshots.flatMap(_.files).nonEmpty)
-    meta.snapshots.flatMap(_.files).foreach(f => assert(f.path.startsWith("ns1/t/")))
+    val ops1 = new TableOps(wh, "ns1/t")
+    val files1 = ops1.parseMeta(metaJson).snapshots.flatMap(ops1.allFiles)
+    assert(files1.nonEmpty)
+    files1.foreach(f => assert(f.path.startsWith("ns1/t/")))
 
     // custom locations are rejected (ref HadoopRelativeCatalog.java:387-395)
     val e = intercept[Exception] {
@@ -134,9 +137,11 @@ class CatalogSpec extends AnyFunSuite {
     assert(renamed.map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "x"), (2L, "y")))
     // rename is metadata-only: the data files are untouched
-    val filesBefore = new TableOps(wh, "e/t").refresh().get._2
-      .currentSnapshot.get.files.map(_.path).toSet
-    assert(filesBefore == meta.currentSnapshot.get.files.map(_.path).toSet,
+    val opsE = new TableOps(wh, "e/t")
+    val filesBefore = opsE.allFiles(opsE.refresh().get._2.currentSnapshot.get)
+      .map(_.path).toSet
+    assert(filesBefore.nonEmpty)
+    assert(filesBefore == opsE.allFiles(meta.currentSnapshot.get).map(_.path).toSet,
       "RENAME COLUMN must not rewrite data files")
   }
 
@@ -168,13 +173,15 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE tcE3.e")
     spark.sql("CREATE TABLE tcE3.e.t (id INT, v FLOAT)")
     spark.sql("INSERT INTO tcE3.e.t VALUES (1, CAST(1.5 AS FLOAT)), (2147483647, CAST(2.5 AS FLOAT))")
-    val filesBefore = new TableOps(wh, "e/t").refresh().get._2
-      .currentSnapshot.get.files.map(_.path).toSet
+    val opsE3 = new TableOps(wh, "e/t")
+    val filesBefore = opsE3.allFiles(opsE3.refresh().get._2.currentSnapshot.get)
+      .map(_.path).toSet
+    assert(filesBefore.nonEmpty)
     spark.sql("ALTER TABLE tcE3.e.t ALTER COLUMN id TYPE BIGINT")
     spark.sql("ALTER TABLE tcE3.e.t ALTER COLUMN v TYPE DOUBLE")
     // old (narrow) files read under the widened schema, no rewrite
     val metaAfter = new TableOps(wh, "e/t").refresh().get._2
-    assert(metaAfter.currentSnapshot.get.files.map(_.path).toSet == filesBefore,
+    assert(opsE3.allFiles(metaAfter.currentSnapshot.get).map(_.path).toSet == filesBefore,
       "type widening must not rewrite data files")
     assert(metaAfter.schema.fields.map(f => f.name -> f.id).toMap ==
       Map("id" -> 1, "v" -> 2), "widening must keep field ids")
@@ -205,8 +212,9 @@ class CatalogSpec extends AnyFunSuite {
     val cat = spark.sessionState.catalogManager.catalog("tcMg")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def files = cat.loadTable(Identifier.of(Array("m"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files.map(_.path).toSet
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles.map(_.path).toSet
     val before = files
+    assert(before.nonEmpty)
     spark.sql(
       """MERGE INTO tcMg.m.t t
         |USING (SELECT id FROM range(1000, 1010)) s
@@ -235,7 +243,7 @@ class CatalogSpec extends AnyFunSuite {
     val cat = spark.sessionState.catalogManager.catalog("tcRt")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def files = cat.loadTable(Identifier.of(Array("r"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     val before = files
     assert(before.size >= 3, "expected at least one file per region partition")
     assert(before.forall(f => f.nullCount.get("region").contains(0L) &&
@@ -290,7 +298,7 @@ class CatalogSpec extends AnyFunSuite {
     val cata = spark.sessionState.catalogManager.catalog("tcFg")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def files = cata.loadTable(Identifier.of(Array("g"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     val before = files.map(_.path).toSet
     assert(before.size >= 3)
 
@@ -323,8 +331,9 @@ class CatalogSpec extends AnyFunSuite {
       .asInstanceOf[graft.catalog.RelativeCatalog]
     import org.apache.spark.sql.connector.catalog.Identifier
     def files = cat.loadTable(Identifier.of(Array("d"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     val before = files.map(_.path).toSet
+    assert(before.nonEmpty)
     spark.sql("DELETE FROM tcD.d.t WHERE id >= 1000 AND id < 1050")
     val after = files
     // the low-range files must be carried over byte-identical
@@ -389,7 +398,10 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT id FROM tcR.r.renamed").collect()(0).getLong(0) == 7)
     val meta = new TableOps(wh, "r/renamed").refresh().get._2
     assert(meta.location == "r/renamed")
-    meta.snapshots.flatMap(_.files).foreach(f => assert(f.path.startsWith("r/renamed/")))
+    val opsR = new TableOps(wh, "r/renamed")
+    val renamedFiles = meta.snapshots.flatMap(opsR.allFiles)
+    assert(renamedFiles.nonEmpty)
+    renamedFiles.foreach(f => assert(f.path.startsWith("r/renamed/")))
     assert(!Files.exists(Paths.get(wh, "r", "old")))
   }
 
@@ -414,14 +426,14 @@ class CatalogSpec extends AnyFunSuite {
       java.util.Base64.getEncoder.encodeToString(
         d.digest(Files.readAllBytes(Paths.get(wh, p))))
     }
-    val before = tbl.readSnapshot.get.files.map(f => f.path -> sha(f.path)).toMap
+    val before = tbl.currentFiles.map(f => f.path -> sha(f.path)).toMap
     assert(before.nonEmpty)
 
     // trickle DELETE #1: no data file may be rewritten or even touched
     spark.sql("DELETE FROM tcMor.m.t WHERE id < 10")
     val snap1 = tbl.readSnapshot.get
     assert(snap1.operation == "delete")
-    assert(snap1.files.map(f => f.path -> sha(f.path)).toMap == before,
+    assert(tbl.ops.allFiles(snap1).map(f => f.path -> sha(f.path)).toMap == before,
       "MOR delete must leave every data file byte-identical")
     assert(snap1.deleteFiles.nonEmpty)
     assert(snap1.summary("total-position-deletes").toLong == 10)
@@ -431,7 +443,7 @@ class CatalogSpec extends AnyFunSuite {
     // through the MOR scan still see the right rows
     spark.sql("DELETE FROM tcMor.m.t WHERE id >= 145")
     val snap2 = tbl.readSnapshot.get
-    assert(snap2.files.map(f => f.path -> sha(f.path)).toMap == before)
+    assert(tbl.ops.allFiles(snap2).map(f => f.path -> sha(f.path)).toMap == before)
     assert(snap2.deleteFiles.size > snap1.deleteFiles.size)
     assert(spark.sql("SELECT COUNT(*) FROM tcMor.m.t WHERE grp = 'a'").collect()(0).getLong(0) == 45)
     assert(spark.sql("SELECT COUNT(*) FROM tcMor.m.t").collect()(0).getLong(0) == 135)
@@ -487,13 +499,14 @@ class CatalogSpec extends AnyFunSuite {
       java.util.Base64.getEncoder.encodeToString(
         d.digest(Files.readAllBytes(Paths.get(wh, p))))
     }
-    val before = tbl.readSnapshot.get.files.map(f => f.path -> sha(f.path)).toMap
+    val before = tbl.currentFiles.map(f => f.path -> sha(f.path)).toMap
+    assert(before.nonEmpty)
 
     // key-tuple DELETE: no data file rewritten; the delete file is
     // equality content keyed by the id column's field id
     spark.sql("DELETE FROM tcEq.m.t WHERE id IN (1, 2, 3)")
     val snap1 = tbl.readSnapshot.get
-    assert(snap1.files.map(f => f.path -> sha(f.path)).toMap == before,
+    assert(tbl.ops.allFiles(snap1).map(f => f.path -> sha(f.path)).toMap == before,
       "equality delete must leave every data file byte-identical")
     val eqd = snap1.deleteFiles.filter(graft.catalog.Mor.isEquality)
     assert(eqd.nonEmpty && eqd.forall(_.equalityIds.contains(List(1))))
@@ -673,7 +686,7 @@ class CatalogSpec extends AnyFunSuite {
       val cata = spark.sessionState.catalogManager.catalog("tcF")
         .asInstanceOf[graft.catalog.RelativeCatalog]
       val files = cata.loadTable(Identifier.of(Array("f"), "t"))
-        .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+        .asInstanceOf[graft.catalog.GraftTable].currentFiles
       assert(files.size >= 3, s"expected >=3 day-local files, got ${files.size}")
       files.foreach { f =>
         val dayOf = (b: String) => b.substring(0, 10)
@@ -695,9 +708,12 @@ class CatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.connector.catalog.Identifier
     val cata = spark.sessionState.catalogManager.catalog("tcDl")
       .asInstanceOf[graft.catalog.RelativeCatalog]
-    def snap = cata.loadTable(Identifier.of(Array("d"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get
-    val beforeFiles = snap.files.map(_.path).toSet
+    def tbl = cata.loadTable(Identifier.of(Array("d"), "t"))
+      .asInstanceOf[graft.catalog.GraftTable]
+    def snap = tbl.readSnapshot.get
+    def filePaths = tbl.currentFiles.map(_.path).toSet
+    val beforeFiles = filePaths
+    assert(beforeFiles.nonEmpty)
 
     // metadata columns are directly queryable
     val meta = spark.sql("SELECT _file, _pos, id FROM tcDl.d.t WHERE id < 3")
@@ -709,7 +725,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t WHERE v = 'upd'").collect()(0).getLong(0) == 10)
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t").collect()(0).getLong(0) == 100)
     val afterUpdate = snap
-    assert(beforeFiles.subsetOf(afterUpdate.files.map(_.path).toSet),
+    assert(beforeFiles.subsetOf(filePaths),
       "MOR update must not rewrite existing data files")
     assert(afterUpdate.deleteFiles.nonEmpty, "MOR update must add position deletes")
 
@@ -730,19 +746,19 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t WHERE v = 'merged'").collect()(0).getLong(0) == 5)
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t WHERE v = 'inserted'").collect()(0).getLong(0) == 10)
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t WHERE v = 'upd'").collect()(0).getLong(0) == 5)
-    val afterMerge = snap
-    assert(beforeFiles.subsetOf(afterMerge.files.map(_.path).toSet),
+    assert(beforeFiles.subsetOf(filePaths),
       "MOR merge must not rewrite existing data files")
 
     // complex-predicate MOR DELETE (subquery → not SupportsDelete-able)
     // also routes through the delta path: files stay byte-identical
     spark.sql("ALTER TABLE tcDl.d.t SET TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
-    val filesBeforeDel = snap.files.map(_.path).toSet
+    val filesBeforeDel = filePaths
+    assert(filesBeforeDel.nonEmpty)
     spark.sql(
       """DELETE FROM tcDl.d.t WHERE id IN
         |  (SELECT id FROM tcDl.d.t WHERE v = 'inserted' AND id >= 105)""".stripMargin)
     assert(spark.sql("SELECT COUNT(*) FROM tcDl.d.t").collect()(0).getLong(0) == 105)
-    assert(filesBeforeDel.subsetOf(snap.files.map(_.path).toSet),
+    assert(filesBeforeDel.subsetOf(filePaths),
       "MOR delta delete must not rewrite data files")
 
     // deltas stack and compaction settles them
@@ -862,7 +878,7 @@ class CatalogSpec extends AnyFunSuite {
     val cat = spark.sessionState.catalogManager.catalog("tcOv")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def files = cat.loadTable(Identifier.of(Array("o"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     val k3FileBefore = files.filter(_.partition("k") == "3").map(_.path).toSet
 
     // STATIC partition overwrite → overwrite-by-filter (k = 1)
@@ -891,7 +907,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("""INSERT INTO tcOv.o.m VALUES
       (TIMESTAMP '2024-01-10 00:00:00', 'jan'), (TIMESTAMP '2024-02-10 00:00:00', 'feb')""")
     def mFiles = cat.loadTable(Identifier.of(Array("o"), "m"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     val febBefore = mFiles.filter(_.partition("ts_month") == "649").map(_.path).toSet
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try
@@ -1021,7 +1037,7 @@ class CatalogSpec extends AnyFunSuite {
     val cat = spark.sessionState.catalogManager.catalog("tcPx")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def evFiles = cat.loadTable(Identifier.of(Array("p"), "ev"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     // fanout stamped one months-tuple per file: 2024-01 = 648, 2024-03 = 650
     assert(evFiles.map(_.partition("ts_month")).toSet == Set("648", "650"), s"$evFiles")
     assert(evFiles.size == 2, "partition-local fanout: one file per month")
@@ -1033,7 +1049,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE tcPx.p.s (k STRING, n BIGINT) PARTITIONED BY (truncate(2, k))")
     spark.sql("INSERT INTO tcPx.p.s VALUES ('aa1', 1), ('aa2', 2), ('bb1', 3), ('zz', 4)")
     def sFiles = cat.loadTable(Identifier.of(Array("p"), "s"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     assert(sFiles.map(_.partition("k_trunc")).toSet == Set("aa", "bb", "zz"))
     spark.sql("UPDATE tcPx.p.s SET n = n + 10 WHERE k = 'bb1'")
     assert(spark.sql("SELECT SUM(n) FROM tcPx.p.s").collect()(0).getLong(0) == 20)
@@ -1044,7 +1060,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE tcPx.p.h (ts TIMESTAMP, v INT) PARTITIONED BY (hours(ts))")
     spark.sql("INSERT INTO tcPx.p.h VALUES (TIMESTAMP '1970-01-02 01:30:00', 5)")
     val hFiles = cat.loadTable(Identifier.of(Array("p"), "h"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     assert(hFiles.head.partition("ts_hour") == "25")
     assert(spark.sql("SELECT tcPx.hours(TIMESTAMP '1970-01-02 01:30:00')")
       .collect()(0).getLong(0) == 25L)
@@ -1139,12 +1155,12 @@ class CatalogSpec extends AnyFunSuite {
     assert(dels.nonEmpty && dels.forall(graft.catalog.Mor.isEquality))
     // the DELETE bound part=1, so files of part=2 can never be touched:
     // the delete list prunes to empty for a part=2 scan…
-    val part2 = snap.files.filter(_.partition.get("part").contains("2"))
+    val part2 = t.ops.allFiles(snap).filter(_.partition.get("part").contains("2"))
     assert(part2.nonEmpty)
     assert(graft.catalog.Mor.relevantDeletes(dels, part2).isEmpty,
       "equality delete with part=1 bounds must not ride along on a part=2 scan")
     // …and stays live for part=1 (where it actually kills a row)
-    val part1 = snap.files.filter(_.partition.get("part").contains("1"))
+    val part1 = t.ops.allFiles(snap).filter(_.partition.get("part").contains("1"))
     assert(graft.catalog.Mor.relevantDeletes(dels, part1) == dels)
     // correctness end-to-end
     assert(spark.sql("SELECT COUNT(*) FROM tcEqP.p.t WHERE part = 1")
@@ -1194,7 +1210,7 @@ class CatalogSpec extends AnyFunSuite {
       val cat = spark.sessionState.catalogManager.catalog("tcTz")
         .asInstanceOf[graft.catalog.RelativeCatalog]
       val files = cat.loadTable(Identifier.of(Array("p"), "ev"))
-        .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+        .asInstanceOf[graft.catalog.GraftTable].currentFiles
       assert(files.map(_.partition("ts_month")) == List("650"), s"$files")
       // the registered SQL function (the executor/KeySpec path) agrees
       assert(spark.sql("SELECT tcTz.months(TIMESTAMP '2024-02-29 20:00:00')")
@@ -1202,7 +1218,7 @@ class CatalogSpec extends AnyFunSuite {
       // and a COW rewrite under the non-UTC session keeps the tuple
       spark.sql("UPDATE tcTz.p.ev SET v = v + 1")
       val files2 = cat.loadTable(Identifier.of(Array("p"), "ev"))
-        .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+        .asInstanceOf[graft.catalog.GraftTable].currentFiles
       assert(files2.map(_.partition("ts_month")) == List("650"), s"$files2")
       assert(spark.sql("SELECT SUM(v) FROM tcTz.p.ev").collect()(0).getLong(0) == 2L)
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
@@ -1242,20 +1258,22 @@ class CatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.connector.catalog.Identifier
     val cat = spark.sessionState.catalogManager.catalog("tcDp")
       .asInstanceOf[graft.catalog.RelativeCatalog]
-    val snap = cat.loadTable(Identifier.of(Array("d"), "t"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get
+    val t = cat.loadTable(Identifier.of(Array("d"), "t"))
+      .asInstanceOf[graft.catalog.GraftTable]
+    val snap = t.readSnapshot.get
+    val snapFiles = t.ops.allFiles(snap)
     val dels = snap.deleteFiles
     assert(dels.nonEmpty)
     // position-delete files carry EXACT file_path bounds now
     assert(dels.forall(d => d.minBound.contains("file_path") &&
       d.maxBound.contains("file_path")), s"missing exact bounds: $dels")
     // the delete references only batch-1 files: batch-2-only scans drop it
-    val unrelated = snap.files.filterNot(f => dels.exists(d =>
+    val unrelated = snapFiles.filterNot(f => dels.exists(d =>
       f.path >= d.minBound("file_path") && f.path <= d.maxBound("file_path")))
     assert(unrelated.nonEmpty)
     assert(graft.catalog.Mor.relevantDeletes(dels, unrelated).isEmpty,
       "delete file must prune against files it cannot reference")
-    assert(graft.catalog.Mor.relevantDeletes(dels, snap.files) == dels)
+    assert(graft.catalog.Mor.relevantDeletes(dels, snapFiles) == dels)
     // end-to-end answers are unchanged by the pruning
     assert(spark.sql("SELECT COUNT(*) FROM tcDp.d.t WHERE id >= 1000")
       .collect()(0).getLong(0) == 100)
@@ -1338,7 +1356,7 @@ class CatalogSpec extends AnyFunSuite {
     } finally q2.stop()
     assert(spark.sql("SELECT COUNT(*) FROM tcSk.k.p").collect()(0).getLong(0) == 20)
     val pFiles = cata.loadTable(Identifier.of(Array("k"), "p"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     assert(pFiles.nonEmpty)
     pFiles.foreach { f =>
       assert(f.minBound.get("grp") == f.maxBound.get("grp"),
@@ -1440,7 +1458,7 @@ class CatalogSpec extends AnyFunSuite {
     val cata = s.sessionState.catalogManager.catalog("tcSb")
       .asInstanceOf[graft.catalog.RelativeCatalog]
     val filesA = cata.loadTable(Identifier.of(Array("s"), "a"))
-      .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+      .asInstanceOf[graft.catalog.GraftTable].currentFiles
     assert(filesA.forall(_.partition.contains("k_bucket")),
       s"bucket tuples not stamped: ${filesA.map(_.partition)}")
 
@@ -1485,7 +1503,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT SUM(a), SUM(b) FROM tcZ.z.t").collect()(0).toSeq ==
       Seq(10000L * 99 / 2, 10000L * 99 / 2))
 
-    val files = tbl.readSnapshot.get.files
+    val files = tbl.currentFiles
     assert(files.size >= 8, s"expected >=8 z-range files, got ${files.size}")
     // MOST files must be tight on BOTH axes (equal-count range chunks
     // can straddle a z-curve discontinuity, so a couple of wide files
@@ -1527,7 +1545,7 @@ class CatalogSpec extends AnyFunSuite {
       val cata = spark.sessionState.catalogManager.catalog("tcFv")
         .asInstanceOf[graft.catalog.RelativeCatalog]
       val files = cata.loadTable(Identifier.of(Array("f"), "t"))
-        .asInstanceOf[graft.catalog.GraftTable].readSnapshot.get.files
+        .asInstanceOf[graft.catalog.GraftTable].currentFiles
       assert(files.size >= 10, s"expected many partition-local files, got ${files.size}")
       files.foreach { f =>
         assert(f.minBound.get("a") == f.maxBound.get("a") &&
@@ -1555,7 +1573,8 @@ class CatalogSpec extends AnyFunSuite {
       .asInstanceOf[graft.catalog.RelativeCatalog]
     def tbl = cata.loadTable(Identifier.of(Array("s"), "t"))
       .asInstanceOf[graft.catalog.GraftTable]
-    val oldFiles = tbl.readSnapshot.get.files.map(_.path).toSet
+    val oldFiles = tbl.currentFiles.map(_.path).toSet
+    assert(oldFiles.nonEmpty)
 
     graft.catalog.Maintenance.updateSpec(tbl, Seq("region" -> "identity"))
     assert(tbl.meta.spec.fields.map(f => (f.name, f.transform)) == List(("region", "identity")))
@@ -1567,10 +1586,11 @@ class CatalogSpec extends AnyFunSuite {
     // data untouched + fully readable across the spec change
     assert(spark.sql("SELECT COUNT(*) FROM tcSp.s.t").collect()(0).getLong(0) == 200)
     val snap = tbl.readSnapshot.get
-    assert(oldFiles.subsetOf(snap.files.map(_.path).toSet),
+    val snapFiles = tbl.ops.allFiles(snap)
+    assert(oldFiles.subsetOf(snapFiles.map(_.path).toSet),
       "spec evolution must not rewrite existing files")
     // new files are partition-local under the NEW spec
-    val newFiles = snap.files.filterNot(f => oldFiles(f.path))
+    val newFiles = snapFiles.filterNot(f => oldFiles(f.path))
     assert(newFiles.size >= 2)
     newFiles.foreach(f => assert(
       f.minBound.get("region") == f.maxBound.get("region"),

@@ -61,7 +61,9 @@ class HadoopFsSpec extends AnyFunSuite {
     // nothing absolute leaked into metadata (relocation invariant)
     val ops = new TableOps(s"file://$local", "n/t")
     val (v, meta) = ops.refresh().get
-    meta.snapshots.flatMap(_.files).foreach(f => assert(!f.path.contains(":/"), f.path))
+    val allFiles = meta.snapshots.flatMap(ops.allFiles)
+    assert(allFiles.nonEmpty)
+    allFiles.foreach(f => assert(!f.path.contains(":/"), f.path))
     // merge-on-read DML: position-delete keys must relativize the
     // URI-spelled _metadata.file_path against the URI warehouse
     spark.sql("CREATE TABLE hfs.n.mor (id BIGINT, v STRING) " +
@@ -242,7 +244,7 @@ class HadoopFsSpec extends AnyFunSuite {
     val names = Io.listNames(s"file://$local/g/t/metadata")
     assert(names.exists(_.endsWith(".gz.metadata.json")), s"$names")
     val ops = new TableOps(s"file://$local", "g/t")
-    assert(ops.refresh().get._2.currentSnapshot.get.files.nonEmpty)
+    assert(ops.allFiles(ops.refresh().get._2.currentSnapshot.get).nonEmpty)
   }
 
   test("MOR warehouse-prefix spellings cover posix, file URIs, and remote schemes") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.TableFiles
 import graft.catalog.{CommitConflictException, Maintenance, TableOps}
 import graft.meta.RelPaths
 import java.nio.file.{Files, Paths}
@@ -28,13 +29,13 @@ class MaintSpec extends AnyFunSuite {
     def table = cat.loadTable(Identifier.of(Array("m"), "t"))
       .asInstanceOf[graft.catalog.GraftTable]
 
-    val filesBefore = table.readSnapshot.get.files
+    val filesBefore = table.currentFiles
     assert(filesBefore.size >= 4)
     assert(table.meta.snapshots.size == 4)
 
     Maintenance.compact(spark, table, targetFiles = 1)
     val afterCompact = table
-    assert(afterCompact.readSnapshot.get.files.size == 1)
+    assert(afterCompact.currentFiles.size == 1)
     assert(spark.sql("SELECT COUNT(*), SUM(id) FROM tcM.m.t").collect()(0)
       .toSeq == Seq(400L, (0L until 400L).sum))
 
@@ -143,7 +144,7 @@ class MaintSpec extends AnyFunSuite {
       .asInstanceOf[graft.catalog.GraftTable]
     assert(tbl.partitioning().map(_.toString).toSeq == Seq("days(ts)"))
     assert(tbl.meta.sortOrders.exists(_.fields.nonEmpty))
-    val files = tbl.readSnapshot.get.files
+    val files = tbl.currentFiles
     assert(files.size > 1)
     // day-clustered writes → per-file ts ranges must not all overlap:
     // distinct (min-day) values across files should be > 1
@@ -326,7 +327,7 @@ class MaintSpec extends AnyFunSuite {
     val sp = spark.sql("CALL tcPr.system.update_spec(tbl => 'p.t', transforms => 'id:bucket[4]')").collect()
     assert(sp(0).getInt(0) >= 1)
     spark.sql("INSERT INTO tcPr.p.t SELECT id FROM range(200, 210)")
-    val newest = table.readSnapshot.get.files
+    val newest = table.currentFiles
       .filter(_.partition.keySet == Set("id_bucket"))
     assert(newest.nonEmpty, "post-evolution writes carry bucket tuples")
   }
@@ -381,7 +382,7 @@ class MaintSpec extends AnyFunSuite {
     assert(ok.getInt(0) == 0 && ok.getString(1) == "ok")
     // vandalize: remove a referenced data file
     val ops = new TableOps(wh, "v/t")
-    val f = ops.refresh().get._2.currentSnapshot.get.files.head
+    val f = ops.allFiles(ops.refresh().get._2.currentSnapshot.get).head
     Files.delete(Paths.get(RelPaths.absolutize(wh, f.path)))
     val bad = spark.sql("CALL tcVf.system.verify_table(tbl => 'v.t')").collect()(0)
     assert(bad.getInt(0) >= 1 && bad.getString(1).contains("missing file"))
@@ -401,7 +402,8 @@ class MaintSpec extends AnyFunSuite {
       // scrambled input: range clustering must SORT it across files
       spark.sql("INSERT INTO tcRd.r.t SELECT (id * 37) % 10000 FROM range(10000)")
     finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    val files = new TableOps(wh, "r/t").refresh().get._2.currentSnapshot.get.files
+    val opsRd = new TableOps(wh, "r/t")
+    val files = opsRd.allFiles(opsRd.refresh().get._2.currentSnapshot.get)
     assert(files.size >= 2, s"expected multiple files, got ${files.size}")
     // disjoint id ranges: sorted by min bound, each file's max < next min
     val ranges = files.map(f => (f.minBound("id").toLong, f.maxBound("id").toLong))
@@ -432,20 +434,22 @@ class MaintSpec extends AnyFunSuite {
     def tbl = cat.loadTable(Identifier.of(Array("b"), "t"))
       .asInstanceOf[graft.catalog.GraftTable]
     val before = tbl.readSnapshot.get
-    val big = before.files.maxBy(_.bytes)
-    assert(before.files.size >= 3)
-    val smallPaths = before.files.filter(_.bytes < big.bytes / 2).map(_.path).toSet
-    val carried = before.files.map(_.path).toSet -- smallPaths
+    val beforeFiles = tbl.ops.allFiles(before)
+    val big = beforeFiles.maxBy(_.bytes)
+    assert(beforeFiles.size >= 3)
+    val smallPaths = beforeFiles.filter(_.bytes < big.bytes / 2).map(_.path).toSet
+    val carried = beforeFiles.map(_.path).toSet -- smallPaths
     assert(smallPaths.nonEmpty && carried.nonEmpty)
 
     val rewritten = Maintenance.compactBinpack(spark, tbl, targetSizeBytes = big.bytes)
     assert(rewritten == smallPaths.size, "exactly the undersized files rewritten")
     val after = tbl.readSnapshot.get
+    val afterFiles = tbl.ops.allFiles(after)
     // right-sized files carried over byte-identical; small ones merged
-    assert(carried.subsetOf(after.files.map(_.path).toSet),
+    assert(carried.subsetOf(afterFiles.map(_.path).toSet),
       "right-sized files must carry over")
-    assert(after.files.map(_.path).toSet.intersect(smallPaths).isEmpty)
-    assert(after.files.size < before.files.size)
+    assert(afterFiles.map(_.path).toSet.intersect(smallPaths).isEmpty)
+    assert(afterFiles.size < beforeFiles.size)
     assert(after.snapshotId != before.snapshotId &&
       tbl.meta.snapshots.maxBy(_.sequenceNumber).operation == "replace")
     // deletes applied during rewrite: counts unchanged
@@ -660,8 +664,7 @@ class MaintSpec extends AnyFunSuite {
     def table = cat.loadTable(Identifier.of(Array("m"), "t"))
       .asInstanceOf[graft.catalog.GraftTable]
     val before = table.readSnapshot.get
-    val dataBefore = before.files.map(_.path).toSet ++
-      table.ops.allFiles(before).map(_.path).toSet
+    val dataBefore = table.ops.allFiles(before).map(_.path).toSet
     // each DELETE range-clusters its tombstones per referenced data
     // file → 5 commits × 4 data files = 20 small delete files
     val nDel = before.deleteFiles.size

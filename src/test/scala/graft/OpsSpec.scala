@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.TableFiles
 import graft.ops.LlmOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -116,7 +117,7 @@ class OpsSpec extends AnyFunSuite {
       .asInstanceOf[graft.catalog.RelativeCatalog]
     val tbl = cat.loadTable(Identifier.of(Array("demo_pr"), "cust"))
       .asInstanceOf[graft.catalog.GraftTable]
-    val total = tbl.readSnapshot.get.files.size
+    val total = tbl.currentFiles.size
     assert(total > 1, s"expected multiple files, got $total")
 
     import org.apache.spark.sql.util.CaseInsensitiveStringMap

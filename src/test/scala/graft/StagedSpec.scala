@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.TableFiles
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.scalatest.funsuite.AnyFunSuite
@@ -162,7 +163,7 @@ class StagedSpec extends AnyFunSuite {
       .asInstanceOf[graft.catalog.RelativeCatalog]
     val table = cat.loadTable(Identifier.of(Array("s"), "t"))
       .asInstanceOf[graft.catalog.GraftTable]
-    val files = table.readSnapshot.get.files
+    val files = table.currentFiles
     // fanout writer stamps one bucket tuple per file
     assert(files.nonEmpty)
     assert(files.forall(_.partition.keySet == Set("id_bucket")))

@@ -17,4 +17,11 @@ object TestSpark {
   }
 
   val sf = "/root/testdata/sf0.001"
+
+  /** `t.currentFiles`: every data file of the table's current snapshot,
+    * chunked entries included (`Snapshot.files` alone holds only the
+    * entries not yet written to a chunk). */
+  implicit class TableFiles(private val t: graft.catalog.GraftTable) extends AnyVal {
+    def currentFiles: List[graft.meta.DataFile] = t.ops.allFiles(t.readSnapshot.get)
+  }
 }
