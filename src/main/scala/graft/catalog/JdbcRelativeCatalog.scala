@@ -194,7 +194,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
       * its OWN file, never the winner's), then one pointer INSERT
       * (base 0) or CAS UPDATE. An integrity violation — a racer's row
       * under the same name — is a lost race like a failed CAS. */
-    override protected def commitPoint(base: Int, tmp: String, gzip: Boolean): Unit = {
+    override protected def commitPoint(base: Int, tmp: String, gzip: Boolean): String = {
       val prevLoc = pointer
       if (prevLoc.map(versionOf).getOrElse(0) != base)
         throw new CommitFailedException(s"stale base $base for $nsStr.$tblName")
@@ -222,6 +222,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
         throw new CommitFailedException(
           s"concurrent update to $nsStr.$tblName (pointer CAS failed)")
       }
+      target
     }
   }
 

@@ -561,39 +561,32 @@ object Maintenance {
 
   /** Orphan-file VACUUM: delete files under the table's data/deletes
     * directories that NO snapshot references (debris from crashed
-    * writes or conflicted commits whose cleanup lost a race). Age
-    * guard (`olderThanMs`) keeps in-flight staging directories safe —
-    * a writer that staged files but hasn't committed yet is younger
-    * than any sane cutoff. Returns deleted count.
+    * writes or conflicted commits whose cleanup lost a race), and the
+    * same for metadata side files — manifest chunks and manifest-list
+    * files a crashed or lost commit wrote before any snapshot
+    * referenced them, which expiry never sees. Age guard
+    * (`olderThanMs`) keeps in-flight staging directories and an
+    * in-flight commit's fresh chunks safe — a writer that has not
+    * committed yet is younger than any sane cutoff. Returns deleted
+    * count.
     */
   def removeOrphanFiles(ops: TableOps, olderThanMs: Long): Int = {
-    import scala.jdk.CollectionConverters._
     val (_, meta) = ops.refresh()
       .getOrElse(throw new IllegalStateException("no such table"))
-    val referenced = meta.snapshots
-      .flatMap(s => ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path)).toSet
+    val referenced = meta.snapshots.flatMap(s =>
+      ops.allFiles(s).map(_.path) ++ s.deleteFiles.map(_.path) ++
+        (s.manifests ++ s.deleteManifests).map(_.path) ++ s.manifestList).toSet
     val tableAbs = RelPaths.absolutize(ops.warehouse, meta.location)
-    var removed = 0
-    for (sub <- Seq("data", "deletes")) {
-      Io.walkFiles(s"$tableAbs/$sub")
-        .filter(_.endsWith(".parquet"))
-        .filter(p => scala.util.Try(Io.mtimeMs(p)).getOrElse(Long.MaxValue) < olderThanMs)
-        .filterNot(p => referenced(RelPaths.relativize(ops.warehouse, p)))
-        .foreach { p => Io.deleteIfExists(p); removed += 1 }
-    }
-    // manifest-LIST files a lost commit left behind before any snapshot
-    // ever referenced them (lose-cleanup deliberately skips them — see
-    // TableOps.spillStampList) are invisible to expiry, so the vacuum
-    // sweeps them here: age-guarded like data debris (an in-flight
-    // commit's freshly written list is younger than the cutoff) and
-    // never touching a list any current snapshot names
-    val referencedLists = meta.snapshots.flatMap(_.manifestList).toSet
-    Io.walkFiles(s"$tableAbs/metadata")
-      .filter(p => p.substring(p.lastIndexOf('/') + 1).startsWith("manifest-list-"))
+    def name(p: String) = p.substring(p.lastIndexOf('/') + 1)
+    val swept = Seq("data", "deletes").flatMap(sub =>
+      Io.walkFiles(s"$tableAbs/$sub").filter(_.endsWith(".parquet"))) ++
+      Io.walkFiles(s"$tableAbs/metadata")
+        .filter(p => name(p).startsWith("manifest-") && p.endsWith(".json"))
+    val orphans = swept
       .filter(p => scala.util.Try(Io.mtimeMs(p)).getOrElse(Long.MaxValue) < olderThanMs)
-      .filterNot(p => referencedLists(RelPaths.relativize(ops.warehouse, p)))
-      .foreach { p => Io.deleteIfExists(p); removed += 1 }
-    removed
+      .filterNot(p => referenced(RelPaths.relativize(ops.warehouse, p)))
+    orphans.foreach(Io.deleteIfExists)
+    orphans.size
   }
 
   /** PARTITION SPEC EVOLUTION (ref README.md:52-57, spec list keyed by

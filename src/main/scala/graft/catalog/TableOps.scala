@@ -35,19 +35,20 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   *    (CREATE/ALTER/RENAME TABLE, staged CTAS) call [[commit]]
   *    directly and surface a lost race to the caller
   *  - [[commit]], the shared half every catalog runs: the
-  *    no-absolute-path invariant (ref :155-158), manifest-chunk and
+  *    no-absolute-path invariant (ref :155-158), writing every file
+  *    entry the snapshots do not yet hold in chunks as chunks plus the
   *    manifest-list spill, the `write.metadata.compression-codec`
   *    codec, a temp `.<UUID>.metadata.json`, and — when the commit
   *    loses — deletion of that temp file and of the chunk files this
-  *    attempt wrote
+  *    attempt wrote. Once the commit has landed, metadata GC drops all
+  *    but the newest 10 metadata versions (ref
+  *    deleteRemovedMetadataFiles :400-416), on both catalogs
   *  - [[commitPoint]], the one per-catalog decision: make the temp file
   *    version `base + 1` or throw CommitFailedException. Here (the path
   *    catalog) it is the stale-base check, lock + exists re-check +
   *    rename-no-replace to `v<N+1>` (ref :144-180, renameToFinal
-  *    :346-376), then the version hint and metadata GC — drop all but
-  *    the newest 10 metadata files (ref deleteRemovedMetadataFiles
-  *    :400-416). The JDBC catalog moves the file to a unique
-  *    `v<N+1>-<tag>` name and CASes its pointer row instead.
+  *    :346-376), then the version hint. The JDBC catalog moves the file
+  *    to a unique `v<N+1>-<tag>` name and CASes its pointer row instead.
   *
   * All byte IO routes through [[Io]], so the warehouse may be a plain
   * posix dir or any Hadoop FileSystem URI (file://, hdfs://, s3a://…
@@ -96,7 +97,14 @@ class TableOps(val warehouse: String, val tableLocation: String,
   def existingMetadataFile(v: Int): Option[String] =
     metadataCandidates(v).find(Io.exists)
 
+  /** A version [[existingMetadataFile]] can open — what crash recovery
+    * may pick. */
   private val VersionName = """^v(\d+)(?:\.gz)?\.metadata\.json(?:\.gz)?$""".r
+
+  /** Any catalog's metadata file name: the path catalog's `v<N>` and
+    * the JDBC catalog's `v<N>-<tag>`, in every codec spelling — what
+    * metadata retention reclaims. */
+  private val MetadataName = """^v(\d+)(?:-[^.]+)?(?:\.gz)?\.metadata\.json(?:\.gz)?$""".r
 
   /** Read metadata JSON, transparently gunzipping the gz spellings. */
   def readMetadataString(p: String): String = {
@@ -111,19 +119,21 @@ class TableOps(val warehouse: String, val tableLocation: String,
   @volatile private var cachedUuid: Option[String] = None
 
   // ---- manifest chunking (the reference's manifest-list indirection,
-  // README.md:96): a snapshot's file list above the chunk size spills
-  // to immutable side files so metadata.json — the commit payload —
-  // stays O(chunk size) no matter how many files the table has.
-  // Chunks are loaded LAZILY, per scan, pruned by the range keys each
-  // Manifest carries — a refresh never materializes the table's file
-  // list, so loadTable on a million-file table is O(inline tail). ----
+  // README.md:96): every file entry lives in an immutable chunk side
+  // file, never in metadata.json, so the commit payload stays
+  // O(snapshots) no matter how many files the table has. Chunks are
+  // loaded LAZILY, per scan, pruned by the range keys each Manifest
+  // carries — a refresh never materializes the table's file list, so
+  // loadTable on a million-file table is O(snapshots). ----
 
-  /** Parse metadata JSON. Snapshots keep only their inline file tail
-    * in memory (`Snapshot.files` docs); full lists come from
-    * [[allFiles]]/[[filesMatching]] on demand. DELETE chunks are the
-    * exception — materialized here (cache-deduped across snapshots)
-    * because every scan needs the full delete set for correctness
-    * (`Snapshot.deleteManifests` docs). */
+  /** Parse metadata JSON. Data chunks stay unloaded — full lists come
+    * from [[allFiles]]/[[filesMatching]] on demand. DELETE chunks are
+    * materialized here (cache-deduped across snapshots) because every
+    * scan needs the full delete set for correctness
+    * (`Snapshot.deleteManifests` docs). Inline entries of metadata
+    * written before every commit chunked its files parse as they are:
+    * data entries stay in `Snapshot.files` (read only by [[entries]]),
+    * delete entries join the in-memory delete list. */
   def parseMeta(json: String): TableMeta = {
     val meta = TableMeta.fromJson(json)
     if (meta.snapshots.forall(s => s.deleteManifests.isEmpty && s.manifestList.isEmpty))
@@ -131,20 +141,16 @@ class TableOps(val warehouse: String, val tableLocation: String,
     else meta.copy(snapshots = meta.snapshots.map { s =>
       // materialize the manifest-LIST indirection first: in memory
       // `manifests` is always the full stamp list (the side file is
-      // content-addressed and immutable → cached process-wide; an
-      // inline tail beside the pointer — hand-edited metadata — is
-      // honored by appending)
+      // content-addressed and immutable → cached process-wide)
       val s1 = s.manifestList match {
         case Some(p) =>
           // strip the old-reader sentinel (the inline entry whose path
-          // IS the pointer — see spillStampList) and keep any other
-          // inline tail. When the tail is empty the CACHED list
-          // instance becomes the snapshot's stamps verbatim, which is
-          // what lets spillStampList's identity fast path skip
-          // re-hashing untouched snapshots at the next commit.
-          val stamps = loadStamps(p)
-          val tail = s.manifests.filterNot(_.path == p)
-          s.copy(manifests = if (tail.isEmpty) stamps else stamps ++ tail)
+          // IS the pointer — see spillStampList) and append the
+          // under-full stamps inline beside it. The listed stamps stay
+          // the CACHED instances, which is what lets spillStampList's
+          // identity fast path skip re-hashing untouched snapshots at
+          // the next commit.
+          s.copy(manifests = loadStamps(p) ++ s.manifests.filterNot(_.path == p))
         case None => s
       }
       if (s1.deleteManifests.isEmpty) s1
@@ -160,26 +166,22 @@ class TableOps(val warehouse: String, val tableLocation: String,
     ManifestListCache.get(abs)(TableMeta.stampsFromJson(Io.readString(abs)))
   }
 
-  /** Manifest-LIST spill threshold: a snapshot with more chunk stamps
-    * than this serializes them to a side file instead of inline. */
-  protected val listSpillMin = 32
-
   /** Serialize-side manifest-LIST spill for ONE snapshot (see
-    * [[graft.meta.Snapshot.manifestList]]): above the threshold the
-    * stamps move to a CONTENT-ADDRESSED side file — an append that
-    * reuses the parent's chunks hashes to the parent's list name and
-    * writes zero new bytes, so metadata.json stays O(snapshots), not
-    * O(snapshots × chunks). List files are deliberately NOT deleted
-    * when a commit loses the race (a concurrent winner can own the
-    * same content-addressed name; a retry of the same stamps reuses
-    * the file); unreferenced lists are reclaimed at snapshot expiry,
-    * rewrite_manifests, and the orphan vacuum. Below the threshold,
-    * stamps inline exactly as before (manifestList force-cleared so a
-    * stale pointer from a path-remapping op can never resurrect old
-    * stamps).
+    * [[graft.meta.Snapshot.manifestList]]): the leading FULL-chunk
+    * stamps (`full`) move to a CONTENT-ADDRESSED side file — an append that reuses the parent's full chunks hashes
+    * to the parent's list name and writes zero new bytes, so
+    * metadata.json stays O(snapshots), not O(snapshots × chunks). The
+    * O(log chunk size) under-full stamps after them stay inline. List
+    * files are deliberately NOT deleted when a commit loses the race (a
+    * concurrent winner can own the same content-addressed name; a retry
+    * of the same stamps reuses the file); unreferenced lists are
+    * reclaimed at snapshot expiry, rewrite_manifests, and the orphan
+    * vacuum. A snapshot with no full chunk has no list (manifestList
+    * force-cleared so a stale pointer can never resurrect old stamps).
     */
-  private def spillStampList(s: Snapshot): Snapshot =
-    if (s.manifests.size <= listSpillMin) s.copy(manifestList = None)
+  private def spillStampList(s: Snapshot, full: Manifest => Boolean): Snapshot = {
+    val (listed, inline) = s.manifests.span(full)
+    if (listed.isEmpty) s.copy(manifestList = None)
     else {
       // POISON PILL for pre-list readers: the serialized snapshot
       // keeps ONE inline manifest entry whose path is the list file
@@ -187,41 +189,41 @@ class TableOps(val warehouse: String, val tableLocation: String,
       // support ignores the unknown manifestList field, always
       // "loads" this entry as a chunk, and fails LOUDLY extracting
       // stamp JSON as DataFile records (no `records` field) — never
-      // a silent near-empty scan. count/bytes aggregate the real
+      // a silent near-empty scan. count/bytes aggregate the listed
       // stamps so dataFileCount/dataBytes stay exact for any reader.
       def sentinel(rel: String) = Manifest(rel,
-        s.manifests.map(_.count).sum, bytes = s.manifests.map(_.bytes).sum)
-      // unchanged-stamps fast path: if the materialized list is still
-      // exactly the instance parse cached for this snapshot's pointer,
-      // reuse the name — a plain append pays O(count-sum) here per
-      // untouched historic snapshot instead of O(chunks) JSON + SHA
+        listed.map(_.count).sum, bytes = listed.map(_.bytes).sum)
+      // unchanged-stamps fast path: if the listed stamps are still
+      // exactly the instances parse cached for this snapshot's pointer,
+      // reuse the name — a plain append pays O(chunks) pointer
+      // compares here per untouched snapshot instead of JSON + SHA
       val reusable = s.manifestList.filter { p =>
-        ManifestListCache.peek(RelPaths.absolutize(warehouse, p)) eq s.manifests
+        val cached = ManifestListCache.peek(RelPaths.absolutize(warehouse, p))
+        cached != null && cached.corresponds(listed)(_ eq _)
       }
-      reusable match {
-        case Some(p) => s.copy(manifests = List(sentinel(p)))
-        case None =>
-          val body = TableMeta.stampsToJson(s.manifests)
-          val digest = java.security.MessageDigest.getInstance("SHA-256")
-            .digest(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            .take(16).map("%02x".format(_)).mkString
-          val fname = s"manifest-list-$digest.json"
-          Io.mkdirs(metadataDir)
-          val abs = s"$metadataDir/$fname"
-          if (!Io.exists(abs)) {
-            // temp + rename-no-replace: a crash mid-write must never
-            // leave a TORN file at the content-addressed name (it
-            // would be "reused" verbatim forever); losing the rename
-            // to a concurrent same-content writer is fine — the
-            // winner's file IS this content
-            val tmp = s"$metadataDir/.${java.util.UUID.randomUUID()}.mlist"
-            Io.writeString(tmp, body)
-            if (!Io.renameNoReplace(tmp, abs)) Io.deleteIfExists(tmp)
-          }
-          val rel = s"$tableLocation/metadata/$fname"
-          s.copy(manifests = List(sentinel(rel)), manifestList = Some(rel))
+      val rel = reusable.getOrElse {
+        val body = TableMeta.stampsToJson(listed)
+        val digest = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          .take(16).map("%02x".format(_)).mkString
+        val fname = s"manifest-list-$digest.json"
+        Io.mkdirs(metadataDir)
+        val abs = s"$metadataDir/$fname"
+        if (!Io.exists(abs)) {
+          // temp + rename-no-replace: a crash mid-write must never
+          // leave a TORN file at the content-addressed name (it
+          // would be "reused" verbatim forever); losing the rename
+          // to a concurrent same-content writer is fine — the
+          // winner's file IS this content
+          val tmp = s"$metadataDir/.${java.util.UUID.randomUUID()}.mlist"
+          Io.writeString(tmp, body)
+          if (!Io.renameNoReplace(tmp, abs)) Io.deleteIfExists(tmp)
+        }
+        s"$tableLocation/metadata/$fname"
       }
+      s.copy(manifests = sentinel(rel) :: inline, manifestList = Some(rel))
     }
+  }
 
   /** Read one manifest chunk through the process-wide [[ChunkCache]]
     * (chunks are immutable once written, so cached contents stay valid
@@ -231,12 +233,17 @@ class TableOps(val warehouse: String, val tableLocation: String,
     ChunkCache.get(abs)(TableMeta.manifestFromJson(Io.readString(abs)))
   }
 
+  /** The data files of `s` in the chunks `keep` admits, plus the ones
+    * not yet in any chunk (`Snapshot.files`: a snapshot being built,
+    * or metadata from before every commit chunked its files) — the one
+    * read of that field every file-list accessor goes through. */
+  private def entries(s: Snapshot)(keep: Manifest => Boolean): List[DataFile] =
+    s.manifests.filter(keep).flatMap(loadChunk) ++ s.files
+
   /** Full materialized file list of ONE snapshot. Use only where the
     * operation genuinely needs every file (rewrites, expiry, $files);
     * scans go through [[filesMatching]] so pruned chunks never load. */
-  def allFiles(s: Snapshot): List[DataFile] =
-    if (s.manifests.isEmpty) s.files
-    else s.manifests.flatMap(loadChunk) ++ s.files
+  def allFiles(s: Snapshot): List[DataFile] = entries(s)(_ => true)
 
   /** Chunk-pruned scan candidates: loads only manifests whose range
     * keys can satisfy `filters` (a chunk with no keys always loads —
@@ -248,23 +255,21 @@ class TableOps(val warehouse: String, val tableLocation: String,
     */
   def filesMatching(s: Snapshot,
       filters: Seq[org.apache.spark.sql.sources.Filter]): List[DataFile] =
-    if (s.manifests.isEmpty || filters.isEmpty) allFiles(s)
-    else s.manifests.filter { m =>
+    entries(s) { m =>
       val probe = DataFile(m.path, records = m.count.toLong, bytes = m.bytes,
         minBound = m.minBound, maxBound = m.maxBound)
       filters.forall(FilePruning.keepFile(probe, _))
-    }.flatMap(loadChunk) ++ s.files
+    }
 
   /** Candidates that may carry seq > `after` — incremental append
     * scans stay O(recent chunks), not O(table). */
   def filesNewerThan(s: Snapshot, after: Long): List[DataFile] =
-    s.manifests.filter(_.maxSeq.forall(_ > after)).flatMap(loadChunk) ++ s.files
+    entries(s)(_.maxSeq.forall(_ > after))
 
   /** Candidates that may carry exactly seq = `seq` — the streaming
     * source's per-snapshot added-file listing. */
   def filesAtSeq(s: Snapshot, seq: Long): List[DataFile] =
-    s.manifests.filter(m => m.minSeq.forall(_ <= seq) && m.maxSeq.forall(_ >= seq))
-      .flatMap(loadChunk) ++ s.files
+    entries(s)(m => m.minSeq.forall(_ <= seq) && m.maxSeq.forall(_ >= seq))
 
   /** The data files a snapshot ADDED (stamped with its own sequence
     * number) — the shared definition every changelog/tail surface
@@ -273,11 +278,6 @@ class TableOps(val warehouse: String, val tableLocation: String,
   def addedFiles(s: Snapshot): List[DataFile] =
     filesAtSeq(s, s.sequenceNumber).filter(_.seq.contains(s.sequenceNumber))
 
-  /** Spill oversized inline tails to new manifest files (stamping each
-    * chunk's pruning keys) and serialize. Returns the JSON and the
-    * manifest files written by THIS call — the committer must delete
-    * them if the commit loses.
-    */
   /** Chunk pruning-key columns = partition SOURCE columns (union
     * across spec evolution): the columns scans filter on at scale, and
     * the ones the fanout writer clusters by — so chunk ranges stay
@@ -293,6 +293,25 @@ class TableOps(val warehouse: String, val tableLocation: String,
       .toMap
   }
 
+  /** Write every file entry the snapshots do not yet hold in chunks as
+    * new chunks (stamping each chunk's pruning keys), spill the
+    * manifest lists, and serialize — the JSON carries no inline data
+    * or delete entry. Returns the JSON and the chunk files written by
+    * THIS call — the committer must delete them if the commit loses.
+    *
+    * Data entries to chunk are `Snapshot.files`. A delete chunk
+    * carries forward while every entry it holds is still in
+    * `deleteFiles`; the entries no surviving chunk holds are chunked.
+    * New entries fill full chunks (`write.metadata.manifest-chunk-size`
+    * each) and at most one under-full chunk; under-full chunks then
+    * merge like a binary counter: two of the same power-of-two size
+    * class merge, and a merge that reaches the chunk size emits a full
+    * chunk and carries the rest. A snapshot therefore holds at most
+    * ⌊files ÷ chunk size⌋ full chunks plus one under-full chunk per
+    * size class (⌈log2 chunk size⌉), each entry is rewritten
+    * O(log chunk size) times over its life, and full chunks — never
+    * merged — keep the value-tight ranges their commit gave them.
+    */
   protected def spillAndSerialize(meta: TableMeta): (String, List[String]) = {
     val chunkSize = meta.properties.get("write.metadata.manifest-chunk-size")
       .flatMap(s => Try(s.toInt).toOption).filter(_ > 0).getOrElse(1000)
@@ -318,36 +337,53 @@ class TableOps(val warehouse: String, val tableLocation: String,
         maxSeq = if (seqs.exists(_.isEmpty)) None else Some(seqs.flatten.max),
         bytes = g.map(_.bytes).sum)
     }
-    def spillList(files: List[DataFile]): (List[Manifest], List[DataFile]) = {
-      Io.mkdirs(metadataDir)
-      val groups = files.grouped(chunkSize).toList
-      val (full, rest) = groups.partition(_.size == chunkSize)
-      val newManifests = full.map { g =>
-        val fname = s"manifest-${java.util.UUID.randomUUID()}.json"
-        val p = s"$metadataDir/$fname"
-        Io.writeString(p, TableMeta.manifestToJson(g))
-        written ::= p
-        mkManifest(s"$tableLocation/metadata/$fname", g)
+    def writeChunk(g: List[DataFile]): Manifest = {
+      val fname = s"manifest-${java.util.UUID.randomUUID()}.json"
+      val p = s"$metadataDir/$fname"
+      Io.writeString(p, TableMeta.manifestToJson(g))
+      ChunkCache.get(p)(g)
+      written ::= p
+      mkManifest(s"$tableLocation/metadata/$fname", g)
+    }
+    def full(m: Manifest): Boolean = m.count >= chunkSize
+    // existing chunks stay Left (never rewritten unless merged); Right
+    // is a not-yet-written group
+    type Part = Either[Manifest, List[DataFile]]
+    def chunked(chunks: List[Manifest], pending: List[DataFile]): List[Manifest] = {
+      val (fullGroups, rest) = pending.grouped(chunkSize).toList.partition(_.size == chunkSize)
+      val out = scala.collection.mutable.ListBuffer.from(chunks.filter(full))
+      out ++= fullGroups.map(writeChunk)
+      val slots = scala.collection.mutable.Map.empty[Int, Part]
+      def carry(p: Part): Unit = {
+        val sizeClass = 31 - Integer.numberOfLeadingZeros(p.fold(_.count, _.size))
+        slots.remove(sizeClass) match {
+          case None => slots(sizeClass) = p
+          case Some(prev) =>
+            val (head, tail) = (Seq(prev, p).flatMap(_.fold(loadChunk, identity)))
+              .toList.splitAt(chunkSize)
+            if (head.size < chunkSize) carry(Right(head))
+            else {
+              out += writeChunk(head)
+              if (tail.nonEmpty) carry(Right(tail))
+            }
+        }
       }
-      (newManifests, rest.flatten)
+      chunks.filterNot(full).foreach(m => carry(Left(m)))
+      rest.foreach(g => carry(Right(g)))
+      out.toList ++ slots.toList.sortBy(-_._1).map(_._2.fold(identity, writeChunk))
     }
     val spilled = meta.copy(snapshots = meta.snapshots.map { s =>
       val s1 =
-        if (s.files.size <= chunkSize) s
-        else {
-          val (nm, rest) = spillList(s.files)
-          s.copy(files = rest, manifests = s.manifests ++ nm)
-        }
-      // delete list: strip the chunked prefix (in-memory full list →
-      // inline tail), spilling the tail too if it outgrew the chunk
-      val delTail = s1.inlineDeleteFiles
+        if (s.files.isEmpty) s
+        else s.copy(files = Nil, manifests = chunked(s.manifests, s.files))
+      val present = s1.deleteFiles.map(_.path).toSet
+      val (kept, gone) = s1.deleteManifests.partition(loadChunk(_).forall(f => present(f.path)))
+      val inKept = kept.flatMap(loadChunk).map(_.path).toSet
+      val pending = s1.deleteFiles.filterNot(f => inKept(f.path))
       val s2 =
-        if (delTail.size <= chunkSize) s1.copy(deleteFiles = delTail)
-        else {
-          val (nm, rest) = spillList(delTail)
-          s1.copy(deleteFiles = rest, deleteManifests = s1.deleteManifests ++ nm)
-        }
-      spillStampList(s2)
+        if (gone.isEmpty && pending.isEmpty) s1.copy(deleteFiles = Nil)
+        else s1.copy(deleteFiles = Nil, deleteManifests = chunked(kept, pending))
+      spillStampList(s2, full)
     })
     (TableMeta.toJson(spilled), written)
   }
@@ -423,7 +459,8 @@ class TableOps(val warehouse: String, val tableLocation: String,
   /** Commit `meta` as version `base + 1` — the half of the commit
     * protocol every catalog shares. Throws CommitFailedException when
     * [[commitPoint]] loses (concurrent winner, stale `base`), after
-    * deleting everything this attempt wrote.
+    * deleting everything this attempt wrote. A landed commit then
+    * drops all but the newest 10 metadata versions.
     */
   def commit(base: Int, meta: TableMeta): Int = {
     // Relocation invariant (ref :155-158): nothing absolute may reach
@@ -448,22 +485,25 @@ class TableOps(val warehouse: String, val tableLocation: String,
       finally out.close()
     } else Io.writeString(tmp, json)
 
-    try commitPoint(base, tmp, gzip)
-    catch {
-      case e: CommitFailedException =>
-        Io.deleteIfExists(tmp)
-        newManifests.foreach(Io.deleteIfExists)
-        throw e
-    }
+    val published =
+      try commitPoint(base, tmp, gzip)
+      catch {
+        case e: CommitFailedException =>
+          Io.deleteIfExists(tmp)
+          newManifests.foreach { p => Io.deleteIfExists(p); ChunkCache.invalidate(p) }
+          throw e
+      }
+    gcOldMetadata(keep = 10, published)
     base + 1
   }
 
   /** The commit point: publish the fully written metadata file `tmp`
-    * as version `base + 1`, or throw CommitFailedException and leave
-    * no other trace (the caller deletes `tmp`). `gzip` = `tmp` holds
-    * gzip bytes, so the published name takes the `.gz` spelling.
+    * as version `base + 1` and return the published file, or throw
+    * CommitFailedException and leave no other trace (the caller
+    * deletes `tmp`). `gzip` = `tmp` holds gzip bytes, so the published
+    * name takes the `.gz` spelling.
     */
-  protected def commitPoint(base: Int, tmp: String, gzip: Boolean): Unit = {
+  protected def commitPoint(base: Int, tmp: String, gzip: Boolean): String = {
     val current = scanForward(findVersion())
     if (base != current)
       throw new CommitFailedException(s"stale base: committed=$current, attempted base=$base")
@@ -494,7 +534,7 @@ class TableOps(val warehouse: String, val tableLocation: String,
     } finally commitLock.release(target, tmp)
 
     writeVersionHint(base + 1)
-    gcOldMetadata(keep = 10)
+    target
   }
 
   /** Best-effort hint rewrite via temp + atomic replace (ref :283-300). */
@@ -504,12 +544,16 @@ class TableOps(val warehouse: String, val tableLocation: String,
     Io.renameReplace(tmp, versionHintFile)
   }
 
-  private def gcOldMetadata(keep: Int): Unit = Try {
-    val vs = Io.listNames(metadataDir)
-      .collect { case VersionName(d) => Try(d.toInt).getOrElse(0) }
-      .toSeq.sorted
-    vs.dropRight(keep).filter(_ > 0)
-      .foreach(v => metadataCandidates(v).foreach(Io.deleteIfExists))
+  /** Best-effort metadata retention, the same on every catalog: delete
+    * the metadata files of all but the newest `keep` versions, never
+    * `published` (the file this commit just made current). */
+  private def gcOldMetadata(keep: Int, published: String): Unit = Try {
+    val byVersion = Io.listNames(metadataDir).toSeq
+      .collect { case n @ MetadataName(d) => Try(d.toInt).getOrElse(0) -> n }
+    val kept = byVersion.map(_._1).distinct.sorted.takeRight(keep).toSet
+    val current = published.substring(published.lastIndexOf('/') + 1)
+    byVersion.collect { case (v, n) if !kept(v) && n != current => n }
+      .foreach(n => Io.deleteIfExists(s"$metadataDir/$n"))
   }
 }
 

@@ -535,26 +535,28 @@ object Writer {
         if (clearDeletes || (overwrite && validateFrom.isEmpty)) Nil else baseDeletes
       val allStampedDeletes = prevDeletes ++ stampedDeletes
       val addedRecords = newFiles.map(_.records).sum
-      // Build the new snapshot's (kept manifests, inline tail) and the
-      // prev totals for the summary.
+      // Build the new snapshot's (kept manifests, files to chunk) and
+      // the prev totals for the summary; the commit writes the files
+      // to chunk as new chunks (TableOps.spillAndSerialize).
       //
       // APPEND FAST PATH: nothing is removed, so every base chunk
-      // survives verbatim WITHOUT being read — the commit is O(inline
-      // tail + new files) even on a million-file table — and the
-      // summary totals roll forward from the base summary (a real
-      // count only on pre-summary metadata).
+      // survives verbatim WITHOUT being read — the commit is O(new
+      // files) even on a million-file table — and the summary totals
+      // roll forward from the base summary (a real count only on
+      // pre-summary metadata).
       //
       // Otherwise (overwrite / MOR mustExist): manifest-chunk reuse —
       // any base chunk whose members ALL survive (checked through the
       // chunk cache) is carried verbatim; chunks with a removed member
-      // dissolve into the inline tail (respilled by TableOps when it
-      // outgrows the chunk size). A trickle DELETE dissolves only the
-      // chunks it touched.
-      val (keptManifests, inlineTail, prevRecords, prevCount) =
+      // dissolve, their survivors chunked again with the new files. A
+      // trickle DELETE dissolves only the chunks it touched.
+      val (keptManifests, toChunk, prevRecords, prevCount) =
         if (!overwrite && mustExist.isEmpty) {
           val recs = baseSnap.flatMap(_.summary.get("total-records"))
             .flatMap(s => scala.util.Try(s.toLong).toOption)
             .getOrElse(baseFiles.map(_.records).sum)
+          // (a base parsed from pre-chunk metadata carries its inline
+          // entries along, to be chunked by this commit)
           (baseSnap.map(_.manifests).getOrElse(Nil),
             baseSnap.map(_.files).getOrElse(Nil) ++ stampedNew,
             recs,
@@ -635,21 +637,15 @@ object Writer {
           "total-records" -> (prevRecords + addedRecords).toString,
           "total-data-files" -> (prevCount + newFiles.size).toString) ++
           extraSummary ++ wapId.map("wap.id" -> _),
-        files = inlineTail,
+        files = toChunk,
         deleteFiles = allStampedDeletes,
         // the post-transform schema: an RTAS snapshot is written under
         // the schema it installs, everything else under the base's
         schemaId = Some(xBase.currentSchemaId),
         manifests = keptManifests,
-        // delete chunks carry forward whenever the base delete list is
-        // kept whole (appends, MOR adds, validated overwrites): the
-        // in-memory list then still starts with the chunks' contents,
-        // so serialization strips them back out. Any path that drops
-        // or filters deletes (truncate, compaction clear) dissolves
-        // the chunks into the inline tail.
-        deleteManifests =
-          if (prevDeletes.nonEmpty) baseSnap.map(_.deleteManifests).getOrElse(Nil)
-          else Nil)
+        // candidates only: the commit keeps a delete chunk while all
+        // its entries are still in deleteFiles
+        deleteManifests = baseSnap.map(_.deleteManifests).getOrElse(Nil))
       val next = if (wapId.isDefined)
         // staged (write-audit-publish): the snapshot joins the set and
         // consumes a sequence number, but nothing points at it yet —

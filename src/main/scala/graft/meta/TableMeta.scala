@@ -12,11 +12,13 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * to the warehouse root (README.md:21-27,96,105-108) so a warehouse
   * can be relocated without rewriting metadata.
   *
-  * Simplification vs Iceberg: each snapshot embeds its data-file list
-  * (path, record count, per-column min/max, partition values) instead
-  * of a manifest-list/manifest avro chain. At 100 TB the file list
-  * would be chunked into side manifests (O(files) metadata still, but
-  * loaded lazily per partition-prune) — noted in SURVEY §7.
+  * File entries (path, record count, per-column min/max, partition
+  * values) never sit in metadata.json: as in Iceberg's manifest chain,
+  * every commit writes the entries it adds into immutable JSON chunk
+  * files ([[Manifest]]), and a snapshot carries only the chunk stamps —
+  * the full-chunk stamps through a shared manifest-list side file, the
+  * few under-full ones inline. metadata.json is O(snapshots), and a
+  * scan loads only the chunks its filter can match.
   */
 final case class FieldDef(id: Int, name: String, dataType: String, required: Boolean)
 
@@ -66,13 +68,14 @@ final case class DataFile(
     // (`schema.name-mapping.default`), not by id — see [[Mor.liveRows]]
     nameMapped: Option[Boolean] = None)
 
-/** An immutable spilled chunk of a snapshot's file list (the analog
-  * of the reference's manifest indirection, README.md:96): `path` is a
+/** An immutable chunk of a snapshot's file list (the analog of the
+  * reference's manifest indirection, README.md:96): `path` is a
   * warehouse-relative side JSON holding `count` [[DataFile]] records.
-  * Chunks are content-frozen at spill time and SHARED across
-  * snapshots — an append reuses the parent's chunks and only spills
-  * its own inline tail, so the commit payload is O(chunk size), not
-  * O(table files).
+  * Chunks are content-frozen when written and SHARED across snapshots —
+  * an append reuses the parent's chunks and writes only what it adds,
+  * so the commit payload is O(chunk size), not O(table files). A chunk
+  * is FULL at `write.metadata.manifest-chunk-size` entries; under-full
+  * chunks merge at commit time (see `TableOps.spillAndSerialize`).
   *
   * The remaining fields are PRUNING KEYS stamped at spill time, the
   * analog of Iceberg's manifest-list partition summaries (README.md:96):
@@ -102,19 +105,24 @@ final case class Snapshot(
     timestampMs: Long,
     operation: String, // append | overwrite | delete | replace
     summary: Map[String, String],
-    // The INLINE TAIL of the file list — exactly the files NOT covered
-    // by `manifests`, in memory and in JSON alike. The full list is
-    // `manifests` chunk contents ++ `files`, materialized LAZILY (and
-    // chunk-pruned) through TableOps.allFiles/filesMatching — a query
-    // on a million-file table no longer pays an O(all files) driver
-    // parse per refresh, only the chunks its filter can match.
+    // Data files NOT yet written to a chunk: on a snapshot being built,
+    // the files the commit adds (the commit writes them as chunks and
+    // serializes `files = []`); on a parsed snapshot, empty — except on
+    // metadata written before every commit chunked its files, whose
+    // inline entries stay here until the next commit moves them. The
+    // full list is the `manifests` chunk contents plus these, read
+    // LAZILY (and chunk-pruned) through TableOps.allFiles/filesMatching,
+    // never from this field alone.
     files: List[DataFile],
-    // merge-on-read POSITION-delete files (ref README.md:89-90
-    // `total-position-deletes`): parquet of (file_path STRING, pos
-    // BIGINT) with file_path warehouse-RELATIVE; scans subtract them
-    // via an anti-join. Entries referencing rewritten (absent) data
-    // files are inert and reclaimed at compaction. Default keeps
-    // pre-MOR metadata.json readable.
+    // merge-on-read delete files (ref README.md:89-90
+    // `total-position-deletes`): position deletes are parquet of
+    // (file_path STRING, pos BIGINT) with file_path warehouse-RELATIVE;
+    // scans subtract them via an anti-join. Entries referencing
+    // rewritten (absent) data files are inert and reclaimed at
+    // compaction. IN MEMORY this is always the FULL list (parse loads
+    // `deleteManifests` eagerly); IN JSON it is empty — the commit
+    // writes every entry no surviving delete chunk holds into a new
+    // one. Default keeps pre-MOR metadata.json readable.
     deleteFiles: List[DataFile] = Nil,
     manifests: List[Manifest] = Nil,
     // schema the snapshot was written under (Iceberg's per-snapshot
@@ -122,42 +130,33 @@ final case class Snapshot(
     // so evolution/RTAS never reshapes history. None on pre-upgrade
     // metadata → readers fall back to the current schema.
     schemaId: Option[Int] = None,
-    // Delete-list chunking (Iceberg's delete manifests): IN MEMORY
-    // `deleteFiles` is always the FULL list whose prefix (in chunk
-    // order) is the chunk contents; IN JSON only the tail past
-    // `chunkedDeleteCount` is inline. Unlike data chunks, delete
-    // chunks load EAGERLY at parse (through the ChunkCache): every
-    // scan must see the whole delete set for correctness before
-    // file-level pruning, and delete volume is compaction-bounded —
-    // what grows with table age is the COMMIT PAYLOAD, which this
-    // keeps O(chunk size).
+    // Delete chunks (Iceberg's delete manifests), always inline stamps.
+    // A chunk carries forward only while every entry it holds is still
+    // in `deleteFiles`; the commit decides that, so writers just pass
+    // the base's stamps along. Unlike data chunks, delete chunks load
+    // EAGERLY at parse (through the ChunkCache): every scan must see
+    // the whole delete set for correctness before file-level pruning,
+    // and delete volume is compaction-bounded — what grows with table
+    // age is the COMMIT PAYLOAD, which this keeps O(chunk size).
     deleteManifests: List[Manifest] = Nil,
     // Manifest-LIST indirection (Iceberg's per-snapshot manifest
     // list, README.md:96): a snapshot with many chunk stamps would
     // otherwise repeat all of them inline in EVERY retained snapshot
     // — metadata.json grows O(snapshots × chunks) and every commit
     // re-serializes it (measured: ~109 KB/snapshot at 400 chunks).
-    // IN JSON, a snapshot whose stamp list exceeds the spill
-    // threshold carries `manifests = []` plus this warehouse-relative
-    // path of a side JSON holding the stamps; IN MEMORY `manifests`
-    // is always the materialized full stamp list (parse loads the
-    // side file through a process-wide cache). The file is
+    // IN JSON, the leading FULL-chunk stamps live in the side file
+    // this warehouse-relative path names, and only the O(log chunk
+    // size) under-full stamps stay inline in `manifests`; IN MEMORY
+    // `manifests` is always the materialized full stamp list (parse
+    // loads the side file through a process-wide cache). The file is
     // CONTENT-ADDRESSED (name = hash of its serialized stamps), so
-    // the common case — an append that reuses the parent's chunks —
-    // reuses the parent's list file byte-for-byte: the commit writes
-    // zero new list bytes and metadata.json stays O(snapshots).
+    // the common case — an append that reuses the parent's full
+    // chunks — reuses the parent's list file byte-for-byte: the commit
+    // writes zero new list bytes and metadata.json stays O(snapshots).
     manifestList: Option[String] = None) {
 
-  /** Files covered by spilled chunks (disjoint from `files`). */
+  /** Files covered by chunks (disjoint from `files`). */
   def chunkedCount: Int = manifests.map(_.count).sum
-
-  /** Delete files covered by spilled delete chunks (a PREFIX of the
-    * in-memory `deleteFiles`). */
-  def chunkedDeleteCount: Int = deleteManifests.map(_.count).sum
-
-  /** The not-yet-spilled tail of `deleteFiles` — what serialization
-    * writes inline. */
-  def inlineDeleteFiles: List[DataFile] = deleteFiles.drop(chunkedDeleteCount)
 
   /** Total data-file count — computable WITHOUT loading any chunk. */
   def dataFileCount: Int = chunkedCount + files.size

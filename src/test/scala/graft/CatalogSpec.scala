@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.TableFiles
-import graft.catalog.{CommitFailedException, TableOps}
+import graft.catalog.{CommitFailedException, Io, TableOps}
 import graft.meta.TableMeta
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
@@ -596,37 +596,42 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE tcMf.m")
     spark.sql("CREATE TABLE tcMf.m.t (id BIGINT) " +
       "TBLPROPERTIES ('write.metadata.manifest-chunk-size'='10')")
-    // 25 partitions -> 25 data files in one commit: 2 chunks of 10
-    // spill, 5 stay inline
+    // 25 partitions -> 25 data files in one commit: 2 full chunks of
+    // 10 and one under-full chunk of 5; no file entry stays inline
     spark.sql("INSERT INTO tcMf.m.t SELECT id FROM range(0, 100, 1, 25)")
     val ops = new TableOps(wh, "m/t")
     def rawSnapshots = {
       val (v, _) = ops.refresh().get
       TableMeta.fromJson(ops.readMetadataString(ops.existingMetadataFile(v).get)).snapshots
     }
-    val s1 = rawSnapshots.last
-    assert(s1.manifests.size == 2 && s1.manifests.map(_.count).sum == 20)
-    assert(s1.files.size == 5, s"inline tail should be 5, got ${s1.files.size}")
+    def snapshots = ops.refresh().get._2.snapshots
+    val s1 = snapshots.last
+    assert(s1.manifests.map(_.count) == List(10, 10, 5), s"got ${s1.manifests}")
+    assert(rawSnapshots.last.files.isEmpty,
+      s"no inline file entry expected, got ${rawSnapshots.last.files.size}")
     // lazy materialization still yields all 25 files and all rows
     assert(ops.allFiles(ops.refresh().get._2.currentSnapshot.get).size == 25)
     assert(spark.sql("SELECT COUNT(*) FROM tcMf.m.t").collect()(0).getLong(0) == 100)
 
-    // appends REUSE the parent's chunks: after another 25-file insert,
-    // the new snapshot's raw payload holds only the new inline tail
-    // (5 survivors + 25 new = 30 -> spills 3 more chunks, 0 inline)
+    // appends REUSE the parent's full chunks: another 25-file insert
+    // writes 2 full chunks plus 5 files that merge with the parent's
+    // under-full 5 into a fifth full chunk
     spark.sql("INSERT INTO tcMf.m.t SELECT id FROM range(100, 200, 1, 25)")
-    val s2 = rawSnapshots.last
-    assert(s2.manifests.size == 5, s"expected 5 chunks, got ${s2.manifests}")
-    assert(s2.manifests.take(2) == s1.manifests,
+    val s2 = snapshots.last
+    assert(s2.manifests.map(_.count) == List.fill(5)(10), s"expected 5 full chunks, got ${s2.manifests}")
+    assert(s2.manifests.take(2) == s1.manifests.take(2),
       "append must reuse the parent snapshot's chunks verbatim")
+    assert(rawSnapshots.forall(_.files.isEmpty))
     assert(spark.sql("SELECT COUNT(*) FROM tcMf.m.t").collect()(0).getLong(0) == 200)
 
     // a predicate-pruned DELETE dissolves ONLY the chunks it touches
     spark.sql("DELETE FROM tcMf.m.t WHERE id < 4")
-    val s3 = rawSnapshots.last
-    assert(s3.manifests.nonEmpty && s3.manifests.forall(s2.manifests.contains),
-      "surviving chunks must be reused, none rewritten")
-    assert(s3.manifests.size < 5, "touched chunks must dissolve")
+    val s3 = snapshots.last
+    assert(s3.manifests.count(s2.manifests.contains) == 4,
+      "exactly the touched chunk dissolves; the others are reused verbatim")
+    // only the dissolved chunk's survivors are written anew
+    assert(s3.manifests.filterNot(s2.manifests.contains).map(_.count).sum < 10)
+    assert(rawSnapshots.forall(_.files.isEmpty))
     assert(spark.sql("SELECT COUNT(*) FROM tcMf.m.t").collect()(0).getLong(0) == 196)
     assert(spark.sql("SELECT SUM(id) FROM tcMf.m.t").collect()(0).getLong(0) == (0L until 200L).sum - 6)
 
@@ -650,6 +655,60 @@ class CatalogSpec extends AnyFunSuite {
     val ops2 = new TableOps(wh, "m/t2")
     assert(ops2.allFiles(ops2.refresh().get._2.currentSnapshot.get)
       .forall(_.path.startsWith("m/t2/")))
+  }
+
+  test("pre-chunk metadata with inline files and deletes reads, time-travels, and moves to chunks on the next commit") {
+    val wh = freshDir("legacyinline")
+    mkCatalog("tcLi", wh)
+    spark.sql("CREATE NAMESPACE tcLi.l")
+    spark.sql("CREATE TABLE tcLi.l.t (id BIGINT) TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    spark.sql("INSERT INTO tcLi.l.t SELECT id FROM range(0, 50, 1, 4)")
+    spark.sql("INSERT INTO tcLi.l.t SELECT id FROM range(50, 100, 1, 4)")
+    spark.sql("DELETE FROM tcLi.l.t WHERE id % 10 = 3")
+    val ops = new TableOps(wh, "l/t")
+    val (v, meta) = ops.refresh().get
+    val Seq(first, second, deleted) = meta.snapshots.map(_.snapshotId)
+    // hand-write the pre-chunk layout over the current metadata file:
+    // every snapshot's data and delete entries inline, no chunk stamp,
+    // no list — then remove every chunk file, so reads can only come
+    // from the inline entries
+    val mdFile = ops.existingMetadataFile(v).get
+    Io.writeString(mdFile, TableMeta.toJson(meta.copy(snapshots = meta.snapshots.map(s =>
+      s.copy(files = ops.allFiles(s), manifests = Nil, manifestList = None,
+        deleteManifests = Nil)))))
+    new java.io.File(s"$wh/l/t/metadata").listFiles()
+      .filter(_.getName.startsWith("manifest-")).foreach(f => assert(f.delete()))
+    graft.catalog.ChunkCache.invalidateAll()
+    graft.catalog.ManifestListCache.invalidateAll()
+    val raw0 = TableMeta.fromJson(ops.readMetadataString(mdFile))
+    assert(raw0.snapshots.forall(_.files.nonEmpty) &&
+      raw0.snapshots.last.deleteFiles.nonEmpty && raw0.snapshots.forall(_.manifests.isEmpty))
+    spark.sessionState.catalogManager.catalog("tcLi")
+      .asInstanceOf[graft.catalog.RelativeCatalog]
+      .invalidateTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array("l"), "t"))
+
+    def ids(q: String): Seq[Long] = spark.sql(q).collect().map(_.getLong(0)).toSeq.sorted
+    val live = (0L until 100L).filterNot(_ % 10 == 3)
+    def check(head: Seq[Long]): Unit = {
+      assert(ids("SELECT id FROM tcLi.l.t") == head)
+      assert(ids(s"SELECT id FROM tcLi.l.t VERSION AS OF $deleted") == live)
+      assert(ids(s"SELECT id FROM tcLi.l.t VERSION AS OF $second") == (0L until 100L))
+      assert(ids(s"SELECT id FROM tcLi.l.t VERSION AS OF $first") == (0L until 50L))
+    }
+    check(live)
+    // the first commit after the upgrade moves every retained
+    // snapshot's inline entries into chunks
+    spark.sql("INSERT INTO tcLi.l.t VALUES (1000)")
+    check(live :+ 1000L)
+    val raw = TableMeta.fromJson(ops.readMetadataString(
+      ops.existingMetadataFile(ops.findVersion()).get))
+    assert(raw.snapshots.size == 4)
+    assert(raw.snapshots.forall(s => s.files.isEmpty && s.deleteFiles.isEmpty),
+      s"inline entries left: ${raw.snapshots.map(s => s.files.size + s.deleteFiles.size)}")
+    assert(raw.snapshots.forall(_.manifests.nonEmpty) &&
+      raw.snapshots.drop(2).forall(_.deleteManifests.nonEmpty))
+    graft.catalog.ChunkCache.invalidateAll()
+    check(live :+ 1000L)
   }
 
   test("function catalog serves bucket/days; MERGE on a days table keeps files day-local") {

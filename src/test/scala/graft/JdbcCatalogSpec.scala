@@ -42,6 +42,28 @@ class JdbcCatalogSpec extends AnyFunSuite {
       .exists(_.getName.endsWith(".metadata.json")))
   }
 
+  test("metadata retention: old v<N>-<tag> files are reclaimed, never the pointer's") {
+    val c = fresh("gc")
+    val wh = "/tmp/graft_test_jdbc_gc"
+    spark.sql(s"CREATE NAMESPACE $c.ns")
+    spark.sql(s"CREATE TABLE $c.ns.t (id BIGINT)")
+    spark.sql(s"INSERT INTO $c.ns.t VALUES (1), (2)")
+    for (i <- 3 to 25)
+      spark.sql(s"ALTER TABLE $c.ns.t SET TBLPROPERTIES ('audit.round'='$i')")
+    val ops = spark.sessionState.catalogManager.catalog(c)
+      .asInstanceOf[graft.catalog.JdbcRelativeCatalog]
+      .loadTable(Identifier.of(Array("ns"), "t")).asInstanceOf[graft.catalog.GraftTable].ops
+      .asInstanceOf[graft.catalog.JdbcRelativeCatalog#JdbcTableOps]
+    val onDisk = new java.io.File(s"$wh/ns/t/metadata").listFiles().map(_.getName)
+      .filter(n => n.startsWith("v") && n.endsWith(".metadata.json"))
+    assert(onDisk.length <= 10, s"${onDisk.length} metadata files kept: ${onDisk.sorted.mkString(", ")}")
+    val pointed = ops.pointer.get
+    assert(onDisk.contains(pointed.substring(pointed.lastIndexOf('/') + 1)),
+      s"the pointer's file $pointed was reclaimed")
+    assert(ops.refresh().get._1 == 25)
+    assert(spark.sql(s"SELECT COUNT(*) FROM $c.ns.t").collect()(0).getLong(0) == 2)
+  }
+
   test("DDL + DML round-trip with pointer rows as source of truth") {
     val c = fresh("rt")
     spark.sql(s"CREATE NAMESPACE $c.ns")
@@ -299,8 +321,8 @@ class JdbcCatalogSpec extends AnyFunSuite {
     val c = fresh("renls")
     val wh = s"/tmp/graft_test_jdbc_renls"
     spark.sql(s"CREATE NAMESPACE $c.r")
-    // chunk size 1 + 40 files → 40 chunk stamps > the 32 list-spill
-    // threshold, so the committed metadata carries a manifestList
+    // chunk size 1 + 40 files → 40 full-chunk stamps, so the
+    // committed metadata carries a manifestList
     spark.sql(s"CREATE TABLE $c.r.big (id BIGINT) " +
       "TBLPROPERTIES ('write.metadata.manifest-chunk-size'='1')")
     spark.sql(s"INSERT INTO $c.r.big SELECT id FROM range(0, 40, 1, 40)")

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ListRaceSpec extends AnyFunSuite {
 
-  private val Chunks = 64   // > listSpillMin(32) → every snapshot spills its stamps
+  private val Chunks = 64   // full chunks → every snapshot spills its stamps
   private val PerChunk = 50
 
   private def synthesize(): String = {
@@ -105,7 +105,7 @@ class ListRaceSpec extends AnyFunSuite {
     // content-addressed name would be served verbatim forever
     val mdDir = new java.io.File(s"$wh/p/rt/metadata")
     val lists = mdDir.listFiles().filter(_.getName.startsWith("manifest-list-"))
-    assert(lists.nonEmpty, "fuzz never spilled a list — raise Chunks above listSpillMin")
+    assert(lists.nonEmpty, "fuzz never spilled a list")
     lists.foreach { f =>
       val stamps = TableMeta.stampsFromJson(Io.readString(f.getPath))
       assert(stamps.nonEmpty, s"torn/empty list file ${f.getName}")

@@ -127,11 +127,12 @@ class ManifestPruneSpec extends AnyFunSuite {
     // "no keys -> no matches"
     val wh = buildChunkedTable("mfcompat", "tmp5")
     val ops = new TableOps(wh, "p/t")
-    val (v, _) = ops.refresh().get
-    // strip every pruning key from the CURRENT metadata file, as if an
-    // old writer had produced it
+    val (v, meta) = ops.refresh().get
+    // rewrite the CURRENT metadata file as an old writer produced it —
+    // every stamp inline (no manifest list), no pruning key
     val p = ops.existingMetadataFile(v).get
-    val json = graft.catalog.Io.readString(p)
+    val json = graft.meta.TableMeta.toJson(
+      meta.copy(snapshots = meta.snapshots.map(_.copy(manifestList = None))))
     val stripped = Seq("minBound", "maxBound", "minSeq", "maxSeq")
       .foldLeft(json)((j, k) => j.replace("\"" + k + "\"", "\"legacy_" + k + "\""))
     assert(stripped != json, "expected to strip pruning keys from metadata JSON")
@@ -208,10 +209,12 @@ class ManifestPruneSpec extends AnyFunSuite {
     // data identical through SQL
     assert(spark.sql("SELECT COUNT(*) AS n, SUM(v) AS s FROM tmp6.p.t").collect()(0) ==
       org.apache.spark.sql.Row(1000L, (0L until 1000L).sum))
-    // dissolved chunk files physically reclaimed: only the 20 live ones remain
-    val mdChunks = new java.io.File(s"$wh/p/t/metadata").listFiles()
-      .map(_.getName).count(_.startsWith("manifest-"))
+    // dissolved chunk files physically reclaimed: only the 20 live ones
+    // remain, plus the one list file naming them
+    val mdNames = new java.io.File(s"$wh/p/t/metadata").listFiles().map(_.getName)
+    val mdChunks = mdNames.count(n => n.startsWith("manifest-") && !n.startsWith("manifest-list-"))
     assert(mdChunks == 20, s"expected 20 chunk files after reclaim, got $mdChunks")
+    assert(mdNames.count(_.startsWith("manifest-list-")) == 1)
   }
 
   test("delete lists spill to chunks: commit payload stays O(chunk)") {
@@ -228,13 +231,14 @@ class ManifestPruneSpec extends AnyFunSuite {
     val snap = meta.currentSnapshot.get
     assert(snap.deleteFiles.size >= 5, s"got ${snap.deleteFiles.size}")
     assert(snap.deleteManifests.nonEmpty, "delete chunks must have spilled")
-    // the JSON on disk carries only the inline tail past the chunks
+    // the JSON on disk carries no inline delete entry: the chunks hold
+    // every one, in every retained snapshot
     val raw = graft.meta.TableMeta.fromJson(
       ops.readMetadataString(ops.existingMetadataFile(v).get))
+    assert(raw.snapshots.forall(_.deleteFiles.isEmpty),
+      s"inline delete entries: ${raw.snapshots.map(_.deleteFiles.size)}")
     val rawSnap = raw.currentSnapshot.get
-    assert(rawSnap.deleteFiles.size <= 2,
-      s"inline delete tail must stay <= chunk size, got ${rawSnap.deleteFiles.size}")
-    assert(rawSnap.chunkedDeleteCount + rawSnap.deleteFiles.size == snap.deleteFiles.size)
+    assert(rawSnap.deleteManifests.map(_.count).sum == snap.deleteFiles.size)
     // reads still subtract every delete; integrity sees the chunks
     assert(spark.sql("SELECT COUNT(*) FROM tmp7.p.t").collect()(0).getLong(0) == 995)
     assert(graft.catalog.Maintenance.verifyIntegrity(ops).isEmpty)

@@ -182,8 +182,8 @@ class PlanningScaleSpec extends AnyFunSuite {
     val v2 = ops.commit(v, meta2)
     val commitMs = (System.nanoTime() - t0) / 1e6
     // the commit must reuse every parent chunk untouched: zero chunk
-    // loads, zero new chunk files (40 new files stay inline) — and
-    // the 400 stamps move OUT of metadata.json into ONE shared
+    // loads, ONE new chunk file (the 40 new files) — and the 400
+    // full-chunk stamps move OUT of metadata.json into ONE shared
     // content-addressed manifest-list file (both snapshots carry the
     // same stamps → same hash → one file), so the committed
     // metadata.json SHRINKS well below the inline-stamps original
@@ -192,7 +192,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     val chunkFiles = names.count(n =>
       n.startsWith("manifest-") && !n.startsWith("manifest-list-"))
     val listFiles = names.count(_.startsWith("manifest-list-"))
-    assert(chunkFiles == Chunks, s"append spilled new chunks: $chunkFiles != $Chunks")
+    assert(chunkFiles == Chunks + 1, s"append wrote ${chunkFiles - Chunks} chunks, not 1")
     assert(listFiles == 1, s"both snapshots must share ONE stamp list, got $listFiles")
     val after = new java.io.File(ops.existingMetadataFile(v2).get).length
     assert(after < before / 4,
@@ -205,8 +205,8 @@ class PlanningScaleSpec extends AnyFunSuite {
     val snap2 = ops2.refresh().get._2.currentSnapshot.get
     assert(snap2.dataFileCount == Chunks * PerChunk + 40 && ops2.chunkLoads == 0)
     val tail = ops2.filesNewerThan(snap2, after = Chunks.toLong)
-    assert(ops2.chunkLoads == 0 && tail.size == 40,
-      s"new inline files must list without any chunk load (loaded ${ops2.chunkLoads})")
+    assert(ops2.chunkLoads == 1 && tail.size == 40,
+      s"new files must list by loading only their own chunk (loaded ${ops2.chunkLoads})")
     ChunkCache.invalidateAll()
   }
 
