@@ -788,8 +788,8 @@ class GraftDynamicOverwriteWrite(val table: GraftTable, rowSchema: StructType)
     val specNames = table.meta.spec.fields.map(_.name)
     val newFiles = GraftCommitMessage.files(messages)
     val snap = table.readSnapshot
-    // the FULL file list: chunked files must carry over (or be
-    // classified as unstamped) just like the inline tail
+    // the FULL file list: every chunked file must carry over (or be
+    // classified as unstamped)
     val files = snap.map(table.ops.allFiles).getOrElse(Nil)
     val carryover =
       if (specNames.isEmpty) Nil // unpartitioned: replace everything

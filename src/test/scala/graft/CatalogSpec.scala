@@ -976,8 +976,8 @@ class CatalogSpec extends AnyFunSuite {
     assert(mrows == Seq("JAN2", "feb"), s"$mrows")
     assert(mFiles.filter(_.partition("ts_month") == "649").map(_.path).toSet == febBefore)
 
-    // a file list spilled into manifest chunks: the files held in
-    // chunks carry over exactly like the inline tail's
+    // a file list held in several manifest chunks: the files of every
+    // chunk carry over
     spark.sql("CREATE TABLE tcOv.o.c (k INT, v STRING) PARTITIONED BY (k) " +
       "TBLPROPERTIES ('write.metadata.manifest-chunk-size'='2')")
     (1 to 5).foreach(k => spark.sql(s"INSERT INTO tcOv.o.c VALUES ($k, 'old$k')"))
