@@ -378,7 +378,8 @@ class ChangesRelation(ctx: SQLContext, warehouse: String, meta: TableMeta,
   private val ops = new TableOps(warehouse, meta.location)
 
   // the diffed state is a full Catalyst plan producing InternalRows;
-  // hand them through the V1 boundary unconverted (see MorRelation)
+  // hand them through the V1 boundary unconverted (no per-row
+  // InternalRow -> Row -> InternalRow round-trip)
   override def needConversion: Boolean = false
 
   // changed-file bytes upper-bounds the diff volume: without this the

@@ -27,11 +27,15 @@ import scala.jdk.CollectionConverters._
   * pushdown, column pruning, and whole-stage codegen all apply —
   * the engine-native analog of the reference serving Spark scans
   * through `RelativeFileIO.newInputFile` (RelativeFileIO.java:64-66).
+  * Live merge-on-read deletes, `add_files` imports and the `_file`/
+  * `_pos` columns go through [[MergeOnReadScan]], which applies the
+  * deletes inside the scan task.
   *
-  * Writes: `V1Write`/`InsertableRelation` stages parquet under the
-  * table location, collects per-file stats, and commits through the
-  * OCC protocol in [[TableOps]] (the reference's commit path,
-  * HadoopRelativeTableOperations.java:144-180).
+  * Writes: every table file goes through [[GraftDataWriter]], which
+  * reports the file's own `DataFile` entry (bounds, counts, bytes) in
+  * the task commit message; the driver commits exactly those entries
+  * through the OCC protocol in [[TableOps]] (the reference's commit
+  * path, HadoopRelativeTableOperations.java:144-180).
   *
   * `pinnedSnapshot` implements `VERSION AS OF` time travel over the
   * snapshot list (README.md:67-108).
@@ -59,12 +63,12 @@ class GraftTable(
     true
   }
 
-  /** `_file` (warehouse-relative data-file path) and `_pos` (row
-    * ordinal within that file) — the row-identity pair. Queryable
-    * (`SELECT _file, _pos FROM t`) and the rowId the DELTA write path
-    * uses for merge-on-read UPDATE/MERGE position deltas. Encoding is
-    * identical to committed position-delete files ([[Mor.relFileCol]]),
-    * so delete writes and scan-side subtraction always agree.
+  /** `_file` (the data file's `DataFile.path`, warehouse-relative)
+    * and `_pos` (row ordinal within that file) — the row-identity pair.
+    * Queryable (`SELECT _file, _pos FROM t`) and the rowId the DELTA
+    * write path uses for merge-on-read UPDATE/MERGE position deltas.
+    * Committed position-delete files key rows by the same pair, so
+    * delete writes and scan-side subtraction always agree.
     */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(GraftTable.FileMetaCol, GraftTable.PosMetaCol)
@@ -425,31 +429,19 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     if (filesOverride.isDefined) Nil
     else table.readSnapshot.map(_.deleteFiles).getOrElse(Nil)
 
+  // residuals + pushed predicates come from a SCHEMA-ONLY probe
+  // delegate (opt round 21: the old ParquetTable probe force-listed the
+  // snapshot's whole file set just to read schema); the real (pruned)
+  // delegate is built at build() time. Parquet reports every data
+  // filter residual, so Spark re-filters above every route build()
+  // takes — including imports, whose delegate pushes nothing.
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     pushedExprs = filters
-    if (liveDeletes.nonEmpty ||
-        // a table that ever ran add_files (the name-mapping property is
-        // set exactly then) may serve this scan through the V1 fallback
-        // (build() decides per pruned file set) — predicates must stay
-        // residual so a non-translatable one is never silently dropped
-        table.meta.properties.contains(graft.meta.TableMeta.NameMappingKey)) {
-      // merge-on-read scan: report every predicate residual (Spark
-      // re-filters above the V1 relation); the translated subset is
-      // still applied INSIDE the relation's plan so parquet row-group
-      // pushdown happens below the anti-join
-      filters
-    } else {
-      // compute residuals + pushed predicates on a SCHEMA-ONLY probe
-      // delegate (opt round 21: the old ParquetTable probe force-listed
-      // the snapshot's whole file set — an 80-task job per scan past
-      // the 32-path parallel-listing threshold — just to read schema);
-      // the real (pruned) delegate is built at build() time
-      val probe = org.apache.spark.sql.execution.datasources.GraftManifestIndex
-        .probeScanBuilder(spark, options, table.schema())
-      val residual = probe.asInstanceOf[SupportsPushDownCatalystFilters].pushFilters(filters)
-      pushedPreds = probe.asInstanceOf[SupportsPushDownCatalystFilters].pushedFilters
-      residual
-    }
+    val probe = org.apache.spark.sql.execution.datasources.GraftManifestIndex
+      .probeScanBuilder(spark, options, table.schema())
+    val residual = probe.asInstanceOf[SupportsPushDownCatalystFilters].pushFilters(filters)
+    pushedPreds = probe.asInstanceOf[SupportsPushDownCatalystFilters].pushedFilters
+    residual
   }
 
   override def pushedFilters: Array[Predicate] = pushedPreds
@@ -469,102 +461,15 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // only delete files whose path range can reference a surviving
     // data file ride along (file-pruned scans skip unrelated deletes)
     val prunedDeletes = Mor.relevantDeletes(liveDeletes, pruned)
-    // the one V1 route: metadata columns, live deletes, and add_files
-    // imports (no parquet field ids — they can't ride the raw-path
-    // parquet delegate below; compaction rewrites them as native files
-    // and restores the delegate fast path)
+    // metadata columns, live deletes, and add_files imports (no parquet
+    // field ids; compaction rewrites them as native files and restores
+    // the delegate fast path) are served by the merge-on-read scan
     if (required.fieldNames.exists(GraftTable.MetaColNames) ||
         prunedDeletes.nonEmpty || pruned.exists(_.nameMapped.contains(true)))
-      new MorScan(table, required, pruned, prunedDeletes, v1, options, pushedExprs)
+      new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes)
     else SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark)
       // default: vectorized delegate + dynamic file pruning + streaming
       .getOrElse(new GraftStreamableScan(table, options, required, pushedExprs, pruned))
-  }
-}
-
-/** The V1 fallback scan: the pruned data files MINUS their live
-  * deletes ([[Mor.liveRows]]), serving the `_file`/`_pos` metadata
-  * columns when the required schema names them. Routed here for live
-  * deletes, `add_files` imports (name-mapped reads) and metadata
-  * columns — both user queries (`SELECT _file, _pos FROM t`) and the
-  * DELTA row-level scan ([[GraftDeltaOperation]]'s rowId). The inner
-  * plan is a full Catalyst DataFrame — vectorized parquet scan (with
-  * the translated predicates applied below the join, so row-group
-  * pushdown still happens), then broadcast/shuffle anti-joins, then
-  * the pruned projection. With live deletes or imports every
-  * predicate was reported residual, so Spark re-applies the full
-  * filter set above — the inner application is purely for scan
-  * efficiency.
-  */
-class MorScan(table: GraftTable, required: StructType, files: Seq[DataFile],
-    deletes: Seq[DataFile], filters: Seq[Filter],
-    // required, not defaulted: a caller that "forgot" them would get a
-    // micro-batch stream that silently ignores the user's branch and
-    // rate-limit options
-    options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
-    pushedExprs: Seq[Expression]) extends V1Scan {
-
-  override def readSchema(): StructType = required
-
-  /** `readStream` on a table whose CURRENT snapshot routed the batch
-    * scan here (live MOR deletes or name-mapped imports) still gets
-    * the snapshot-chain tail — the stream itself enforces its own
-    * append-only rules per micro-batch window (genesis MOR deletes
-    * refuse loudly; imported files resolve through the name mapping),
-    * so the batch-path routing must not mask the streaming surface.
-    * The metadata columns are the exception: the parquet micro-batch
-    * reader has no metadata-column surface, so that projection refuses
-    * with an actionable message instead of Spark's generic
-    * unsupported-stream error. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val metaCols = required.fieldNames.filter(GraftTable.MetaColNames)
-    if (metaCols.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"streaming read of ${table.name()} selects metadata column(s) " +
-          s"${metaCols.mkString(", ")} — " +
-          "metadata columns are batch-only; drop them from the streaming " +
-          "projection (read them with a batch query instead)")
-    new GraftMicroBatchStream(table, options, required, pushedExprs)
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](ctx: SQLContext): T =
-    new MorRelation(ctx, table, required, files, deletes, filters).asInstanceOf[T]
-}
-
-class MorRelation(ctx: SQLContext, table: GraftTable, required: StructType,
-    files: Seq[DataFile], deletes: Seq[DataFile], filters: Seq[Filter])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  // the inner plan already produces InternalRows (vectorized parquet →
-  // anti-join → project); handing them through untouched skips the
-  // per-row InternalRow→Row→InternalRow round-trip the default V1
-  // boundary would pay — on a 100 TB MOR scan that double conversion
-  // IS the overhead, everything below it is codegen'd
-  override def needConversion: Boolean = false
-
-  // exact committed bytes of the PRUNED file set: without this the V1
-  // fallback reports conf.defaultSizeInBytes (Long.Max) and a small
-  // MOR table on the build side of a join would never broadcast
-  override def sizeInBytes: Long = files.map(_.bytes).sum max 1L
-
-  override def buildScan(): RDD[Row] = {
-    import org.apache.spark.sql.functions.col
-    val spark = ctx.sparkSession
-    if (files.isEmpty)
-      return spark.sparkContext.emptyRDD[Row]
-    val alive = Mor.liveRows(spark, table.ops.warehouse, table.schema(), files,
-        table.meta.nameMapping, deletes,
-        positions = required.fieldNames.exists(GraftTable.MetaColNames))
-      .withColumnRenamed("__gf", "_file")
-      .withColumnRenamed("__gp", "_pos")
-    val filtered = filters.flatMap(Writer.filterToColumn)
-      .foldLeft(alive)(_.filter(_))
-    filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
-      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }
 

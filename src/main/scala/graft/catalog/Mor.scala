@@ -13,8 +13,8 @@ import scala.jdk.CollectionConverters._
   * POSITION deletes: a parquet file of (file_path STRING, pos BIGINT)
   * — file_path warehouse-RELATIVE (the reference's relocation
   * invariant applies to delete files too), pos the row's ordinal
-  * within that data file (`_metadata.row_index`). Scans subtract them
-  * with an anti-join on (file, pos).
+  * within that data file (parquet's row index). Scans drop them per
+  * file ([[MergeOnReadScan]]); [[liveRows]] anti-joins on (file, pos).
   *
   * EQUALITY deletes: a parquet file of key-column VALUES (columns =
   * the schema fields with ids `DataFile.equalityIds`). Written without
@@ -31,20 +31,24 @@ import scala.jdk.CollectionConverters._
   * rewritten by a MOR delete — that is the point: a trickle DELETE
   * costs O(matched rows) or less, not a whole-file rewrite.
   *
-  * ONE READ PATH. [[liveRows]] is the one entry point for reading a
-  * table's live rows: read the data files (id-resolved and name-mapped
-  * alike), annotate (file, pos) when deletes or the caller need it,
-  * subtract position deletes, then equality deletes. Every reader goes
-  * through it:
-  *  - scans: the V1 fallback [[MorScan]] (live deletes, `add_files`
-  *    imports, the `_file`/`_pos` metadata columns);
+  * TWO READERS. Table scans — live deletes, `add_files` imports, the
+  * `_file`/`_pos` metadata columns, and the DELTA row-id scan of MOR
+  * UPDATE/MERGE — go through [[MergeOnReadScan]], which applies the
+  * deletes inside the scan task (per file: a sorted position set, then
+  * an equality key set) with no join. Everything else reads live rows
+  * through [[liveRows]]: read the data files (id-resolved and
+  * name-mapped alike), annotate (file, pos) when deletes or the caller
+  * need it, anti-join position deletes, then equality deletes. Its
+  * readers:
   *  - row-level writes: COW and MOR `DELETE`, `INSERT OVERWRITE` by
   *    filter, and the MOR rewrite scratch of UPDATE/MERGE;
   *  - maintenance: `compute_stats` (table and partition), and the
   *    three compactions;
   *  - change reads: `$changes` states and fast paths, `graft-cdc`
   *    slices — whose position-delete rows share [[deletedByPositions]].
-  * The pieces it is built from are private to this object.
+  * Both readers key a row by (`DataFile.path`, row index) and share
+  * [[relevantDeletes]]' per-file rules, so they agree row for row; the
+  * pieces [[liveRows]] is built from are private to this object.
   */
 object Mor {
 
@@ -85,8 +89,7 @@ object Mor {
     * deletes (sequence numbers come from `files`). Returns `schema`'s
     * columns, plus the (relative file, position) pair as `__gf`/`__gp`
     * when `positions` is set — for callers that key on row identity
-    * (the `_file`/`_pos` scan, the MOR DELETE's tombstones, partition
-    * stats, the change reads). The pair is only derived when deletes
+    * (the MOR DELETE's tombstones, partition stats, the change reads). The pair is only derived when deletes
     * or the caller need it, so a delete-free read stays the plain scan.
     */
   def liveRows(spark: SparkSession, warehouse: String, schema: StructType,
@@ -97,7 +100,10 @@ object Mor {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields ++ (if (positions) positionFields else Nil)))
     val data = readData(spark, warehouse, schema, files, mapping,
-      if (positions || deletes.nonEmpty) withPositions(_, warehouse) else identity)
+      if (positions || deletes.nonEmpty) {
+        val escaped = (warehouse +: files.map(_.path)).exists(uriEscapes)
+        withPositions(_, warehouse, escaped)
+      } else identity)
     val (eq, pos) = deletes.partition(isEquality)
     subtractEquality(spark, subtract(spark, data, warehouse, pos), warehouse, eq, files)
       .select(out.map(col): _*)
@@ -204,22 +210,36 @@ object Mor {
     ).distinct.map(_ + "/")
   }
 
-  /** `_metadata.file_path` (a URI) → warehouse-relative path, the
-    * exact representation stored in delete files. Used identically on
-    * the write and read sides so the anti-join keys always agree.
-    * Spark may spell the same location `file:/w/x`, `file:///w/x`,
-    * `/w/x`, or `s3a://bucket/w/x` — every spelling of the warehouse
-    * prefix is matched so a URI warehouse gets correct keys too.
+  /** `_metadata.file_path` (a URL-encoded URI) → the data file's
+    * `DataFile.path`, the exact representation stored in delete files
+    * and served as `_file` by [[MergeOnReadScan]]. When `escaped` (some
+    * path read holds a character the URI form escapes, e.g. ` ` or `%`)
+    * the URI is decoded first, so it matches its plain prefix and
+    * `DataFile.path` (`url_decode` would turn `+` into a space); plain
+    * paths skip the decoding and keep the plan free of it. Spark may
+    * spell the same location `file:/w/x`, `file:///w/x`, `/w/x`, or
+    * `s3a://bucket/w/x` — every spelling of the warehouse prefix is
+    * matched so a URI warehouse gets correct keys too.
     */
-  private def relFileCol(warehouse: String): Column = {
+  private def relFileCol(warehouse: String, escaped: Boolean): Column = {
     val prefixes = warehousePrefixes(warehouse)
-    val raw = col("_metadata.file_path")
+    val uri = col("_metadata.file_path")
+    val raw = if (escaped) decodePath(uri) else uri
     val relChain = prefixes.foldLeft(when(lit(false), lit(""))) { (acc, w) =>
       acc.when(raw.startsWith(w), raw.substr(lit(w.length + 1), lit(Int.MaxValue)))
     }
     // fallback: strip a file: scheme (pre-URI behavior, conservative)
     relChain.otherwise(regexp_replace(raw, "^file:(//)?", ""))
   }
+
+  private val decodePath = udf((uri: String) =>
+    new org.apache.hadoop.fs.Path(new java.net.URI(uri)).toString)
+
+  /** Whether a URI may spell `p` with an escape — conservative: any
+    * character outside a set a URI path never escapes counts. */
+  private def uriEscapes(p: String): Boolean = p.exists(c =>
+    !((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      "/-_.~:=+,@".indexOf(c) >= 0))
 
   /** The committed delete set as (__gf relative-path, __gp position). */
   private def deleteSet(spark: SparkSession, warehouse: String,
@@ -233,8 +253,9 @@ object Mor {
   /** Annotate a parquet file-source DataFrame with its (relative file,
     * position) as __gf/__gp — materialized BEFORE any join so `_metadata`
     * never needs to resolve through one. */
-  private def withPositions(data: DataFrame, warehouse: String): DataFrame =
-    data.withColumn("__gf", relFileCol(warehouse))
+  private def withPositions(data: DataFrame, warehouse: String,
+      escaped: Boolean): DataFrame =
+    data.withColumn("__gf", relFileCol(warehouse, escaped))
       .withColumn("__gp", col("_metadata.row_index"))
 
   /** Anti-join a __gf/__gp-annotated frame against the POSITION delete
@@ -270,18 +291,17 @@ object Mor {
     * Missing bounds/seqs (legacy or fallback stats) conservatively
     * keep the file.
     */
-  def relevantDeletes(deletes: Seq[DataFile], files: Seq[DataFile]): Seq[DataFile] = {
-    val paths = files.map(_.path)
+  def relevantDeletes(deletes: Seq[DataFile], files: Seq[DataFile]): Seq[DataFile] =
     deletes.filter { d =>
-      if (isEquality(d))
-        files.exists(f => equalityDeleteMayApply(d, f))
-      else {
-        val lb = d.minBound.get("file_path")
-        val ub = d.maxBound.get("file_path")
-        paths.exists(p => lb.forall(p >= _) && ub.forall(p <= _))
-      }
+      if (isEquality(d)) files.exists(f => equalityDeleteMayApply(d, f))
+      else files.exists(f => positionDeleteMayApply(d, f.path))
     }
-  }
+
+  /** Can position-delete file `d` name a row of the data file at
+    * `path`? Its exact `file_path` bounds must cover the path. */
+  def positionDeleteMayApply(d: DataFile, path: String): Boolean =
+    d.minBound.get("file_path").forall(path >= _) &&
+      d.maxBound.get("file_path").forall(path <= _)
 
   /** Can equality-delete file `d` kill any row of data file `f`?
     * Mirrors [[subtractEquality]]'s join exactly, on stats alone:
@@ -330,6 +350,21 @@ object Mor {
     else !disjoint(_ < _)
   }
 
+  /** Equality deletes grouped by key-column set, each set resolved to
+    * `schema`'s fields by field id (so keys track renames). */
+  def equalityGroups(schema: StructType, deletes: Seq[DataFile])
+      : Seq[(Seq[StructField], Seq[DataFile])] = {
+    val byId = schema.fields.flatMap { f =>
+      if (f.metadata.contains(graft.meta.TableMeta.FieldIdKey))
+        Some(f.metadata.getLong(graft.meta.TableMeta.FieldIdKey).toInt -> f)
+      else None
+    }.toMap
+    deletes.groupBy(_.equalityIds.getOrElse(Nil)).toSeq.map { case (ids, group) =>
+      ids.map(id => byId.getOrElse(id, throw new IllegalStateException(
+        s"equality-delete key field id $id missing from read schema"))) -> group
+    }
+  }
+
   /** Subtract EQUALITY deletes from a __gf-annotated frame. `dataFiles`
     * supplies each file's sequence number (the delete applies only to
     * strictly-older files). Key columns are resolved from the frame's
@@ -339,11 +374,6 @@ object Mor {
       warehouse: String, deletes: Seq[DataFile],
       dataFiles: Seq[DataFile]): DataFrame = {
     if (deletes.isEmpty) return annotated
-    val fieldById = annotated.schema.fields.flatMap { f =>
-      if (f.metadata.contains(graft.meta.TableMeta.FieldIdKey))
-        Some(f.metadata.getLong(graft.meta.TableMeta.FieldIdKey).toInt -> f)
-      else None
-    }.toMap
     // file → sequence number (metadata-sized; broadcast). Files without
     // a recorded seq predate equality deletes → 0 (always older).
     val seqDf = spark.createDataFrame(
@@ -352,10 +382,7 @@ object Mor {
         StructField("__gseq", LongType, nullable = false))))
     var df = annotated.join(broadcast(seqDf), Seq("__gf"), "left")
       .withColumn("__gseq", coalesce(col("__gseq"), lit(0L)))
-    for ((ids, group) <- deletes.groupBy(_.equalityIds.getOrElse(Nil))) {
-      val keyFields = ids.map(id => fieldById.getOrElse(id,
-        throw new IllegalStateException(
-          s"equality-delete key field id $id missing from read schema")))
+    for ((keyFields, group) <- equalityGroups(annotated.schema, deletes)) {
       val delSchema = StructType(keyFields)
       // per-file union so each delete row carries ITS commit's seq
       val delRows = group.map { d =>

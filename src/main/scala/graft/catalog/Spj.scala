@@ -149,7 +149,7 @@ class SpjScan(table: GraftTable, options: CaseInsensitiveStringMap,
   /** GraftTable always advertises MICRO_BATCH_READ, so every scan the
     * builder can route to must serve `readStream` — a session that
     * enabled storage-partitioned joins must not lose the streaming
-    * surface (same contract as [[MorScan]]). */
+    * surface (same contract as [[MergeOnReadScan]]). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(table, options, required, pushedExprs)

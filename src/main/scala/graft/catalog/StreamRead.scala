@@ -429,10 +429,11 @@ case class SeqOffset(seq: Long, fileIdx: Int = -1, added: Boolean = false) exten
     if (added) SliceOffsets.UnitAdded else SliceOffsets.UnitState)
 }
 
-/** Routes a micro-batch partition to the reader factory of its
-  * resolution mode (field-id native vs name-mapped import) — the two
-  * parquet delegates differ only in how column names bind, so their
-  * partitions coexist in one batch. */
+/** Routes a partition to the reader factory of its resolution mode
+  * (field-id native vs name-mapped import) — the two parquet delegates
+  * differ only in how column names bind, so their partitions coexist in
+  * one scan. Serves micro-batches and the delete-free batch reads of
+  * [[MergeOnReadScan]]. */
 case class StreamTaggedPartition(inner: InputPartition, mapped: Boolean)
   extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()

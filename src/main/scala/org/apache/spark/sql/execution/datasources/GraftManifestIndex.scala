@@ -89,14 +89,20 @@ object GraftManifestIndex {
     // unqualified keys would silently resolve to zero files)
     val hconf = spark.sparkContext.hadoopConfiguration
     val statuses = files.map { case (p, len) =>
-      val raw = new Path(p)
-      val fs = raw.getFileSystem(hconf)
-      val path = fs.makeQualified(raw)
+      val path = qualify(hconf, p)
       if (len > 0) new FileStatus(len, false, 1, 134217728L, 0L, path)
-      else fs.getFileStatus(path) // defaulted length: one real stat beats a wrong one
+      else path.getFileSystem(hconf).getFileStatus(path) // defaulted length: one real stat beats a wrong one
     }
     ParquetScanBuilder(spark,
       new GraftManifestIndex(spark, statuses, schema), schema, schema, options)
+  }
+
+  /** An absolute path qualified the way the delegate's index keys it:
+    * the `PartitionedFile`s a delegate plans carry exactly
+    * `SparkPath.fromPath(qualify(hconf, p))`. */
+  def qualify(hconf: org.apache.hadoop.conf.Configuration, p: String): Path = {
+    val raw = new Path(p)
+    raw.getFileSystem(hconf).makeQualified(raw)
   }
 
   /** Schema-only ScanBuilder (no files): for pushdown PROBES that

@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.TableFiles
-import graft.catalog.{Maintenance, MorScan}
+import graft.catalog.{Maintenance, MergeOnReadScan}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,12 +79,12 @@ class AddFilesSpec extends AnyFunSuite {
     assert(spark.sql("SELECT id FROM tcAfm.a.t ORDER BY id").collect().toSeq ==
       Seq(Row(1L), Row(10L), Row(12L)))
 
-    // the scan over a mapped table is the V1 fallback...
+    // the scan over a mapped table is the merge-on-read scan...
     def scanOf() = gt("tcAfm", "a", "t")
       .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
         java.util.Map.of())).build()
-    assert(scanOf().isInstanceOf[MorScan])
-    // the `_file`/`_pos` metadata-column scan takes the same V1 route
+    assert(scanOf().isInstanceOf[MergeOnReadScan])
+    // the `_file`/`_pos` metadata-column scan takes the same route
     def metaScanOf() = {
       val sb = gt("tcAfm", "a", "t")
         .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
@@ -95,15 +95,15 @@ class AddFilesSpec extends AnyFunSuite {
           org.apache.spark.sql.types.StructField("_pos", org.apache.spark.sql.types.LongType))))
       sb.build()
     }
-    assert(metaScanOf().isInstanceOf[MorScan])
+    assert(metaScanOf().isInstanceOf[MergeOnReadScan])
     // ...until compaction rewrites imports as native id-ful files
     Maintenance.compact(spark, gt("tcAfm", "a", "t"), targetFiles = 1)
     val compacted = gt("tcAfm", "a", "t").currentFiles
     assert(compacted.nonEmpty && !compacted.exists(_.nameMapped.contains(true)))
-    assert(!scanOf().isInstanceOf[MorScan],
+    assert(!scanOf().isInstanceOf[MergeOnReadScan],
       "post-compaction scan should return to the parquet delegate")
-    assert(metaScanOf().isInstanceOf[MorScan],
-      "metadata columns are served by the V1 scan on any table")
+    assert(metaScanOf().isInstanceOf[MergeOnReadScan],
+      "metadata columns are served by the merge-on-read scan on any table")
     assert(spark.sql("SELECT COUNT(*), SUM(id) FROM tcAfm.a.t").collect()(0)
       .toSeq == Seq(3L, 23L))
 

@@ -1235,7 +1235,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE tcMs.s.dim (id BIGINT, name STRING) " +
       "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
     spark.sql("INSERT INTO tcMs.s.dim SELECT id, CONCAT('n', id) FROM range(100)")
-    spark.sql("DELETE FROM tcMs.s.dim WHERE id >= 90") // live delete file → MorScan
+    spark.sql("DELETE FROM tcMs.s.dim WHERE id >= 90") // live delete file → MergeOnReadScan
     import org.apache.spark.sql.connector.catalog.Identifier
     val cat = spark.sessionState.catalogManager.catalog("tcMs")
       .asInstanceOf[graft.catalog.RelativeCatalog]

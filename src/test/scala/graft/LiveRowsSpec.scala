@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{GraftTable, Maintenance, RelativeCatalog}
+import graft.catalog.{GraftTable, Maintenance, MergeOnReadScan, Mor, RelativeCatalog}
 import graft.meta.RelPaths
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.functions.col
@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every reader of live rows under merge-on-read deletes, table-driven:
   * file sets {native only, imports only, mixed} × delete kinds
-  * {position, equality} × readers {pruned SELECT, `_file`/`_pos`,
-  * MOR UPDATE, COW DELETE, compact, `$changes`}. Each reader's rows are
-  * compared against rows computed in plain Scala from the table's
-  * known contents; `_file`/`_pos` are checked against a raw parquet
-  * read of the data files.
+  * {position, equality} × readers {pruned SELECT, `_file`/`_pos`, the
+  * merge-on-read scan vs `Mor.liveRows`, MOR UPDATE, COW DELETE,
+  * compact, `$changes`}. Each reader's rows are compared against rows
+  * computed in plain Scala from the table's known contents; `_file`/
+  * `_pos` are checked against a raw parquet read of the data files.
   */
 class LiveRowsSpec extends AnyFunSuite {
 
@@ -84,6 +84,21 @@ class LiveRowsSpec extends AnyFunSuite {
             .map(r => (r.getLong(0), f.path, r.getLong(1)))
         }.toSet
         assert(got == raw.filter(r => live.contains(r._1)))
+      },
+      "scan vs liveRows" -> { () =>
+        // the merge-on-read scan against the anti-join reader it
+        // replaced for table scans, positions included
+        val gt = table(name)
+        val snap = gt.readSnapshot.get
+        val q = spark.sql(s"SELECT id, v, _file, _pos FROM $t")
+        assert(q.queryExecution.sparkPlan.collect {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+        }.exists(_.isInstanceOf[MergeOnReadScan]))
+        val got = q.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        val oracle = Mor.liveRows(spark, wh, gt.schema(), gt.ops.allFiles(snap),
+            gt.meta.nameMapping, snap.deleteFiles, positions = true).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        assert(got.length == oracle.length && got.toSet == oracle.toSet)
       },
       "MOR UPDATE" -> { () =>
         spark.sql(s"UPDATE $t SET v = 'x' WHERE id IN (2, 12)")

@@ -25,6 +25,14 @@ the metric's bound in BENCHMARK.json:
 followed by failed/attempted per side. Quartiles are
 statistics.quantiles(n=4), as in fmtbench/spread.py. The tool reads
 BENCHMARK.json and writes nothing under fmtbench/.
+
+    --claim <metric>@<workload>   (repeatable)
+
+checks a claimed gain on that workload's pairs: the change's wins out of
+the pairs where both sides have a result (ties count for neither side),
+and whether the medians differ in the better direction by more than the
+parent's IQR. The claim holds when the change wins at least nine tenths
+of the pairs and the median difference exceeds that IQR.
 """
 import argparse
 import atexit
@@ -125,6 +133,33 @@ def report(workload, runs, e2e):
               f" ({sum(r is None for r in rs)} run(s) without a result line)")
 
 
+def claim(metric, workload, runs, e2e):
+    """Verdict lines for a claimed gain of `metric` on `workload`."""
+    lower = e2e[metric]["better"] == "lower"
+    by_pair = {}
+    for pair, _, side, res in runs:
+        if res is not None:
+            by_pair.setdefault(pair, {})[side] = res["metrics"][metric]["value"]
+    pairs = [v for v in by_pair.values() if len(v) == 2]
+    wins = sum((v["change"] < v["parent"]) if lower else (v["change"] > v["parent"])
+               for v in pairs)
+    ties = sum(v["change"] == v["parent"] for v in pairs)
+    p = [v["parent"] for v in pairs]
+    c = [v["change"] for v in pairs]
+    if len(p) < 2:
+        print(f"claim {metric}@{workload}: fewer than two complete pairs, no verdict")
+        return
+    pm, cm = statistics.median(p), statistics.median(c)
+    q1, _, q3 = statistics.quantiles(p, n=4)
+    gain = (pm - cm) if lower else (cm - pm)
+    beyond = gain > q3 - q1
+    holds = wins >= 0.9 * len(pairs) and beyond
+    print(f"claim {metric}@{workload}: change wins {wins}/{len(pairs)} pairs"
+          f" ({ties} tie(s)); medians {fmt(pm)} -> {fmt(cm)}, better by {fmt(gain)}"
+          f" vs parent IQR {fmt(q3 - q1)} ({'exceeds' if beyond else 'within'});"
+          f" {'holds' if holds else 'not shown'}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--parent", required=True, help="git revision of the parent")
@@ -132,6 +167,8 @@ def main():
                     help="workload name; repeat or comma-separate for several")
     ap.add_argument("--seeds", required=True, help="e.g. 901-910 or 901,903-905")
     ap.add_argument("--seconds", type=int, help="default: BENCHMARK.json run_seconds")
+    ap.add_argument("--claim", action="append", default=[],
+                    help="<metric>@<workload>: check a claimed gain (repeatable)")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -139,6 +176,10 @@ def main():
     seconds = args.seconds or bench["run_seconds"]
     workloads = [w for ws in args.workload for w in ws.split(",") if w]
     seeds = seed_list(args.seeds)
+    claims = [c.split("@", 1) for c in args.claim]
+    for c in claims:
+        if len(c) != 2 or c[0] not in e2e or c[1] not in workloads:
+            ap.error(f"--claim {'@'.join(c)}: want <end-to-end metric>@<listed workload>")
 
     tmp = tempfile.mkdtemp(prefix="abpairs-")
     atexit.register(shutil.rmtree, tmp, True)
@@ -157,6 +198,9 @@ def main():
                 print(f"[{w}] pair {pair} seed {seed} {side}: "
                       + ("failed" if res is None else "done"), file=sys.stderr, flush=True)
         report(w, runs, e2e)
+        for metric, workload in claims:
+            if workload == w:
+                claim(metric, w, runs, e2e)
         sys.stdout.flush()
 
 
