@@ -111,10 +111,13 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     val eqGroups = Mor.equalityGroups(tableSchema, eqDeletes)
 
     // the delegate reads the required data columns, the equality key
-    // columns, and the row index when a position is needed
+    // columns, and the row index when a position is needed. A data
+    // column keeps `required`'s type (Spark may have pruned a struct
+    // and reads its fields by ordinal there) and takes the table
+    // field's metadata (its field id)
     val rowIndex = posDeletes.nonEmpty || required.fieldNames.contains("_pos")
     val dataFields = required.fields.filterNot(f => GraftTable.MetaColNames(f.name))
-      .map(f => tableSchema.fields.find(_.name == f.name).getOrElse(f))
+      .map(f => tableSchema.fields.find(_.name == f.name).fold(f)(t => f.copy(metadata = t.metadata)))
     val readSchema = StructType(
       (dataFields ++ eqGroups.flatMap(_._1)).distinctBy(_.name) ++
         (if (rowIndex) Seq(RowIndexField) else Nil))
@@ -151,7 +154,8 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
           .flatMap(_.asInstanceOf[FilePartition].files).groupBy(_.filePath)
         (Some(scan.createReaderFactory()), ds.map { d =>
           val key = keyOf(d)
-          DeleteSource(key.urlEncoded, splits.getOrElse(key, Array.empty))
+          DeleteSource(key.urlEncoded, splits.getOrElse(key, throw new IllegalStateException(
+            s"delete file ${d.path} is missing from the splits planned for it")))
         }.toArray)
       }
     val (posFactory, posSources) = sources(posDeletes, Mor.deleteSchema)

@@ -4,7 +4,7 @@ import graft.meta.{DataFile, RelPaths, TableMeta}
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.catalyst.InternalRow
@@ -490,13 +490,9 @@ class GraftDataWriter(dir: String, prefix: String, spec: FileSpec)
       override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
         new ParquetWriteSupport
     }
-    // the builder reads neither ParquetOutputFormat's row-group nor its
-    // page size from the conf: pass them (parquet's defaults when unset)
     val builder = new B(new Path(curPath))
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.ZSTD)
-      .withRowGroupSize(conf.getLong(ParquetOutputFormat.BLOCK_SIZE, ParquetWriter.DEFAULT_BLOCK_SIZE))
-      .withPageSize(conf.getInt(ParquetOutputFormat.PAGE_SIZE, ParquetWriter.DEFAULT_PAGE_SIZE))
     // ParquetWriter.Builder ignores ParquetOutputFormat's per-column
     // conf keys — translate `parquet.bloom.filter.enabled#col`
     // (stamped by Writer.writerHadoopConf from the table property)

@@ -170,4 +170,33 @@ class LiveRowsSpec extends AnyFunSuite {
     spark.sql(s"UPDATE $t SET v = 'x' WHERE id = 12")
     assert(rows(s"SELECT id, v FROM $t") == Set((1L, "native"), (10L, "a"), (12L, "x")))
   }
+
+  test("a nested field reads through the merge-on-read scan under a position delete") {
+    val c = s"${cat}Nested"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${wh}_nested"))
+    spark.conf.set(s"spark.sql.catalog.$c", "graft.catalog.RelativeCatalog")
+    spark.conf.set(s"spark.sql.catalog.$c.warehouse", s"${wh}_nested")
+    val t = s"$c.l.t"
+    spark.sql(s"CREATE NAMESPACE $c.l")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, s STRUCT<a: STRING, c: BIGINT>) TBLPROPERTIES (" +
+      "'write.delete.mode'='merge-on-read')")
+    spark.range(6).selectExpr("id", "named_struct('a', CONCAT('a', id), 'c', id * 10) AS s")
+      .coalesce(1).writeTo(t).append()
+    spark.sql(s"DELETE FROM $t WHERE id = 2")
+    // Spark prunes `s` to struct<c> and reads `s.c` by its ordinal there
+    val q = spark.sql(s"SELECT s.c FROM $t")
+    assert(q.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.exists(_.isInstanceOf[MergeOnReadScan]))
+    assert(q.collect().map(_.getLong(0)).toSet == Set(0L, 10L, 30L, 40L, 50L))
+    assert(spark.sql(s"SELECT s.a, s.c, _pos FROM $t WHERE s.c > 0").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet ==
+      Set(("a1", 10L, 1L), ("a3", 30L, 3L), ("a4", 40L, 4L), ("a5", 50L, 5L)))
+    val gt = spark.sessionState.catalogManager.catalog(c).asInstanceOf[RelativeCatalog]
+      .loadTable(Identifier.of(Array("l"), "t")).asInstanceOf[GraftTable]
+    val snap = gt.readSnapshot.get
+    val oracle = Mor.liveRows(spark, s"${wh}_nested", gt.schema(), gt.ops.allFiles(snap),
+      gt.meta.nameMapping, snap.deleteFiles).select("s.c").collect().map(_.getLong(0)).toSet
+    assert(oracle == Set(0L, 10L, 30L, 40L, 50L))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{GraftTable, MergeOnReadScan, Mor}
+import graft.catalog.{GraftTable, MergeOnReadScan, Mor, Writer}
 import graft.meta.RelPaths
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.execution.SparkPlan
@@ -91,19 +91,27 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val t = s"$cat.r.t"
     spark.sql(s"CREATE NAMESPACE $cat.r")
     spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING) $morProps")
-    // small row groups and pages: one file of several row groups, each
-    // of many pages; ids are written in order, so a row's id is its
-    // position in the file
-    spark.conf.set("parquet.block.size", "4096")
-    spark.conf.set("parquet.page.size", "512")
-    try spark.range(0, 3000).selectExpr("id", "CONCAT('v', id) AS v").coalesce(1)
-      .writeTo(t).append()
-    finally { spark.conf.unset("parquet.block.size"); spark.conf.unset("parquet.page.size") }
+    // one native file of several row groups, each of many pages: Spark's
+    // parquet writer takes parquet's row-group and page sizes as options
+    // and writes the table schema's field ids; ids are written in
+    // order, so a row's id is its position in the file
+    val created = table(cat, "r", "t")
+    val dir = s"$wh/r/t/data/small-groups"
+    spark.range(0, 3000).selectExpr("id", "CONCAT('v', id) AS v")
+      .select(created.schema().fields.toSeq.map(f => col(f.name).as(f.name, f.metadata)): _*)
+      .coalesce(1).write.option("parquet.block.size", "4096").option("parquet.page.size", "512")
+      .parquet(dir)
+    Writer.commitSnapshot(created, Writer.collectStatsFromFooters(created.schema(), wh, dir),
+      overwrite = false, operation = "append", carryover = Nil)
     val gt = table(cat, "r", "t")
     val Seq(file) = gt.currentFiles
     val abs = RelPaths.absolutize(wh, file.path)
-    val groups = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(abs))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(abs))
+    assert(!file.nameMapped.contains(true) &&
+      footer.getFileMetaData.getSchema.getFields.toArray(Array.empty[org.apache.parquet.schema.Type])
+        .forall(_.getId != null), "a native file: field ids in the footer")
+    val groups = footer
       .getBlocks.toArray(Array.empty[org.apache.parquet.hadoop.metadata.BlockMetaData])
       .map(b => (b.getRowIndexOffset, b.getRowCount))
     assert(groups.length >= 3, s"${groups.length} row groups")
