@@ -167,11 +167,10 @@ object Changes {
 
   /** Materialized state of one snapshot: its files minus its deletes
     * (None = the empty pre-genesis state). */
-  private def state(spark: SparkSession, warehouse: String, ops: TableOps,
-      snap: Option[Snapshot], dataSchema: StructType,
-      mapping: Map[Int, String]): DataFrame =
-    Mor.liveRows(spark, warehouse, dataSchema, snap.map(ops.allFiles).getOrElse(Nil),
-      mapping, snap.map(_.deleteFiles).getOrElse(Nil))
+  private def state(spark: SparkSession, ops: TableOps, meta: TableMeta,
+      snap: Option[Snapshot]): DataFrame =
+    Mor.liveRows(spark, ops, meta, snap.map(ops.allFiles).getOrElse(Nil),
+      snap.map(_.deleteFiles).getOrElse(Nil))
 
   /** Change rows produced by the commits in (fromSeq, toSeq], tagged
     * with `_change_type` and a 1-based `_change_ordinal` within the
@@ -245,7 +244,6 @@ object Changes {
       meta: TableMeta, fromSeq: Long, toSeq: Long,
       allowSyntheticGenesis: Boolean = true): Option[DataFrame] = {
     val dataSchema = TableMeta.schemaToSpark(meta.schema)
-    val mapping = meta.nameMapping
     if (toSeq <= fromSeq) return None
     requireRetainedBase(meta, fromSeq)
     val toSnap = meta.snapshots.find(_.sequenceNumber == toSeq).getOrElse(
@@ -299,7 +297,7 @@ object Changes {
         // ancestors left behind — the append fast path below would
         // wrongly skip inherited files here
         prev = Some(snap)
-        Seq(tag(state(spark, warehouse, ops, Some(snap), dataSchema, mapping), "insert", ord))
+        Seq(tag(state(spark, ops, meta, Some(snap)), "insert", ord))
       } else {
       // appends never remove files and their added set is exactly the
       // files stamped with their own seq — the seq-pruned chunk walk
@@ -322,7 +320,7 @@ object Changes {
       def readAdded: Seq[DataFrame] =
         if (addedData.isEmpty) Nil
         else Seq(tag(
-          Mor.liveRows(spark, warehouse, dataSchema, addedData, mapping, Nil), "insert", ord))
+          Mor.liveRows(spark, ops, meta, addedData, Nil), "insert", ord))
       val out: Seq[DataFrame] = snap.operation match {
         case "append" => readAdded
         case "replace" => Nil // compaction rewrites bytes, not rows
@@ -337,15 +335,15 @@ object Changes {
           // two-sided state diff. This is what keeps a CDC tail read
           // over a trickle-updated 100 TB table incremental.
           val (eqAdded, posAdded) = addedDels.partition(Mor.isEquality)
-          val posDeleted = Mor.deletedByPositions(spark, warehouse, dataSchema,
-            prevFiles, mapping, prevDeleteFiles, posAdded).map(tag(_, "delete", ord))
+          val posDeleted = Mor.deletedByPositions(spark, ops, meta,
+            prevFiles, prevDeleteFiles, posAdded).map(tag(_, "delete", ord))
           val eqDeleted: Seq[DataFrame] =
             if (eqAdded.isEmpty || prevFiles.isEmpty) Nil
             else {
               // eq deletes only hit strictly-older files; the commit's
               // own added files are never candidates
-              def live(dels: Seq[DataFile]) = Mor.liveRows(spark, warehouse,
-                dataSchema, prevFiles, mapping, dels, positions = true)
+              def live(dels: Seq[DataFile]) =
+                Mor.liveRows(spark, ops, meta, prevFiles, dels, positions = true)
               Seq(tag(live(prevDeleteFiles).join(
                   live(eqAdded).select(col("__gf"), col("__gp")),
                   Seq("__gf", "__gp"), "left_anti"),
@@ -353,8 +351,8 @@ object Changes {
             }
           readAdded ++ posDeleted ++ eqDeleted
         case _ =>
-          val cur = state(spark, warehouse, ops, Some(snap), dataSchema, mapping)
-          val par = state(spark, warehouse, ops, prev, dataSchema, mapping)
+          val cur = state(spark, ops, meta, Some(snap))
+          val par = state(spark, ops, meta, prev)
           Seq(tag(cur.exceptAll(par), "insert", ord),
             tag(par.exceptAll(cur), "delete", ord))
       }

@@ -38,7 +38,8 @@ import scala.jdk.CollectionConverters._
   * path, HadoopRelativeTableOperations.java:144-180).
   *
   * `pinnedSnapshot` implements `VERSION AS OF` time travel over the
-  * snapshot list (README.md:67-108).
+  * snapshot list (README.md:67-108). `pinnedFiles` fixes the data and
+  * delete files every scan reads ([[Mor.liveRows]]).
   */
 class GraftTable(
     val catalogName: String,
@@ -46,7 +47,8 @@ class GraftTable(
     val ops: TableOps,
     val meta: TableMeta,
     val metaVersion: Int,
-    val pinnedSnapshot: Option[Long] = None)
+    val pinnedSnapshot: Option[Long] = None,
+    pinnedFiles: Option[(Seq[DataFile], Seq[DataFile])] = None)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with SupportsRowLevelOperations
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -68,7 +70,7 @@ class GraftTable(
     * Queryable (`SELECT _file, _pos FROM t`) and the rowId the DELTA
     * write path uses for merge-on-read UPDATE/MERGE position deltas.
     * Committed position-delete files key rows by the same pair, so
-    * delete writes and scan-side subtraction always agree.
+    * delete writes and the scan's delete application always agree.
     */
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(GraftTable.FileMetaCol, GraftTable.PosMetaCol)
@@ -204,13 +206,13 @@ class GraftTable(
   def readSnapshot: Option[Snapshot] =
     pinnedSnapshot.flatMap(meta.snapshot).orElse(meta.currentSnapshot)
 
+  // an incremental (append-only) range has no applicable deletes:
+  // position/equality deletes committed at seq ≤ start only target
+  // files that already existed then, never files added after it
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    Option(options.get("start-snapshot-id")) match {
-      case Some(start) =>
-        new GraftScanBuilder(this, options,
-          Some(incrementalFiles(start, Option(options.get("end-snapshot-id")))))
-      case None => new GraftScanBuilder(this, options)
-    }
+    new GraftScanBuilder(this, options, pinnedFiles.orElse(
+      Option(options.get("start-snapshot-id")).map(start =>
+        (incrementalFiles(start, Option(options.get("end-snapshot-id"))), Nil))))
 
   /** Incremental append scan (`spark.read.option("start-snapshot-id", a)
     * [.option("end-snapshot-id", b)].table(...)`): only the rows ADDED
@@ -260,7 +262,7 @@ class GraftTable(
     *    majority — the property that makes COW deletes affordable.
     *  - `merge-on-read`: NO data file is rewritten. Matching rows'
     *    (file, position) pairs are written as a position-delete file
-    *    ([[Mor]]); scans subtract them; compaction applies them. A
+    *    ([[Mor]]); scans drop those rows; compaction applies them. A
     *    trickle DELETE on a 100 TB table costs O(matched rows), not a
     *    whole-file rewrite per touched file.
     */
@@ -280,8 +282,6 @@ class GraftTable(
     val cond = filters.flatMap(Writer.filterToColumn)
       .reduceOption(_ && _)
       .getOrElse(lit(true))
-    val affectedAbs = affected.map(f => RelPaths.absolutize(ops.warehouse, f.path))
-    val liveDeletes = snap.map(_.deleteFiles).getOrElse(Nil)
 
     val morMode = meta.properties.get("write.delete.mode").contains("merge-on-read")
     val wantEquality = morMode &&
@@ -291,7 +291,7 @@ class GraftTable(
       // EQUALITY delete: the predicate is a set of key tuples, so the
       // delete file is just those values — written WITHOUT reading any
       // data (O(tuples), not even a scan; the CDC trickle-delete path).
-      // Scans subtract it from strictly-older data files ([[Mor]]).
+      // Scans apply it to strictly-older data files ([[Mor]]).
       val (keys, tuples) = Mor.tuplesFromFilters(filters.toIndexedSeq).get
       val keyDefs = keys.map(k => meta.schema.fields.find(_.name == k).getOrElse(
         throw new IllegalArgumentException(s"equality-delete key $k not in schema")))
@@ -308,13 +308,7 @@ class GraftTable(
         operation = "delete", carryover = Nil, newDeletes = delFiles,
         wapId = Writer.sessionWapId(meta)))
     } else if (morMode) {
-      // rows matching the predicate → (relative file path, row ordinal),
-      // staged as a position-delete parquet; NULL predicate = not matched.
-      // Already-deleted rows are excluded so re-deleting is idempotent.
-      val matches = Mor.liveRows(spark, ops.warehouse, schema(), affected,
-          meta.nameMapping, liveDeletes, positions = true)
-        .filter(coalesce(cond, lit(false)))
-        .select(col("__gf").as("file_path"), col("__gp").as("pos"))
+      val matches = matchedPositions(affected, cond)
       val staging = Staging(meta, ops.warehouse, "deletes")
       // range-cluster the delete rows by the file they reference:
       // each delete file then covers a TIGHT, disjoint file_path range
@@ -333,14 +327,28 @@ class GraftTable(
       // predicate is "not matched", so it must map to keep (not drop):
       // a bare !cond is NULL for those rows and the filter would
       // silently delete them
-      val remaining = Mor.liveRows(spark, ops.warehouse, schema(), affected,
-          meta.nameMapping, liveDeletes)
+      val remaining = Mor.liveRows(spark, ops, meta, affected,
+          snap.map(_.deleteFiles).getOrElse(Nil))
         .filter(!coalesce(cond, lit(false)))
       Writer.append(this, remaining, overwrite = true,
         operation = "delete", carryover = untouched,
         validateFrom = Some(snap.map(_.snapshotId)),
         wapId = Writer.sessionWapId(meta))
     }
+  }
+
+  /** The tombstones a merge-on-read DELETE stages as a position-delete
+    * file: (relative file path, row ordinal) of every live row of
+    * `affected` that `cond` matches — a NULL predicate is not matched,
+    * and already-deleted rows are excluded, so re-deleting is
+    * idempotent. */
+  def matchedPositions(affected: Seq[DataFile],
+      cond: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    Mor.liveRows(sparkSession, ops, meta, affected,
+        readSnapshot.map(_.deleteFiles).getOrElse(Nil), positions = true)
+      .filter(coalesce(cond, lit(false)))
+      .select(col("__gf").as("file_path"), col("__gp").as("pos"))
   }
 }
 
@@ -394,8 +402,8 @@ object GraftTable {
     val combined =
       if (affected.isEmpty) aligned
       else {
-        val keep = Mor.liveRows(spark, table.ops.warehouse, schema, affected,
-            table.meta.nameMapping, snap.map(_.deleteFiles).getOrElse(Nil))
+        val keep = Mor.liveRows(spark, table.ops, table.meta, affected,
+            snap.map(_.deleteFiles).getOrElse(Nil))
           .filter(!coalesce(cond, lit(false)))
         keep.unionByName(aligned)
       }
@@ -411,9 +419,11 @@ object GraftTable {
   * skipping the reference's metadata enables (SURVEY §4) — and
   * (2) delegates the surviving files to ParquetScanBuilder so parquet
   * row-group pushdown and column pruning still happen below us.
+  * `pinned` replaces the snapshot's (data files, delete files) pair:
+  * the incremental read's added files, or [[Mor.liveRows]]' lists.
   */
 class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
-    filesOverride: Option[Seq[DataFile]] = None)
+    pinned: Option[(Seq[DataFile], Seq[DataFile])] = None)
   extends ScanBuilder with SupportsPushDownCatalystFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
@@ -422,12 +432,8 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
   private var pushedPreds: Array[Predicate] = Array.empty
   private var required: StructType = table.schema()
 
-  // an incremental (append-only) range has no applicable deletes:
-  // position/equality deletes committed at seq ≤ start only target
-  // files that already existed then, never files added after it
   private def liveDeletes: Seq[DataFile] =
-    if (filesOverride.isDefined) Nil
-    else table.readSnapshot.map(_.deleteFiles).getOrElse(Nil)
+    pinned.map(_._2).getOrElse(table.readSnapshot.map(_.deleteFiles).getOrElse(Nil))
 
   // residuals + pushed predicates come from a SCHEMA-ONLY probe
   // delegate (opt round 21: the old ParquetTable probe force-listed the
@@ -455,7 +461,7 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // are never even read (O(matching chunks) driver work on a
     // million-file table), then per-file min/max bounds prune within
     // the loaded candidates
-    val candidates = filesOverride.getOrElse(
+    val candidates = pinned.map(_._1).getOrElse(
       table.readSnapshot.map(s => table.ops.filesMatching(s, v1)).getOrElse(Nil))
     val pruned = candidates.filter(f => v1.forall(FilePruning.keepFile(f, _)))
     // only delete files whose path range can reference a surviving

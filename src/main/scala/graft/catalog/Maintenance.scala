@@ -339,8 +339,7 @@ object Maintenance {
       if (files.isEmpty)
         graft.meta.TableStats(snapId, 0L, 0L, cols.map(_ -> graft.meta.ColumnStats(0L, 0L)).toMap)
       else {
-        val df = Mor.liveRows(spark, table.ops.warehouse, schema, files,
-          table.meta.nameMapping, deleteFiles)
+        val df = Mor.liveRows(spark, table.ops, table.meta, files, deleteFiles)
         val aggs = count(lit(1)).as("__n") +:
           cols.flatMap(c => Seq(
             approx_count_distinct(col(c)).as(s"__ndv_$c"),
@@ -364,7 +363,7 @@ object Maintenance {
   /** Per-partition record/byte/file rollup (ref README.md:99-100
     * `partition-statistics`). One pass grouped by (data file,
     * partition-transform exprs) — the same transforms the writer
-    * clusters by — with MOR deletes subtracted, so record counts are
+    * clusters by — with MOR deletes applied, so record counts are
     * EXACT per live partition. Bytes are attributed from each file by
     * its row share in the partition: exact when files are
     * partition-local (the normal case), proportional otherwise. The
@@ -376,9 +375,8 @@ object Maintenance {
     import org.apache.spark.sql.functions._
     val pexprs = Writer.specTransformExprs(table.meta)
     if (pexprs.isEmpty || files.isEmpty) return Nil
-    val alive = Mor.liveRows(spark, table.ops.warehouse,
-      graft.meta.TableMeta.schemaToSpark(table.meta.schema), files,
-      table.meta.nameMapping, deleteFiles, positions = true)
+    val alive = Mor.liveRows(spark, table.ops, table.meta, files, deleteFiles,
+      positions = true)
     val pnames = pexprs.map(_._1)
     val perFile = alive
       .groupBy((col("__gf") +: pexprs.map { case (n, e) => e.as(n) }): _*)
@@ -428,9 +426,8 @@ object Maintenance {
       snap: Option[graft.meta.Snapshot], rewritten: Seq[graft.meta.DataFile],
       carryover: Seq[graft.meta.DataFile], clearDeletes: Boolean)(
       arrange: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-    val live = Mor.liveRows(spark, table.ops.warehouse,
-      graft.meta.TableMeta.schemaToSpark(table.meta.schema), rewritten,
-      table.meta.nameMapping, snap.map(_.deleteFiles).getOrElse(Nil))
+    val live = Mor.liveRows(spark, table.ops, table.meta, rewritten,
+      snap.map(_.deleteFiles).getOrElse(Nil))
     Writer.append(table, arrange(live), overwrite = true, operation = "replace",
       carryover = carryover, validateFrom = Some(snap.map(_.snapshotId)),
       clearDeletes = clearDeletes)

@@ -37,8 +37,9 @@ class GraftRowLevelOperation(table: GraftTable, info: RowLevelOperationInfo)
 
   /** `_file`-keyed runtime group filtering applies when the partition-
     * column variant cannot (no identity partition columns to filter
-    * on) and the scan is plain COW (a MOR scratch rewrite loses file
-    * identity). The scan then emits `_file` per row and the dynamic
+    * on) and the table has no live delete (a rewrite under deletes
+    * takes the merge-on-read scan, which runtime filters do not
+    * prune). The scan then emits `_file` per row and the dynamic
     * filter prunes by exact file identity — which gives a MERGE on an
     * UNPARTITIONED (or days/bucket) table the same
     * only-rewrite-matched-files economics the partitioned case gets.
@@ -103,42 +104,21 @@ class RowLevelScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
       v1.forall(FilePruning.keepFile(f, _)))
     op.carryover = untouched
     val deletes = snap.map(_.deleteFiles).getOrElse(Nil)
-    // add_files imports (no parquet field ids) can't go through the
-    // raw-path delegate below — it reads with the id-annotated schema;
-    // they take the scratch-materialize route with everything else
-    val hasMapped = affected.exists(_.nameMapped.contains(true))
-    if (op.useFileGroups && deletes.isEmpty && !hasMapped)
-      return new FileGroupScan(table, options, required, affected, untouched, op)
-    if (deletes.isEmpty && !hasMapped) {
+    if (deletes.isEmpty && !affected.exists(_.nameMapped.contains(true))) {
+      if (op.useFileGroups)
+        return new FileGroupScan(table, options, required, affected, untouched, op)
       val rtCols = RowLevelScanBuilder.runtimeFilterCols(table, affected)
       if (rtCols.nonEmpty)
         return new GroupFilterScan(table, options, required, affected, untouched, rtCols, op)
-    }
-    // sized from the manifest: native files carry exact committed
-    // lengths; the scratch branch below just wrote its files, so one
-    // listing of the scratch dir replaces ParquetTable's per-path
-    // re-listing of the whole affected set
-    val knownFiles: Seq[(String, Long)] =
-      if (deletes.isEmpty && !hasMapped)
-        affected.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes))
-      else {
-        // merge-on-read table: the rewrite must not resurrect deleted
-        // rows, but the row-level planner can't serve a V1 fallback
-        // scan (GroupBasedRowLevelOperationScanPlanning never wraps
-        // V1Scans) — so materialize the delete-applied affected rows
-        // to a scratch dir and scan that through the regular
-        // vectorized delegate. Cost is one extra copy of the AFFECTED
-        // files only (the carryover majority is untouched).
-        val scratch = Files.createTempDirectory("graft_mor_rewrite")
-        Mor.liveRows(spark, table.ops.warehouse, table.schema(), affected,
-            table.meta.nameMapping, deletes)
-          .write.mode("overwrite").parquet(scratch.toString)
-        scala.jdk.CollectionConverters.IteratorHasAsScala(
-            Files.list(scratch).iterator()).asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(p => (p.toString, Files.size(p))).toSeq.sortBy(_._1)
-      }
-    GraftManifestIndex.delegateScan(spark, options, table.schema(), knownFiles,
+    } else if (affected.nonEmpty)
+      // live deletes or add_files imports (no parquet field ids): the
+      // merge-on-read scan, with nothing pushed — every row of an
+      // affected file must reach the write-back
+      return new MergeOnReadScan(table, options, required, Nil, affected,
+        Mor.relevantDeletes(deletes, affected))
+    // sized from the manifest: native files carry exact committed lengths
+    GraftManifestIndex.delegateScan(spark, options, table.schema(),
+      affected.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
       Nil, required)
   }
 }
@@ -585,8 +565,9 @@ class GraftDataWriter(dir: String, prefix: String, spec: FileSpec)
   * 10-row UPDATE on a 100 TB table costs O(10 rows written), not a
   * whole-file rewrite per touched file — the format-v2 CDC/upsert
   * economics. Row identity is the scan-provided (`_file`, `_pos`)
-  * metadata pair, encoded exactly like committed delete files
-  * ([[Mor.relFileCol]]), so scan-side subtraction always agrees.
+  * metadata pair — `DataFile.path` and the parquet row index
+  * ([[MergeOnReadScan]]) — the key committed delete files use, so
+  * the scan's delete application always agrees.
   */
 class GraftDeltaOperation(table: GraftTable, info: RowLevelOperationInfo)
   extends RowLevelOperation with org.apache.spark.sql.connector.write.SupportsDelta {

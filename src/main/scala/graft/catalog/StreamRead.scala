@@ -335,7 +335,7 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
     * files resolve columns by field id; files imported by `add_files`
     * (`DataFile.nameMapped`) carry NO field ids and resolve through
     * the table's frozen name mapping instead — the streaming analog of
-    * the batch path's [[Mor.liveRows]], deriving its read schema from
+    * the batch path's [[MergeOnReadScan]], deriving its read schema from
     * the same [[Mor.importSchema]] (positionally identical renames, so
     * reader output binds to the stream's attributes unchanged).
     * Filters are pushed only on the id-resolved side: a table that

@@ -65,7 +65,7 @@ final case class DataFile(
     nullCount: Map[String, Long] = Map.empty,
     // Some(true) = the file carries NO parquet field ids (add_files
     // import) and resolves via the table's name mapping
-    // (`schema.name-mapping.default`), not by id — see [[Mor.liveRows]]
+    // (`schema.name-mapping.default`), not by id — see [[MergeOnReadScan]]
     nameMapped: Option[Boolean] = None)
 
 /** An immutable chunk of a snapshot's file list (the analog of the
@@ -117,9 +117,9 @@ final case class Snapshot(
     // merge-on-read delete files (ref README.md:89-90
     // `total-position-deletes`): position deletes are parquet of
     // (file_path STRING, pos BIGINT) with file_path warehouse-RELATIVE;
-    // scans subtract them via an anti-join. Entries referencing
-    // rewritten (absent) data files are inert and reclaimed at
-    // compaction. IN MEMORY this is always the FULL list (parse loads
+    // scans drop the rows they name inside the scan task. Entries
+    // referencing rewritten (absent) data files are inert and reclaimed
+    // at compaction. IN MEMORY this is always the FULL list (parse loads
     // `deleteManifests` eagerly); IN JSON it is empty — the commit
     // writes every entry no surviving delete chunk holds into a new
     // one. Default keeps pre-MOR metadata.json readable.

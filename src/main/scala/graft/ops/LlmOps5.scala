@@ -477,8 +477,7 @@ object LlmOps5 extends Pack {
   }
 
   /** The candidate near-dup edges of [[dupClusters]] (exposed so specs
-    * can assert the pre-closure shape: one gram explode, bounded
-    * window). */
+    * can assert the pre-closure shape: one gram explode, no window). */
   private[graft] def dupEdges(docs: DataFrame, maxGramDf: Int = MaxGramDf): DataFrame = {
     val toks = filter(split(col("text"), " "), t => t =!= "")
     // grams are keyed by xxhash64 the moment they exist (the
@@ -488,13 +487,14 @@ object LlmOps5 extends Pack {
     // strings. A 64-bit collision merging two distinct grams is a
     // ~n²/2⁶⁴ event (≪ 10⁻⁶ even at 10⁹ distinct grams — and at most
     // one spurious df/edge, not a wrong closure).
-    // the gm exchange the window needs is made EXPLICIT (repartition)
-    // so the viral-count aggregate below can consume the IDENTICAL
-    // exchange subtree — AQE's runtime stage reuse then materializes
-    // the explode+dedup once for both consumers. (An anti-join placed
-    // above the dedup instead gets pushed BELOW it by the optimizer,
-    // splitting the two subtrees and re-running the explode — the
-    // round-21 double-scan this spelling exists to avoid.)
+    // the gm exchange is made EXPLICIT (repartition) so the df
+    // aggregate below consumes the IDENTICAL exchange subtree as the
+    // join-back's row side — AQE's runtime stage reuse then
+    // materializes the explode+dedup once for both consumers. (An
+    // anti-join placed above the dedup instead gets pushed BELOW it by
+    // the optimizer, splitting the two subtrees and re-running the
+    // explode — the round-21 double-scan this spelling exists to
+    // avoid.)
     val g = docs
       .withColumn("toks", toks)
       .filter(size(col("toks")) >= 12 && col("doc_id").isNotNull)
@@ -504,24 +504,16 @@ object LlmOps5 extends Pack {
         col("doc_id"))
       .distinct()
       .repartition(col("gm"))
-    // df gate BEFORE the self-join: a gm-keyed window count (the
-    // oracle's own QUALIFY spelling), so the self-join below can never
-    // see a bucket larger than maxGramDf rows. Opt round 21: this was
-    // an agg + join-back on gm, which evaluated the gram explode twice
-    // (measured: two identical 0.93 s scan stages — the agg branch and
-    // the join branch shared no exchange); the window computes df
-    // in-row off ONE exchange, and its gm partitioning is exactly what
-    // the self-join needs next.
-    // Opt round 22 (viral-gram guard): the window buffers each gm
-    // group BEFORE its filter runs, so one boilerplate mega-gram
-    // (df ≫ maxGramDf) would sort-and-spill its whole bucket in one
-    // task just to be discarded. The exact viral set (df > maxGramDf)
-    // is tiny by nature — boilerplate grams — counted off the SAME
-    // explicit exchange (stage-reused, see above) and broadcast
-    // anti-joined between the exchange and the window, so the window's
-    // per-group buffer is bounded by maxGramDf rows at ANY corpus size
-    // (Llm5Spec pins the shape and the single explode; the broadcast
-    // join preserves the gm partitioning, so no exchange is added).
+    // df gate BEFORE the self-join, so the self-join below never sees
+    // a bucket larger than maxGramDf rows: the eligible grams
+    // (2 <= df <= maxGramDf) come from a gm-keyed aggregate — bounded
+    // per-gram state in a spillable hash map — joined back to the gram
+    // rows. Opt round 22: this replaced a gm-keyed count() window,
+    // whose WindowExec buffered each whole gm bucket before its filter
+    // ran, so one boilerplate mega-gram (df >> maxGramDf) would
+    // sort-and-spill its whole bucket in one task just to be discarded.
+    // Llm5Spec pins the shape: no Window, one gram explode, and dedup
+    // exchanges that canonicalize identically for stage reuse.
     val eligible = g.groupBy(col("gm").as("egm")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxGramDf)
       .select(col("egm"))

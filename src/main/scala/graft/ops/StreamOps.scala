@@ -101,6 +101,9 @@ object StreamOps extends Pack {
   private def streamed(spark: SparkSession, dir: String,
       mode: OutputMode, twice: Boolean = false, sentinel: Boolean = false)(
       build: Dataset[Ev] => DataFrame): DataFrame = {
+    // the sentinel advances the watermark past every event, so a
+    // second wave would be dropped as late
+    require(!(twice && sentinel), "streamed: twice and sentinel cannot combine")
     import spark.implicits._
     val src = Files.createTempDirectory("graft_stream_src")
     linkWave(src, eventsSrc(spark, dir), "w0")

@@ -714,8 +714,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
   private def sliceRead(meta: TableMeta, all: IndexedSeq[DataFile],
       from: Int, until: Int, dels: Seq[DataFile]): DataFrame = {
     val slice = all.slice(from, math.min(until.toLong, all.size.toLong).toInt)
-    Mor.liveRows(spark, ops.warehouse, TableMeta.schemaToSpark(meta.schema), slice,
-        meta.nameMapping, dels)
+    Mor.liveRows(spark, ops, meta, slice, dels)
       .withColumn("_change_type", lit("insert"))
       .withColumn("_change_ordinal", lit(1))
   }
@@ -763,9 +762,8 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
         val l = prev.map(ops.allFiles).getOrElse(Nil)
         parentFilesMemo = Some((seq, l)); l
     }
-    Mor.deletedByPositions(spark, ops.warehouse, TableMeta.schemaToSpark(meta.schema),
-        prevFiles, meta.nameMapping, prev.map(_.deleteFiles).getOrElse(Nil), slice,
-        delivered = all.slice(0, from))
+    Mor.deletedByPositions(spark, ops, meta, prevFiles,
+        prev.map(_.deleteFiles).getOrElse(Nil), slice, delivered = all.slice(0, from))
       .map(_.withColumn("_change_type", lit("delete"))
         .withColumn("_change_ordinal", lit(1)))
       .getOrElse(emptyOut)

@@ -247,19 +247,6 @@ class HadoopFsSpec extends AnyFunSuite {
     assert(ops.allFiles(ops.refresh().get._2.currentSnapshot.get).nonEmpty)
   }
 
-  test("MOR warehouse-prefix spellings cover posix, file URIs, and remote schemes") {
-    import graft.catalog.Mor.warehousePrefixes
-    // posix warehouse: every local URI spelling must relativize
-    assert(warehousePrefixes("/tmp/wh").toSet ==
-      Set("/tmp/wh/", "file:/tmp/wh/", "file:///tmp/wh/"))
-    // file URI warehouse (either spelling in) → same set
-    assert(warehousePrefixes("file:///tmp/wh").toSet == warehousePrefixes("/tmp/wh").toSet)
-    assert(warehousePrefixes("file:/tmp/wh").toSet == warehousePrefixes("/tmp/wh").toSet)
-    // remote scheme: exactly the URI itself (object stores echo it back)
-    assert(warehousePrefixes("s3a://bucket/wh") == Seq("s3a://bucket/wh/"))
-    assert(warehousePrefixes("hdfs://nn:8020/wh") == Seq("hdfs://nn:8020/wh/"))
-  }
-
   test("pluggable commit lock: a configured distributed-lock impl wraps every rename") {
     RecordingLock.events.clear()
     val wh = freshDir("hfs_lock")

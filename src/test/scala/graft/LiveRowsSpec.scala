@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every reader of live rows under merge-on-read deletes, table-driven:
   * file sets {native only, imports only, mixed} × delete kinds
-  * {position, equality} × readers {pruned SELECT, `_file`/`_pos`, the
-  * merge-on-read scan vs `Mor.liveRows`, MOR UPDATE, COW DELETE,
-  * compact, `$changes`}. Each reader's rows are compared against rows
-  * computed in plain Scala from the table's known contents; `_file`/
-  * `_pos` are checked against a raw parquet read of the data files.
+  * {position, equality} × readers {pruned SELECT, `_file`/`_pos`,
+  * `Mor.liveRows` with positions, MOR UPDATE, COW DELETE, compact,
+  * `$changes`}. Each reader's rows are compared against rows computed
+  * in plain Scala from the table's known contents; positions are
+  * checked against a raw parquet read of the data files.
   */
 class LiveRowsSpec extends AnyFunSuite {
 
@@ -66,6 +66,16 @@ class LiveRowsSpec extends AnyFunSuite {
   private val live: Map[Long, String] =
     (low ++ high).filterNot(_ == 11L).map(id => id -> v(id)).toMap
 
+  /** Ground truth for row identity: each data file of the current
+    * snapshot read as plain parquet, (id, v, path, row index) of its
+    * live rows. */
+  private def rawLive(name: String): Set[(Long, String, String, Long)] =
+    table(name).ops.allFiles(table(name).readSnapshot.get).flatMap { f =>
+      spark.read.parquet(RelPaths.absolutize(wh, f.path))
+        .select(col("id"), col("v"), col("_metadata.row_index")).collect()
+        .map(r => (r.getLong(0), r.getString(1), f.path, r.getLong(2)))
+    }.toSet.filter(r => live.contains(r._1))
+
   /** (reader, check): each check runs on the post-delete snapshot. */
   private def readers(name: String, before: Long): Seq[(String, () => Unit)] = {
     val t = s"$cat.l.$name"
@@ -77,28 +87,25 @@ class LiveRowsSpec extends AnyFunSuite {
       "SELECT _file, _pos" -> { () =>
         val got = spark.sql(s"SELECT id, _file, _pos FROM $t").collect()
           .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-        // ground truth: each data file read as plain parquet
-        val raw = table(name).ops.allFiles(table(name).readSnapshot.get).flatMap { f =>
-          spark.read.parquet(RelPaths.absolutize(wh, f.path))
-            .select(col("id"), col("_metadata.row_index")).collect()
-            .map(r => (r.getLong(0), f.path, r.getLong(1)))
-        }.toSet
-        assert(got == raw.filter(r => live.contains(r._1)))
+        assert(got == rawLive(name).map(r => (r._1, r._3, r._4)))
       },
-      "scan vs liveRows" -> { () =>
-        // the merge-on-read scan against the anti-join reader it
-        // replaced for table scans, positions included
+      "liveRows vs raw parquet" -> { () =>
+        // the table scan and Mor.liveRows, positions included, against
+        // the raw parquet row index
         val gt = table(name)
         val snap = gt.readSnapshot.get
-        val q = spark.sql(s"SELECT id, v, _file, _pos FROM $t")
-        assert(q.queryExecution.sparkPlan.collect {
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-        }.exists(_.isInstanceOf[MergeOnReadScan]))
-        val got = q.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        val oracle = Mor.liveRows(spark, wh, gt.schema(), gt.ops.allFiles(snap),
-            gt.meta.nameMapping, snap.deleteFiles, positions = true).collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-        assert(got.length == oracle.length && got.toSet == oracle.toSet)
+        def planned(df: org.apache.spark.sql.DataFrame) = {
+          assert(df.queryExecution.sparkPlan.collect {
+            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+          }.exists(_.isInstanceOf[MergeOnReadScan]))
+          df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+        }
+        val scan = planned(spark.sql(s"SELECT id, v, _file, _pos FROM $t"))
+        val read = planned(Mor.liveRows(spark, gt.ops, gt.meta, gt.ops.allFiles(snap),
+          snap.deleteFiles, positions = true))
+        val raw = rawLive(name)
+        assert(scan.length == raw.size && scan.toSet == raw)
+        assert(read.length == raw.size && read.toSet == raw)
       },
       "MOR UPDATE" -> { () =>
         spark.sql(s"UPDATE $t SET v = 'x' WHERE id IN (2, 12)")
@@ -195,8 +202,8 @@ class LiveRowsSpec extends AnyFunSuite {
     val gt = spark.sessionState.catalogManager.catalog(c).asInstanceOf[RelativeCatalog]
       .loadTable(Identifier.of(Array("l"), "t")).asInstanceOf[GraftTable]
     val snap = gt.readSnapshot.get
-    val oracle = Mor.liveRows(spark, s"${wh}_nested", gt.schema(), gt.ops.allFiles(snap),
-      gt.meta.nameMapping, snap.deleteFiles).select("s.c").collect().map(_.getLong(0)).toSet
-    assert(oracle == Set(0L, 10L, 30L, 40L, 50L))
+    val read = Mor.liveRows(spark, gt.ops, gt.meta, gt.ops.allFiles(snap),
+      snap.deleteFiles).select("s.c").collect().map(_.getLong(0)).toSet
+    assert(read == Set(0L, 10L, 30L, 40L, 50L))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.catalog.{GraftTable, MergeOnReadScan, Mor, Writer}
 import graft.meta.RelPaths
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -12,9 +13,11 @@ import graft.TestSpark.TableFiles
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The merge-on-read scan ([[MergeOnReadScan]]): deletes applied inside
-  * the scan task, keyed by (`DataFile.path`, parquet row index). Checked
-  * against `Mor.liveRows` and raw parquet reads; plan shape, planning
-  * work and scan metrics are pinned on plan nodes. */
+  * the scan task, keyed by (`DataFile.path`, parquet row index) — for
+  * table scans, `Mor.liveRows`, and the copy-on-write rewrite scan.
+  * Checked against rows computed in plain Scala and raw parquet reads;
+  * plan shape, planning work and scan metrics are pinned on plan
+  * nodes. */
 class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
@@ -36,13 +39,18 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     collectWithSubqueries(plan) { case b: BatchScanExec => b }
 
   test("merge-on-read DML keys rows by DataFile.path when the warehouse path URL-encodes") {
+    // (warehouse spelling, character in the path): posix paths, and
+    // the two local URI spellings (a URI names ` ` and `%` escaped)
     val cases = for {
-      (ch, i) <- Seq(" ", "%", "+").zipWithIndex
+      ((scheme, ch), i) <- Seq(("", " "), ("", "%"), ("", "+"), ("file:", ""),
+        ("file://", "")).zipWithIndex
       jdbc <- Seq(false, true)
-    } yield (ch, i, jdbc)
-    val failures = cases.flatMap { case (ch, i, jdbc) =>
+    } yield (scheme, ch, i, jdbc)
+    val failures = cases.flatMap { case (scheme, ch, i, jdbc) =>
       val cat = s"tcEnc${if (jdbc) "J" else "H"}$i"
-      val wh = s"/tmp/graft_test_${cat}_a${ch}b"
+      val local = s"/tmp/graft_test_${cat}_a${ch}b"
+      val wh = scheme + local
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local))
       hadoopCatalog(cat, wh)
       if (jdbc) {
         val db = s"/tmp/graft_test_enc_db_$cat"
@@ -64,8 +72,9 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         spark.sql(s"MERGE INTO $t d USING (SELECT 8L AS id, 'm' AS v UNION ALL " +
           "SELECT 20L, 'n') s ON d.id = s.id " +
           "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
-        assert(ids == Set((5L, "v5"), (6L, "v6"), (7L, "u"), (8L, "m"), (9L, "v9"),
-          (20L, "n")), "rows after DELETE, UPDATE, MERGE")
+        val expected = Set((5L, "v5"), (6L, "v6"), (7L, "u"), (8L, "m"), (9L, "v9"),
+          (20L, "n"))
+        assert(ids == expected, "rows after DELETE, UPDATE, MERGE")
         val snap = gt.readSnapshot.get
         val paths = gt.ops.allFiles(snap).map(_.path).toSet
         val served = spark.sql(s"SELECT _file FROM $t").collect().map(_.getString(0)).toSet
@@ -74,12 +83,12 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           d.minBound.get("file_path").toSeq ++ d.maxBound.get("file_path"))
         assert(bounds.nonEmpty && bounds.forall(b => RelPaths.absolutize(wh, b) != b),
           s"delete file_path bounds not relative: $bounds")
-        val oracle = Mor.liveRows(spark, gt.ops.warehouse, gt.schema(), gt.ops.allFiles(snap),
-          gt.meta.nameMapping, snap.deleteFiles).collect()
+        val read = Mor.liveRows(spark, gt.ops, gt.meta, gt.ops.allFiles(snap),
+          snap.deleteFiles).collect()
           .map(r => (r.getLong(0), r.getString(1))).toSet
-        assert(oracle == ids, s"liveRows $oracle")
+        assert(read == expected, s"liveRows $read")
       }.failed.toOption.map(e =>
-        s"${if (jdbc) "jdbc" else "hadoop"} '$ch': ${e.getMessage.take(300)}")
+        s"${if (jdbc) "jdbc" else "hadoop"} '$scheme' '$ch': ${e.getMessage.take(300)}")
     }
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }
@@ -132,11 +141,11 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(got.forall { case (id, _, pos) => id == pos })
     val snap = table(cat, "r", "t").readSnapshot.get
     assert(snap.deleteFiles.nonEmpty)
-    val oracle = Mor.liveRows(spark, wh, gt.schema(), gt.currentFiles, Map.empty,
+    val read = Mor.liveRows(spark, gt.ops, gt.meta, gt.currentFiles,
         snap.deleteFiles, positions = true)
       .where(col("id") >= cut).collect()
       .map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
-    assert(got == oracle)
+    assert(read == raw.filterNot(r => dead(r._1)))
     // the pushed predicate really skipped row groups and pages below
     // the scan
     val scanned = scans(q.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum
@@ -159,9 +168,9 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     t
   }
 
-  test("a read under position and equality deletes has no join and runs no job while planning") {
-    val t = bothKinds("tcMosPlan")
-    val q = spark.sql(s"SELECT count(*), sum(id) FROM $t")
+  /** `q`'s physical plan, asserting that planning it ran no Spark job,
+    * has no join, and reads through the merge-on-read scan. */
+  private def plannedWithoutJob(q: DataFrame): SparkPlan = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -177,10 +186,54 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(jobs.get == 0, s"${jobs.get} Spark job(s) ran while planning")
     assert(collectWithSubqueries(planned) { case j: BaseJoinExec => j }.isEmpty)
     assert(scans(planned).map(_.scan).exists(_.isInstanceOf[MergeOnReadScan]))
-    val row = q.collect()(0)
-    assert(row.getLong(0) == 95L && row.getLong(1) == (0L until 100L).sum - 3 - 110)
+    planned
+  }
+
+  private def noJoinExecuted(q: DataFrame): Unit =
     assert(collectWithSubqueries(q.queryExecution.executedPlan) { case j: BaseJoinExec => j }
       .isEmpty, "anti-join in the executed plan")
+
+  test("a read under position and equality deletes has no join and runs no job while planning") {
+    val t = bothKinds("tcMosPlan")
+    val q = spark.sql(s"SELECT count(*), sum(id) FROM $t")
+    plannedWithoutJob(q)
+    val row = q.collect()(0)
+    assert(row.getLong(0) == 95L && row.getLong(1) == (0L until 100L).sum - 3 - 110)
+    noJoinExecuted(q)
+  }
+
+  test("Mor.liveRows and a MOR DELETE's read plan the merge-on-read scan: no join, no job, metrics") {
+    val t = bothKinds("tcMosLive")
+    val gt = table("tcMosLive", "b", "t")
+    val snap = gt.readSnapshot.get
+    val dead = Set(0L, 1L, 2L, 50L, 60L)
+    // ground truth: the data files read as plain parquet
+    val raw = gt.currentFiles.flatMap { f =>
+      spark.read.parquet(RelPaths.absolutize(gt.ops.warehouse, f.path))
+        .select(col("id"), col("v"), col("_metadata.row_index")).collect()
+        .map(r => (r.getLong(0), r.getString(1), f.path, r.getLong(2)))
+    }.filterNot(r => dead(r._1))
+    val live = Mor.liveRows(spark, gt.ops, gt.meta, gt.currentFiles, snap.deleteFiles,
+      positions = true)
+    plannedWithoutJob(live)
+    val rows = live.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    assert(rows.length == 95 && rows.toSet == raw.toSet)
+    noJoinExecuted(live)
+    // compaction and the change reads read through this scan, so they
+    // report its metrics too
+    val Seq(scan) = scans(live.queryExecution.executedPlan)
+    assert(scan.metrics(MergeOnReadScan.DeleteFilesApplied).value == 2)
+    assert(scan.metrics(MergeOnReadScan.PositionDeletedRows).value == 3)
+    assert(scan.metrics(MergeOnReadScan.EqualityDeletedRows).value == 2)
+    // the tombstones a MOR DELETE ... WHERE id < 10 would stage
+    val tombstones = gt.matchedPositions(gt.currentFiles, col("id") < 10)
+    plannedWithoutJob(tombstones)
+    assert(tombstones.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
+      raw.filter(_._1 < 10).map(r => (r._3, r._4)).toSet)
+    noJoinExecuted(tombstones)
+    spark.sql(s"DELETE FROM $t WHERE id < 10")
+    assert(spark.sql(s"SELECT id FROM $t").collect().map(_.getLong(0)).toSet ==
+      (10L until 100L).filterNot(dead).toSet)
   }
 
   test("scan metrics report delete files applied and rows removed by each kind") {
@@ -192,5 +245,62 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(metric(MergeOnReadScan.DeleteFilesApplied) == 2)
     assert(metric(MergeOnReadScan.PositionDeletedRows) == 3)
     assert(metric(MergeOnReadScan.EqualityDeletedRows) == 2)
+  }
+
+  test("copy-on-write UPDATE and MERGE under deletes and imports read through the merge-on-read scan") {
+    val cat = "tcMosCow"
+    val wh = s"/tmp/graft_test_$cat"
+    hadoopCatalog(cat, wh)
+    spark.sql(s"CREATE NAMESPACE $cat.c")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratchDirs = Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_mor_rewrite")).toSet
+    // an eagerly run command's plan is the command's own physical plan
+    def commandPlan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+      case c: org.apache.spark.sql.execution.CommandResultExec => c.commandPhysicalPlan
+      case p => p
+    }
+    val base = (0L until 6L).map(id => id -> s"v$id").toMap
+    val source = Map(1L -> "m", 4L -> "m", 9L -> "n")
+    val commands: Seq[(String, String => String, Map[Long, String] => Map[Long, String])] = Seq(
+      ("update", t => s"UPDATE $t SET v = 'u' WHERE id IN (1, 3)",
+        live => live.map { case (id, v) => id -> (if (id == 1 || id == 3) "u" else v) }),
+      ("merge", t => s"MERGE INTO $t d USING (SELECT 1L AS id, 'm' AS v UNION ALL " +
+        "SELECT 4L, 'm' UNION ALL SELECT 9L, 'n') s ON d.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *",
+        live => live ++ source))
+    import spark.implicits._
+    val failures = for {
+      kind <- Seq("position", "equality", "import")
+      (command, sql, expected) <- commands
+      failure <- scala.util.Try {
+        val name = s"${kind}_$command"
+        val t = s"$cat.c.$name"
+        spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING) TBLPROPERTIES (" +
+          "'write.delete.mode'='merge-on-read', 'write.delete.granularity'=" +
+          s"'${if (kind == "equality") "equality" else "position"}')")
+        val df = base.toSeq.toDF("id", "v").coalesce(1)
+        val live =
+          if (kind == "import") {
+            df.write.parquet(s"$wh/staged_$name")
+            graft.catalog.Maintenance.addFiles(spark, table(cat, "c", name), s"staged_$name")
+            base
+          } else {
+            df.writeTo(t).append()
+            spark.sql(s"DELETE FROM $t WHERE id = 1")
+            val dels = table(cat, "c", name).readSnapshot.get.deleteFiles
+            assert(dels.nonEmpty && dels.forall(Mor.isEquality(_) == (kind == "equality")),
+              s"expected a $kind delete file")
+            base - 1L
+          }
+        val before = scratchDirs
+        val plan = commandPlan(spark.sql(sql(t)))
+        assert(spark.sql(s"SELECT id, v FROM $t").collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted == expected(live).toSeq.sorted)
+        assert((scratchDirs -- before).isEmpty, s"scratch copies ${scratchDirs -- before}")
+        assert(scans(plan).exists(_.scan.isInstanceOf[MergeOnReadScan]),
+          s"row-level scan: ${scans(plan).map(_.scan.getClass.getSimpleName)}")
+      }.failed.toOption.map(e => s"$kind $command: ${e.getMessage.take(300)}")
+    } yield failure
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }
 }
