@@ -240,7 +240,7 @@ object Changes {
           s"snapshot ${endSnap.snapshotId} (seq ${endSnap.sequenceNumber}): " +
           "the history is not linear past it (rollback); restart the stream")
 
-  def between(spark: SparkSession, warehouse: String, ops: TableOps,
+  def between(spark: SparkSession, ops: TableOps,
       meta: TableMeta, fromSeq: Long, toSeq: Long,
       allowSyntheticGenesis: Boolean = true): Option[DataFrame] = {
     val dataSchema = TableMeta.schemaToSpark(meta.schema)
@@ -397,7 +397,7 @@ class ChangesRelation(ctx: SQLContext, warehouse: String, meta: TableMeta,
     val from = resolve(start)
     val to = end.map(resolve).orElse(meta.currentSnapshot).getOrElse(
       throw new IllegalArgumentException("table has no snapshots"))
-    Changes.between(spark, warehouse, ops, meta,
+    Changes.between(spark, ops, meta,
         from.sequenceNumber, to.sequenceNumber)
       .map(_.queryExecution.toRdd.asInstanceOf[RDD[Row]])
       .getOrElse(spark.sparkContext.emptyRDD[Row])

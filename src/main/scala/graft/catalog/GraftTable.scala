@@ -22,14 +22,15 @@ import scala.jdk.CollectionConverters._
 /** A table of the relative-location format, exposed through Spark's
   * DSv2 `Table` API.
   *
-  * Reads: the snapshot's (driver-pruned) file list is handed to
-  * Spark's vectorized parquet source (`ParquetTable`), so predicate
-  * pushdown, column pruning, and whole-stage codegen all apply —
-  * the engine-native analog of the reference serving Spark scans
-  * through `RelativeFileIO.newInputFile` (RelativeFileIO.java:64-66).
-  * Live merge-on-read deletes, `add_files` imports and the `_file`/
-  * `_pos` columns go through [[MergeOnReadScan]], which applies the
-  * deletes inside the scan task.
+  * Reads: the snapshot's (driver-pruned) file list is read by one
+  * batch scan, [[MergeOnReadScan]], over Spark's vectorized parquet
+  * source, so predicate pushdown, column pruning, and whole-stage
+  * codegen all apply — the engine-native analog of the reference
+  * serving Spark scans through `RelativeFileIO.newInputFile`
+  * (RelativeFileIO.java:64-66). The same scan applies live
+  * merge-on-read deletes inside the scan task, reads `add_files`
+  * imports, serves the `_file`/`_pos` columns and takes runtime
+  * filters.
   *
   * Writes: every table file goes through [[GraftDataWriter]], which
   * reports the file's own `DataFile` entry (bounds, counts, bytes) in
@@ -467,15 +468,12 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // only delete files whose path range can reference a surviving
     // data file ride along (file-pruned scans skip unrelated deletes)
     val prunedDeletes = Mor.relevantDeletes(liveDeletes, pruned)
-    // metadata columns, live deletes, and add_files imports (no parquet
-    // field ids; compaction rewrites them as native files and restores
-    // the delegate fast path) are served by the merge-on-read scan
-    if (required.fieldNames.exists(GraftTable.MetaColNames) ||
-        prunedDeletes.nonEmpty || pruned.exists(_.nameMapped.contains(true)))
-      new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes)
-    else SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark)
-      // default: vectorized delegate + dynamic file pruning + streaming
-      .getOrElse(new GraftStreamableScan(table, options, required, pushedExprs, pruned))
+    // the storage-partitioned scan serves only plain reads: no metadata
+    // column, no live delete, no add_files import
+    val plain = !required.fieldNames.exists(GraftTable.MetaColNames) &&
+      prunedDeletes.isEmpty && !pruned.exists(_.nameMapped.contains(true))
+    (if (plain) SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark) else None)
+      .getOrElse(new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes))
   }
 }
 
@@ -487,6 +485,18 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
   * to carry over files the predicate provably cannot touch).
   */
 object FilePruning {
+  /** Types whose string-encoded bounds compare exactly (numbers,
+    * strings, ISO dates and timestamps): the columns a runtime filter
+    * may prune on. */
+  def exactBoundType(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: IntegerType | _: LongType | _: ShortType | _: ByteType | _: DoubleType |
+           _: FloatType | _: StringType | _: DateType | _: TimestampType => true
+      case _ => false
+    }
+  }
+
   def keepFile(f: DataFile, filter: Filter): Boolean = {
     // one-sided bounds are allowed (over-long string upper bounds are
     // dropped at write time): each side prunes independently

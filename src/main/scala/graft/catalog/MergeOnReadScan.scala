@@ -6,24 +6,30 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.execution.datasources.{FilePartition, GraftManifestIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, GraftFilterShim, GraftManifestIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.sources.{EqualTo, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The batch scan for every read the plain parquet delegate can't
-  * serve alone: live merge-on-read deletes, `add_files` imports (no
-  * parquet field ids; they resolve through the table's name mapping),
-  * and the `_file`/`_pos` metadata columns — user queries and the
-  * DELTA row-id scan of merge-on-read UPDATE/MERGE alike.
+/** The table's batch scan: every DSv2 read of a graft table — plain
+  * reads, live merge-on-read deletes, `add_files` imports (no parquet
+  * field ids; they resolve through the table's name mapping), the
+  * `_file`/`_pos` metadata columns (user queries and the DELTA row-id
+  * scan of merge-on-read UPDATE/MERGE), [[Mor.liveRows]]' pinned reads
+  * and the copy-on-write rewrite scan — except the opt-in
+  * storage-partitioned [[SpjScan]].
   *
   * Deletes are applied INSIDE the scan task, file by file, the way the
   * Iceberg spec's readers do (https://iceberg.apache.org/spec/#scan-planning):
-  * the pruned files are planned through the parquet delegate
+  * the files are planned through the parquet delegate
   * ([[GraftManifestIndex.delegateScan]], predicates pushed into parquet
   * on the field-id side), one delegate per resolution mode; each planned
   * file carries its warehouse-relative path and the delete files that
@@ -38,31 +44,62 @@ import org.apache.spark.unsafe.types.UTF8String
   * join, and planning runs no Spark job; parsed delete files are
   * cached per JVM ([[MergeOnReadScan.parsed]]).
   *
-  * A scan with no delete and no metadata column (imports only) plans
-  * the delegates' own partitions behind [[StreamDispatchReaderFactory]]
-  * and stays columnar; otherwise every partition reads rows. Every
-  * predicate is still reported residual by the builder, so Spark
-  * re-filters above.
+  * A scan with no delete and no metadata column stays columnar: a
+  * plain read plans the parquet delegate's own partitions and reader,
+  * a read with imports routes the delegates' partitions per resolution
+  * mode ([[StreamDispatchReaderFactory]]). Otherwise every partition
+  * reads rows. Every predicate is still reported residual by the
+  * builder, so Spark re-filters above.
+  *
+  * RUNTIME FILTERS ([[SupportsRuntimeV2Filtering]]) narrow the file
+  * list before partitions are planned, in one of two modes:
+  *  - a plain read (`rewrite` empty) offers every scanned data column
+  *    whose bounds compare exactly ([[FilePruning.exactBoundType]]):
+  *    Spark's dynamic-pruning rule feeds back the join keys of a
+  *    broadcast build side, and files whose min/max bounds prove no
+  *    match are skipped. Conservative skipping is always safe here —
+  *    kept files' rows still flow through the join — so a predicate
+  *    that does not translate is ignored;
+  *  - a copy-on-write rewrite offers `_file` or its value-uniform
+  *    identity columns ([[RewriteGroups]]). The same predicate also
+  *    decides which rows the rewrite keeps, so pruning must be exact:
+  *    `_file` by path identity, identity columns by bounds that every
+  *    file proves single-valued. A predicate it cannot apply exactly
+  *    throws, and pruned files move to the operation's carryover.
+  * The delete files are re-derived for the narrowed list
+  * ([[Mor.relevantDeletes]]) and partitions are planned once per file
+  * set, so a filter that arrives between plannings is honoured. The
+  * reader factory stays the one built for the scan's own lists: Spark
+  * takes it when it plans the scan, before runtime filters arrive.
   */
 class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     required: StructType, pushedExprs: Seq[Expression],
-    files: Seq[DataFile], deletes: Seq[DataFile])
-  extends Scan with Batch with SupportsReportStatistics {
+    files: Seq[DataFile], deletes: Seq[DataFile],
+    rewrite: Option[RewriteGroups] = None)
+  extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering {
 
   import MergeOnReadScan._
+
+  // (files, the deletes relevant to them) after runtime filtering
+  @volatile private var narrowed: (Seq[DataFile], Seq[DataFile]) = (files, deletes)
+
+  // partitions and applied-delete count, keyed on the file list they
+  // were planned for: a runtime filter swaps `narrowed` and replans
+  @volatile private var planMemo: (Seq[DataFile], Array[InputPartition], Int) = null
+
+  /** Files the scan plans after runtime filtering. */
+  def plannedFileCount: Int = narrowed._1.size
 
   override def readSchema(): StructType = required
 
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"GraftMergeOnReadScan ${table.name()} [files=${files.size}, deletes=${deletes.size}]"
+    s"GraftMergeOnReadScan ${table.name()} [files=${narrowed._1.size}, deletes=${narrowed._2.size}]"
 
-  private lazy val planned: (Array[InputPartition], PartitionReaderFactory, Int) = plan()
+  override def planInputPartitions(): Array[InputPartition] = planned._2
 
-  override def planInputPartitions(): Array[InputPartition] = planned._1
-
-  override def createReaderFactory(): PartitionReaderFactory = planned._2
+  override def createReaderFactory(): PartitionReaderFactory = layout.factory
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new DeleteFilesAppliedMetric, new PositionDeletedRowsMetric,
@@ -71,18 +108,71 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
   override def reportDriverMetrics(): Array[CustomTaskMetric] =
     Array(taskMetric(DeleteFilesApplied, planned._3))
 
-  // exact committed bytes of the pruned file set: a small MOR table on
-  // the build side of a join must stay broadcastable
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(files.map(_.bytes).sum max 1L)
-    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+  override def filterAttributes(): Array[NamedReference] =
+    rewrite.map(_.columns).getOrElse(required.fields.toSeq.collect {
+      case f if FilePruning.exactBoundType(f.dataType) && !GraftTable.MetaColNames(f.name) => f.name
+    }).map(Expressions.column(_): NamedReference).toArray
+
+  override def filter(predicates: Array[Predicate]): Unit = {
+    val v1 = predicates.flatMap(GraftFilterShim.toV1)
+    def untranslatable() = throw new IllegalStateException(
+      s"untranslatable runtime group filter ${predicates.mkString(",")}; " +
+        "refusing to run a rewrite that could drop rows")
+    if (rewrite.isDefined && v1.length != predicates.length) untranslatable()
+    if (v1.isEmpty) return
+    val keeps = v1.toSeq.map[DataFile => Boolean] {
+      case In("_file", vs) => val paths = vs.map(String.valueOf).toSet; f => paths(f.path)
+      case EqualTo("_file", v) => val path = String.valueOf(v); f => f.path == path
+      case p if rewrite.isDefined && p.references.contains("_file") => untranslatable()
+      // a rewrite's columns are value-uniform in every file (see
+      // RowLevelScanBuilder.runtimeFilterCols): the bound check is exact
+      case p => f => FilePruning.keepFile(f, p)
+    }
+    val (kept, pruned) = files.partition(f => keeps.forall(_(f)))
+    narrowed = (kept, Mor.relevantDeletes(deletes, kept))
+    rewrite.foreach(g => g.op.carryover = g.untouched ++ pruned)
   }
 
-  /** `readStream` on a table whose current snapshot routes the batch
-    * scan here (live MOR deletes or name-mapped imports) still gets the
-    * snapshot-chain tail — the stream enforces its own append-only rules
-    * per micro-batch window (genesis MOR deletes refuse loudly; imported
+  /** Size is the narrowed files' committed bytes. With no delete left
+    * to apply, the row count is EXACT from committed per-file stats,
+    * and when a `compute_stats` pass has stamped TableStats for the
+    * snapshot being scanned, per-column NDV/null counts ride along —
+    * the inputs Spark's CBO needs for join-order and build-side
+    * decisions. Stale stats (stamped for a different snapshot) are
+    * withheld: a wrong NDV misleads the optimizer worse than no NDV.
+    * So are stats for a scan pruned below the snapshot's full file
+    * set: snapshot-wide NDV/null counts beside a smaller numRows make
+    * an inconsistent row (nullCount > numRows). Under deletes the live
+    * row count is unknown until the scan runs. */
+  override def estimateStatistics(): Statistics = {
+    val (fs, ds) = narrowed
+    val cols = new java.util.HashMap[NamedReference, ColumnStatistics]()
+    if (ds.isEmpty) for {
+      ts <- table.meta.statistics
+      snap <- table.readSnapshot
+      // dataFileCount is the SNAPSHOT's full set (chunk keys, no chunk
+      // load): planning-time pushdown can already have shrunk `files`
+      if ts.snapshotId == snap.snapshotId && fs.length == snap.dataFileCount
+      f <- required.fields
+      cs <- ts.columns.get(f.name)
+    } cols.put(Expressions.column(f.name), new ColumnStatistics {
+      override def distinctCount(): java.util.OptionalLong = java.util.OptionalLong.of(cs.ndv)
+      override def nullCount(): java.util.OptionalLong = java.util.OptionalLong.of(cs.nullCount)
+    })
+    new Statistics {
+      override def sizeInBytes(): java.util.OptionalLong =
+        java.util.OptionalLong.of(fs.map(_.bytes).sum max 1L)
+      override def numRows(): java.util.OptionalLong =
+        if (ds.isEmpty) java.util.OptionalLong.of(fs.map(_.records).sum)
+        else java.util.OptionalLong.empty()
+      override def columnStats(): java.util.Map[NamedReference, ColumnStatistics] = cols
+    }
+  }
+
+  /** `readStream` on a table still gets the snapshot-chain tail when
+    * its current snapshot routes the batch read through deletes or
+    * imports — the stream enforces its own append-only rules per
+    * micro-batch window (genesis MOR deletes refuse loudly; imported
     * files resolve through the name mapping). The metadata columns are
     * the exception: the parquet micro-batch reader has no
     * metadata-column surface, so that projection refuses with an
@@ -99,32 +189,51 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     new GraftMicroBatchStream(table, options, required, pushedExprs)
   }
 
-  private def plan(): (Array[InputPartition], PartitionReaderFactory, Int) = {
-    val spark = SparkSession.active
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tableSchema = table.schema()
-    val mapping = table.meta.nameMapping
-    def abs(f: DataFile) = RelPaths.absolutize(table.ops.warehouse, f.path)
-    def keyOf(f: DataFile) = SparkPath.fromPath(GraftManifestIndex.qualify(hconf, abs(f)))
+  private def planned: (Seq[DataFile], Array[InputPartition], Int) = {
+    val fs = narrowed._1
+    val memo = planMemo
+    if (memo != null && (memo._1 eq fs)) memo
+    else {
+      val built = layout.plan(fs)
+      planMemo = built
+      built
+    }
+  }
 
-    val (eqDeletes, posDeletes) = deletes.partition(Mor.isEquality)
-    val eqGroups = Mor.equalityGroups(tableSchema, eqDeletes)
+  private lazy val layout = new Layout
+
+  /** What every planning of this scan shares, fixed by the scan's own
+    * file and delete lists: the read schema, the delete files' splits
+    * and ordinals, the row/columnar choice and the reader factory. A
+    * narrowed file list plans through the same delete ordinals. */
+  private class Layout {
+    private val spark = SparkSession.active
+    private val hconf = spark.sparkContext.hadoopConfiguration
+    private val tableSchema = table.schema()
+    private val mapping = table.meta.nameMapping
+    private def abs(f: DataFile) = RelPaths.absolutize(table.ops.warehouse, f.path)
+    private def keyOf(f: DataFile) = SparkPath.fromPath(GraftManifestIndex.qualify(hconf, abs(f)))
+    private def isMapped(f: DataFile) = f.nameMapped.contains(true)
+
+    private val (eqDeletes, posDeletes) = deletes.partition(Mor.isEquality)
+    private val eqGroups = Mor.equalityGroups(tableSchema, eqDeletes)
+    private val eqFiles = eqGroups.flatMap(_._2)
 
     // the delegate reads the required data columns, the equality key
     // columns, and the row index when a position is needed. A data
     // column keeps `required`'s type (Spark may have pruned a struct
     // and reads its fields by ordinal there) and takes the table
     // field's metadata (its field id)
-    val rowIndex = posDeletes.nonEmpty || required.fieldNames.contains("_pos")
-    val dataFields = required.fields.filterNot(f => GraftTable.MetaColNames(f.name))
+    private val rowIndex = posDeletes.nonEmpty || required.fieldNames.contains("_pos")
+    private val dataFields = required.fields.filterNot(f => GraftTable.MetaColNames(f.name))
       .map(f => tableSchema.fields.find(_.name == f.name).fold(f)(t => f.copy(metadata = t.metadata)))
-    val readSchema = StructType(
+    private val readSchema = StructType(
       (dataFields ++ eqGroups.flatMap(_._1)).distinctBy(_.name) ++
         (if (rowIndex) Seq(RowIndexField) else Nil))
-    val ordinal = readSchema.fieldNames.zipWithIndex.toMap
-    val dataSchema = if (rowIndex) tableSchema.add(RowIndexField) else tableSchema
+    private val ordinal = readSchema.fieldNames.zipWithIndex.toMap
+    private val dataSchema = if (rowIndex) tableSchema.add(RowIndexField) else tableSchema
 
-    def delegate(fs: Seq[DataFile], schema: StructType, read: StructType,
+    private def delegate(fs: Seq[DataFile], schema: StructType, read: StructType,
         filters: Seq[Expression]): Scan = {
       val scan = GraftManifestIndex.delegateScan(spark, options, schema,
         fs.map(f => (abs(f), f.bytes)), filters, read)
@@ -133,20 +242,26 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
         s"parquet delegate read ${scan.readSchema().simpleString}, expected ${read.simpleString}")
       scan
     }
-    // native files resolve by field id with predicates pushed; imports
-    // resolve by their import names (positionally identical schema)
-    def dataDelegate(fs: Seq[DataFile], mapped: Boolean): Option[Scan] =
-      if (fs.isEmpty) None
-      else if (!mapped) Some(delegate(fs, dataSchema, readSchema, pushedExprs))
-      else Some(delegate(fs, Mor.importSchema(dataSchema, tableSchema, mapping),
-        Mor.importSchema(readSchema, tableSchema, mapping), Nil))
-    val (mappedFiles, idFiles) = files.partition(_.nameMapped.contains(true))
-    val idScan = dataDelegate(idFiles, mapped = false)
-    val mappedScan = dataDelegate(mappedFiles, mapped = true)
+
+    /** The (field-id, name-mapped) data delegates over `fs`: native
+      * files resolve by field id with predicates pushed, imports by
+      * their import names (positionally identical schema). The id
+      * side is built over no files too, when there is no other. */
+    private def dataScans(fs: Seq[DataFile]): (Option[Scan], Option[Scan]) = {
+      val (mappedFiles, idFiles) = fs.partition(isMapped)
+      (Option.when(idFiles.nonEmpty || mappedFiles.isEmpty)(
+          delegate(idFiles, dataSchema, readSchema, pushedExprs)),
+        Option.when(mappedFiles.nonEmpty)(
+          delegate(mappedFiles, Mor.importSchema(dataSchema, tableSchema, mapping),
+            Mor.importSchema(readSchema, tableSchema, mapping), Nil)))
+    }
+    private val scans = dataScans(files)
+    private val (idFactory, mappedFactory) =
+      (scans._1.map(_.toBatch.createReaderFactory()), scans._2.map(_.toBatch.createReaderFactory()))
 
     // delete files: one delegate per schema plans their splits, and its
     // reader factory parses them inside the task
-    def sources(ds: Seq[DataFile], schema: StructType): (Option[PartitionReaderFactory], Array[DeleteSource]) =
+    private def sources(ds: Seq[DataFile], schema: StructType): (Option[PartitionReaderFactory], Array[DeleteSource]) =
       if (ds.isEmpty) (None, Array.empty)
       else {
         val scan = delegate(ds, schema, schema, Nil).toBatch
@@ -158,60 +273,78 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
             s"delete file ${d.path} is missing from the splits planned for it")))
         }.toArray)
       }
-    val (posFactory, posSources) = sources(posDeletes, Mor.deleteSchema)
-    val eqParsed = eqGroups.map { case (keys, group) =>
-      val (factory, srcs) = sources(group, StructType(keys))
-      EqualityGroup(factory.get, keys.map(_.dataType).toArray,
-        keys.map(k => ordinal(k.name)).toArray) -> srcs
-    }
-    val eqSources = eqParsed.zipWithIndex.flatMap { case ((_, srcs), g) => srcs.map(g -> _) }
-    val eqFiles = eqGroups.flatMap(_._2)
 
-    val idFactory = idScan.map(_.toBatch.createReaderFactory())
-    val mappedFactory = mappedScan.map(_.toBatch.createReaderFactory())
-    def filePartitions(scan: Option[Scan]) =
-      scan.toArray.flatMap(_.toBatch.planInputPartitions()).map(_.asInstanceOf[FilePartition])
+    // no delete and no metadata column: columnar, through the
+    // delegate's own factory when every file resolves by field id
+    private val columnar = deletes.isEmpty && !required.fieldNames.exists(GraftTable.MetaColNames)
+    private val routed = files.exists(isMapped)
 
-    // no delete and no metadata column (imports only): the delegates'
-    // own partitions, routed per resolution mode, columnar where parquet is
-    if (deletes.isEmpty && !required.fieldNames.exists(GraftTable.MetaColNames)) {
-      val parts = filePartitions(idScan).map(StreamTaggedPartition(_, mapped = false): InputPartition) ++
-        filePartitions(mappedScan).map(StreamTaggedPartition(_, mapped = true))
-      val (id, nm) = (idFactory.orElse(mappedFactory).get, mappedFactory.orElse(idFactory).get)
-      return (parts, new StreamDispatchReaderFactory(id, nm), 0)
-    }
-
-    val byPath = files.map(f => keyOf(f) -> f).toMap
-    val applied = new java.util.BitSet()
-    def partitions(scan: Option[Scan], mapped: Boolean): Array[InputPartition] =
-      filePartitions(scan).map { fp =>
-        MergeOnReadPartition(fp, mapped, fp.files.map { pf =>
-          val f = byPath(pf.filePath)
-          val pos = posDeletes.indices.filter(i =>
-            Mor.positionDeleteMayApply(posDeletes(i), f.path)).toArray
-          val eq = eqFiles.indices.filter(i =>
-            Mor.equalityDeleteMayApply(eqFiles(i), f)).toArray
-          pos.foreach(applied.set)
-          eq.foreach(i => applied.set(posDeletes.size + i))
-          FileTask(f.path, pos, eq)
-        })
+    val factory: PartitionReaderFactory =
+      if (columnar && !routed) idFactory.get
+      else if (columnar)
+        new StreamDispatchReaderFactory(idFactory.orElse(mappedFactory).get,
+          mappedFactory.orElse(idFactory).get)
+      else {
+        val (posFactory, posSources) = sources(posDeletes, Mor.deleteSchema)
+        val eqParsed = eqGroups.map { case (keys, group) =>
+          val (groupFactory, srcs) = sources(group, StructType(keys))
+          EqualityGroup(groupFactory.get, keys.map(_.dataType).toArray,
+            keys.map(k => ordinal(k.name)).toArray) -> srcs
+        }
+        val eqSources = eqParsed.zipWithIndex.flatMap { case ((_, srcs), g) => srcs.map(g -> _) }
+        val fileOrdinal = readSchema.length
+        val output = required.fields.toSeq.map { f =>
+          f.name match {
+            case "_file" => BoundReference(fileOrdinal, StringType, nullable = false)
+            case "_pos" => BoundReference(ordinal(RowIndexField.name), LongType, nullable = false)
+            case n => BoundReference(ordinal(n), readSchema(n).dataType, nullable = true)
+          }
+        }
+        MergeOnReadReaderFactory(idFactory, mappedFactory,
+          output, if (rowIndex) ordinal(RowIndexField.name) else -1,
+          posFactory, posSources, eqParsed.map(_._1).toArray, eqSources.toArray)
       }
-    val parts = partitions(idScan, mapped = false) ++ partitions(mappedScan, mapped = true)
 
-    val fileOrdinal = readSchema.length
-    val output = required.fields.toSeq.map { f =>
-      f.name match {
-        case "_file" => BoundReference(fileOrdinal, StringType, nullable = false)
-        case "_pos" => BoundReference(ordinal(RowIndexField.name), LongType, nullable = false)
-        case n => BoundReference(ordinal(n), readSchema(n).dataType, nullable = true)
-      }
+    /** Partitions over `fs` (the scan's files or a runtime-narrowed
+      * subset) and the number of delete files they apply. */
+    def plan(fs: Seq[DataFile]): (Seq[DataFile], Array[InputPartition], Int) = {
+      if (fs.isEmpty) return (fs, Array.empty, 0)
+      val (idScan, mappedScan) = if (fs eq files) scans else dataScans(fs)
+      def filePartitions(scan: Option[Scan]) =
+        scan.toArray.flatMap(_.toBatch.planInputPartitions()).map(_.asInstanceOf[FilePartition])
+      if (columnar && !routed)
+        return (fs, filePartitions(idScan).map(p => p: InputPartition), 0)
+      if (columnar)
+        return (fs, filePartitions(idScan).map(StreamTaggedPartition(_, mapped = false): InputPartition) ++
+          filePartitions(mappedScan).map(StreamTaggedPartition(_, mapped = true)), 0)
+
+      val byPath = fs.map(f => keyOf(f) -> f).toMap
+      val applied = new java.util.BitSet()
+      def partitions(scan: Option[Scan], mapped: Boolean): Array[InputPartition] =
+        filePartitions(scan).map { fp =>
+          MergeOnReadPartition(fp, mapped, fp.files.map { pf =>
+            val f = byPath(pf.filePath)
+            val pos = posDeletes.indices.filter(i =>
+              Mor.positionDeleteMayApply(posDeletes(i), f.path)).toArray
+            val eq = eqFiles.indices.filter(i =>
+              Mor.equalityDeleteMayApply(eqFiles(i), f)).toArray
+            pos.foreach(applied.set)
+            eq.foreach(i => applied.set(posDeletes.size + i))
+            FileTask(f.path, pos, eq)
+          })
+        }
+      (fs, partitions(idScan, mapped = false) ++ partitions(mappedScan, mapped = true),
+        applied.cardinality())
     }
-    val factory = MergeOnReadReaderFactory(idFactory, mappedFactory,
-      output, if (rowIndex) ordinal(RowIndexField.name) else -1,
-      posFactory, posSources, eqParsed.map(_._1).toArray, eqSources.toArray)
-    (parts, factory, applied.cardinality())
   }
 }
+
+/** A copy-on-write rewrite's runtime group filtering: the operation
+  * whose carryover receives the files a runtime filter prunes, the
+  * files already carried over at planning, and the filter columns
+  * (`_file`, or identity columns every affected file holds one value
+  * of). */
+case class RewriteGroups(op: GraftRowLevelOperation, untouched: Seq[DataFile], columns: Seq[String])
 
 object MergeOnReadScan {
   /** Spark's parquet reader fills a column of this name with each

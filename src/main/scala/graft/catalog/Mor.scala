@@ -75,8 +75,8 @@ object Mor {
 
   /** The live rows of `files` under `deletes`: a DataFrame over the
     * table's own DSv2 relation with both lists pinned, so the read
-    * plans [[MergeOnReadScan]] when a delete or import applies and the
-    * plain vectorized delegate otherwise. Returns the current schema's
+    * plans [[MergeOnReadScan]], columnar when no delete applies.
+    * Returns the current schema's
     * columns, plus the row identity (`_file`, `_pos`) as `__gf`/`__gp`
     * when `positions` is set — for callers that key on row identity
     * (the MOR DELETE's tombstones, partition stats, the change reads).

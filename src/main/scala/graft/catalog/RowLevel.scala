@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.execution.datasources.{GraftFilterShim, GraftManifestIndex}
+import org.apache.spark.sql.execution.datasources.GraftFilterShim
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
@@ -37,23 +37,21 @@ class GraftRowLevelOperation(table: GraftTable, info: RowLevelOperationInfo)
 
   /** `_file`-keyed runtime group filtering applies when the partition-
     * column variant cannot (no identity partition columns to filter
-    * on) and the table has no live delete (a rewrite under deletes
-    * takes the merge-on-read scan, which runtime filters do not
-    * prune). The scan then emits `_file` per row and the dynamic
+    * on). The rewrite scan then emits `_file` per row and the dynamic
     * filter prunes by exact file identity — which gives a MERGE on an
     * UNPARTITIONED (or days/bucket) table the same
-    * only-rewrite-matched-files economics the partitioned case gets.
+    * only-rewrite-matched-files economics the partitioned case gets,
+    * with or without live deletes and imports.
     */
   private[catalog] val useFileGroups: Boolean = {
     val spec = table.meta.spec.fields
     val hasIdentity = spec.exists(_.transform == "identity")
     val snap = table.readSnapshot
-    val deletes = snap.map(_.deleteFiles).getOrElse(Nil)
-    // worth paying the per-file planning + row-based readers only when
-    // there are enough files for runtime pruning to skip some — a 1-3
-    // file table rewrites cheaper through the vectorized path
+    // worth paying the row-based readers `_file` needs only when there
+    // are enough files for runtime pruning to skip some — a 1-3 file
+    // table rewrites cheaper through the vectorized path
     val enoughFiles = snap.map(_.dataFileCount).getOrElse(0) >= 4
-    !hasIdentity && deletes.isEmpty && enoughFiles
+    !hasIdentity && enoughFiles
   }
 
   override def command(): RowLevelOperation.Command = info.command()
@@ -79,7 +77,6 @@ class RowLevelScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
   extends ScanBuilder with SupportsPushDownCatalystFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
-  private val spark = org.apache.spark.sql.SparkSession.active
   private var exprs: Seq[Expression] = Nil
   private var required: StructType = table.schema()
 
@@ -103,23 +100,13 @@ class RowLevelScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     val (affected, untouched) = files.partition(f =>
       v1.forall(FilePruning.keepFile(f, _)))
     op.carryover = untouched
-    val deletes = snap.map(_.deleteFiles).getOrElse(Nil)
-    if (deletes.isEmpty && !affected.exists(_.nameMapped.contains(true))) {
-      if (op.useFileGroups)
-        return new FileGroupScan(table, options, required, affected, untouched, op)
-      val rtCols = RowLevelScanBuilder.runtimeFilterCols(table, affected)
-      if (rtCols.nonEmpty)
-        return new GroupFilterScan(table, options, required, affected, untouched, rtCols, op)
-    } else if (affected.nonEmpty)
-      // live deletes or add_files imports (no parquet field ids): the
-      // merge-on-read scan, with nothing pushed — every row of an
-      // affected file must reach the write-back
-      return new MergeOnReadScan(table, options, required, Nil, affected,
-        Mor.relevantDeletes(deletes, affected))
-    // sized from the manifest: native files carry exact committed lengths
-    GraftManifestIndex.delegateScan(spark, options, table.schema(),
-      affected.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
-      Nil, required)
+    // nothing pushed: every row of an affected file must reach the
+    // write-back, live deletes applied
+    new MergeOnReadScan(table, options, required, Nil, affected,
+      Mor.relevantDeletes(snap.map(_.deleteFiles).getOrElse(Nil), affected),
+      Some(RewriteGroups(op, untouched,
+        if (op.useFileGroups) Seq("_file")
+        else RowLevelScanBuilder.runtimeFilterCols(table, affected))))
   }
 }
 
@@ -153,16 +140,7 @@ object RowLevelScanBuilder {
     val spark = TableMeta.schemaToSpark(meta.schema)
     val safe = meta.spec.fields.filter(_.transform == "identity").flatMap { pf =>
       meta.schema.fields.find(_.id == pf.sourceId).map(_.name)
-    }.filter { name =>
-      spark.fields.find(_.name == name).exists(_.dataType match {
-        case _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType |
-             _: org.apache.spark.sql.types.ShortType | _: org.apache.spark.sql.types.ByteType |
-             _: org.apache.spark.sql.types.DoubleType | _: org.apache.spark.sql.types.FloatType |
-             _: org.apache.spark.sql.types.StringType | _: org.apache.spark.sql.types.DateType |
-             _: org.apache.spark.sql.types.TimestampType => true
-        case _ => false
-      })
-    }
+    }.filter(name => spark.fields.find(_.name == name).exists(f => FilePruning.exactBoundType(f.dataType)))
     val uniform = safe.filter { c =>
       affected.forall { f =>
         f.nullCount.get(c).contains(0L) &&
@@ -171,62 +149,6 @@ object RowLevelScanBuilder {
     }
     if (uniform.isEmpty || affected.isEmpty) Nil else uniform
   }
-}
-
-/** The COW rewrite scan with runtime group filtering: a V2 batch scan
-  * over the affected files that accepts the optimizer's dynamic
-  * `In(partition_col, matched values)` predicate and converts it into
-  * file-level carryover before planning input partitions (see
-  * [[RowLevelScanBuilder.runtimeFilterCols]] for the exactness
-  * argument). Partition planning rebuilds the parquet delegate on each
-  * call so a `filter()` arriving between plannings is always honored.
-  */
-class GroupFilterScan(table: GraftTable, options: CaseInsensitiveStringMap,
-    required: StructType, initialAffected: Seq[DataFile], untouched: Seq[DataFile],
-    filterCols: Seq[String], op: GraftRowLevelOperation)
-  extends Scan with org.apache.spark.sql.connector.read.Batch
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  @volatile private var files: Seq[DataFile] = initialAffected
-
-  override def readSchema(): StructType = required
-
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    filterCols.map(org.apache.spark.sql.connector.expressions.Expressions.column(_)).toArray
-
-  override def filter(predicates: Array[Predicate]): Unit = {
-    val v1 = predicates.flatMap(p => GraftFilterShim.toV1(p))
-    // the optimizer applies the SAME predicate as a row filter in the
-    // rewrite query regardless of what we prune — a predicate we can't
-    // interpret would silently drop its rows from the write-back, so
-    // fail loudly instead
-    if (v1.length != predicates.length)
-      throw new IllegalStateException(
-        s"untranslatable runtime group filter ${predicates.mkString(",")}; " +
-          "refusing to run a rewrite that could drop rows")
-    if (v1.nonEmpty) {
-      // files are value-uniform on every filter column (build-time
-      // guard), so keepFile's bound check IS exact set membership here
-      val kept = initialAffected.filter(f => v1.forall(FilePruning.keepFile(f, _)))
-      files = kept
-      val keptPaths = kept.map(_.path).toSet
-      op.carryover = untouched ++ initialAffected.filterNot(f => keptPaths(f.path))
-    }
-  }
-
-  private def delegate: Scan =
-    GraftManifestIndex.delegateScan(org.apache.spark.sql.SparkSession.active,
-      options, table.schema(),
-      files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
-      Nil, required)
-
-  override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
-    if (files.isEmpty) Array.empty else delegate.toBatch.planInputPartitions()
-
-  override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    delegate.toBatch.createReaderFactory()
 }
 
 /** V2 BatchWrite: executors stream InternalRows straight into parquet
@@ -676,107 +598,4 @@ class GraftDeltaWriter(dataW: GraftDataWriter, delW: GraftDataWriter)
   override def abort(): Unit = { dataW.abort(); delW.abort() }
 
   override def close(): Unit = { dataW.close(); delW.close() }
-}
-
-/** The `_file`-keyed COW rewrite scan: a V2 batch scan that reads each
-  * affected file through its own parquet delegate and APPENDS the
-  * file's warehouse-relative path to every row (readSchema puts
-  * `_file` LAST, so the append is a cheap JoinedRow — the relation's
-  * output order follows readSchema). Runtime group filtering is then
-  * EXACT by construction: the dynamic `In(_file, matched)` row filter
-  * and the scan's file-level pruning key on the same identity, for any
-  * partition layout — the generalization of [[GroupFilterScan]]'s
-  * partition-column variant to unpartitioned/days/bucket tables.
-  * Trade: per-file planning and row-based readers (no vectorization)
-  * on the rewrite scan — paid only on the files that survive runtime
-  * pruning, which is the point.
-  */
-class FileGroupScan(table: GraftTable, options: CaseInsensitiveStringMap,
-    required: StructType, initialAffected: Seq[DataFile], untouched: Seq[DataFile],
-    op: GraftRowLevelOperation)
-  extends Scan with org.apache.spark.sql.connector.read.Batch
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  @volatile private var files: Seq[DataFile] = initialAffected
-
-  // data columns only, `_file` re-appended LAST in the declared schema
-  private val dataSchema = StructType(required.fields.filterNot(_.name == "_file"))
-
-  override def readSchema(): StructType =
-    StructType(dataSchema.fields :+
-      org.apache.spark.sql.types.StructField("_file",
-        org.apache.spark.sql.types.StringType, nullable = false))
-
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"))
-
-  override def filter(predicates: Array[Predicate]): Unit = {
-    if (predicates.isEmpty) return
-    val v1 = predicates.flatMap(p => GraftFilterShim.toV1(p))
-    val wanted: Option[Set[String]] = v1.collectFirst {
-      case org.apache.spark.sql.sources.In("_file", vs) =>
-        vs.map(String.valueOf).toSet
-      case org.apache.spark.sql.sources.EqualTo("_file", v) => Set(String.valueOf(v))
-    }
-    // see GroupFilterScan.filter: the same predicate filters ROWS in
-    // the rewrite query, so an uninterpreted one must fail, not no-op
-    val set = wanted.getOrElse(throw new IllegalStateException(
-      s"untranslatable _file runtime filter ${predicates.mkString(",")}; " +
-        "refusing to run a rewrite that could drop rows"))
-    val kept = initialAffected.filter(f => set(f.path))
-    files = kept
-    val keptPaths = kept.map(_.path).toSet
-    op.carryover = untouched ++ initialAffected.filterNot(f => keptPaths(f.path))
-  }
-
-  private def delegate(f: DataFile): Scan =
-    GraftManifestIndex.delegateScan(org.apache.spark.sql.SparkSession.active,
-      options, table.schema(),
-      Seq((RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
-      Nil, dataSchema)
-
-  override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
-    files.flatMap { f =>
-      delegate(f).toBatch.planInputPartitions()
-        .map(p => FileTaggedPartition(f.path, p))
-    }.toArray
-
-  override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
-    val inner =
-      if (files.isEmpty) null
-      else delegate(files.head).toBatch.createReaderFactory()
-    new AppendFileFactory(inner)
-  }
-}
-
-case class FileTaggedPartition(relPath: String,
-    inner: org.apache.spark.sql.connector.read.InputPartition)
-  extends org.apache.spark.sql.connector.read.InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-/** Row-based reader wrapper appending the partition's constant `_file`
-  * value as the LAST column of every row. */
-class AppendFileFactory(
-    inner: org.apache.spark.sql.connector.read.PartitionReaderFactory)
-  extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-
-  override def supportColumnarReads(
-      p: org.apache.spark.sql.connector.read.InputPartition): Boolean = false
-
-  override def createReader(p: org.apache.spark.sql.connector.read.InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = {
-    val tagged = p.asInstanceOf[FileTaggedPartition]
-    val delegate = inner.createReader(tagged.inner)
-    val fileRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(tagged.relPath)))
-    val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-    new org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
-      override def next(): Boolean = delegate.next()
-      override def get(): InternalRow = joined(delegate.get(), fileRow)
-      override def close(): Unit = delegate.close()
-    }
-  }
 }

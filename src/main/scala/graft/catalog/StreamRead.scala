@@ -433,7 +433,7 @@ case class SeqOffset(seq: Long, fileIdx: Int = -1, added: Boolean = false) exten
   * (field-id native vs name-mapped import) — the two parquet delegates
   * differ only in how column names bind, so their partitions coexist in
   * one scan. Serves micro-batches and the delete-free batch reads of
-  * [[MergeOnReadScan]]. */
+  * imports in [[MergeOnReadScan]]. */
 case class StreamTaggedPartition(inner: InputPartition, mapped: Boolean)
   extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()
@@ -455,154 +455,6 @@ class StreamDispatchReaderFactory(idful: PartitionReaderFactory,
   }
   override def supportColumnarReads(p: InputPartition): Boolean = {
     val (f, ip) = pick(p); f.supportColumnarReads(ip)
-  }
-}
-
-/** The default batch scan: a thin harness over the vectorized parquet
-  * delegate that adds
-  *  - DYNAMIC FILE PRUNING ([[SupportsRuntimeV2Filtering]]): Spark's
-  *    dynamic-pruning rule feeds the distinct join-key values of a
-  *    broadcast build side back as an `In` predicate at RUNTIME, and
-  *    every file whose min/max bounds prove it can't match is dropped
-  *    before partitions are planned. Unlike the row-level variant this
-  *    needs NO uniformity guard: pruning here only SKIPS reads — kept
-  *    files' rows still flow through the actual join, which filters
-  *    them — so conservative bound checks are always safe. A star join
-  *    against a filtered dimension reads only the matching slice of a
-  *    100 TB fact table;
-  *  - the streaming surface (`toMicroBatchStream` tails the snapshot
-  *    chain, [[GraftMicroBatchStream]]);
-  *  - statistics forwarding (broadcast decisions see the pruned size).
-  * The delegate is rebuilt per partition-planning call so a runtime
-  * filter arriving between plannings is always honored.
-  */
-class GraftStreamableScan(table: GraftTable, options: CaseInsensitiveStringMap,
-    required: StructType, pushedExprs: Seq[Expression], initialFiles: Seq[DataFile])
-  extends Scan with Batch with SupportsReportStatistics
-  with SupportsRuntimeV2Filtering {
-
-  @volatile private var files: Seq[DataFile] = initialFiles
-
-  // memo keyed on the exact `files` value the delegate was built for:
-  // a runtime filter swaps `files` and invalidates it, so "rebuilt per
-  // partition-planning call" (the runtime-filter contract) still holds,
-  // while the common plan→execute sequence builds the delegate ONCE
-  // instead of once per planInputPartitions / createReaderFactory /
-  // estimateStatistics call (opt round 21 — each rebuild re-listed the
-  // file set through ParquetTable's InMemoryFileIndex)
-  @volatile private var delegateMemo: (Seq[DataFile], Scan) = null
-
-  /** Post-runtime-filter view of the delegate (tests inspect it). */
-  def batchDelegate: Scan = {
-    val fs = files
-    val memo = delegateMemo
-    if (memo != null && (memo._1 eq fs)) memo._2
-    else {
-      val built = GraftManifestIndex.delegateScan(
-        org.apache.spark.sql.SparkSession.active, options, table.schema(),
-        fs.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
-        pushedExprs, required)
-      delegateMemo = (fs, built)
-      built
-    }
-  }
-
-  def scannedFileCount: Int = files.size
-
-  override def readSchema(): StructType = required
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] =
-    if (files.isEmpty) Array.empty else batchDelegate.toBatch.planInputPartitions()
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    batchDelegate.toBatch.createReaderFactory()
-
-  /** Any SCANNED top-level column whose string-encoded bounds compare
-    * exactly is a valid runtime-filter target (conservative skipping
-    * is safe for plain scans — see class doc). Restricted to the
-    * pruned output because Spark resolves these against the relation's
-    * (column-pruned) attributes and errors on absentees. */
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    required.fields.collect {
-      case f if GraftStreamableScan.filterableType(f.dataType) &&
-        !GraftTable.MetaColNames(f.name) =>
-        org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
-    }
-
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val v1 = predicates.flatMap(p =>
-      org.apache.spark.sql.execution.datasources.GraftFilterShim.toV1(p))
-    if (v1.nonEmpty)
-      files = initialFiles.filter(f => v1.forall(FilePruning.keepFile(f, _)))
-  }
-
-  /** Size flows from the (pruned) parquet delegate; the row count is
-    * EXACT from committed per-file stats — the delegate can't know it
-    * (parquet stats aren't loaded at planning), but the manifest does,
-    * and a real numRows materially improves CBO's join-side estimates
-    * at scale. Both reflect runtime file pruning (`files` shrinks).
-    * When a `compute_stats` pass has stamped TableStats for the
-    * snapshot being scanned, per-column NDV/null counts ride along
-    * (`columnStats`) — the inputs Spark's CBO needs for join-order
-    * and build-side decisions at 100 TB. Stale stats (stamped for a
-    * different snapshot) are withheld: a wrong NDV misleads the
-    * optimizer worse than no NDV. Same stance once runtime file
-    * pruning has shrunk `files` below the snapshot's full set: the
-    * snapshot-wide NDV/null counts would then sit beside a smaller
-    * numRows — an internally inconsistent row (nullCount > numRows)
-    * that skews join estimates — so columnStats are withheld too. */
-  override def estimateStatistics(): Statistics = {
-    val committedRows = files.map(_.records).sum
-    val delegated = batchDelegate match {
-      case s: SupportsReportStatistics => Some(s.estimateStatistics())
-      case _ => None
-    }
-    val cols = new java.util.HashMap[
-      org.apache.spark.sql.connector.expressions.NamedReference,
-      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    for {
-      ts <- table.meta.statistics
-      snap <- table.readSnapshot
-      // dataFileCount is the SNAPSHOT's full set (chunk keys, no chunk
-      // load): planning-time pushdown can already have shrunk
-      // initialFiles, so comparing against it would miss that pruning
-      if ts.snapshotId == snap.snapshotId && files.length == snap.dataFileCount
-      f <- required.fields
-      cs <- ts.columns.get(f.name)
-    } cols.put(
-      org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
-      new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-        override def distinctCount(): java.util.OptionalLong =
-          java.util.OptionalLong.of(cs.ndv)
-        override def nullCount(): java.util.OptionalLong =
-          java.util.OptionalLong.of(cs.nullCount)
-      })
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        delegated.map(_.sizeInBytes).getOrElse(java.util.OptionalLong.empty())
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(committedRows)
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = cols
-    }
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftMicroBatchStream(table, options, required, pushedExprs)
-}
-
-object GraftStreamableScan {
-  def filterableType(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: IntegerType | _: LongType | _: ShortType | _: ByteType |
-           _: DoubleType | _: FloatType | _: StringType | _: DateType |
-           _: TimestampType => true
-      case _ => false
-    }
   }
 }
 

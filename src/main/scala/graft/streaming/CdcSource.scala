@@ -795,7 +795,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
       val dir = rowUnitDir(s.sequenceNumber)
       val fs = hadoopFs(dir)
       if (!fs.exists(dir)) {
-        Changes.between(spark, ops.warehouse, ops, meta, base, s.sequenceNumber,
+        Changes.between(spark, ops, meta, base, s.sequenceNumber,
             allowSyntheticGenesis = allowSyntheticGenesis) match {
           case None => () // empty diff: no dir, empty list below
           case Some(df) =>
@@ -1005,7 +1005,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
           // remaining budget admitted (their ordinals shift past the
           // slice's ordinal 1); only the tail refines
           val lastSlice = unitSlice(p.seq, p.unit, p.fileIdx, Int.MaxValue)
-          Changes.between(spark, ops.warehouse, ops, meta, p.seq, en.seq,
+          Changes.between(spark, ops, meta, p.seq, en.seq,
               allowSyntheticGenesis = allowSyntheticGenesis)
             // shift BEFORE refining so an identifier-violation message
             // names the ordinal the batch actually delivers
@@ -1022,7 +1022,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
           // the option is where a stream WITHOUT state begins)
           val lower = st.map(_.seq).getOrElse(startSeq)
           Changes
-            .between(spark, ops.warehouse, ops, meta, lower, en.seq,
+            .between(spark, ops, meta, lower, en.seq,
               allowSyntheticGenesis = allowSyntheticGenesis)
             .map(df => refine(df, minOrdinal = if (lower == 0) 2 else 1))
             .getOrElse(emptyOut)

@@ -12,9 +12,10 @@ object GraftFilterShim {
     DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true)
 
   /** V2 connector Predicate → V1 source Filter (PredicateUtils is
-    * private[sql]); used by the runtime-group-filtering scan to turn
-    * the dynamic `In(partition_col, …)` predicate into the same Filter
-    * shape the driver-side file pruning already understands.
+    * private[sql]); used by the table's batch scan to turn a runtime
+    * filter (`In(col, …)` from dynamic pruning or runtime group
+    * filtering) into the same Filter shape the driver-side file
+    * pruning already understands.
     */
   def toV1(p: org.apache.spark.sql.connector.expressions.filter.Predicate): Option[Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(p)

@@ -41,14 +41,17 @@ class GraftManifestIndex(
     schema: StructType)
   extends PartitioningAwareFileIndex(spark, Map.empty, Some(schema), NoopCache) {
 
-  override def rootPaths: Seq[Path] = statuses.map(_.getPath)
+  // built once: Spark's `allFiles` looks up both maps once per root
+  // path, and every root path here is one file — as `def`s, one
+  // `allFiles` rebuilt them per file, O(files²)
+  override lazy val rootPaths: Seq[Path] = statuses.map(_.getPath)
 
   override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
 
-  override protected def leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+  override protected lazy val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
     scala.collection.mutable.LinkedHashMap(statuses.map(s => s.getPath -> s): _*)
 
-  override protected def leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+  override protected lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
     statuses.groupBy(_.getPath.getParent).view.mapValues(_.toArray).toMap
 
   override def refresh(): Unit = ()
@@ -57,11 +60,12 @@ class GraftManifestIndex(
 object GraftManifestIndex {
 
   /** The parquet delegate over committed files — the one place every
-    * DSv2 graft scan (the batch and streaming table scans, the
-    * storage-partitioned scan, and the three row-level rewrite scans)
-    * hands a manifest-known (absolute path, exact bytes) set to Spark's
-    * vectorized parquet reader: pushes `filters` (row-group skipping;
-    * Nil pushes nothing), prunes to `required`, builds. */
+    * DSv2 graft scan (the table's batch scan, which also serves
+    * copy-on-write rewrites, the streaming tail and the
+    * storage-partitioned scan) hands a manifest-known (absolute path,
+    * exact bytes) set to Spark's vectorized parquet reader: pushes
+    * `filters` (row-group skipping; Nil pushes nothing), prunes to
+    * `required`, builds. */
   def delegateScan(
       spark: SparkSession,
       options: CaseInsensitiveStringMap,

@@ -253,11 +253,14 @@ class CatalogSpec extends AnyFunSuite {
     // every source id lives in region 'b', but the ON condition carries
     // no literal the STATIC file pruning could use — only the runtime
     // group filter (fed by the evaluated source) can prove a/c untouched
-    spark.sql(
+    val merge = spark.sql(
       """MERGE INTO tcRt.r.t t
         |USING (SELECT id FROM range(150, 160)) s
         |ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET v = 'merged'""".stripMargin)
+    val rewriteScans = RuntimeFilterSpec.runtimeFiltered(merge)
+    assert(rewriteScans.nonEmpty && rewriteScans.forall(_.isInstanceOf[graft.catalog.MergeOnReadScan]),
+      s"rewrite scan: ${rewriteScans.map(_.getClass.getName)}")
     assert(spark.sql("SELECT COUNT(*) FROM tcRt.r.t").collect()(0).getLong(0) == 300)
     assert(spark.sql("SELECT COUNT(*) FROM tcRt.r.t WHERE v = 'merged'").collect()(0).getLong(0) == 10)
     val after = files.map(_.path).toSet
@@ -304,11 +307,14 @@ class CatalogSpec extends AnyFunSuite {
 
     // the ON condition references only the source: static pruning is
     // powerless; the matched rows all live in the middle file
-    spark.sql(
+    val merge = spark.sql(
       """MERGE INTO tcFg.g.t t
         |USING (SELECT id FROM range(1040, 1050)) s
         |ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET v = 'merged'""".stripMargin)
+    val rewriteScans = RuntimeFilterSpec.runtimeFiltered(merge)
+    assert(rewriteScans.nonEmpty && rewriteScans.forall(_.isInstanceOf[graft.catalog.MergeOnReadScan]),
+      s"rewrite scan: ${rewriteScans.map(_.getClass.getName)}")
     assert(spark.sql("SELECT COUNT(*) FROM tcFg.g.t").collect()(0).getLong(0) == 400)
     assert(spark.sql("SELECT COUNT(*) FROM tcFg.g.t WHERE v = 'merged'").collect()(0).getLong(0) == 10)
     assert(spark.sql("SELECT COUNT(*) FROM tcFg.g.t WHERE v = 'a'").collect()(0).getLong(0) == 100)
@@ -1447,12 +1453,12 @@ class CatalogSpec extends AnyFunSuite {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
       }
       val factScan = scans.collectFirst {
-        case s: graft.catalog.GraftStreamableScan if s.scannedFileCount >= 0 &&
+        case s: graft.catalog.MergeOnReadScan if s.plannedFileCount >= 0 &&
           s.readSchema().fieldNames.contains("m") => s
       }
       assert(factScan.isDefined, s"fact scan not found in:\n${df.queryExecution.executedPlan}")
-      assert(factScan.get.scannedFileCount <= 2,
-        s"dynamic pruning left ${factScan.get.scannedFileCount} of 8 files")
+      assert(factScan.get.plannedFileCount <= 2,
+        s"dynamic pruning left ${factScan.get.plannedFileCount} of 8 files")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

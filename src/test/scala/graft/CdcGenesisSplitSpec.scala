@@ -180,7 +180,7 @@ class CdcGenesisSplitSpec extends AnyFunSuite {
     val ops = gt("tcCdcGspA").ops
     val meta = ops.refresh().get._2
     val expected = graft.catalog.Changes
-      .between(spark, ops.warehouse, ops, meta, 0L,
+      .between(spark, ops, meta, 0L,
         meta.currentSnapshot.get.sequenceNumber).get
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("_change_type"))).toSeq.sorted
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Int, Long)]()

@@ -277,7 +277,7 @@ class CdcMorSplitSpec extends AnyFunSuite {
       val meta = ops.refresh().get._2
       val cur = meta.currentSnapshot.get.sequenceNumber
       val expected = graft.catalog.Changes
-        .between(spark, wh, ops, meta, 0L, cur).get
+        .between(spark, ops, meta, 0L, cur).get
         .groupBy("id", "v", "_change_type").count().collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2)) -> r.getLong(3))
         .toMap

@@ -258,7 +258,7 @@ class CdcSourceSpec extends AnyFunSuite {
 
     // a stream whose lag exceeds retention: its base seq is expired
     val e1 = intercept[IllegalStateException] {
-      Changes.between(spark, wh, ops, meta, fromSeq = 1, toSeq = cur)
+      Changes.between(spark, ops, meta, fromSeq = 1, toSeq = cur)
     }
     assert(e1.getMessage.contains("expired"), e1.getMessage)
 
@@ -267,7 +267,7 @@ class CdcSourceSpec extends AnyFunSuite {
     // lineage snapshot diffs against empty and the full surviving
     // state replays as inserts (a fresh CDC stream must be able to
     // start on a table that has ever run expireSnapshots)
-    val g = Changes.between(spark, wh, ops, meta, fromSeq = 0, toSeq = cur).get
+    val g = Changes.between(spark, ops, meta, fromSeq = 0, toSeq = cur).get
       .collect()
     assert(g.forall(_.getAs[String]("_change_type") == "insert"), g.mkString(","))
     assert(g.map(_.getLong(0)).sorted.toSeq == (0L until 30L),
@@ -279,14 +279,14 @@ class CdcSourceSpec extends AnyFunSuite {
     Maintenance.expireSnapshots(ops, keepLast = 1)
     val meta2 = ops.refresh().get._2
     val cur2 = meta2.currentSnapshot.get.sequenceNumber
-    val g2 = Changes.between(spark, wh, ops, meta2, fromSeq = 0, toSeq = cur2).get
+    val g2 = Changes.between(spark, ops, meta2, fromSeq = 0, toSeq = cur2).get
       .collect()
     assert(g2.forall(_.getAs[String]("_change_type") == "insert"))
     assert(g2.map(_.getLong(0)).sorted.toSeq == (0L until 30L).filterNot(_ == 7L),
       s"deleted row resurrected by synthetic genesis: ${g2.length} rows")
 
     // an intact base still works
-    assert(Changes.between(spark, wh, ops, meta, cur, cur).isEmpty)
+    assert(Changes.between(spark, ops, meta, cur, cur).isEmpty)
   }
 
   test("a fresh CDC stream starts on a table that has already run expireSnapshots") {
@@ -465,7 +465,7 @@ class CdcSourceSpec extends AnyFunSuite {
       }
       val meta = ops.refresh().get._2
       meta.currentSnapshot.foreach { cur =>
-        val replayed = Changes.between(spark, wh, ops, meta, 0L, cur.sequenceNumber)
+        val replayed = Changes.between(spark, ops, meta, 0L, cur.sequenceNumber)
           .map(_.groupBy("id", "v")
             .agg(org.apache.spark.sql.functions.sum(
               org.apache.spark.sql.functions.when(
@@ -629,7 +629,7 @@ class CdcSourceSpec extends AnyFunSuite {
     // (A, C]: the lineage walk must yield C's changes against A —
     // exactly the inserted row 3 — and never consult abandoned B
     // (a seq-range filter would diff C against B and emit wrong rows)
-    val rows = Changes.between(spark, wh, ops, meta, a.sequenceNumber, cur)
+    val rows = Changes.between(spark, ops, meta, a.sequenceNumber, cur)
       .get.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("_change_type")))
     assert(rows.toSeq.sorted == Seq((3L, "insert")), rows.mkString(","))
   }

@@ -129,9 +129,7 @@ class OpsSpec extends AnyFunSuite {
     // drive the builder directly with the catalyst predicate
     builder.pushFilters(exprs.toSeq)
     val scan = builder.build()
-    val scanned = scan.asInstanceOf[graft.catalog.GraftStreamableScan].batchDelegate
-      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan]
-      .fileIndex.inputFiles.length
+    val scanned = scan.asInstanceOf[graft.catalog.MergeOnReadScan].plannedFileCount
     assert(scanned < total, s"pruning did not reduce files: $scanned of $total")
     // and the pruned scan still returns exactly the right rows
     val expected = Tables(spark, TestSpark.sf, "customer")

@@ -338,4 +338,29 @@ class PlanningScaleSpec extends AnyFunSuite {
     assert(factoryMs < 2000, f"factory creation took $factoryMs%.0f ms")
     ChunkCache.invalidateAll()
   }
+
+  test("the manifest file index over 100k files builds its maps once, not once per file") {
+    // Spark's allFiles looks both maps up once per root path, and every
+    // root path is one file: a map rebuilt per lookup made one allFiles
+    // O(files²). Each map the index builds walks its statuses once
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val n = 100000
+    val statuses = (0 until n).map(i => new FileStatus(1L << 20, false, 1, 134217728L, 0L,
+      new Path(s"file:/tmp/graft_test_index/d${i % 100}/f$i.parquet")))
+    var walks = 0
+    val counted = new scala.collection.immutable.AbstractSeq[FileStatus] {
+      def apply(i: Int): FileStatus = statuses(i)
+      def length: Int = n
+      override def iterator: Iterator[FileStatus] = { walks += 1; statuses.iterator }
+    }
+    val index = new org.apache.spark.sql.execution.datasources.GraftManifestIndex(
+      TestSpark.spark, counted, StructType(Seq(StructField("x", LongType))))
+    assert(index.allFiles().size == n)
+    assert(index.inputFiles.length == n)
+    assert(index.sizeInBytes == n.toLong << 20)
+    assert(index.listFiles(Nil, Nil).map(_.files.size).sum == n)
+    // root paths, the file map and the directory map: one walk each
+    assert(walks <= 3, s"$walks walks over $n statuses")
+  }
 }
