@@ -28,14 +28,13 @@ import scala.jdk.CollectionConverters._
   *  - `append` → reads ONLY the files that commit added (O(increment));
   *  - `replace` (compaction) → emits nothing by definition: it moves
   *    bytes, not rows;
-  *  - row-level ops (`delete`/`update`/`merge`/`overwrite`) → a
-  *    two-sided `exceptAll` diff of the adjacent snapshot STATES.
-  *    That is two scans + a shuffle of the touched table — correct for
-  *    both COW and MOR commits (state reads apply delete files), and
-  *    acceptable because row-level commits are the rare case; a
-  *    delete-file interpretation (reading just the added position/
-  *    equality deletes) is the cheaper specialization when all
-  *    row-level traffic is MOR.
+  *  - merge-on-read row-level ops (no data file removed) → the added
+  *    data files' rows as inserts, and as deletes the parent rows the
+  *    commit's new delete files remove ([[Mor.removedRows]]: one scan
+  *    of just the parent files those deletes may reach, no join);
+  *  - copy-on-write row-level ops (a data file removed) → a two-sided
+  *    `exceptAll` diff of the adjacent snapshot STATES: two scans + a
+  *    shuffle of the table.
   *
   * The range walk itself lives in [[Changes.between]] so the streaming
   * CDC source ([[graft.streaming.GraftCdcSource]]) can replay the same
@@ -172,6 +171,31 @@ object Changes {
     Mor.liveRows(spark, ops, meta, snap.map(ops.allFiles).getOrElse(Nil),
       snap.map(_.deleteFiles).getOrElse(Nil))
 
+  /** Loud replay-base guards, shared by [[between]] and the CDC
+    * split path ([[graft.streaming.GraftCdcSource]]'s
+    * `assertSplitContiguous`) — a slice batch bypasses [[between]],
+    * so its guard must be the SAME code, not a synchronized copy
+    * (same rationale as [[graft.meta.TableMeta.lineageWindowFrom]]). */
+  def requireRetainedBase(meta: TableMeta, fromSeq: Long): Unit =
+    if (fromSeq > 0 && !meta.snapshots.exists(_.sequenceNumber == fromSeq))
+      throw new IllegalStateException(
+        s"changelog start snapshot (seq $fromSeq) has been expired: a replay " +
+          s"from it would re-emit or drop already-delivered changes; restart " +
+          s"the stream from a retained snapshot (oldest retained seq: " +
+          s"${meta.snapshots.map(_.sequenceNumber).minOption.getOrElse(0L)})")
+
+  /** The non-linear-history (rollback) diagnosis: the walk from
+    * `endSnap` reached genesis without passing `fromSeq`, so the base
+    * is retained but not an ANCESTOR — a retention message would send
+    * the operator chasing the wrong knob. */
+  def requireLinearBase(w: graft.meta.LineageWindow, fromSeq: Long,
+      endSnap: Snapshot): Unit =
+    if (w.base.isEmpty && fromSeq > 0)
+      throw new IllegalStateException(
+        s"changelog base (seq $fromSeq) is not an ancestor of the end " +
+          s"snapshot ${endSnap.snapshotId} (seq ${endSnap.sequenceNumber}): " +
+          "the history is not linear past it (rollback); restart the stream")
+
   /** Change rows produced by the commits in (fromSeq, toSeq], tagged
     * with `_change_type` and a 1-based `_change_ordinal` within the
     * range. None when the range emits nothing. fromSeq = 0 diffs from
@@ -214,32 +238,6 @@ object Changes {
     * its checkpoint shows an uncommitted batch 0 pending replay, so
     * the genesis replay fails as loudly as any other truncated replay.
     */
-  /** Loud replay-base guards, shared by [[between]] and the CDC
-    * split path ([[graft.streaming.GraftCdcSource]]'s
-    * `assertSplitContiguous`) — a slice batch bypasses [[between]],
-    * so its guard must be the SAME code, not a synchronized copy
-    * (the r16 two-copy-drift lesson, same rationale as
-    * [[graft.meta.TableMeta.lineageWindowFrom]]). */
-  def requireRetainedBase(meta: TableMeta, fromSeq: Long): Unit =
-    if (fromSeq > 0 && !meta.snapshots.exists(_.sequenceNumber == fromSeq))
-      throw new IllegalStateException(
-        s"changelog start snapshot (seq $fromSeq) has been expired: a replay " +
-          s"from it would re-emit or drop already-delivered changes; restart " +
-          s"the stream from a retained snapshot (oldest retained seq: " +
-          s"${meta.snapshots.map(_.sequenceNumber).minOption.getOrElse(0L)})")
-
-  /** The non-linear-history (rollback) diagnosis: the walk from
-    * `endSnap` reached genesis without passing `fromSeq`, so the base
-    * is retained but not an ANCESTOR — a retention message would send
-    * the operator chasing the wrong knob. */
-  def requireLinearBase(w: graft.meta.LineageWindow, fromSeq: Long,
-      endSnap: Snapshot): Unit =
-    if (w.base.isEmpty && fromSeq > 0)
-      throw new IllegalStateException(
-        s"changelog base (seq $fromSeq) is not an ancestor of the end " +
-          s"snapshot ${endSnap.snapshotId} (seq ${endSnap.sequenceNumber}): " +
-          "the history is not linear past it (rollback); restart the stream")
-
   def between(spark: SparkSession, ops: TableOps,
       meta: TableMeta, fromSeq: Long, toSeq: Long,
       allowSyntheticGenesis: Boolean = true): Option[DataFrame] = {
@@ -325,31 +323,13 @@ object Changes {
         case "append" => readAdded
         case "replace" => Nil // compaction rewrites bytes, not rows
         case _ if !removedData =>
-          // MOR/delta fast path (no data file removed): inserts stream
-          // straight off the added data files; position-delete rows
-          // resolve by reading ONLY the files the new delete records
-          // reference ([[Mor.deletedByPositions]], shared with the CDC
-          // source's deleted slices); equality-delete rows resolve by
-          // an anti-join of the still-alive parent rows against the
-          // parent rows the new deletes leave alive — never the
-          // two-sided state diff. This is what keeps a CDC tail read
-          // over a trickle-updated 100 TB table incremental.
-          val (eqAdded, posAdded) = addedDels.partition(Mor.isEquality)
-          val posDeleted = Mor.deletedByPositions(spark, ops, meta,
-            prevFiles, prevDeleteFiles, posAdded).map(tag(_, "delete", ord))
-          val eqDeleted: Seq[DataFrame] =
-            if (eqAdded.isEmpty || prevFiles.isEmpty) Nil
-            else {
-              // eq deletes only hit strictly-older files; the commit's
-              // own added files are never candidates
-              def live(dels: Seq[DataFile]) =
-                Mor.liveRows(spark, ops, meta, prevFiles, dels, positions = true)
-              Seq(tag(live(prevDeleteFiles).join(
-                  live(eqAdded).select(col("__gf"), col("__gp")),
-                  Seq("__gf", "__gp"), "left_anti"),
-                "delete", ord))
-            }
-          readAdded ++ posDeleted ++ eqDeleted
+          // merge-on-read commit (no data file removed): inserts off the
+          // added files, deletes = the parent rows the new delete files
+          // remove — never the two-sided state diff, which keeps a CDC
+          // tail over a trickle-updated 100 TB table incremental
+          readAdded ++ (if (addedDels.isEmpty) Nil else Seq(tag(
+            Mor.removedRows(spark, ops, meta, prevFiles, prevDeleteFiles, addedDels),
+            "delete", ord)))
         case _ =>
           val cur = state(spark, ops, meta, Some(snap))
           val par = state(spark, ops, meta, prev)

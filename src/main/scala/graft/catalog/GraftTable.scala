@@ -39,8 +39,9 @@ import scala.jdk.CollectionConverters._
   * path, HadoopRelativeTableOperations.java:144-180).
   *
   * `pinnedSnapshot` implements `VERSION AS OF` time travel over the
-  * snapshot list (README.md:67-108). `pinnedFiles` fixes the data and
-  * delete files every scan reads ([[Mor.liveRows]]).
+  * snapshot list (README.md:67-108). `pinnedFiles` fixes the data
+  * files, delete files and added delete files every scan reads
+  * ([[Mor.liveRows]], [[Mor.removedRows]]).
   */
 class GraftTable(
     val catalogName: String,
@@ -49,7 +50,7 @@ class GraftTable(
     val meta: TableMeta,
     val metaVersion: Int,
     val pinnedSnapshot: Option[Long] = None,
-    pinnedFiles: Option[(Seq[DataFile], Seq[DataFile])] = None)
+    pinnedFiles: Option[(Seq[DataFile], Seq[DataFile], Seq[DataFile])] = None)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with SupportsRowLevelOperations
   with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -213,7 +214,7 @@ class GraftTable(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(this, options, pinnedFiles.orElse(
       Option(options.get("start-snapshot-id")).map(start =>
-        (incrementalFiles(start, Option(options.get("end-snapshot-id"))), Nil))))
+        (incrementalFiles(start, Option(options.get("end-snapshot-id"))), Nil, Nil))))
 
   /** Incremental append scan (`spark.read.option("start-snapshot-id", a)
     * [.option("end-snapshot-id", b)].table(...)`): only the rows ADDED
@@ -420,11 +421,12 @@ object GraftTable {
   * skipping the reference's metadata enables (SURVEY §4) — and
   * (2) delegates the surviving files to ParquetScanBuilder so parquet
   * row-group pushdown and column pruning still happen below us.
-  * `pinned` replaces the snapshot's (data files, delete files) pair:
-  * the incremental read's added files, or [[Mor.liveRows]]' lists.
+  * `pinned` replaces the snapshot's (data files, delete files) and adds
+  * a removed-rows read's added deletes: the incremental read's added
+  * files, or [[Mor.liveRows]]' and [[Mor.removedRows]]' lists.
   */
 class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
-    pinned: Option[(Seq[DataFile], Seq[DataFile])] = None)
+    pinned: Option[(Seq[DataFile], Seq[DataFile], Seq[DataFile])] = None)
   extends ScanBuilder with SupportsPushDownCatalystFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
 
@@ -464,16 +466,20 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // the loaded candidates
     val candidates = pinned.map(_._1).getOrElse(
       table.readSnapshot.map(s => table.ops.filesMatching(s, v1)).getOrElse(Nil))
-    val pruned = candidates.filter(f => v1.forall(FilePruning.keepFile(f, _)))
+    // a removed-rows read plans only the files an added delete may reach
+    val added = pinned.map(_._3).getOrElse(Nil)
+    val pruned = candidates.filter(f => v1.forall(FilePruning.keepFile(f, _)) &&
+      (added.isEmpty || added.exists(Mor.mayApply(_, f))))
     // only delete files whose path range can reference a surviving
     // data file ride along (file-pruned scans skip unrelated deletes)
     val prunedDeletes = Mor.relevantDeletes(liveDeletes, pruned)
     // the storage-partitioned scan serves only plain reads: no metadata
-    // column, no live delete, no add_files import
+    // column, no live delete, no add_files import, no removed rows
     val plain = !required.fieldNames.exists(GraftTable.MetaColNames) &&
-      prunedDeletes.isEmpty && !pruned.exists(_.nameMapped.contains(true))
+      prunedDeletes.isEmpty && added.isEmpty && !pruned.exists(_.nameMapped.contains(true))
     (if (plain) SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark) else None)
-      .getOrElse(new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes))
+      .getOrElse(new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes,
+        added = Mor.relevantDeletes(added, pruned)))
   }
 }
 

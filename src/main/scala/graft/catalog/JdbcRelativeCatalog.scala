@@ -604,6 +604,8 @@ class JdbcRelativeCatalog extends RelativeCatalog {
   override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
     requireV1()
     val newIdent = unqualified(rawNewIdent)
+    if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
+      throw new NoSuchNamespaceException(newIdent.namespace())
     val oldLoc = viewPointer(oldIdent).getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent))
     if (viewPointer(newIdent).isDefined || tableExists(newIdent))

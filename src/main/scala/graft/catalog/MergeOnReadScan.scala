@@ -23,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reads, live merge-on-read deletes, `add_files` imports (no parquet
   * field ids; they resolve through the table's name mapping), the
   * `_file`/`_pos` metadata columns (user queries and the DELTA row-id
-  * scan of merge-on-read UPDATE/MERGE), [[Mor.liveRows]]' pinned reads
-  * and the copy-on-write rewrite scan — except the opt-in
-  * storage-partitioned [[SpjScan]].
+  * scan of merge-on-read UPDATE/MERGE), [[Mor.liveRows]]' pinned reads,
+  * the copy-on-write rewrite scan and the change reads'
+  * [[Mor.removedRows]] — except the opt-in storage-partitioned
+  * [[SpjScan]].
   *
   * Deletes are applied INSIDE the scan task, file by file, the way the
   * Iceberg spec's readers do (https://iceberg.apache.org/spec/#scan-planning):
@@ -51,6 +52,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * reads rows. Every predicate is still reported residual by the
   * builder, so Spark re-filters above.
   *
+  * REMOVED ROWS. Given `added` deletes, the scan instead returns the
+  * rows `deletes` keep and some delete of `added` kills, each once, by
+  * the same delete test (Iceberg's changelog scan has the same per-file
+  * deleted-rows task).
+  *
   * RUNTIME FILTERS ([[SupportsRuntimeV2Filtering]]) narrow the file
   * list before partitions are planned, in one of two modes:
   *  - a plain read (`rewrite` empty) offers every scanned data column
@@ -75,7 +81,7 @@ import org.apache.spark.unsafe.types.UTF8String
 class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     required: StructType, pushedExprs: Seq[Expression],
     files: Seq[DataFile], deletes: Seq[DataFile],
-    rewrite: Option[RewriteGroups] = None)
+    rewrite: Option[RewriteGroups] = None, added: Seq[DataFile] = Nil)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering {
 
   import MergeOnReadScan._
@@ -95,7 +101,8 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"GraftMergeOnReadScan ${table.name()} [files=${narrowed._1.size}, deletes=${narrowed._2.size}]"
+    s"GraftMergeOnReadScan ${table.name()} [files=${narrowed._1.size}, deletes=${narrowed._2.size}" +
+      (if (added.isEmpty) "]" else s", removed by=${added.size}]")
 
   override def planInputPartitions(): Array[InputPartition] = planned._2
 
@@ -142,12 +149,13 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     * withheld: a wrong NDV misleads the optimizer worse than no NDV.
     * So are stats for a scan pruned below the snapshot's full file
     * set: snapshot-wide NDV/null counts beside a smaller numRows make
-    * an inconsistent row (nullCount > numRows). Under deletes the live
-    * row count is unknown until the scan runs. */
+    * an inconsistent row (nullCount > numRows). Under deletes, and for
+    * removed rows, the row count is unknown until the scan runs. */
   override def estimateStatistics(): Statistics = {
     val (fs, ds) = narrowed
     val cols = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    if (ds.isEmpty) for {
+    val exact = ds.isEmpty && added.isEmpty
+    if (exact) for {
       ts <- table.meta.statistics
       snap <- table.readSnapshot
       // dataFileCount is the SNAPSHOT's full set (chunk keys, no chunk
@@ -163,7 +171,7 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(fs.map(_.bytes).sum max 1L)
       override def numRows(): java.util.OptionalLong =
-        if (ds.isEmpty) java.util.OptionalLong.of(fs.map(_.records).sum)
+        if (exact) java.util.OptionalLong.of(fs.map(_.records).sum)
         else java.util.OptionalLong.empty()
       override def columnStats(): java.util.Map[NamedReference, ColumnStatistics] = cols
     }
@@ -215,7 +223,8 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     private def keyOf(f: DataFile) = SparkPath.fromPath(GraftManifestIndex.qualify(hconf, abs(f)))
     private def isMapped(f: DataFile) = f.nameMapped.contains(true)
 
-    private val (eqDeletes, posDeletes) = deletes.partition(Mor.isEquality)
+    private val (eqDeletes, posDeletes) = (deletes ++ added).partition(Mor.isEquality)
+    private val addedPaths = added.map(_.path).toSet
     private val eqGroups = Mor.equalityGroups(tableSchema, eqDeletes)
     private val eqFiles = eqGroups.flatMap(_._2)
 
@@ -276,7 +285,8 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
 
     // no delete and no metadata column: columnar, through the
     // delegate's own factory when every file resolves by field id
-    private val columnar = deletes.isEmpty && !required.fieldNames.exists(GraftTable.MetaColNames)
+    private val columnar = deletes.isEmpty && added.isEmpty &&
+      !required.fieldNames.exists(GraftTable.MetaColNames)
     private val routed = files.exists(isMapped)
 
     val factory: PartitionReaderFactory =
@@ -302,7 +312,8 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
         }
         MergeOnReadReaderFactory(idFactory, mappedFactory,
           output, if (rowIndex) ordinal(RowIndexField.name) else -1,
-          posFactory, posSources, eqParsed.map(_._1).toArray, eqSources.toArray)
+          posFactory, posSources, eqParsed.map(_._1).toArray, eqSources.toArray,
+          removedRows = added.nonEmpty)
       }
 
     /** Partitions over `fs` (the scan's files or a runtime-narrowed
@@ -320,17 +331,18 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
 
       val byPath = fs.map(f => keyOf(f) -> f).toMap
       val applied = new java.util.BitSet()
+      // (scan's, added) indices of the deletes in `ds` that may apply to `f`
+      def applying(ds: Seq[DataFile], f: DataFile) =
+        ds.indices.filter(i => Mor.mayApply(ds(i), f)).toArray.partition(i => !addedPaths(ds(i).path))
       def partitions(scan: Option[Scan], mapped: Boolean): Array[InputPartition] =
         filePartitions(scan).map { fp =>
           MergeOnReadPartition(fp, mapped, fp.files.map { pf =>
             val f = byPath(pf.filePath)
-            val pos = posDeletes.indices.filter(i =>
-              Mor.positionDeleteMayApply(posDeletes(i), f.path)).toArray
-            val eq = eqFiles.indices.filter(i =>
-              Mor.equalityDeleteMayApply(eqFiles(i), f)).toArray
-            pos.foreach(applied.set)
-            eq.foreach(i => applied.set(posDeletes.size + i))
-            FileTask(f.path, pos, eq)
+            val (pos, addedPos) = applying(posDeletes, f)
+            val (eq, addedEq) = applying(eqFiles, f)
+            (pos ++ addedPos).foreach(applied.set)
+            (eq ++ addedEq).foreach(i => applied.set(posDeletes.size + i))
+            FileTask(f.path, pos, eq, addedPos, addedEq)
           })
         }
       (fs, partitions(idScan, mapped = false) ++ partitions(mappedScan, mapped = true),
@@ -395,21 +407,23 @@ case class EqualityGroup(factory: PartitionReaderFactory, types: Array[DataType]
 
 /** One planned data file: its warehouse-relative path (`_file`) and
   * the indices of the position / equality delete files that can apply
-  * to it. */
-case class FileTask(path: String, positionDeletes: Array[Int], equalityDeletes: Array[Int])
+  * to it — in a removed-rows read, the added deletes apart. */
+case class FileTask(path: String, positionDeletes: Array[Int], equalityDeletes: Array[Int],
+    addedPositionDeletes: Array[Int], addedEqualityDeletes: Array[Int])
 
 case class MergeOnReadPartition(inner: FilePartition, mapped: Boolean, tasks: Array[FileTask])
   extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
-/** Row reader factory of a scan with deletes or metadata columns:
-  * every partition reads rows, deletes applied. */
+/** Row reader factory of a scan with deletes, metadata columns or
+  * removed rows: every partition reads rows, deletes applied. */
 case class MergeOnReadReaderFactory(
     idful: Option[PartitionReaderFactory], nameMapped: Option[PartitionReaderFactory],
     output: Seq[Expression], rowIndexOrdinal: Int,
     positionFactory: Option[PartitionReaderFactory], positionSources: Array[DeleteSource],
-    equalityGroups: Array[EqualityGroup], equalitySources: Array[(Int, DeleteSource)])
+    equalityGroups: Array[EqualityGroup], equalitySources: Array[(Int, DeleteSource)],
+    removedRows: Boolean)
   extends PartitionReaderFactory {
 
   import MergeOnReadScan._
@@ -426,9 +440,10 @@ case class MergeOnReadReaderFactory(
       try while (r.next()) each(r.get()) finally r.close()
     }
 
-  /** The sorted positions the file's position deletes name, or null. */
-  def positions(t: FileTask): Array[Long] = {
-    val hits = t.positionDeletes.flatMap { i =>
+  /** The sorted positions that position deletes `is` name in the data
+    * file at `path`, or null. */
+  def positions(path: String, is: Array[Int]): Array[Long] = {
+    val hits = is.flatMap { i =>
       val src = positionSources(i)
       Option(parsed.get(src.key) {
         val acc = new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
@@ -441,7 +456,7 @@ case class MergeOnReadReaderFactory(
         val out = new java.util.HashMap[String, Array[Long]]()
         acc.forEach((k, b) => out.put(k, b.result().sorted))
         new Parsed(out, null, n)
-      }.positions.get(t.path))
+      }.positions.get(path))
     }
     if (hits.isEmpty) null
     else if (hits.length == 1) hits(0)
@@ -462,11 +477,15 @@ case class MergeOnReadReaderFactory(
 }
 
 /** Reads a partition's files one at a time through the data delegate's
-  * reader and drops the rows the file's deletes kill. */
+  * reader and drops the rows the file's deletes kill — or, in a
+  * removed-rows read, returns the rows they keep and an added delete
+  * kills, skipping unopened a file no added delete names. */
 class MergeOnReadPartitionReader(f: MergeOnReadReaderFactory, p: MergeOnReadPartition)
   extends PartitionReader[InternalRow] {
 
   import MergeOnReadScan._
+
+  private type KeySets = Array[(UnsafeProjection, Array[java.util.Set[UnsafeRow]])]
 
   private val out = UnsafeProjection.create(f.output)
   private val dataKeys = f.equalityGroups.map(g => keyProjection(g.types, g.dataOrdinals))
@@ -474,42 +493,58 @@ class MergeOnReadPartitionReader(f: MergeOnReadReaderFactory, p: MergeOnReadPart
   private val joined = new JoinedRow()
   private var i = -1
   private var cur: PartitionReader[InternalRow] = null
-  private var positions: Array[Long] = null
-  // per equality group with a delete on the current file: its key sets
-  private var equality: Array[(UnsafeProjection, Array[java.util.Set[UnsafeRow]])] = Array.empty
+  // the current file's sorted positions (or null) and, per equality
+  // group with a delete on it, its key sets; the same for added deletes
+  private var positions, addedPositions: Array[Long] = null
+  private var equality, addedEquality: KeySets = Array.empty
   private var row: InternalRow = null
   private var byPosition = 0L
   private var byEquality = 0L
 
+  private def keySets(js: Array[Int]): KeySets =
+    js.groupBy(j => f.equalitySources(j)._1).toArray.map { case (g, g0) => dataKeys(g) -> g0.map(f.keys) }
+
+  /** Loads file `t`'s deletes; false when the file need not be read. */
+  private def start(t: FileTask): Boolean = {
+    addedPositions = f.positions(t.path, t.addedPositionDeletes)
+    addedEquality = keySets(t.addedEqualityDeletes)
+    if (f.removedRows && addedPositions == null && addedEquality.isEmpty) return false
+    positions = f.positions(t.path, t.positionDeletes)
+    equality = keySets(t.equalityDeletes)
+    true
+  }
+
   private def open(): Boolean = {
     if (cur != null) { cur.close(); cur = null }
     i += 1
+    while (i < p.tasks.length && !start(p.tasks(i))) i += 1
     if (i >= p.tasks.length) return false
-    val t = p.tasks(i)
-    positions = f.positions(t)
-    equality = t.equalityDeletes.groupBy(j => f.equalitySources(j)._1).toArray.map {
-      case (g, js) => dataKeys(g) -> js.map(f.keys)
-    }
-    fileRow.update(0, UTF8String.fromString(t.path))
+    fileRow.update(0, UTF8String.fromString(p.tasks(i).path))
     cur = f.dataFactory(p).createReader(FilePartition(p.inner.index, Array(p.inner.files(i))))
     true
   }
 
+  private def named(ps: Array[Long], r: InternalRow): Boolean =
+    ps != null && java.util.Arrays.binarySearch(ps, r.getLong(f.rowIndexOrdinal)) >= 0
+
+  private def keyed(eq: KeySets, r: InternalRow): Boolean =
+    eq.exists { case (proj, sets) => val k = proj(r); sets.exists(_.contains(k)) }
+
   private def deleted(r: InternalRow): Boolean =
-    if (positions != null &&
-        java.util.Arrays.binarySearch(positions, r.getLong(f.rowIndexOrdinal)) >= 0) {
-      byPosition += 1; true
-    } else if (equality.exists { case (proj, sets) =>
-        val k = proj(r); sets.exists(_.contains(k)) }) {
-      byEquality += 1; true
-    } else false
+    if (named(positions, r)) { byPosition += 1; true }
+    else if (keyed(equality, r)) { byEquality += 1; true }
+    else false
+
+  private val keep: InternalRow => Boolean =
+    if (f.removedRows) r => !deleted(r) && (named(addedPositions, r) || keyed(addedEquality, r))
+    else r => !deleted(r)
 
   override def next(): Boolean = {
     while (cur != null || open()) {
       if (!cur.next()) { if (!open()) return false }
       else {
         val r = cur.get()
-        if (!deleted(r)) { row = out(joined(r, fileRow)); return true }
+        if (keep(r)) { row = out(joined(r, fileRow)); return true }
       }
     }
     false

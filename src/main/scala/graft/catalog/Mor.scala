@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.meta.{DataFile, RelPaths, TableMeta}
+import graft.meta.{DataFile, TableMeta}
 import org.apache.spark.sql.{DataFrame, GraftRelationShim, SparkSession}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.functions._
@@ -28,16 +28,17 @@ import org.apache.spark.sql.types._
   * a trickle DELETE costs O(matched rows) or less, not a whole-file
   * rewrite.
   *
-  * ONE READER. Every read of live rows goes through
+  * ONE READER, ONE DELETE TEST. Every read of table rows goes through
   * [[MergeOnReadScan]], which applies the deletes inside the scan task
   * (per file: a sorted position set, then an equality key set) with no
   * join, keying a row by (`DataFile.path`, parquet row index): table
   * scans, the DELTA row-id scan of MOR UPDATE/MERGE, the copy-on-write
-  * rewrite scan, and [[liveRows]] — the DataFrame entry point for
+  * rewrite scan, [[liveRows]] — the DataFrame entry point for
   * row-level writes (MOR and COW `DELETE`, `INSERT OVERWRITE` by
   * filter), maintenance (`compute_stats`, the three compactions) and
-  * the change reads (`$changes`, `graft-cdc` slices, whose
-  * position-delete rows share [[deletedByPositions]]).
+  * the change reads' inserts and states — and [[removedRows]], the
+  * rows a commit's new deletes remove (the change reads' deletes:
+  * `$changes` and `graft-cdc`'s deleted slices).
   */
 object Mor {
 
@@ -79,17 +80,33 @@ object Mor {
     * Returns the current schema's
     * columns, plus the row identity (`_file`, `_pos`) as `__gf`/`__gp`
     * when `positions` is set — for callers that key on row identity
-    * (the MOR DELETE's tombstones, partition stats, the change reads).
+    * (the MOR DELETE's tombstones, partition stats).
     */
   def liveRows(spark: SparkSession, ops: TableOps, meta: TableMeta,
       files: Seq[DataFile], deletes: Seq[DataFile],
-      positions: Boolean = false): DataFrame = {
+      positions: Boolean = false): DataFrame =
+    pinnedRead(spark, ops, meta, files, deletes, Nil, positions)
+
+  /** The rows of `files` that `existing` keeps and some delete of
+    * `added` kills, each once — a merge-on-read commit's delete rows
+    * (`existing` = the parent's deletes). Reads through the same
+    * [[MergeOnReadScan]] as [[liveRows]], planning only the files an
+    * added delete may reach: no join, no Spark job at planning.
+    * Returns the current schema's columns. */
+  def removedRows(spark: SparkSession, ops: TableOps, meta: TableMeta,
+      files: Seq[DataFile], existing: Seq[DataFile], added: Seq[DataFile]): DataFrame =
+    pinnedRead(spark, ops, meta, if (added.isEmpty) Nil else files, existing, added,
+      positions = false)
+
+  private def pinnedRead(spark: SparkSession, ops: TableOps, meta: TableMeta,
+      files: Seq[DataFile], deletes: Seq[DataFile], added: Seq[DataFile],
+      positions: Boolean): DataFrame = {
     val schema = TableMeta.schemaToSpark(meta.schema)
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(schema.fields ++ (if (positions) positionFields else Nil)))
     val table = new GraftTable("graft", Identifier.of(Array.empty, ops.tableLocation),
-      ops, meta, -1, pinnedFiles = Some((files, deletes)))
+      ops, meta, -1, pinnedFiles = Some((files, deletes, added)))
     GraftRelationShim.frame(spark, table).select(schema.fieldNames.toSeq.map(col) ++
       (if (positions) Seq(col("_file").as("__gf"), col("_pos").as("__gp")) else Nil): _*)
   }
@@ -97,59 +114,6 @@ object Mor {
   private val positionFields = Seq(
     StructField("__gf", StringType, nullable = false),
     StructField("__gp", LongType, nullable = false))
-
-  /** The rows of `parents` that the position-delete files `added` kill
-    * — the change rows of a MOR position-delete commit, shared by the
-    * changelog's fast path and the `graft-cdc` deleted-slice read. Reads
-    * only the parents the entries reference, with the parent
-    * snapshot's `parentDeletes` (pruned to those parents by
-    * [[relevantDeletes]]) applied so rows dead BEFORE the commit don't
-    * re-die, and keeps the rows an entry of `added` hits. Entries of
-    * `delivered` (an earlier slice of the same commit; two delete files
-    * may name one position) are anti-joined away, pre-filtered to the
-    * referenced parents so parquet pushdown skips their other row
-    * groups. Returns the schema's columns; None when `added` references
-    * none of `parents`.
-    */
-  def deletedByPositions(spark: SparkSession, ops: TableOps, meta: TableMeta,
-      parents: Seq[DataFile], parentDeletes: Seq[DataFile],
-      added: Seq[DataFile], delivered: Seq[DataFile] = Nil): Option[DataFrame] = {
-    if (added.isEmpty) return None
-    val delSet = deleteSet(spark, ops.warehouse, added)
-    // bounded driver collect: distinct referenced parent paths,
-    // O(the commit's target files)
-    val referenced = delSet.select(col("__gf")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val refFiles = parents.filter(f => referenced(f.path))
-    if (refFiles.isEmpty) return None
-    val hit = liveRows(spark, ops, meta, refFiles,
-        relevantDeletes(parentDeletes, refFiles), positions = true)
-      .join(delSet, Seq("__gf", "__gp"), "left_semi")
-    val fresh =
-      if (delivered.isEmpty) hit
-      else {
-        val earlier = deleteSet(spark, ops.warehouse, delivered)
-        // skipped when the IN-list would bloat the plan
-        val pruned = if (referenced.size <= 200)
-          earlier.where(col("__gf").isin(referenced.toSeq: _*)) else earlier
-        hit.join(pruned, Seq("__gf", "__gp"), "left_anti")
-      }
-    Some(fresh.drop("__gf", "__gp"))
-  }
-
-  /** broadcast the delete side below this many bytes (parquet size —
-    * generous because the decoded two-column set stays small) */
-  private val BroadcastMaxBytes: Long = 64L << 20
-
-  /** Committed position-delete entries as (__gf relative-path, __gp
-    * position). */
-  private def deleteSet(spark: SparkSession, warehouse: String,
-      deletes: Seq[DataFile]): DataFrame = {
-    val paths = deletes.map(d => RelPaths.absolutize(warehouse, d.path))
-    val raw = spark.read.schema(deleteSchema).parquet(paths: _*)
-      .select(col("file_path").as("__gf"), col("pos").as("__gp"))
-    if (deletes.map(_.bytes).sum <= BroadcastMaxBytes) broadcast(raw) else raw
-  }
 
   def isEquality(d: DataFile): Boolean = d.content.contains("equality")
 
@@ -178,16 +142,13 @@ object Mor {
     * keep the file.
     */
   def relevantDeletes(deletes: Seq[DataFile], files: Seq[DataFile]): Seq[DataFile] =
-    deletes.filter { d =>
-      if (isEquality(d)) files.exists(f => equalityDeleteMayApply(d, f))
-      else files.exists(f => positionDeleteMayApply(d, f.path))
-    }
+    deletes.filter(d => files.exists(mayApply(d, _)))
 
-  /** Can position-delete file `d` name a row of the data file at
-    * `path`? Its exact `file_path` bounds must cover the path. */
-  def positionDeleteMayApply(d: DataFile, path: String): Boolean =
-    d.minBound.get("file_path").forall(path >= _) &&
-      d.maxBound.get("file_path").forall(path <= _)
+  /** Can delete file `d` kill a row of data file `f`? A position delete
+    * only when its exact `file_path` bounds cover `f`'s path. */
+  def mayApply(d: DataFile, f: DataFile): Boolean =
+    if (isEquality(d)) equalityDeleteMayApply(d, f)
+    else d.minBound.get("file_path").forall(f.path >= _) && d.maxBound.get("file_path").forall(f.path <= _)
 
   /** Can equality-delete file `d` kill any row of data file `f`?
     * On stats alone: the delete's commit must be strictly newer than

@@ -697,6 +697,8 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
 
   override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
     val newIdent = unqualified(rawNewIdent)
+    if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
+      throw new NoSuchNamespaceException(newIdent.namespace())
     // fresh probes on both sides — see createView
     if (!Io.exists(viewFile(oldIdent)))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent)

@@ -356,8 +356,8 @@ object CatalogOps extends Pack {
         |ORDER BY c_mktsegment ASC NULLS FIRST""".stripMargin)),
 
     // Merge-on-read DELETE: position-delete files committed instead of
-    // rewriting data files (two trickle deletes stack), applied by the
-    // scan as an anti-join. CatalogSpec proves the data files stay
+    // rewriting data files (two trickle deletes stack), applied inside
+    // the scan task, file by file. CatalogSpec proves the data files stay
     // byte-identical; this oracle row proves the subtraction is right.
     Decl("q_cat_delete_mor", (spark, dir) => {
       val c = cat(spark, dir)

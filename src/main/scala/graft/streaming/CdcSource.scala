@@ -24,10 +24,10 @@ import org.apache.spark.sql.types.StructType
   * checkpoint — and [[SupportsTriggerAvailableNow]] for bounded
   * drains). `MicroBatchExecution` dispatches on the traits before the
   * V1 fallbacks, so both are first-class. This is deliberately NOT a
-  * pure DSv2 `MicroBatchStream`: a CDC batch for a row-level commit is
-  * a Catalyst PLAN (MOR anti-joins, state diffs), which only the V1
+  * pure DSv2 `MicroBatchStream`: a CDC batch is a Catalyst PLAN (COW
+  * state diffs, `compute-updates` windows), which only the V1
   * `getBatch: DataFrame` contract can return — partition-planning
-  * APIs would force materializing those joins to files first. Spark's
+  * APIs would force materializing those shuffles to files first. Spark's
   * own Kafka connector and the Delta Lake source ship exactly this
   * hybrid for the same reason.
   *
@@ -729,24 +729,15 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     sliceRead(meta, unitFiles(meta, seq, SliceOffsets.UnitAdded), from, until, Nil)
 
   /** Delete rows produced by files [from, until) of an over-cap MOR
-    * position-delete commit's ADDED delete-file set (path order) —
-    * the same read [[Changes.between]]'s position-delete fast path
-    * runs ([[Mor.deletedByPositions]]), restricted to the slice's
-    * entries: parent-state rows the slice's (file, pos) entries hit,
-    * minus rows already dead BEFORE the commit, minus rows an EARLIER
-    * slice's entries already delivered (two delete files in one
-    * commit may name the same position; without the earlier-slice
-    * anti-join a duplicated entry would emit twice where the unsplit
-    * batch emits once). Exact and replayable: entries bind to (parent
-    * file, pos) — immutable coordinates of an immutable snapshot. Per
-    * slice this reads only the parent files the slice's entries
-    * reference, and only the parent delete files whose bounds/keys can
-    * touch them, so a trickle of deletes over a 100 TB table stays
-    * O(touched files). The earlier-slice anti-join re-reads earlier
-    * delete ENTRIES (two columns, never parents) — O(drain²·cap)
-    * entries worst case over a whole drain; an entry-to-first-file
-    * index would trade that for a full-unit read per restart, which is
-    * the same total cost paid earlier. */
+    * position-delete commit's ADDED delete-file set (path order): the
+    * [[Mor.removedRows]] read [[Changes.between]] runs for the whole
+    * commit, with the slice's files as the added deletes and EARLIER
+    * slices' files counted as already live — a position two delete
+    * files name is delivered once, by the first slice, as the unsplit
+    * batch delivers it. Exact and replayable: entries bind to (parent
+    * file, pos) of an immutable snapshot. Per slice this opens only
+    * the parent files the slice's entries name, so a trickle of
+    * deletes over a 100 TB table stays O(touched files). */
   private def deletedSlice(meta: TableMeta, seq: Long, from: Int, until: Int): DataFrame = {
     val s = unitSnap(meta, seq)
     val all = unitFiles(meta, seq, SliceOffsets.UnitDeleted)
@@ -762,11 +753,10 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
         val l = prev.map(ops.allFiles).getOrElse(Nil)
         parentFilesMemo = Some((seq, l)); l
     }
-    Mor.deletedByPositions(spark, ops, meta, prevFiles,
-        prev.map(_.deleteFiles).getOrElse(Nil), slice, delivered = all.slice(0, from))
-      .map(_.withColumn("_change_type", lit("delete"))
-        .withColumn("_change_ordinal", lit(1)))
-      .getOrElse(emptyOut)
+    Mor.removedRows(spark, ops, meta, prevFiles,
+        prev.map(_.deleteFiles).getOrElse(Nil) ++ all.slice(0, from), slice)
+      .withColumn("_change_type", lit("delete"))
+      .withColumn("_change_ordinal", lit(1))
   }
 
   // ---- materialized row-level units (opt-in split-row-level) -------

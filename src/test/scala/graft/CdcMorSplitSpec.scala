@@ -1,6 +1,9 @@
 package graft
 
+import graft.TestSpark.TableFiles
+import graft.catalog.GraftTable
 import graft.streaming.CdcOffset
+import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -186,6 +189,35 @@ class CdcMorSplitSpec extends AnyFunSuite {
     assert(run2.intersect(run1).isEmpty, "committed deleted slice replayed after resume")
     assert(run1 ++ run2 == (0L until 30L).toSet,
       s"rows lost across the restart: ${(run1 ++ run2).size}")
+  }
+
+  test("a row two delete files of one commit name is delivered once when the files fall into different slices") {
+    freshWh("tcCdcMsD")
+    spark.sql("CREATE NAMESPACE tcCdcMsD.st")
+    spark.sql("CREATE TABLE tcCdcMsD.st.t (id BIGINT) " +
+      "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    spark.range(0, 60, 1, 6).writeTo("tcCdcMsD.st.t").append()
+    val gt = spark.sessionState.catalogManager.catalog("tcCdcMsD").asInstanceOf[TableCatalog]
+      .loadTable(Identifier.of(Array("st"), "t")).asInstanceOf[GraftTable]
+    val at = gt.positionsById
+    // one commit of two position-delete files, 10 and 9 entries, both
+    // naming id 9: under a 10-row cap they cannot share a slice
+    gt.commitDeletes(Seq((0L to 9L).map(at), (9L to 17L).map(at)))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Int, Long)]()
+    val q = spark.readStream.format("graft-cdc")
+      .option("table", "tcCdcMsD.st.t")
+      .option("start-seq", "1")
+      .option("max-rows-per-trigger", "10")
+      .load()
+      .writeStream.foreachBatch(collector(seen))
+      .outputMode("append").start()
+    try q.processAllAvailable()
+    finally { q.stop(); graft.streaming.Hygiene.unload(q.runId) }
+    import scala.jdk.CollectionConverters._
+    val rows = seen.asScala.toSeq
+    assert(rows.map(_._4).distinct.size == 2, s"batches: ${rows.groupBy(_._4).view.mapValues(_.size).toMap}")
+    assert(rows.forall(r => r._2 == "delete" && r._3 == 1))
+    assert(rows.map(_._1).sorted == (0L to 17L), s"delivered ${rows.map(_._1).sorted}")
   }
 
   test("a mid-drain parent expiry fails loudly: delete slices read against the parent state and cannot re-bind") {

@@ -192,6 +192,34 @@ class JdbcCatalogSpec extends AnyFunSuite {
       Array.empty[String], new java.util.HashMap[String, String]())
   }
 
+  test("renameView into a missing namespace throws NoSuchNamespaceException and changes nothing, in both catalogs") {
+    import scala.jdk.CollectionConverters._
+    for (jdbc <- Seq(false, true)) {
+      val c = if (jdbc) "jvrn" else "hvrn"
+      val wh = s"/tmp/graft_test_$c"
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+      spark.conf.set(s"spark.sql.catalog.$c",
+        if (jdbc) "graft.catalog.JdbcRelativeCatalog" else "graft.catalog.RelativeCatalog")
+      spark.conf.set(s"spark.sql.catalog.$c.warehouse", wh)
+      if (jdbc) spark.conf.set(s"spark.sql.catalog.$c.schema-version", "V1")
+      spark.sql(s"CREATE NAMESPACE $c.v")
+      val cata = spark.sessionState.catalogManager.catalog(c).asInstanceOf[
+        org.apache.spark.sql.connector.catalog.ViewCatalog with
+          org.apache.spark.sql.connector.catalog.SupportsNamespaces]
+      val src = Identifier.of(Array("v"), "src")
+      cata.createView(mkViewInfo(c, src, "SELECT 1 AS one"))
+      def viewFiles = org.apache.commons.io.FileUtils.listFiles(new java.io.File(wh), null, true)
+        .asScala.map(_.getPath).filter(_.endsWith(".view.json")).toSet
+      val before = viewFiles
+      intercept[org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException] {
+        cata.renameView(src, Identifier.of(Array("nope"), "dst"))
+      }
+      assert(cata.loadView(src).query() == "SELECT 1 AS one", c)
+      assert(!cata.namespaceExists(Array("nope")), c)
+      assert(viewFiles == before, c)
+    }
+  }
+
   test("V1 store: view CRUD as catalog rows (create/select/alter/rename/drop)") {
     val wh = s"/tmp/graft_test_jdbc_views"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{GraftTable, MergeOnReadScan, Mor, Writer}
+import graft.catalog.{Changes, GraftTable, MergeOnReadScan, Mor, Writer}
 import graft.meta.RelPaths
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.DataFrame
@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The merge-on-read scan ([[MergeOnReadScan]]): deletes applied inside
   * the scan task, keyed by (`DataFile.path`, parquet row index) — for
-  * table scans, `Mor.liveRows`, and the copy-on-write rewrite scan.
+  * table scans, `Mor.liveRows`, the copy-on-write rewrite scan, and the
+  * change reads' removed rows (`Mor.removedRows`).
   * Checked against rows computed in plain Scala and raw parquet reads;
   * plan shape, planning work and scan metrics are pinned on plan
   * nodes. */
@@ -168,9 +169,10 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     t
   }
 
-  /** `q`'s physical plan, asserting that planning it ran no Spark job,
-    * has no join, and reads through the merge-on-read scan. */
-  private def plannedWithoutJob(q: DataFrame): SparkPlan = {
+  /** `q`, built and planned, asserting that building and planning it
+    * ran no Spark job, and that its physical plan has no join and reads
+    * through the merge-on-read scan. */
+  private def plannedWithoutJob(q: => DataFrame): DataFrame = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -178,15 +180,16 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    val planned = try {
-      val p = q.queryExecution.executedPlan
+    val (df, planned) = try {
+      val df = q
+      val p = df.queryExecution.executedPlan
       org.apache.spark.ListenerBusShim.drain(spark.sparkContext)
-      p
+      (df, p)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get == 0, s"${jobs.get} Spark job(s) ran while planning")
     assert(collectWithSubqueries(planned) { case j: BaseJoinExec => j }.isEmpty)
     assert(scans(planned).map(_.scan).exists(_.isInstanceOf[MergeOnReadScan]))
-    planned
+    df
   }
 
   private def noJoinExecuted(q: DataFrame): Unit =
@@ -302,5 +305,90 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }.failed.toOption.map(e => s"$kind $command: ${e.getMessage.take(300)}")
     } yield failure
     assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
+  /** A merge-on-read table `<cat>.c.t` of four ten-row files (ids
+    * 0..39, one id range per file) whose last commit deleted id 5. */
+  private def fourFiles(cat: String): GraftTable = {
+    hadoopCatalog(cat, s"/tmp/graft_test_$cat")
+    spark.sql(s"CREATE NAMESPACE $cat.c")
+    spark.sql(s"CREATE TABLE $cat.c.t (id BIGINT, v STRING) $morProps")
+    spark.range(0, 40, 1, 4).selectExpr("id", "CONCAT('v', id) AS v").writeTo(s"$cat.c.t").append()
+    spark.sql(s"DELETE FROM $cat.c.t WHERE id = 5")
+    val gt = table(cat, "c", "t")
+    assert(gt.currentFiles.size == 4 && gt.readSnapshot.get.deleteFiles.size == 1)
+    gt
+  }
+
+  /** The change frame of `<cat>.c.t`'s last commit from [[Changes.between]]. */
+  private def lastCommitFrame(cat: String): DataFrame = {
+    val gt = table(cat, "c", "t")
+    val snap = gt.readSnapshot.get
+    val parent = gt.meta.snapshot(snap.parentId.get).get
+    Changes.between(spark, gt.ops, gt.meta, parent.sequenceNumber, snap.sequenceNumber).get
+  }
+
+  /** (id, v, _change_type) of `df`'s rows, sorted. */
+  private def changeRows(df: DataFrame): Seq[(Long, String, String)] =
+    df.select("id", "v", "_change_type").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted
+
+  /** The last commit's change rows of `<cat>.c.t`, read through
+    * `$changes`; `Changes.between` must return the same rows. */
+  private def lastCommitChanges(cat: String): Seq[(Long, String, String)] = {
+    val gt = table(cat, "c", "t")
+    val parent = gt.readSnapshot.get.parentId.get
+    val rows = changeRows(spark.read.option("start-snapshot-id", parent.toString)
+      .table(s"$cat.c.`t$$changes`"))
+    assert(changeRows(lastCommitFrame(cat)) == rows)
+    rows
+  }
+
+  private def deleted(ids: Long*): Seq[(Long, String, String)] =
+    ids.map(id => (id, s"v$id", "delete")).sorted
+
+  test("a MOR position-delete commit's change rows: one merge-on-read scan, no join, no job") {
+    val cat = "tcMosChgPos"
+    fourFiles(cat)
+    spark.sql(s"DELETE FROM $cat.c.t WHERE id IN (3, 12, 33)")
+    assert(lastCommitChanges(cat) == deleted(3, 12, 33))
+    val frame = plannedWithoutJob(lastCommitFrame(cat))
+    assert(changeRows(frame) == deleted(3, 12, 33))
+  }
+
+  test("an equality-delete commit's change rows: one scan of the files its keys may reach, no join, no job") {
+    val cat = "tcMosChgEq"
+    fourFiles(cat)
+    spark.sql(s"ALTER TABLE $cat.c.t SET TBLPROPERTIES ('write.delete.granularity'='equality')")
+    // id 5 is already dead: the commit removes only 12 and 13
+    spark.sql(s"DELETE FROM $cat.c.t WHERE id IN (5, 12, 13)")
+    val gt = table(cat, "c", "t")
+    val snap = gt.readSnapshot.get
+    assert(Changes.addedDeleteFiles(gt.meta.snapshot(snap.parentId.get), snap)
+      .map(Mor.isEquality) == Seq(true))
+    assert(lastCommitChanges(cat) == deleted(12, 13))
+    val frame = plannedWithoutJob(lastCommitFrame(cat))
+    val planned = scans(frame.queryExecution.executedPlan).map(_.scan)
+      .collect { case m: MergeOnReadScan => m.plannedFileCount }
+    // the keys' bounds (5..13) reach two of the four files
+    assert(planned == Seq(2), s"files planned: $planned")
+    assert(changeRows(frame) == deleted(12, 13))
+  }
+
+  test("a row two position-delete files of one commit name is one change row") {
+    val cat = "tcMosChgDup"
+    val gt = fourFiles(cat)
+    val at = gt.positionsById
+    // 5 is already dead; 7 is named by both files
+    gt.commitDeletes(Seq(Seq(at(5L), at(7L), at(21L)), Seq(at(7L), at(22L))))
+    assert(lastCommitChanges(cat) == deleted(7, 21, 22))
+  }
+
+  test("a row a position delete and an equality delete of one commit both kill is one change row") {
+    val cat = "tcMosChgMix"
+    val gt = fourFiles(cat)
+    val at = gt.positionsById
+    gt.commitDeletes(Seq(Seq(at(7L), at(8L))), equalityIds = Seq(8L, 30L))
+    assert(lastCommitChanges(cat) == deleted(7, 8, 30))
   }
 }

@@ -87,7 +87,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
       starSchema(cat, "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
       val t = table(cat, "p", "fact")
       val pinned = new GraftTable("graft", Identifier.of(Array.empty, t.ops.tableLocation),
-        t.ops, t.meta, -1, pinnedFiles = Some((Nil, Nil)))
+        t.ops, t.meta, -1, pinnedFiles = Some((Nil, Nil, Nil)))
       val frame = GraftRelationShim.frame(spark, pinned)
       assert(frame.count() == 0)
       assert(frame.select("_file", "_pos", "m").collect().isEmpty)
