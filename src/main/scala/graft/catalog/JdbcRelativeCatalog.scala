@@ -30,6 +30,9 @@ import scala.jdk.CollectionConverters._
   *  - renameTable is the path catalog's, committing the remapped
   *    metadata as a new version; its commit point is the guarded row
   *    UPDATE that also moves the row's name (ref :247-284)
+  *  - views (V1 stores) run the path catalog's view protocol and name
+  *    guard; only the view commit point differs: a VIEW row INSERT,
+  *    CAS UPDATE or CAS DELETE (ref :476-547)
   *
   * Default store is embedded Derby under the warehouse; any JDBC url
   * works via the `uri` option.
@@ -330,24 +333,6 @@ class JdbcRelativeCatalog extends RelativeCatalog {
       "SELECT 1 FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=?" + tableRowCond,
       name(), nsKey(ident.namespace().toSeq), ident.name())(_ => 1).nonEmpty
 
-  /** A view with the same name blocks table creation in V1 stores
-    * (ref ViewAwareTableBuilder, JdbcRelativeCatalog.java:674-692). */
-  override def createTable(ident: Identifier, schema: org.apache.spark.sql.types.StructType,
-      partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
-      properties: util.Map[String, String]): Table = {
-    if (isV1 && viewExists(ident)) throw new TableAlreadyExistsException(ident)
-    super.createTable(ident, schema, partitions, properties)
-  }
-
-  // same view-clash guard as createTable (a V1 view may hold the name)
-  override def stageCreate(ident: Identifier, schema: org.apache.spark.sql.types.StructType,
-      partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
-      properties: util.Map[String, String])
-      : org.apache.spark.sql.connector.catalog.StagedTable = {
-    if (isV1 && viewExists(ident)) throw new TableAlreadyExistsException(ident)
-    super.stageCreate(ident, schema, partitions, properties)
-  }
-
   override def dropTable(ident: Identifier): Boolean = {
     val n = update(
       "DELETE FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=?" + tableRowCond,
@@ -380,10 +365,7 @@ class JdbcRelativeCatalog extends RelativeCatalog {
     * (refuse to register garbage a reader would then trip over).
     */
   def registerTable(ident: Identifier, metadataLocation: String): GraftTable = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (isV1 && viewExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
+    requireNameFree(ident)
     require(!metadataLocation.startsWith("/") && !metadataLocation.contains(":/"),
       s"metadata location must be warehouse-relative: $metadataLocation")
     // '..' segments would let a path that PASSES the directory-prefix
@@ -415,221 +397,79 @@ class JdbcRelativeCatalog extends RelativeCatalog {
     loadTable(ident).asInstanceOf[GraftTable]
   }
 
-  // ---- views (V1 stores only: rows in graft_tables with
-  // record_type='VIEW', metadata_location pointing at the ViewDef
-  // JSON under the namespace dir — the row is the source of truth for
-  // existence; ref JdbcRelativeCatalog.java:476-547 + JdbcViewOperations).
-  // V0 stores refuse every view operation with a pointer to the
-  // migration switch, exactly like the reference
-  // (VIEW_WARNING_LOG_MESSAGE, ref :52,196-201). -----------------------
+  // ---- views: the shared protocol over VIEW rows -------------------
+  //
+  // V1 stores keep a view as a row in graft_tables with
+  // record_type='VIEW' whose metadata_location (the view's pointer)
+  // names the ViewDef JSON under the namespace dir; the row is the
+  // source of truth for existence (ref JdbcRelativeCatalog.java:476-547
+  // + JdbcViewOperations). RelativeCatalog runs the protocol; this
+  // catalog supplies the row reads and the commit point. V0 stores
+  // refuse every view operation with a pointer to the migration
+  // switch, exactly like the reference (VIEW_WARNING_LOG_MESSAGE,
+  // ref :52,196-201).
 
-  private def requireV1(): Unit =
+  override protected def requireViews(): Unit =
     if (!isV1) throw new UnsupportedOperationException(viewUnsupportedMsg)
 
-  private def viewPointer(ident: Identifier): Option[String] =
+  private val viewRow =
+    "catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW'"
+
+  override protected def viewPointer(ident: Identifier): Option[String] =
     if (!isV1) None
-    else queryList(
-      "SELECT metadata_location FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW'",
+    else queryList(s"SELECT metadata_location FROM graft_tables WHERE $viewRow",
       name(), nsKey(ident.namespace().toSeq), ident.name())(_.getString(1)).headOption
 
-  /** Analyzer hot-path cache, positive AND negative (same contract as
-    * the path catalog's: ResolveGraftViews probes every relation naming
-    * this catalog per fixed-point iteration; uncached that is one DB
-    * round-trip per relation per analysis). DDL never trusts the
-    * cache for its own guards — createView's PK insert and the rename
-    * CAS detect racers at the DB — so a stale negative can only delay
-    * view visibility, never corrupt. */
-  private val viewProbe = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  override protected def viewDef(loc: String): ViewDef =
+    ViewDef.fromJson(Io.readString(graft.meta.RelPaths.absolutize(warehouse, loc)))
 
-  private def viewKey(ident: Identifier): String =
-    nsKey(ident.namespace().toSeq) + "\u0000" + ident.name()
-
-  override def invalidateViewCache(): Unit = viewProbe.clear()
-
-  override def viewExists(ident: Identifier): Boolean =
-    viewProbe.getOrElseUpdate(viewKey(ident), viewPointer(ident).isDefined)
-
-  override def listViews(ns: String*): Array[Identifier] = {
-    requireV1()
+  override protected def viewNames(ns: Seq[String]): Seq[String] =
     queryList(
       "SELECT table_name FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND record_type='VIEW'",
-      name(), nsKey(ns))(rs => Identifier.of(ns.toArray, rs.getString(1))).toArray
-  }
+      name(), nsKey(ns))(_.getString(1))
 
-  override def loadView(ident: Identifier): View = {
-    requireV1()
-    val loc = viewPointer(ident).getOrElse(
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident))
-    new GraftView(ViewDef.fromJson(Io.readString(
-      graft.meta.RelPaths.absolutize(warehouse, loc))))
-  }
+  private def deleteViewFile(loc: String): Unit =
+    Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, loc)): Unit
 
-  /** Write the definition under the namespace dir with a unique
-    * suffix (losing racers must only ever delete their own file) and
-    * return its warehouse-relative path for the catalog row. */
-  private def writeViewDef(ident: Identifier, d: ViewDef): String = {
-    val dir = dirOf(ident.namespace().toSeq)
-    Io.mkdirs(dir)
-    val f =
-      s"$dir/${ident.name()}-${java.util.UUID.randomUUID().toString.take(8)}.view.json"
-    Io.writeString(f, ViewDef.toJson(d))
-    graft.meta.RelPaths.relativize(warehouse, f)
-  }
-
-  override def createView(info: ViewInfo): View = {
-    requireV1()
-    val ident = info.ident()
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    // fresh probe (not the cache); the PK insert below is the real
-    // guard against a racer either way
-    if (viewPointer(ident).isDefined)
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
-    val d = mkViewDef(info)
-    val loc = writeViewDef(ident, d)
-    try update(
-      "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'VIEW')",
-      name(), nsKey(ident.namespace().toSeq), ident.name(), loc)
-    catch { case e: SQLException =>
-      Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, loc))
-      // only an integrity-constraint violation (SQLState class 23,
-      // e.g. Derby 23505) means "a racer won"; any other SQL error
-      // (dropped connection, disk full) must surface as-is and MUST
-      // NOT poison the probe cache with a view that may not exist
-      if (Option(e.getSQLState).exists(_.startsWith("23"))) {
-        viewProbe.put(viewKey(ident), true) // the racer's view exists
-        throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
+  /** The view commit point, the same protocol as table commits: write
+    * the definition to a unique `<name>-<tag>.view.json` (a loser only
+    * ever deletes its OWN file), then move the pointer in one
+    * statement — INSERT for a new name, a CAS UPDATE that may also move
+    * the row (rename), or a CAS DELETE. Zero rows changed, or an
+    * integrity violation (SQLState class 23: a racer's row holds the
+    * name), is a lost race; any other SQL error (dropped connection,
+    * disk full) surfaces as is. The replaced definition file goes once
+    * the pointer has moved off it.
+    */
+  override protected def commitView(from: Identifier, to: Identifier, base: Option[String],
+      next: Option[ViewDef]): Unit = {
+    val newLoc = next.map { d =>
+      val dir = dirOf(to.namespace().toSeq)
+      Io.mkdirs(dir)
+      val f = s"$dir/${to.name()}-${java.util.UUID.randomUUID().toString.take(8)}.view.json"
+      Io.writeString(f, ViewDef.toJson(d))
+      graft.meta.RelPaths.relativize(warehouse, f)
+    }
+    val at = Seq(name(), nsKey(from.namespace().toSeq), from.name())
+    val changed =
+      try (base, newLoc) match {
+        case (None, Some(loc)) => update(
+          "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'VIEW')",
+          name(), nsKey(to.namespace().toSeq), to.name(), loc)
+        case (Some(old), Some(loc)) => update(
+          s"UPDATE graft_tables SET table_namespace=?, table_name=?, metadata_location=?, previous_metadata_location=? WHERE $viewRow AND metadata_location=?",
+          Seq(nsKey(to.namespace().toSeq), to.name(), loc, old) ++ at :+ old: _*)
+        case (Some(old), None) => update(
+          s"DELETE FROM graft_tables WHERE $viewRow AND metadata_location=?", at :+ old: _*)
+        case (None, None) => 1 // no view, nothing to publish
+      } catch {
+        case e: SQLException if Option(e.getSQLState).exists(_.startsWith("23")) => 0
+        case e: Throwable => newLoc.foreach(deleteViewFile); throw e
       }
-      throw e
+    if (changed != 1) {
+      newLoc.foreach(deleteViewFile)
+      throw new CommitFailedException(s"concurrent change to view ${from.name()} (pointer CAS failed)")
     }
-    viewProbe.put(viewKey(ident), true)
-    new GraftView(d)
-  }
-
-  /** Atomic replace via pointer CAS (the same protocol as table
-    * commits): readers resolve either the old or the new definition
-    * file — never a gap, unlike drop+create. A concurrent replace
-    * loses the CAS and throws. */
-  override def replaceView(info: ViewInfo): View = {
-    requireV1()
-    val ident = info.ident()
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    // same guard as createView: the create-new branch below must not
-    // insert a VIEW row into a namespace that doesn't exist (direct
-    // API replace of an absent view, or a drop racing the replace)
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
-    val d = mkViewDef(info)
-    val newLoc = writeViewDef(ident, d)
-    // Any error escaping the CAS below — UPDATE branch included — must
-    // first delete the just-written definition file: no row will ever
-    // point to it, so leaving it behind is a permanent orphan
-    val done = try viewPointer(ident) match {
-      case Some(oldLoc) =>
-        val n = update(
-          "UPDATE graft_tables SET metadata_location=?, previous_metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW' AND metadata_location=?",
-          newLoc, oldLoc, name(), nsKey(ident.namespace().toSeq), ident.name(), oldLoc)
-        if (n == 1) Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, oldLoc))
-        n == 1
-      case None =>
-        try {
-          update(
-            "INSERT INTO graft_tables (catalog_name, table_namespace, table_name, metadata_location, previous_metadata_location, record_type) VALUES (?,?,?,?,NULL,'VIEW')",
-            name(), nsKey(ident.namespace().toSeq), ident.name(), newLoc)
-          true
-        } catch { case e: SQLException
-            // PK violation = lost the race (cleanup happens in the
-            // !done branch below); anything else rides the outer catch
-            if Option(e.getSQLState).exists(_.startsWith("23")) => false
-        }
-    } catch { case e: Throwable =>
-      Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, newLoc))
-      throw e
-    }
-    if (!done) {
-      Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, newLoc))
-      throw new CommitFailedException(
-        s"concurrent replace of view ${ident.name()} (pointer CAS failed)")
-    }
-    viewProbe.put(viewKey(ident), true)
-    new GraftView(d)
-  }
-
-  override def alterView(ident: Identifier, changes: ViewChange*): View = {
-    requireV1()
-    val oldLoc = viewPointer(ident).getOrElse(
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident))
-    val d0 = ViewDef.fromJson(Io.readString(
-      graft.meta.RelPaths.absolutize(warehouse, oldLoc)))
-    val d = changes.foldLeft(d0) {
-      case (d, sp: ViewChange.SetProperty) =>
-        d.copy(properties = d.properties + (sp.property() -> sp.value()))
-      case (d, rp: ViewChange.RemoveProperty) =>
-        d.copy(properties = d.properties - rp.property())
-      case (d, _) => d
-    }
-    val newLoc = writeViewDef(ident, d)
-    // pointer CAS, same protocol as table commits: the loser's file is
-    // removed and the caller retries on fresh state
-    val n = update(
-      "UPDATE graft_tables SET metadata_location=?, previous_metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW' AND metadata_location=?",
-      newLoc, oldLoc, name(), nsKey(ident.namespace().toSeq), ident.name(), oldLoc)
-    if (n != 1) {
-      Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, newLoc))
-      throw new CommitFailedException(
-        s"concurrent update to view ${ident.name()} (pointer CAS failed)")
-    }
-    Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, oldLoc))
-    new GraftView(d)
-  }
-
-  override def dropView(ident: Identifier): Boolean = {
-    requireV1()
-    viewPointer(ident) match {
-      case None =>
-        viewProbe.put(viewKey(ident), false)
-        false
-      case Some(loc) =>
-        val n = update(
-          "DELETE FROM graft_tables WHERE catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW'",
-          name(), nsKey(ident.namespace().toSeq), ident.name())
-        if (n == 1)
-          Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, loc))
-        viewProbe.put(viewKey(ident), false)
-        n == 1
-    }
-  }
-
-  override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
-    requireV1()
-    val newIdent = unqualified(rawNewIdent)
-    if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
-      throw new NoSuchNamespaceException(newIdent.namespace())
-    val oldLoc = viewPointer(oldIdent).getOrElse(
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent))
-    if (viewPointer(newIdent).isDefined || tableExists(newIdent))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(newIdent)
-    val d = ViewDef.fromJson(Io.readString(
-      graft.meta.RelPaths.absolutize(warehouse, oldLoc)))
-    val newLoc = writeViewDef(newIdent, d.copy(name = newIdent.name()))
-    try {
-      val n = update(
-        "UPDATE graft_tables SET table_namespace=?, table_name=?, metadata_location=? WHERE catalog_name=? AND table_namespace=? AND table_name=? AND record_type='VIEW' AND metadata_location=?",
-        nsKey(newIdent.namespace().toSeq), newIdent.name(), newLoc,
-        name(), nsKey(oldIdent.namespace().toSeq), oldIdent.name(), oldLoc)
-      if (n != 1) {
-        Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, newLoc))
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent)
-      }
-      Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, oldLoc))
-      viewProbe.put(viewKey(newIdent), true)
-      viewProbe.put(viewKey(oldIdent), false)
-    } catch {
-      case _: SQLException => // PK violation: target appeared concurrently
-        Io.deleteIfExists(graft.meta.RelPaths.absolutize(warehouse, newLoc))
-        viewProbe.put(viewKey(newIdent), true)
-        throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(newIdent)
-    }
+    base.foreach(deleteViewFile)
   }
 }

@@ -3,7 +3,7 @@ package graft.catalog
 import graft.meta._
 import java.util
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NonEmptyNamespaceException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, NoSuchViewException, NonEmptyNamespaceException, TableAlreadyExistsException, ViewAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types._
@@ -179,9 +179,8 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     val empty = Io.listNames(d).isEmpty
     if (!empty && !cascade) throw new NonEmptyNamespaceException(ns)
     Io.deleteRecursiveChecked(d)
-    // cascade may have removed view files under d: drop their cached
-    // positives (negatives under d stay valid)
-    viewProbe.filterInPlace((k, _) => !k.startsWith(s"$d/"))
+    // cascade may have removed views in ns or below: forget them
+    viewProbe.filterInPlace((k, _) => !k._1.startsWith(ns.toSeq))
     true
   }
 
@@ -243,7 +242,7 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    requireNameFree(ident)
     val meta = buildMeta(ident, schema, partitions, properties, base = None)
     val ops = opsFor(ident)
     ops.commit(0, meta)
@@ -267,8 +266,6 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     require(!props.contains("location"),
       "custom table locations are not supported: the table path is always " +
         "<warehouse>/<namespace…>/<table> so metadata stays relocatable")
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
 
     val schemaDef = TableMeta.schemaFromSpark(schema,
         firstId = base.map(_.lastColumnId + 1).getOrElse(1))
@@ -357,7 +354,7 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
   override def stageCreate(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String])
       : org.apache.spark.sql.connector.catalog.StagedTable = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    requireNameFree(ident)
     new GraftStagedTable(catName, ident, opsFor(ident),
       buildMeta(ident, schema, partitions, properties, base = None), base = None)
   }
@@ -489,10 +486,8 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     val from = dirOf(oldIdent.namespace().toSeq :+ oldIdent.name())
     val to = dirOf(newIdent.namespace().toSeq :+ newIdent.name())
     if (!tableExists(oldIdent)) throw new NoSuchTableException(oldIdent)
-    if (Io.exists(to) || tableExists(newIdent) || viewExists(newIdent))
-      throw new TableAlreadyExistsException(newIdent)
-    if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
-      throw new NoSuchNamespaceException(newIdent.namespace())
+    if (Io.exists(to)) throw new TableAlreadyExistsException(newIdent)
+    requireNameFree(newIdent)
     val (v, meta) = opsFor(oldIdent).refresh()
       .getOrElse(throw new NoSuchTableException(oldIdent))
     Io.mkdirs(to.substring(0, to.lastIndexOf('/')))
@@ -548,9 +543,7 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     * — copies that must outlive it should CTAS (own files) instead.
     */
   def snapshotTable(src: Identifier, dest: Identifier): GraftTable = {
-    if (tableExists(dest)) throw new TableAlreadyExistsException(dest)
-    if (dest.namespace().nonEmpty && !namespaceExists(dest.namespace()))
-      throw new NoSuchNamespaceException(dest.namespace())
+    requireNameFree(dest)
     val s = loadTable(src).asInstanceOf[GraftTable]
     val (_, sm) = s.ops.refresh().getOrElse(throw new NoSuchTableException(src))
     val cur = sm.currentSnapshot
@@ -582,52 +575,162 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     loadTable(dest).asInstanceOf[GraftTable]
   }
 
-  // ---- views (C10, path-based analog of the JDBC catalog's view
-  // records, JdbcRelativeCatalog.java:157-201,476-547) ---------------
+  // ---- views (C10): one protocol, two commit points -----------------
+  //
+  // Both catalogs run the view protocol below: the name guard, the
+  // definition built from a ViewInfo, the ViewChange property fold, the
+  // rename order, NoSuchViewException for a missing view and the
+  // analyzer's probe cache. A catalog supplies only storage: a view's
+  // current pointer ([[viewPointer]]), the definition it names, the view
+  // names of a namespace, and the view commit point ([[commitView]]).
+  // Here a view is `<ns…>/<name>.view.json` and its pointer is that
+  // file's text; the JDBC catalog keeps a VIEW row whose pointer names
+  // a unique definition file (ref JdbcRelativeCatalog.java:157-201,
+  // 476-547).
 
   private def viewFile(ident: Identifier): String =
     s"${dirOf(ident.namespace().toSeq)}/${ident.name()}.view.json"
+
+  /** The pointer of the view named `ident`, None when no view holds the
+    * name. The commit point fails when it moved since the caller read
+    * it. Here: the definition file's text. */
+  protected def viewPointer(ident: Identifier): Option[String] =
+    try Some(Io.readString(viewFile(ident)))
+    catch { case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException => None }
+
+  /** The definition a pointer names. */
+  protected def viewDef(pointer: String): ViewDef = ViewDef.fromJson(pointer)
+
+  protected def viewNames(ns: Seq[String]): Seq[String] =
+    Io.listNames(dirOf(ns)).filter(_.endsWith(".view.json")).map(_.stripSuffix(".view.json"))
+
+  /** Refuses every view operation but [[viewExists]] on a store that
+    * holds no views (the JDBC V0 store). */
+  protected def requireViews(): Unit = ()
+
+  private lazy val viewLock: CommitLock = CommitLock.from(warehouse, catalogProps)
+
+  /** The view commit point: publish `next` under `to` (None drops the
+    * view) in place of the view `from` whose pointer the caller read as
+    * `base` (None: no view held `from`), or throw CommitFailedException
+    * when `from`'s pointer moved or `to` became taken. Here it is the
+    * double guard of [[TableOps]]'s commit point: under the catalog's
+    * CommitLock (one entity per warehouse, so a rename's two names are
+    * covered; same-JVM writers queue on a monitor first, since a file
+    * lock refuses a second holder in one JVM) it re-reads the pointers,
+    * then moves a temp file onto `<name>.view.json` — no-replace for a
+    * new name. An object-store warehouse writes the file with one PUT
+    * instead, which is atomic there. The lock file sits at the
+    * warehouse root, and the temp file never outlives the commit, so a
+    * namespace directory holds only its views and tables.
+    */
+  protected def commitView(from: Identifier, to: Identifier, base: Option[String],
+      next: Option[ViewDef]): Unit = RelativeCatalog.viewCommits.synchronized {
+    val (entity, owner) = (s"${warehouse.stripSuffix("/")}/.views", java.util.UUID.randomUUID().toString)
+    if (!viewLock.acquire(entity, owner))
+      throw new CommitFailedException(s"failed to acquire the view commit lock on $entity")
+    try {
+      val (src, dst) = (viewFile(from), viewFile(to))
+      if (viewPointer(from) != base || (src != dst && viewPointer(to).isDefined))
+        throw new CommitFailedException(s"concurrent change to view ${from.name()}")
+      next.foreach { d =>
+        if (Io.hasScheme(dst)) Io.writeString(dst, ViewDef.toJson(d))
+        else {
+          val tmp = s"${dirOf(to.namespace().toSeq)}/.${to.name()}.$owner.tmp"
+          Io.writeString(tmp, ViewDef.toJson(d))
+          val moved =
+            try if (src == dst && base.isDefined) { Io.renameReplace(tmp, dst); true }
+              else Io.renameNoReplace(tmp, dst)
+            finally { Io.deleteIfExists(tmp); () }
+          if (!moved) throw new CommitFailedException(s"view ${to.name()} already exists")
+        }
+      }
+      if (next.isEmpty || src != dst) Io.deleteIfExists(src): Unit
+    } finally { viewLock.release(entity, owner); () }
+  }
 
   /** Analyzer hot-path cache for view existence, positive AND negative.
     *
     * ResolveGraftViews probes every 2/3-part relation naming this
     * catalog, per fixed-point iteration, per analysis — and streaming
-    * re-analyzes each micro-batch. Uncached, each probe is a file-
-    * exists call: noise on posix, a HEAD request per relation per
-    * batch on an object store. DDL through THIS catalog instance
-    * invalidates (create/drop/rename/dropNamespace); DDL paths
-    * themselves always probe the filesystem, so cross-writer clashes
-    * are still detected exactly. A view created by a DIFFERENT writer
+    * re-analyzes each micro-batch. Uncached, each probe is a file read
+    * or a DB round-trip: a GET request per relation per batch on an
+    * object store. View commits through THIS catalog instance update
+    * it; DDL guards always read the store, so cross-writer clashes are
+    * still detected exactly. A view created by a DIFFERENT writer
     * becomes visible to cached readers after [[invalidateViewCache]]
     * (or a fresh catalog), matching Spark's own relation-cache
     * semantics for tables.
     */
-  private val viewProbe = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  private val viewProbe = scala.collection.concurrent.TrieMap.empty[(Seq[String], String), Boolean]
 
-  /** Cache misses = filesystem probes actually issued (test hook: the
+  /** Cache misses = store probes actually issued (test hook: the
     * analyzer must not re-probe a known non-view per analysis). */
   private[graft] val viewProbeMisses = new java.util.concurrent.atomic.AtomicLong
 
+  private def probeKey(ident: Identifier) = (ident.namespace().toSeq, ident.name())
+
   def invalidateViewCache(): Unit = viewProbe.clear()
 
+  /** The one name guard: no table or view holds `ident`, and its
+    * namespace exists. A table and a view never share a name — the
+    * reference's JDBC catalog guards the clash both ways
+    * (JdbcRelativeCatalog.java:674-691). Fresh probes, never the cache:
+    * another writer's view must be seen. A view operation meeting a
+    * view throws ViewAlreadyExistsException; every other clash
+    * TableAlreadyExistsException.
+    */
+  protected def requireNameFree(ident: Identifier, view: Boolean = false): Unit = {
+    val viewHeld = viewPointer(ident).isDefined
+    if (view && viewHeld) throw new ViewAlreadyExistsException(ident)
+    if (viewHeld || tableExists(ident)) throw new TableAlreadyExistsException(ident)
+    requireNamespace(ident)
+  }
+
+  private def requireNamespace(ident: Identifier): Unit =
+    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
+      throw new NoSuchNamespaceException(ident.namespace())
+
+  /** Run the commit point and keep the probe cache in step with it. */
+  private def publishView(from: Identifier, to: Identifier, base: Option[String],
+      next: Option[ViewDef]): Unit = {
+    try commitView(from, to, base, next)
+    catch {
+      case e: Throwable =>
+        viewProbe.remove(probeKey(from)); viewProbe.remove(probeKey(to))
+        throw e
+    }
+    viewProbe.put(probeKey(from), false)
+    viewProbe.put(probeKey(to), next.isDefined)
+  }
+
+  /** The view's pointer and definition, read fresh. A definition file
+    * that vanished because a racer's commit moved the pointer off it is
+    * read again at the new pointer. */
+  @annotation.tailrec
+  private def currentView(ident: Identifier): (String, ViewDef) = {
+    requireViews()
+    val p = viewPointer(ident).getOrElse(throw new NoSuchViewException(ident))
+    Try(viewDef(p)) match {
+      case scala.util.Success(d) => (p, d)
+      case scala.util.Failure(_: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException)
+          if !viewPointer(ident).contains(p) => currentView(ident)
+      case scala.util.Failure(e) => throw e
+    }
+  }
+
   override def listViews(ns: String*): Array[Identifier] = {
-    val d = dirOf(ns)
-    Io.listNames(d).filter(_.endsWith(".view.json"))
-      .map(n => Identifier.of(ns.toArray, n.stripSuffix(".view.json"))).toArray
+    requireViews()
+    viewNames(ns).map(Identifier.of(ns.toArray, _)).toArray
   }
 
-  override def viewExists(ident: Identifier): Boolean = {
-    val f = viewFile(ident)
-    viewProbe.getOrElseUpdate(f, { viewProbeMisses.incrementAndGet(); Io.exists(f) })
-  }
+  override def viewExists(ident: Identifier): Boolean =
+    viewProbe.getOrElseUpdate(probeKey(ident),
+      { viewProbeMisses.incrementAndGet(); viewPointer(ident).isDefined })
 
-  override def loadView(ident: Identifier): View = {
-    if (!viewExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident)
-    new GraftView(ViewDef.fromJson(Io.readString(viewFile(ident))))
-  }
+  override def loadView(ident: Identifier): View = new GraftView(currentView(ident)._2)
 
-  protected def mkViewDef(info: ViewInfo): ViewDef =
+  private def mkViewDef(info: ViewInfo): ViewDef =
     ViewDef(info.ident().name(), info.sql(), info.currentCatalog(),
       info.currentNamespace().toList, info.schema().json,
       info.queryColumnNames().toList, info.columnAliases().toList,
@@ -635,49 +738,28 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
       info.properties().asScala.toMap)
 
   override def createView(info: ViewInfo): View = {
-    val ident = info.ident()
-    // a table with the same name wins — the reference's JDBC catalog
-    // guards this clash both ways (JdbcRelativeCatalog.java:674-691)
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    // fresh probe, not the cache: a clash with another writer's view
-    // must throw even if this instance cached a negative
-    if (Io.exists(viewFile(ident)))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
+    requireViews()
+    requireNameFree(info.ident(), view = true)
     val d = mkViewDef(info)
-    Io.writeString(viewFile(ident), ViewDef.toJson(d))
-    viewProbe.put(viewFile(ident), true)
+    publishView(info.ident(), info.ident(), None, Some(d))
     new GraftView(d)
   }
 
   /** Atomic create-or-replace (the CREATE OR REPLACE VIEW / ALTER VIEW
     * AS path): readers see the old or the new definition, never a torn
-    * file and never a missing view — unlike drop+create. Posix swaps a
-    * temp file in with ATOMIC_MOVE; on an object-store warehouse the
-    * single PUT is already atomic. */
+    * file and never a missing view — unlike drop+create. */
   def replaceView(info: ViewInfo): View = {
     val ident = info.ident()
+    requireViews()
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))
-      throw new NoSuchNamespaceException(ident.namespace())
+    requireNamespace(ident)
     val d = mkViewDef(info)
-    val f = viewFile(ident)
-    if (Io.hasScheme(f)) Io.writeString(f, ViewDef.toJson(d))
-    else {
-      val tmp = s"$f.${java.util.UUID.randomUUID().toString.take(8)}.tmp"
-      Io.writeString(tmp, ViewDef.toJson(d))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(f),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    viewProbe.put(f, true)
+    publishView(ident, ident, viewPointer(ident), Some(d))
     new GraftView(d)
   }
 
   override def alterView(ident: Identifier, changes: ViewChange*): View = {
-    val d0 = ViewDef.fromJson(Io.readString(viewFile(ident)))
+    val (p, d0) = currentView(ident)
     val d = changes.foldLeft(d0) {
       case (d, sp: ViewChange.SetProperty) =>
         d.copy(properties = d.properties + (sp.property() -> sp.value()))
@@ -685,30 +767,23 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
         d.copy(properties = d.properties - rp.property())
       case (d, _) => d
     }
-    Io.writeString(viewFile(ident), ViewDef.toJson(d))
+    publishView(ident, ident, Some(p), Some(d))
     new GraftView(d)
   }
 
   override def dropView(ident: Identifier): Boolean = {
-    val dropped = Io.deleteIfExists(viewFile(ident))
-    viewProbe.put(viewFile(ident), false)
-    dropped
+    requireViews()
+    val base = viewPointer(ident)
+    if (base.isEmpty) viewProbe.put(probeKey(ident), false)
+    else publishView(ident, ident, base, None)
+    base.isDefined
   }
 
   override def renameView(oldIdent: Identifier, rawNewIdent: Identifier): Unit = {
     val newIdent = unqualified(rawNewIdent)
-    if (newIdent.namespace().nonEmpty && !namespaceExists(newIdent.namespace()))
-      throw new NoSuchNamespaceException(newIdent.namespace())
-    // fresh probes on both sides — see createView
-    if (!Io.exists(viewFile(oldIdent)))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(oldIdent)
-    if (Io.exists(viewFile(newIdent)) || tableExists(newIdent))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(newIdent)
-    val d = ViewDef.fromJson(Io.readString(viewFile(oldIdent)))
-    Io.writeString(viewFile(newIdent), ViewDef.toJson(d.copy(name = newIdent.name())))
-    Io.deleteIfExists(viewFile(oldIdent)): Unit
-    viewProbe.put(viewFile(newIdent), true)
-    viewProbe.put(viewFile(oldIdent), false)
+    val (p, d) = currentView(oldIdent)
+    requireNameFree(newIdent, view = true)
+    publishView(oldIdent, newIdent, Some(p), Some(d.copy(name = newIdent.name())))
   }
 
   // ---- metadata tables --------------------------------------------
@@ -859,6 +934,9 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
 
 object RelativeCatalog {
   import org.apache.spark.sql.types._
+
+  /** Same-JVM view committers queue here before taking the commit lock. */
+  private[catalog] val viewCommits = new Object
 
   /** Iceberg-safe widening promotions: every old value is exactly
     * representable in the new type, so old files read unchanged. */

@@ -130,23 +130,40 @@ class ViewDdlSpec extends AnyFunSuite {
     spark.sql("DROP VIEW tcVD.v.dsc")
   }
 
+  /** A JDBC catalog over a V1 store, with the same `v.base` table. */
+  private lazy val jdbcCatalog = {
+    val wh = "/tmp/graft_test_vddl_jdbc"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+    spark.conf.set("spark.sql.catalog.tcVDj", "graft.catalog.JdbcRelativeCatalog")
+    spark.conf.set("spark.sql.catalog.tcVDj.warehouse", wh)
+    spark.conf.set("spark.sql.catalog.tcVDj.schema-version", "V1")
+    spark.sql("CREATE NAMESPACE tcVDj.v")
+    spark.sql("CREATE TABLE tcVDj.v.base (id BIGINT, grp STRING)")
+    spark.sql("INSERT INTO tcVDj.v.base SELECT id, CAST(id % 3 AS STRING) FROM range(0, 30)")
+    "tcVDj"
+  }
+
   test("analyzer does not re-probe the filesystem for a known non-view relation") {
-    // first analysis may miss once (negative cached); every subsequent
-    // analysis of the same table reference must issue ZERO probes —
-    // on an object-store warehouse each miss is a HEAD request, paid
-    // per relation per micro-batch by streaming re-analysis
-    spark.sql("SELECT * FROM tcVD.v.base WHERE id < 3").collect()
-    val before = cat.viewProbeMisses.get()
-    (1 to 5).foreach { _ =>
-      spark.sql("SELECT * FROM tcVD.v.base WHERE id < 3").queryExecution.analyzed
+    for (c <- Seq("tcVD", jdbcCatalog)) {
+      val cat = spark.sessionState.catalogManager.catalog(c)
+        .asInstanceOf[graft.catalog.RelativeCatalog]
+      // first analysis may miss once (negative cached); every subsequent
+      // analysis of the same table reference must issue ZERO probes —
+      // on an object-store warehouse each miss is a HEAD request, paid
+      // per relation per micro-batch by streaming re-analysis
+      spark.sql(s"SELECT * FROM $c.v.base WHERE id < 3").collect()
+      val before = cat.viewProbeMisses.get()
+      (1 to 5).foreach { _ =>
+        spark.sql(s"SELECT * FROM $c.v.base WHERE id < 3").queryExecution.analyzed
+      }
+      assert(cat.viewProbeMisses.get() == before,
+        s"$c: repeated analysis of a non-view relation re-probed the store")
+      // and a view created AFTER a cached negative through this catalog
+      // instance is still immediately visible (create invalidates)
+      spark.sql("SELECT 1").collect()
+      intercept[Exception] { spark.table(s"$c.v.later_view") }
+      spark.sql(s"CREATE VIEW $c.v.later_view AS SELECT 5 AS x")
+      assert(spark.sql(s"SELECT x FROM $c.v.later_view").collect().head.getInt(0) == 5)
     }
-    assert(cat.viewProbeMisses.get() == before,
-      "repeated analysis of a non-view relation re-probed the filesystem")
-    // and a view created AFTER a cached negative through this catalog
-    // instance is still immediately visible (create invalidates)
-    spark.sql("SELECT 1").collect()
-    intercept[Exception] { spark.table("tcVD.v.later_view") }
-    spark.sql("CREATE VIEW tcVD.v.later_view AS SELECT 5 AS x")
-    assert(spark.sql("SELECT x FROM tcVD.v.later_view").collect().head.getInt(0) == 5)
   }
 }
