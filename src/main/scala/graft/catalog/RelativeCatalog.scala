@@ -626,7 +626,8 @@ class RelativeCatalog extends TableCatalog with SupportsNamespaces with ViewCata
     */
   protected def commitView(from: Identifier, to: Identifier, base: Option[String],
       next: Option[ViewDef]): Unit = RelativeCatalog.viewCommits.synchronized {
-    val (entity, owner) = (s"${warehouse.stripSuffix("/")}/.views", java.util.UUID.randomUUID().toString)
+    val entity = s"${warehouse.stripSuffix("/")}/.views"
+    val owner = java.util.UUID.randomUUID().toString
     if (!viewLock.acquire(entity, owner))
       throw new CommitFailedException(s"failed to acquire the view commit lock on $entity")
     try {
