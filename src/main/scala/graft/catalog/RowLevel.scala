@@ -375,7 +375,7 @@ class GraftDataWriterFactory(dir: String, spec: FileSpec) extends DataWriterFact
 class GraftDataWriter(dir: String, prefix: String, spec: FileSpec)
   extends DataWriter[InternalRow] {
 
-  private val conf = spec.conf.value
+  private val conf = spec.conf.value.value
   private var fileSeq = 0
   private var writer: ParquetWriter[InternalRow] = _
   private var curPath: String = _
@@ -395,17 +395,7 @@ class GraftDataWriter(dir: String, prefix: String, spec: FileSpec)
     val builder = new B(new Path(curPath))
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.ZSTD)
-    // ParquetWriter.Builder ignores ParquetOutputFormat's per-column
-    // conf keys — translate `parquet.bloom.filter.enabled#col`
-    // (stamped by Writer.writerHadoopConf from the table property)
-    // into the explicit builder calls
-    import scala.jdk.CollectionConverters._
-    val bloomPrefix = "parquet.bloom.filter.enabled#"
-    conf.asScala.foreach { e =>
-      if (e.getKey.startsWith(bloomPrefix))
-        builder.withBloomFilterEnabled(
-          e.getKey.substring(bloomPrefix.length), e.getValue.toBoolean): Unit
-    }
+    spec.bloomCols.foreach(c => builder.withBloomFilterEnabled(c, true): Unit)
     writer = builder.build()
     opened += curPath
   }

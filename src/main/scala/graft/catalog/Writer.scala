@@ -1,6 +1,7 @@
 package graft.catalog
 
 import graft.meta._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -235,12 +236,10 @@ object Writer {
     * ParquetFileFormat.prepareWrite would install).
     */
   def writerHadoopConf(spark: org.apache.spark.sql.SparkSession,
-      schema: StructType,
-      bloomCols: Seq[String] = Nil): org.apache.hadoop.conf.Configuration = {
+      schema: StructType): org.apache.hadoop.conf.Configuration = {
     val conf = spark.sessionState.newHadoopConf()
     org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
       .setSchema(schema, conf)
-    bloomCols.foreach(c => conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
     conf.set("spark.sql.parquet.writeLegacyFormat", "false")
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     conf.set("spark.sql.parquet.binaryAsString", "false")
@@ -269,18 +268,29 @@ object Writer {
       metaByName.get(f.name).map(m => f.copy(metadata = m)).getOrElse(f)))
   }
 
-  private def confFor(schema: StructType, bloomCols: Seq[String] = Nil) =
-    new org.apache.spark.util.SerializableConfiguration(writerHadoopConf(
-      org.apache.spark.sql.SparkSession.active, schema, bloomCols))
+  /** The session's Hadoop conf (1k+ entries, ~100 KB serialized)
+    * broadcast ONCE per write spec: tasks carry the small broadcast
+    * handle and each executor fetches and deserializes the conf once,
+    * instead of every task deserializing it from its closure (Spark's
+    * parquet scans ship their conf the same way). The ContextCleaner
+    * reclaims it once the spec is unreachable. */
+  def broadcastConf(conf: org.apache.hadoop.conf.Configuration)
+      : Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(conf))
+
+  private def confFor(schema: StructType) =
+    broadcastConf(writerHadoopConf(org.apache.spark.sql.SparkSession.active, schema))
 
   /** The data-file spec of every table write: the table's target file
     * size, bloom columns and partition names. `schema` must already
     * carry the field ids. */
   def fileSpec(meta: TableMeta, warehouse: String, schema: StructType,
       keys: Seq[KeySpec] = Nil, dataLeading: Boolean = false): FileSpec =
-    FileSpec(schema, confFor(schema, bloomColumns(meta)), warehouse,
+    FileSpec(schema, confFor(schema), warehouse,
       keys = keys, partitionNames = meta.spec.fields.map(_.name),
-      targetBytes = targetFileSize(meta), dataLeading = dataLeading)
+      targetBytes = targetFileSize(meta), dataLeading = dataLeading,
+      bloomCols = bloomColumns(meta))
 
   /** [[fileSpec]] for a DSv2 writer: ids re-stamped onto the plan's row
     * schema, rolling on the transform-aware partition keys. */
@@ -323,11 +333,11 @@ object Writer {
       // partition order, so the DataFile list is identical to the
       // driver pool's (spec-pinned)
       val spark = org.apache.spark.sql.SparkSession.active
-      val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+      val bConf = broadcastConf(conf)
       val parts = math.max(1, math.min(files.size / 256 + 1,
         spark.sparkContext.defaultParallelism * 4))
       spark.sparkContext.parallelize(files, parts)
-        .map(p => statsOfFile(p, schema, warehouse, serConf.value))
+        .map(p => statsOfFile(p, schema, warehouse, bConf.value.value))
         .collect().toList
     } else {
       // footer reads are independent and IO-bound: a 10k-file import
@@ -682,24 +692,26 @@ object Writer {
 
 /** How a [[GraftDataWriter]] writes one kind of table file and
   * describes it: the written `schema` (field ids stamped; its columns
-  * get bounds) and its Hadoop `conf`, the `warehouse` entries are
-  * relative to, the roll keys addressed from the END of each incoming
-  * record (see [[KeySpec]]) and the partition names their values
-  * stamp, the target file size, whether the data columns LEAD the
-  * record (else they trail rewrite-internal ones), the columns whose
-  * bounds stay full length, and — for equality-delete files — the
-  * key field ids.
+  * get bounds) and its broadcast Hadoop `conf` ([[Writer.broadcastConf]]),
+  * the `warehouse` entries are relative to, the roll keys addressed
+  * from the END of each incoming record (see [[KeySpec]]) and the
+  * partition names their values stamp, the target file size, whether
+  * the data columns LEAD the record (else they trail rewrite-internal
+  * ones), the columns whose bounds stay full length, for
+  * equality-delete files the key field ids, and the columns that get
+  * a parquet bloom filter.
   */
 case class FileSpec(
     schema: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: Broadcast[org.apache.spark.util.SerializableConfiguration],
     warehouse: String,
     keys: Seq[KeySpec] = Nil,
     partitionNames: Seq[String] = Nil,
     targetBytes: Long = Long.MaxValue,
     dataLeading: Boolean = false,
     exactBoundCols: Set[String] = Set.empty,
-    equalityIds: Option[List[Int]] = None)
+    equalityIds: Option[List[Int]] = None,
+    bloomCols: Seq[String] = Nil)
 
 /** The staging directory `<table>/<kind>/<uuid>` of one write. Its
   * files stay in place when the commit lands — metadata just starts

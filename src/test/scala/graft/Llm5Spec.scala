@@ -206,6 +206,22 @@ class Llm5Spec extends AnyFunSuite {
       s"expected one cluster of the $cap at-cap docs, got ${out.toSeq}")
   }
 
+  test("dupClusters counts doc frequency over real doc ids: null-doc_id rows never count") {
+    import spark.implicits._
+    // one gram in exactly `cap` real docs (df = cap: they cluster) and
+    // in two null-doc_id rows. Counted, the nulls (one row after the
+    // distinct) would push df to cap + 1 and drop every edge; the
+    // null rows themselves never join a cluster.
+    val cap = ops.LlmOps5.MaxGramDf
+    val gram = (0 until 12).map(i => s"nd$i").mkString(" ")
+    val real = (0 until cap).map(i => (Option(i.toLong), s"$gram ${uniqueText(i)}"))
+    val nulls = Seq(2000, 2001).map(i => (Option.empty[Long], s"$gram ${uniqueText(i)}"))
+    val out = ops.LlmOps5.dupClusters((real ++ nulls).toDF("doc_id", "text")).collect()
+    assert(out.length == 1 && out(0).getLong(0) == 0L && out(0).getLong(1) == cap.toLong &&
+      out(0).getLong(2) == cap - 1L,
+      s"expected one cluster of the $cap real docs, got ${out.toSeq}")
+  }
+
   test("dupClusters fails loudly when the round budget can't reach the fixpoint") {
     import spark.implicits._
     // a 6-doc chain (diameter 5) via consecutive rare grams: doc i and
@@ -248,13 +264,23 @@ class Llm5Spec extends AnyFunSuite {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("Window"),
       s"df gate must not buffer gm buckets in a window:\n${plan.take(3000)}")
-    // both branches' dedup exchanges must canonicalize identically for
-    // stage reuse: same keys, same order, same filters
-    val dedupExchanges = plan.linesIterator
-      .filter(l => l.contains("hashpartitioning(gm") && l.contains("doc_id"))
-      .map(_.replaceAll("#\\d+L?", "").replaceAll("plan_id=\\d+", "")).toSeq
-    assert(dedupExchanges.nonEmpty && dedupExchanges.distinct.size == 1,
-      s"dedup exchanges must canonicalize identically for stage reuse:\n$dedupExchanges")
+    // both branches' dedup exchanges — the (gm, doc_id) shuffles of the
+    // distinct — must canonicalize identically for stage reuse: same
+    // keys, same order, same filters, the same subtree below
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dedupExchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(e.queryExecution.executedPlan) {
+        case x: ShuffleExchangeExec if (x.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.collect { case a: AttributeReference => a.name }.toSet == Set("gm", "doc_id")
+          case _ => false
+        }) => x
+      }
+    assert(dedupExchanges.size >= 2 && dedupExchanges.map(_.canonicalized).distinct.size == 1,
+      s"dedup exchanges must canonicalize identically for stage reuse:\n" +
+        dedupExchanges.map(_.canonicalized.treeString).mkString("\n"))
     // the mega-gram makes no edges at all
     assert(e.count() == 0L)
   }

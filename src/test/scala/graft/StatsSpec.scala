@@ -131,9 +131,8 @@ class StatsSpec extends AnyFunSuite {
 
     // the same rows through the table writer: the entries it reports
     // from the footers it just wrote equal a re-read of those footers
-    def spec(s: org.apache.spark.sql.types.StructType) = FileSpec(s,
-      new org.apache.spark.util.SerializableConfiguration(Writer.writerHadoopConf(spark, s)),
-      wh)
+    def spec(s: org.apache.spark.sql.types.StructType) =
+      FileSpec(s, Writer.broadcastConf(Writer.writerHadoopConf(spark, s)), wh)
     val written = new Staging(s"$wh/written")
     val reported = Writer.writeFiles(
       (0 until 24).flatMap(rows).toDF(cols: _*).repartition(8), written, spec(schema))
