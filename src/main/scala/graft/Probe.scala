@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
 /** Dev-only measurement harness for the optimization rounds (guide §1).
   *
   * For each named query: one untimed warm-up, then a timed noop-sink run
-  * with (a) `.explain("formatted")` written to plans/r22/<name>_<tag>.txt,
+  * with (a) `.explain("formatted")` written to target/plans/<name>_<tag>.txt,
   * (b) per-stage task-time/shuffle totals, (c) per-micro-batch
   * durationMs breakdowns for any streaming query the op starts.
   *
@@ -63,7 +63,7 @@ object Probe {
         batches.add(s"stream END at ${System.nanoTime() / 1000000}ms")
     })
 
-    Files.createDirectories(Paths.get("plans/r22"))
+    Files.createDirectories(Paths.get("target/plans"))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       println(s"\n===================== $name =====================")
@@ -90,7 +90,7 @@ object Probe {
       // formatted plan of the RETURNED frame (the declared query)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      Files.write(Paths.get(s"plans/r22/${name}_$tag.txt"), plan.getBytes("UTF-8"))
+      Files.write(Paths.get(s"target/plans/${name}_$tag.txt"), plan.getBytes("UTF-8"))
       stages.forEach(s => println(s))
       batches.forEach(s => println(s))
       graft.streaming.Hygiene.reset(spark); System.gc()

@@ -177,15 +177,13 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     }
   }
 
-  /** `readStream` on a table still gets the snapshot-chain tail when
-    * its current snapshot routes the batch read through deletes or
-    * imports — the stream enforces its own append-only rules per
-    * micro-batch window (genesis MOR deletes refuse loudly; imported
-    * files resolve through the name mapping). The metadata columns are
-    * the exception: the parquet micro-batch reader has no
-    * metadata-column surface, so that projection refuses with an
-    * actionable message instead of Spark's generic unsupported-stream
-    * error. */
+  /** `readStream` on a table gets the snapshot-chain tail, which
+    * enforces its own append-only rules per micro-batch window and
+    * reads each batch through a scan of this class over the batch's
+    * files (a genesis state with its live deletes, imports through the
+    * name mapping). The metadata columns stay batch-only: that
+    * projection refuses with an actionable message instead of Spark's
+    * generic unsupported-stream error. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     val metaCols = required.fieldNames.filter(GraftTable.MetaColNames)
     if (metaCols.nonEmpty)

@@ -12,7 +12,9 @@ package graft.catalog
   * MATERIALIZED change-row unit (CDC only, opt-in `split-row-level`).
   * Checkpoint compatibility depends on render and parse staying
   * byte-identical across the two sources, so both live here — a
-  * grammar change or parse fix is one edit, never four. */
+  * grammar change or parse fix is one edit, never four. The shared
+  * admission planner speaks the same triple
+  * ([[graft.streaming.Slice]]). */
 object SliceOffsets {
 
   /** Unit kinds as they appear in the offset JSON; "" = the default

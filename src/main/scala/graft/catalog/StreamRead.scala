@@ -1,10 +1,9 @@
 package graft.catalog
 
-import graft.meta.{DataFile, RelPaths}
+import graft.meta.DataFile
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.execution.datasources.GraftManifestIndex
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -12,27 +11,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * .table("cat.ns.t")` tails APPEND commits as micro-batches. Offsets
   * are commit sequence numbers — exactly-once because a batch is the
   * files added in (startSeq, endSeq], replayable from the metadata
-  * alone. `replace` (compaction) snapshots are skipped: they move
-  * bytes, not rows. Row-level commits have no append-only
-  * interpretation and FAIL the stream unless
-  * `streaming-skip-nonappend=true` (the `$changes` table is the CDC
-  * alternative). This is the "train on what's new" tail a 100 TB
-  * ingest pipeline runs continuously; each trigger costs O(new files).
+  * alone. A fresh stream's first deliverable is the oldest retained
+  * snapshot's STATE, read with that snapshot's live deletes applied.
+  * `replace` (compaction) snapshots are skipped: they move bytes, not
+  * rows. Row-level commits have no append-only interpretation and FAIL
+  * the stream unless `streaming-skip-nonappend=true` (the `$changes`
+  * table and `graft-cdc` are the CDC alternatives). Admission runs
+  * through the shared [[graft.streaming.AdmissionPlanner]]; each
+  * micro-batch is read by a [[MergeOnReadScan]] over its pinned files.
+  * This is the "train on what's new" tail a 100 TB ingest pipeline
+  * runs continuously; each trigger costs O(new files).
   */
 class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap,
     required: StructType, pushedExprs: Seq[Expression]) extends MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow
-  with graft.streaming.SliceAwareReporting {
+  with graft.streaming.SliceAwareReporting with graft.streaming.AdmissionPolicy {
 
+  import graft.streaming.{Admission, Split}
   import org.apache.spark.sql.connector.read.streaming.ReadLimit
-
-  // Trigger.AvailableNow: pin the end of the backlog at start; batches
-  // then advance toward it (rate limits still apply per batch) and the
-  // query stops once it's reached — later commits wait for the next run
-  @volatile private var availableNowCap: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(headSeq(freshMeta))
 
   private val skipNonAppend =
     Option(options.get("streaming-skip-nonappend")).exists(_.toBoolean)
@@ -59,146 +55,71 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
       case None => throw new IllegalArgumentException(s"no branch $b")
     }
   }
-  // rate limits: cap each trigger's admission. The incremental tail
-  // is snapshot-granular while snapshots fit the caps (offsets remain
-  // contiguous seq ranges, so batches stay replayable) — and ANY
-  // admission unit that alone exceeds them splits at FILE granularity
-  // via (seq, fileIdx) offsets: the FRESH-START catch-up (an aged
-  // table's entire retained state, `{"seq":N,"idx":K}`) and likewise
-  // a single oversized append commit (e.g. one 10 TB batch insert,
-  // `{"seq":N,"idx":K,"unit":"added"}`), so a 100 TB backlog drains
-  // as ⌈files/cap⌉ bounded micro-batches instead of one unbounded
-  // catch-up batch. Only a single file larger than the cap is
-  // unsplittable (it gets a batch of its own).
-  private val maxFilesPerTrigger =
-    Option(options.get("max-files-per-trigger")).map(_.toInt)
-  private val maxRowsPerTrigger =
-    Option(options.get("max-rows-per-trigger")).map(_.toLong)
+
+  // rate limits: cap each trigger's admission. The tail is
+  // snapshot-granular while snapshots fit the caps, and any admission
+  // unit that alone exceeds them splits at FILE granularity: the
+  // fresh-start genesis state (`{"seq":N,"idx":K}`) and a single
+  // oversized append (`{"seq":N,"idx":K,"unit":"added"}`), so a
+  // 100 TB backlog drains as ⌈files/cap⌉ bounded micro-batches
+  private val planner = new graft.streaming.AdmissionPlanner(
+    Option(options.get("max-files-per-trigger")).map(_.toInt),
+    Option(options.get("max-rows-per-trigger")).map(_.toLong))
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    planner.pinAvailableNow(headSeq(freshMeta))
 
   private def freshMeta = table.ops.refresh()
     .map(_._2).getOrElse(table.meta)
 
   override def initialOffset(): Offset = SeqOffset(0L)
 
-  override def latestOffset(): Offset = {
-    val cur = headSeq(freshMeta)
-    SeqOffset(availableNowCap.fold(cur)(math.min(cur, _)))
-  }
+  override def latestOffset(): Offset = SeqOffset(planner.head(headSeq(freshMeta)))
 
-  /** Advertise the CONFIGURED caps (maxFiles/maxRows/composite) — not
-    * `allAvailable()` — so progress metrics and AvailableNow limits see
-    * the real rate limit; each trigger then derives its effective caps
-    * from the limit the engine passes BACK to `latestOffset(start,
-    * limit)`, which under Trigger.Once is `allAvailable()` = drain the
-    * whole backlog uncapped ([[graft.streaming.ReadLimits]]). */
-  override def getDefaultReadLimit: ReadLimit =
-    graft.streaming.ReadLimits.configured(maxFilesPerTrigger, maxRowsPerTrigger)
+  /** The configured caps (see [[graft.streaming.ReadLimits]]). */
+  override def getDefaultReadLimit: ReadLimit = planner.readLimit
 
   // slice-aware reportLatestOffset is [[graft.streaming.SliceAwareReporting]]
-  override protected def headOffsetForReport()
-      : org.apache.spark.sql.connector.read.streaming.Offset = latestOffset()
-
-  /** One admission UNIT's file list in a stable order (sorted by
-    * path) so (seq, fileIdx) offsets slice it reproducibly across
-    * triggers, restarts, and checkpoint replays: the genesis
-    * snapshot's full STATE (`added = false`) or an oversized append's
-    * ADDED set (`added = true`) — the offset carries which, because
-    * the same seq can legitimately be either depending on where the
-    * stream started. Sequence numbers are dense and unique per table,
-    * so the seq lookup is unambiguous; a mid-drain expiry of the
-    * snapshot fails loudly (the slice indices would otherwise
-    * silently re-bind to different files). Memoization, slice
-    * admission (progress guarantee incl.), and the end-of-drain
-    * release are the shared [[SliceDrain]] — commit() releases once
-    * offsets return to pure seqs (the memo pins an O(unit-files)
-    * DataFile list on the driver for the drain's duration — see
-    * STREAMING.md's memory envelope note). The retention check stays
-    * per trigger. */
-  private val drain = new SliceDrain
-  private def unitList(meta: graft.meta.TableMeta, seq: Long,
-      added: Boolean): IndexedSeq[DataFile] = {
-    val s = meta.snapshots.find(_.sequenceNumber == seq).getOrElse(
-      throw new IllegalStateException(
-        s"streaming catch-up snapshot (seq $seq) is no longer retained; " +
-          "retention must cover streaming lag"))
-    drain.list(seq, if (added) SliceOffsets.UnitAdded else SliceOffsets.UnitState)(
-      contributed(s, genesis = !added))
-  }
+  override protected def headOffsetForReport(): Offset = latestOffset()
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val end = planEnd(start.asInstanceOf[SeqOffset], limit)
+    val meta = freshMeta
+    val end = SeqOffset(planner.plan(this, meta, headSeq(meta),
+      start.asInstanceOf[SeqOffset].slice, limit))
     recordPlannedEnd(end, end.fileIdx >= 0)
     end
   }
 
-  private def planEnd(st: SeqOffset, limit: ReadLimit): SeqOffset = {
-    // effective caps come from the limit the engine PASSED, not the
-    // option fields: normal triggers hand back getDefaultReadLimit
-    // (== the configured caps), Trigger.Once hands allAvailable()
-    // (uncapped — the whole backlog in one batch, mid-drain included)
-    val (capFiles, capRows, _) = graft.streaming.ReadLimits.caps(
-      limit, maxFilesPerTrigger, maxRowsPerTrigger, None)
-    val meta = freshMeta
-    val curSeq = availableNowCap.fold(headSeq(meta))(
-      math.min(headSeq(meta), _))
-    if (capFiles.isEmpty && capRows.isEmpty)
-      // uncapped: everything available, including any genesis remainder
-      return if (curSeq == st.seq && st.fileIdx < 0) st
-             else SeqOffset(math.max(curSeq, st.seq))
-    var files = 0L; var rows = 0L
-    var effStart = st.seq
-    if (st.fileIdx >= 0) {
-      // mid-unit resume: keep draining the genesis state or the
-      // oversized append's added set file-wise
-      val list = unitList(meta, st.seq, st.added)
-      val (next, f, r) = drain.admit(list, st.fileIdx, capFiles, capRows)
-      if (next < list.size) return SeqOffset(st.seq, next, st.added)
-      files += f; rows += r
-    } else if (st.seq == 0 && curSeq > 0) {
-      // fresh start: the oldest retained snapshot delivers STATE and
-      // is split at file granularity (see unitList)
-      val snaps = lineageWindow(meta, 0, curSeq)
-      if (snaps.isEmpty) return st
-      val g = snaps.head
-      val list = unitList(meta, g.sequenceNumber, added = false)
-      val (next, f, r) = drain.admit(list, 0, capFiles, capRows)
-      if (next < list.size) return SeqOffset(g.sequenceNumber, next)
-      files += f; rows += r
-      effStart = g.sequenceNumber
+  /** An append costs its added files and rows and splits as its ADDED
+    * set; every other commit is free (the batch skips or refuses it). */
+  override def admission(meta: graft.meta.TableMeta, base: Long,
+      s: graft.meta.Snapshot): Admission =
+    if (s.operation != "append") Admission()
+    else {
+      val added = table.ops.addedFiles(s)
+      Admission(added.size, added.map(_.records).sum, split = Some(Split(SliceOffsets.UnitAdded,
+        () => planner.list(s.sequenceNumber, SliceOffsets.UnitAdded)(added))))
     }
-    if (curSeq <= effStart)
-      return if (effStart != st.seq || st.fileIdx >= 0) SeqOffset(effStart) else st
-    // incremental tail: snapshot-granular while snapshots fit the
-    // caps; an append that alone exceeds them SPLITS at file
-    // granularity when the trigger has consumed nothing yet (a
-    // trigger that already spent budget closes instead — a unit never
-    // piggybacks). Only a single over-cap FILE is unsplittable and
-    // gets a batch of its own (admit's progress guarantee).
-    val snaps = lineageWindow(meta, effStart, curSeq)
-    var end = effStart
-    var stop = false
-    for (s <- snaps if !stop) {
-      val added = if (s.operation == "append") contributed(s, genesis = false) else Nil
-      val addedRows = added.map(_.records).sum
-      val exceeds = capFiles.exists(m => files + added.size > m) ||
-        capRows.exists(m => rows + addedRows > m)
-      if (!exceeds) {
-        files += added.size; rows += addedRows
-        end = s.sequenceNumber
-      } else if (end == effStart && files == 0 && rows == 0 && added.nonEmpty) {
-        // seed the memo with the list already in hand — unitList would
-        // re-materialize and re-sort the same added set on the miss
-        val list = drain.list(s.sequenceNumber, SliceOffsets.UnitAdded)(added)
-        val (next, f, r) = drain.admit(list, 0, capFiles, capRows)
-        if (next < list.size) return SeqOffset(s.sequenceNumber, next, added = true)
-        // the whole unit fit after all (one unsplittable file): admit
-        // it; the next iteration's exceeds check closes the batch
-        files += f; rows += r
-        end = s.sequenceNumber
-      } else stop = true
-    }
-    if (end == st.seq && st.fileIdx < 0) st else SeqOffset(end)
+
+  /** One admission UNIT's file list in a stable order (sorted by
+    * path): the genesis snapshot's full STATE or an oversized append's
+    * ADDED set — the offset carries which, because the same seq can
+    * legitimately be either depending on where the stream started.
+    * Memoized in the planner; a mid-drain expiry of the snapshot fails
+    * loudly (the slice indices would otherwise silently re-bind to
+    * different files). */
+  override def unitFiles(meta: graft.meta.TableMeta, seq: Long,
+      unit: String): IndexedSeq[DataFile] = {
+    val s = unitSnap(meta, seq)
+    planner.list(seq, unit)(
+      if (unit == SliceOffsets.UnitAdded) table.ops.addedFiles(s) else table.ops.allFiles(s))
   }
+
+  private def unitSnap(meta: graft.meta.TableMeta, seq: Long): graft.meta.Snapshot =
+    meta.snapshots.find(_.sequenceNumber == seq).getOrElse(
+      throw new IllegalStateException(
+        s"streaming catch-up snapshot (seq $seq) is no longer retained; " +
+          "retention must cover streaming lag"))
 
   override def deserializeOffset(json: String): Offset =
     SliceOffsets.parse(json)
@@ -224,7 +145,7 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
     * loudly (delivering them might replay someone's audit branch,
     * skipping them might lose main data): retention must cover
     * streaming lag, as with any table-tail source. */
-  private def lineageWindow(meta: graft.meta.TableMeta, startSeq: Long,
+  override def lineage(meta: graft.meta.TableMeta, startSeq: Long,
       endSeq: Long): List[graft.meta.Snapshot] = {
     if (endSeq <= startSeq) return Nil
     val anchor = meta.snapshots.find(_.sequenceNumber == endSeq).getOrElse(
@@ -269,142 +190,88 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
     w.chain
   }
 
-  /** Files a snapshot contributes to its batch. Normally the files it
-    * ADDED (stamped with its own seq). The OLDEST snapshot of a
-    * fresh-start catch-up (startSeq == 0) instead contributes its FULL
-    * cumulative state — the genesis batch: files that entered in
-    * since-expired ancestors live on in the surviving snapshots'
-    * lists but carry old seq stamps, so per-added delivery would
-    * silently drop them (same rule for a `snapshot`-procedure copy,
-    * whose single snapshot carries the source's stamps verbatim). On a
-    * complete history the genesis commit's state IS its added set, so
-    * the rule changes nothing there. A genesis snapshot with live MOR
-    * deletes can't be served append-only — loud fail, `$changes` is
-    * the CDC spelling. */
-  private def contributed(s: graft.meta.Snapshot, genesis: Boolean): Seq[DataFile] =
-    if (!genesis) table.ops.addedFiles(s)
-    else {
-      if (s.deleteFiles.nonEmpty) throw new IllegalStateException(
-        s"fresh stream start: oldest retained snapshot ${s.snapshotId} carries " +
-          "row-level delete files; an append-only tail cannot apply them — " +
-          "compact the table once, or read the $changes table for CDC")
-      table.ops.allFiles(s)
+  /** A batch's data files and the deletes that apply to them. Only a
+    * genesis STATE carries deletes: its snapshot's live ones, so a
+    * fresh stream delivers live rows. The files a later append added
+    * have no applicable delete (position and equality deletes committed
+    * at or before the genesis seq only target older files), and later
+    * row-level commits are skipped or refused, not applied. */
+  private def batchFiles(meta: graft.meta.TableMeta, start: SeqOffset,
+      end: SeqOffset): (Seq[DataFile], Seq[DataFile]) = {
+    // [from, until) of seq's unit, with the state's deletes
+    def unit(seq: Long, added: Boolean, from: Int, until: Int) = {
+      val fs = unitFiles(meta, seq, if (added) SliceOffsets.UnitAdded else SliceOffsets.UnitState)
+        .slice(from, until)
+      (fs, if (added) Nil else Mor.relevantDeletes(unitSnap(meta, seq).deleteFiles, fs))
     }
-
-  private def filesBetween(start: SeqOffset, end: SeqOffset): Seq[DataFile] = {
-    if (end.seq < start.seq) return Nil
-    val meta = freshMeta
-    if (end.fileIdx >= 0)
-      // mid-unit batch: a contiguous slice of the genesis state or an
-      // oversized append's added set (start is the unit's lower bound,
-      // or an earlier slice of the SAME unit)
-      return unitList(meta, end.seq, end.added)
-        .slice(if (start.seq == end.seq) math.max(start.fileIdx, 0) else 0, end.fileIdx)
-    if (start.fileIdx >= 0)
+    if (end.seq < start.seq) (Nil, Nil)
+    else if (end.fileIdx >= 0)
+      // mid-unit batch: a contiguous slice of the unit (start is its
+      // lower bound, or an earlier slice of the SAME unit)
+      unit(end.seq, end.added,
+        if (start.seq == end.seq) math.max(start.fileIdx, 0) else 0, end.fileIdx)
+    else if (start.fileIdx >= 0) {
       // final unit slice plus the incremental tail in one batch
-      return unitList(meta, start.seq, start.added).drop(start.fileIdx) ++
-        windowFiles(meta, start.seq, end.seq, stateAtStart = false)
-    windowFiles(meta, start.seq, end.seq, stateAtStart = start.seq == 0)
+      val (fs, ds) = unit(start.seq, start.added, start.fileIdx, Int.MaxValue)
+      (fs ++ windowFiles(meta, start.seq, end.seq), ds)
+    } else if (start.seq == 0 && end.seq > 0) {
+      // fresh start: the genesis STATE, then the window above it
+      val g = lineage(meta, 0, end.seq).head
+      val (fs, ds) = unit(g.sequenceNumber, added = false, 0, Int.MaxValue)
+      (fs ++ windowFiles(meta, g.sequenceNumber, end.seq), ds)
+    } else (windowFiles(meta, start.seq, end.seq), Nil)
   }
 
+  /** The files the appends in (startSeq, endSeq] added. A file ADDED by
+    * snapshot s carries s's sequence number; listing from s itself
+    * keeps the batch replayable even after later compactions drop the
+    * file from the current snapshot (retention must cover streaming
+    * lag, as with any table-tail source). */
   private def windowFiles(meta: graft.meta.TableMeta, startSeq: Long,
-      endSeq: Long, stateAtStart: Boolean): Seq[DataFile] = {
-    if (endSeq <= startSeq) return Nil
-    val snaps = lineageWindow(meta, startSeq, endSeq)
-    // the genesis snapshot (oldest of a fresh-start catch-up) delivers
-    // STATE, which is well-defined whatever operation produced it —
-    // the non-append check applies to the incremental tail only
-    val genesisId =
-      if (stateAtStart) snaps.headOption.map(_.snapshotId) else None
-    val bad = snaps.filter(s => !genesisId.contains(s.snapshotId) &&
-      s.operation != "append" && s.operation != "replace")
+      endSeq: Long): Seq[DataFile] = {
+    val snaps = lineage(meta, startSeq, endSeq)
+    val bad = snaps.filter(s => s.operation != "append" && s.operation != "replace")
     if (bad.nonEmpty && !skipNonAppend)
       throw new IllegalStateException(
         s"streaming read hit non-append snapshot(s) ${bad.map(_.operation).distinct.mkString(",")} " +
           s"at seq ${bad.map(_.sequenceNumber).mkString(",")}; " +
           "set streaming-skip-nonappend=true to skip them or read the $changes table for CDC")
-    // a file ADDED by snapshot s carries s's sequence number; listing
-    // from s itself keeps the batch replayable even after later
-    // compactions drop the file from the current snapshot (retention
-    // must cover streaming lag, as with any table-tail source)
-    snaps.filter(s => genesisId.contains(s.snapshotId) || s.operation == "append")
-      .flatMap(s => contributed(s, genesisId.contains(s.snapshotId)))
+    snaps.filter(_.operation == "append").flatMap(table.ops.addedFiles)
   }
 
-  /** The vectorized parquet delegate for one resolution mode. Native
-    * files resolve columns by field id; files imported by `add_files`
-    * (`DataFile.nameMapped`) carry NO field ids and resolve through
-    * the table's frozen name mapping instead — the streaming analog of
-    * the batch path's [[MergeOnReadScan]], deriving its read schema from
-    * the same [[Mor.importSchema]] (positionally identical renames, so
-    * reader output binds to the stream's attributes unchanged).
-    * Filters are pushed only on the id-resolved side: a table that
-    * ever ran add_files reports every predicate residual
-    * ([[GraftScanBuilder.pushFilters]]), so Spark re-applies them
-    * above — the mapped side just loses row-group skipping, never
-    * rows. */
-  private def delegate(files: Seq[DataFile], mapped: Boolean,
-      mapping: Map[Int, String]): Scan = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val (tblSchema, reqSchema) =
-      if (mapped)
-        (Mor.importSchema(table.schema(), table.schema(), mapping),
-          Mor.importSchema(required, table.schema(), mapping))
-      else (table.schema(), required)
-    GraftManifestIndex.delegateScan(spark, options, tblSchema,
-      files.map(f => (RelPaths.absolutize(table.ops.warehouse, f.path), f.bytes)),
-      if (mapped) Nil else pushedExprs, reqSchema)
-  }
+  // the scan that planned the latest batch's partitions: Spark asks for
+  // the reader factory without offsets, and Spark 4.1's
+  // MicroBatchScanExec plans a batch's partitions before it takes the
+  // factory (both in supportsColumnar and in inputRDD)
+  @volatile private var batchScan: MergeOnReadScan = _
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     // the replay-recording site (see SliceAwareReporting.recordPlannedEnd)
     val en = end.asInstanceOf[SeqOffset]
     recordPlannedEnd(en, en.fileIdx >= 0)
-    // the FRESH mapping, not the load-time one: a first add_files can
-    // land mid-stream, and its files must plan against the mapping
-    // that import just froze
-    val mapping = freshMeta.nameMapping
-    val files = filesBetween(start.asInstanceOf[SeqOffset],
-      end.asInstanceOf[SeqOffset])
-    if (files.isEmpty) return Array.empty
-    val (nm, idful) = files.partition(_.nameMapped.contains(true))
-    val idParts = if (idful.isEmpty) Array.empty[InputPartition]
-      else delegate(idful, mapped = false, mapping).toBatch.planInputPartitions()
-    val nmParts = if (nm.isEmpty) Array.empty[InputPartition]
-      else delegate(nm, mapped = true, mapping).toBatch.planInputPartitions()
-    idParts.map(p => StreamTaggedPartition(p, mapped = false): InputPartition) ++
-      nmParts.map(p => StreamTaggedPartition(p, mapped = true))
+    val meta = freshMeta
+    val (files, deletes) = batchFiles(meta, start.asInstanceOf[SeqOffset], en)
+    // the stream's schema is pinned at start, but the name mapping is
+    // the FRESH one: a first add_files can land mid-stream, and its
+    // files must plan against the mapping that import just froze
+    val pinned = new GraftTable(table.catalogName, table.ident, table.ops,
+      table.meta.copy(properties = meta.properties), table.metaVersion)
+    batchScan = new MergeOnReadScan(pinned, options, required, pushedExprs, files, deletes)
+    batchScan.planInputPartitions()
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // The factory needs schema / options / pushed filters — NOT paths:
-    // partitions carry their own files, so the delegates are built over
-    // an EMPTY path list. (They used to be built over the head
-    // snapshot's full file list, an O(head-files) manifest load per
-    // trigger that the factory never read — real driver work for
-    // nothing on a 1M-file table.)
-    val mapping = freshMeta.nameMapping
-    val idFactory =
-      delegate(Nil, mapped = false, mapping).toBatch.createReaderFactory()
-    // a table whose FRESH metadata has no name mapping cannot plan a
-    // mapped partition this batch — don't pay a second scan build +
-    // conf broadcast per micro-batch for a delegate that can't be
-    // used. Fresh, not load-time: a first add_files can land
-    // mid-stream (factories rebuild per micro-batch).
-    if (mapping.isEmpty)
-      new StreamDispatchReaderFactory(idFactory, idFactory)
-    else
-      new StreamDispatchReaderFactory(idFactory,
-        delegate(Nil, mapped = true, mapping).toBatch.createReaderFactory())
-  }
+  /** The latest batch's factory; before any batch, an empty scan's
+    * (it reads no file list). */
+  override def createReaderFactory(): PartitionReaderFactory =
+    Option(batchScan).getOrElse(
+      new MergeOnReadScan(table, options, required, pushedExprs, Nil, Nil)).createReaderFactory()
 
   override def commit(end: Offset): Unit =
     // offsets back to pure seqs = the catch-up drain is over: release
-    // the memoized O(unit-files) list (it held the drain's DataFile
-    // list on the driver; a later recovery replay of a sliced range
-    // just recomputes it)
+    // the memoized O(unit-files) list (a later recovery replay of a
+    // sliced range just recomputes it)
     end match {
-      case SeqOffset(_, idx, _) if idx < 0 => drain.release()
+      case SeqOffset(_, idx, _) if idx < 0 => planner.release()
       case _ => ()
     }
 
@@ -425,15 +292,20 @@ class GraftMicroBatchStream(table: GraftTable, options: CaseInsensitiveStringMap
   * pre-split checkpoints ({"seq":N} ⇔ fileIdx = -1; {"seq":N,"idx":K}
   * keeps meaning a genesis-state slice). */
 case class SeqOffset(seq: Long, fileIdx: Int = -1, added: Boolean = false) extends Offset {
-  override def json(): String = SliceOffsets.render(seq, fileIdx,
-    if (added) SliceOffsets.UnitAdded else SliceOffsets.UnitState)
+  private def unit = if (added) SliceOffsets.UnitAdded else SliceOffsets.UnitState
+  override def json(): String = SliceOffsets.render(seq, fileIdx, unit)
+  def slice: graft.streaming.Slice = graft.streaming.Slice(seq, fileIdx, unit)
+}
+
+object SeqOffset {
+  def apply(s: graft.streaming.Slice): SeqOffset =
+    SeqOffset(s.seq, s.fileIdx, s.unit == SliceOffsets.UnitAdded)
 }
 
 /** Routes a partition to the reader factory of its resolution mode
   * (field-id native vs name-mapped import) — the two parquet delegates
   * differ only in how column names bind, so their partitions coexist in
-  * one scan. Serves micro-batches and the delete-free batch reads of
-  * imports in [[MergeOnReadScan]]. */
+  * one columnar [[MergeOnReadScan]]. */
 case class StreamTaggedPartition(inner: InputPartition, mapped: Boolean)
   extends InputPartition {
   override def preferredLocations(): Array[String] = inner.preferredLocations()

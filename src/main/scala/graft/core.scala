@@ -159,6 +159,17 @@ object Dsl {
     expand(r, "D6", dN(6))
   }
 
+  /** Runs `body` with `confs` set on the session, then restores every
+    * key as it was — a key that was unset is unset again — whether or
+    * not `body` throws. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   def spark(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession.builder()

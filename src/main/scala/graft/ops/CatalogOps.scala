@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Decl, Pack, Tables}
+import graft.Dsl.withConf
 import org.apache.spark.sql.SparkSession
 
 /** End-to-end catalog flows through the DSv2 `RelativeCatalog` —
@@ -912,11 +913,9 @@ object CatalogOps extends Pack {
       // the delete writer range-clusters entries by referenced file;
       // AQE would coalesce this 15-row shuffle to ONE delete file and
       // leave nothing to slice — disable coalescing for the DELETE only
-      val k = "spark.sql.adaptive.coalescePartitions.enabled"
-      val coalesce = spark.conf.get(k)
-      spark.conf.set(k, "false")
-      try spark.sql(s"DELETE FROM $c.demo_cms.nat WHERE n_nationkey < 15") // seq 2, MOR
-      finally spark.conf.set(k, coalesce)
+      withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        spark.sql(s"DELETE FROM $c.demo_cms.nat WHERE n_nationkey < 15") // seq 2, MOR
+      }
       require(spark.table(s"$c.demo_cms.`nat$$snapshots`").count() == 2,
         "setup: insert + ONE MOR delete commit")
       val name = s"graft_cms_${Integer.toHexString(dir.hashCode).takeRight(6)}"
@@ -1100,11 +1099,9 @@ object CatalogOps extends Pack {
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
       spark.sql(s"INSERT INTO $c.demo_spj.cust SELECT c_nationkey, c_custkey, c_acctbal FROM customer_src")
       spark.sql(s"INSERT INTO $c.demo_spj.nat SELECT n_nationkey, n_name FROM nation_src")
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          graft.catalog.SpjScan.PreserveGroupingKey -> "true",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         spark.sql(graft.Dsl.expandOracle(
           s"""SELECT n.n_name, COUNT(*) AS n_cust,
              |  D4SUM(c.c_acctbal) AS sum_bal
@@ -1113,9 +1110,6 @@ object CatalogOps extends Pack {
              |GROUP BY n.n_name""".stripMargin))
           .localCheckpoint()
           .orderBy(col("n_name").asc_nulls_first)
-      } finally {
-        spark.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       }
     }, Some(
       """SELECT n_name, COUNT(*) AS n_cust,
@@ -1148,13 +1142,11 @@ object CatalogOps extends Pack {
         "PARTITIONED BY (c_nationkey)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_dyn.cust SELECT c_custkey, c_nationkey, c_acctbal FROM customer_src")
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        // rewrite nations 0..4 with zeroed balances; 5..24 untouched
+      // rewrite nations 0..4 with zeroed balances; 5..24 untouched
+      withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         spark.sql(s"""INSERT OVERWRITE $c.demo_dyn.cust
           |SELECT c_custkey, c_nationkey, 0.0 FROM customer_src WHERE c_nationkey < 5""".stripMargin)
-      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      }
       spark.sql(graft.Dsl.expandOracle(
         s"""SELECT c_nationkey, COUNT(*) AS n,
            |  D2(SUM(CAST(c_acctbal AS DECIMAL(18,6)))) AS total

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Decl, Pack, Tables}
-import graft.Dsl.{d4, dec}
+import graft.Dsl.{d4, dec, withConf}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -346,19 +346,9 @@ object Joins extends Pack {
     // false positives only cost shuffle bytes, never correctness).
     // Broadcast is disabled to force the shuffled-join shape under
     // test; PlanShapeSpec pins the injected might_contain.
-    Decl("q_join_bloom", (spark, dir) => {
-      val saved = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-        .map(k => k -> spark.conf.getOption(k)).toMap
-      setBloomConfs(spark)
-      try bloomJoin(spark, dir).localCheckpoint()
-        .orderBy(col("p_brand").asc_nulls_first)
-      finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }, Some(
+    Decl("q_join_bloom", (spark, dir) =>
+      withConf(spark, bloomConfs: _*)(bloomJoin(spark, dir).localCheckpoint())
+        .orderBy(col("p_brand").asc_nulls_first), Some(
       """SELECT p_brand, COUNT(*) AS n_lines,
         |  D4SUM(l_extendedprice) AS revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -370,16 +360,14 @@ object Joins extends Pack {
   /** q_join_bloom's confs + join body, shared with PlanShapeSpec (the
     * Decl localCheckpoints under the confs, which truncates lineage —
     * the spec needs the pre-checkpoint plan to see might_contain). */
-  def setBloomConfs(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+  val bloomConfs: Seq[(String, String)] = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
     // default 10 GB — the sf fixtures are far below it; any scan may
     // carry the filter (at real scale the default keeps tiny probe
     // scans from paying the filter's evaluation cost)
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-  }
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
   def bloomJoin(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "lineitem")

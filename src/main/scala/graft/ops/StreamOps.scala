@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Decl, Pack, Tables}
-import graft.Dsl.d4
+import graft.Dsl.{d4, withConf}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -111,23 +111,22 @@ object StreamOps extends Pack {
     val name = s"graft_stream_${n.incrementAndGet()}"
     // state-store overhead is per (partition × micro-batch): run the
     // bounded replay with fewer state partitions than the batch default
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = spark.readStream.schema(Encoders.product[Ev].schema)
-      .parquet(src.toString).as[Ev]
-    val q = build(stream).writeStream
-      .format("memory").queryName(name).outputMode(mode).start()
-    try {
-      q.processAllAvailable()
-      if (twice) { linkWave(src, eventsSrc(spark, dir), "w1"); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      // drop THIS query's state-store providers (keyed by runId, so
-      // concurrent streams are untouched): a host running many
-      // distinct queries would otherwise accumulate one provider
-      // (with in-memory version maps) per operator x partition x query
-      graft.streaming.Hygiene.unload(q.runId)
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      val stream = spark.readStream.schema(Encoders.product[Ev].schema)
+        .parquet(src.toString).as[Ev]
+      val q = build(stream).writeStream
+        .format("memory").queryName(name).outputMode(mode).start()
+      try {
+        q.processAllAvailable()
+        if (twice) { linkWave(src, eventsSrc(spark, dir), "w1"); q.processAllAvailable() }
+      } finally {
+        q.stop()
+        // drop THIS query's state-store providers (keyed by runId, so
+        // concurrent streams are untouched): a host running many
+        // distinct queries would otherwise accumulate one provider
+        // (with in-memory version maps) per operator x partition x query
+        graft.streaming.Hygiene.unload(q.runId)
+      }
     }
     // materialize the (already aggregated/bounded) result off the sink,
     // then release the sink + replay hardlinks
@@ -143,42 +142,38 @@ object StreamOps extends Pack {
     *
     * No sentinel: inner stream-stream joins emit matches in the batch
     * where both sides are present; the watermark only bounds state
-    * EVICTION, which a bounded replay never depends on. `shufN` caps
-    * the state partition count: the join keeps 4 state stores per
-    * partition per side, so at 8 partitions every micro-batch paid 32
-    * store load/commit round-trips for a watermark-bounded state that
-    * is tiny per key — 2 partitions measured −0.6 s on the replay
-    * (r21 sweep) with the SAME plan shape. Production streams size
-    * this by state volume, not by the replay harness's constant
-    * (override: spark.graft.stream.join.partitions).
+    * EVICTION, which a bounded replay never depends on. The state
+    * partition count is the constant [[JoinStatePartitions]]: the join
+    * keeps 4 state stores per partition per side, so at 8 partitions
+    * every micro-batch paid 32 store load/commit round-trips for a
+    * watermark-bounded state that is tiny per key — 2 partitions
+    * measured −0.6 s on the replay (r21 sweep) with the SAME plan
+    * shape. Production streams size this by state volume, not by the
+    * replay harness's constant.
     */
+  val JoinStatePartitions = 2
+
   private def streamed2(spark: SparkSession, dir: String)(
       build: (Dataset[Ev], Dataset[Ev]) => DataFrame): DataFrame = {
     import spark.implicits._
     val src = Files.createTempDirectory("graft_stream_src2")
     linkWave(src, eventsSrc(spark, dir), "w0")
     val name = s"graft_stream_${n.incrementAndGet()}"
-    val shufN = spark.conf.getOption("spark.graft.stream.join.partitions").getOrElse("2")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", shufN)
     // inner-join matches are fully emitted by the data batches; the
     // no-data micro-batch that follows a watermark advance exists only
     // to EVICT state, which a bounded replay that stops right after
     // never reads again — skip its 0.5-0.7 s of store commits
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    spark.conf.set(noDataKey, "false")
-    def mkStream = spark.readStream.schema(Encoders.product[Ev].schema)
-      .parquet(src.toString).as[Ev]
-    val q = build(mkStream, mkStream).writeStream
-      .format("memory").queryName(name).outputMode(OutputMode.Append()).start()
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      graft.streaming.Hygiene.unload(q.runId)
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set(noDataKey, prevNoData)
+    withConf(spark, "spark.sql.shuffle.partitions" -> JoinStatePartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      def mkStream = spark.readStream.schema(Encoders.product[Ev].schema)
+        .parquet(src.toString).as[Ev]
+      val q = build(mkStream, mkStream).writeStream
+        .format("memory").queryName(name).outputMode(OutputMode.Append()).start()
+      try q.processAllAvailable()
+      finally {
+        q.stop()
+        graft.streaming.Hygiene.unload(q.runId)
+      }
     }
     val out = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
@@ -532,12 +527,9 @@ object StreamOps extends Pack {
     // provider that keeps 100 TB/day state off-heap and spillable,
     // where the default HDFS-backed maps are JVM-heap bound. Same
     // replay + oracle as q_str_stateful, so the two APIs cross-check.
-    Decl("q_str_tws", (spark, dir) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+    Decl("q_str_tws", (spark, dir) =>
+      withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         streamed(spark, dir, OutputMode.Update()) { ds =>
           import ds.sparkSession.implicits._
           ds.groupByKey(_.user_id)
@@ -551,11 +543,7 @@ object StreamOps extends Pack {
             max_by(col("total_value"), col("n_events"))
               .cast("decimal(18,4)").cast("double").as("total_value"))
           .orderBy(col("user_id").asc_nulls_first, col("n_events").asc_nulls_first)
-      } finally prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }, Some(
+      }, Some(
       """SELECT user_id, COUNT(*) AS n_events,
         |  D4SUM(value) AS total_value
         |FROM events GROUP BY user_id
@@ -830,19 +818,18 @@ object StreamOps extends Pack {
     val src = Files.createTempDirectory("graft_stream_docsrc")
     linkWave(src, docsSrc(spark, dir), "w0")
     val name = s"graft_stream_${n.incrementAndGet()}"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val stream = spark.readStream.schema(Encoders.product[Doc].schema)
-      .parquet(src.toString).as[Doc]
-    val q = build(stream).writeStream
-      .format("memory").queryName(name).outputMode(OutputMode.Complete()).start()
-    try {
-      q.processAllAvailable()
-      if (twice) { linkWave(src, docsSrc(spark, dir), "w1"); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      graft.streaming.Hygiene.unload(q.runId)
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      val stream = spark.readStream.schema(Encoders.product[Doc].schema)
+        .parquet(src.toString).as[Doc]
+      val q = build(stream).writeStream
+        .format("memory").queryName(name).outputMode(OutputMode.Complete()).start()
+      try {
+        q.processAllAvailable()
+        if (twice) { linkWave(src, docsSrc(spark, dir), "w1"); q.processAllAvailable() }
+      } finally {
+        q.stop()
+        graft.streaming.Hygiene.unload(q.runId)
+      }
     }
     val out = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)

@@ -47,7 +47,9 @@ import org.apache.spark.sql.types.StructType
   * table-wide MOR DELETE, or a table-wide COW MERGE
   * arrives as bounded, checkpoint-resumable slices instead of one
   * unbounded batch. Pre-split checkpoints (bare `LongOffset` numbers)
-  * keep parsing.
+  * keep parsing. Admission — caps, slices and the commit loop — is the
+  * shared [[AdmissionPlanner]] the table tail also runs; this source
+  * supplies its lenient lineage walk and each commit's cost.
   *
   * If snapshot retention does NOT cover the stream's lag — the
   * restart offset's snapshot or any chain ancestor has been expired —
@@ -246,6 +248,10 @@ class GraftCdcSourceProvider extends StreamSourceProvider with DataSourceRegiste
   }
 }
 
+/** The `graft-cdc` source ([[GraftCdcSourceProvider]] documents its
+  * contract). Its [[AdmissionPolicy]] answers feed the shared
+  * [[AdmissionPlanner]]; its batches are [[Changes.between]] plans or
+  * unit-slice reads. */
 class GraftCdcSource(spark: SparkSession, ops: TableOps,
     initialMeta: TableMeta, startSeq: Long,
     allowSyntheticGenesis: Boolean = true,
@@ -256,7 +262,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     rowLevelSpillRoot: Option[String] = None,
     updateIdCols: Option[Seq[String]] = None) extends Source
   with SupportsAdmissionControl with SupportsTriggerAvailableNow
-  with SliceAwareReporting {
+  with SliceAwareReporting with AdmissionPolicy {
 
   // schema is pinned at stream start: mid-stream schema evolution must
   // not silently reshape batches (restart the query to pick it up)
@@ -290,29 +296,22 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
 
   // ---- admission (latestOffset WITH a start param) ---------------
 
-  // Trigger.AvailableNow: pin the end of the backlog at start; batches
-  // then advance toward it (rate limits still apply per batch) and the
-  // query stops once it's reached — later commits wait for the next run
-  @volatile private var availableNowCap: Option[Long] = None
+  /** The shared planner, under the configured rows and commits caps
+    * (advertised through `getDefaultReadLimit`); it also holds the
+    * drain memo and the AvailableNow end. */
+  private val planner = new AdmissionPlanner(None, maxRowsPerTrigger, maxCommitsPerTrigger)
+
+  private def headSeq(meta: TableMeta): Long =
+    meta.currentSnapshot.map(_.sequenceNumber).getOrElse(0L)
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(
-      freshMeta.currentSnapshot.map(_.sequenceNumber).getOrElse(0L))
+    planner.pinAvailableNow(headSeq(freshMeta))
 
-  /** Advertise the CONFIGURED caps (maxRows and/or the custom
-    * commits-per-trigger limit) — not `allAvailable()` — so progress
-    * metrics see the real rate limit; each trigger's effective caps
-    * then come from the limit the engine passes BACK to
-    * `latestOffset(start, limit)`, which under Trigger.Once is
-    * `allAvailable()` = the whole backlog uncapped ([[ReadLimits]]). */
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimits.configured(None, maxRowsPerTrigger, maxCommitsPerTrigger)
+  override def getDefaultReadLimit: ReadLimit = planner.readLimit
 
   // slice-aware reportLatestOffset is [[SliceAwareReporting]]
-  override protected def headOffsetForReport(): OffsetV2 = {
-    val cur = freshMeta.currentSnapshot.map(_.sequenceNumber).getOrElse(0L)
-    CdcOffset(availableNowCap.fold(cur)(math.min(cur, _)))
-  }
+  override protected def headOffsetForReport(): OffsetV2 =
+    CdcOffset(planner.head(headSeq(freshMeta)))
 
   /** Never called: [[SupportsAdmissionControl]] routes the engine to
     * `latestOffset(start, limit)` instead (which is the point — a V1
@@ -330,7 +329,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     * window — the data path ([[Changes.between]] / the genesis slice
     * reader) owns the truncation policy and fails or synthesizes
     * loudly there. */
-  private def lineageAbove(meta: TableMeta, above: Long, headCap: Long): List[Snapshot] =
+  override def lineage(meta: TableMeta, above: Long, headCap: Long): List[Snapshot] =
     meta.currentSnapshot match {
       case None => Nil
       case Some(anchor) =>
@@ -340,253 +339,69 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
 
   /** Admission control: cap each trigger at `max-commits-per-trigger`
     * main-lineage commits and/or `max-rows-per-trigger` rows — a
-    * backlog then drains as bounded, replayable micro-batches.
-    *
-    * The incremental tail is commit-granular while commits fit the
-    * caps (a CDC batch is a seq-range diff, so a commit is its
-    * smallest REPLAYABLE unit); two unit kinds additionally split at
-    * FILE granularity under the rows cap — the fromSeq=0 GENESIS unit
-    * (an aged table's entire retained state, `{"seq":N,"idx":K}`
-    * offsets) and a single APPEND commit whose added rows alone exceed
-    * the cap (the one-commit 10 TB backfill,
-    * `{"seq":N,"idx":K,"unit":"added"}` offsets) — so either catch-up
-    * drains as ⌈files/cap⌉ bounded slices and later commits never
-    * piggyback on it (genesis rows are counted from the full state's
-    * manifest stats, never the undercounting added-files view).
-    * Row-LEVEL commits split three ways. A MOR commit that removes no
-    * data files and adds only POSITION deletes is BUDGETED exactly —
-    * a position-delete file's manifest record count IS its delete-row
-    * count ([[morBudget]]) — so bounded MOR traffic packs into capped
-    * triggers like appends, and a position-delete-ONLY commit that
-    * alone exceeds the cap slices by its added DELETE-FILE set
-    * (`{"seq":N,"idx":K,"unit":"deleted"}` offsets: change rows bind
-    * to (parent file, pos), so a delete-file subset is an exact
-    * replayable slice — a table-wide MOR DELETE drains bounded with
-    * no spill). Everything else — COW, equality deletes, over-cap
-    * MIXED MOR — has no cheap row count or no single file set to
-    * slice: by default it admits-and-CLOSES the batch (the cap is
-    * never silently inert), and under the `split-row-level` opt-in it
-    * too drains bounded — the diff is materialized ONCE under the
-    * stream's checkpoint and its files slice via
-    * `{"seq":N,"idx":K,"unit":"rows"}` offsets (see the batch-bound
-    * note in STREAMING.md). Appends count their EXACT added rows
-    * (manifest stats, chunk-cached, only loaded when the rows cap is
-    * set); `replace` (compaction) emits nothing and
-    * passes through free. The admission walk is in-memory pointer
-    * chasing over RETAINED snapshots (bounded by the table's retention
-    * policy), already materialized by refresh. */
+    * backlog then drains as bounded, replayable micro-batches. The
+    * engine-given start is used verbatim, never re-clamped to a raised
+    * `start-seq` (planning would desync from delivery, see getBatch);
+    * the loop itself is the shared [[AdmissionPlanner]]. */
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val end = planEnd(start, limit)
-    Option(end).map(o => parseOffset(o.json))
-      .foreach(o => recordPlannedEnd(o, o.fileIdx >= 0))
-    end
-  }
-
-  private def planEnd(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     val st = Option(start).map(o => parseOffset(o.json)).getOrElse(CdcOffset(startSeq))
-    // effective caps come from the limit the engine PASSED, not the
-    // option fields: normal triggers hand back getDefaultReadLimit
-    // (== the configured caps), Trigger.Once hands allAvailable()
-    // (uncapped — the whole backlog in one batch, mid-drain included)
-    val (_, capRows, capCommits) = ReadLimits.caps(
-      limit, None, maxRowsPerTrigger, maxCommitsPerTrigger)
     val meta = freshMeta
-    val curHead = meta.currentSnapshot.map(_.sequenceNumber).getOrElse(0L)
-    val head = availableNowCap.fold(curHead)(math.min(curHead, _))
-
-    // mid-drain: the next file slice of the in-flight unit (genesis
-    // state or an oversized append's added set); once the unit
-    // completes, remaining budget admits the tail
-    if (st.fileIdx >= 0) {
-      if (capRows.isEmpty && capCommits.isEmpty)
-        return CdcOffset(math.max(head, st.seq))
-      if (st.unit == SliceOffsets.UnitRows) {
-        // materialized row-level unit: slices pack whole spill files up
-        // to the rows cap (footer-exact counts; no file exceeds the cap
-        // — maxRecordsPerFile bounded the write); a final slice with
-        // leftover budget admits APPEND tail commits (budgeted by
-        // manifest stats) — a row-level successor defers to its own
-        // trigger and splits (see tailEnd)
-        val list = rowUnitList(st.seq)
-        val (next, _, rows) = drain.admit(list, st.fileIdx, None, capRows)
-        return if (next < list.size) CdcOffset(st.seq, next, SliceOffsets.UnitRows)
-        else tailEnd(meta, st.seq, head, commits0 = 1, rows0 = rows,
-          capCommits, capRows)
-      }
-      val list = unitFiles(meta, st.seq, st.unit)
-      val (next, _, rows) = drain.admit(list, st.fileIdx, None, capRows)
-      return if (next < list.size) CdcOffset(st.seq, next, st.unit)
-      else tailEnd(meta, st.seq, head, commits0 = 1, rows0 = rows, capCommits, capRows)
-    }
-
-    // the engine-given start verbatim, matching getBatch: st already
-    // fell back to startSeq when the engine passed none (fresh
-    // stream), and re-clamping a CHECKPOINTED start to a raised
-    // start-seq would desync planning from delivery — the slice path
-    // would serve only the split unit and advance the offset log past
-    // the unclamped commits (silent loss), and the pure-seq path
-    // would admit rows its budget never counted
-    val base = st.seq
-    if (head <= base) return if (start != null) start else null
-    if (capCommits.isEmpty && capRows.isEmpty)
-      return CdcOffset(head)
-
-    if (base == 0 && capRows.isDefined) {
-      // fresh-start genesis under a rows cap: the retained state is
-      // one seq but NOT one replayable unit — split it at file
-      // granularity (stable path order) so the catch-up is bounded
-      lineageAbove(meta, 0, head).headOption match {
-        case None => return if (start != null) start else null
-        case Some(g) =>
-          val list = unitFiles(meta, g.sequenceNumber, SliceOffsets.UnitState)
-          val (next, _, rows) = drain.admit(list, 0, None, capRows)
-          return if (next < list.size) CdcOffset(g.sequenceNumber, next)
-          else tailEnd(meta, g.sequenceNumber, head, commits0 = 1, rows0 = rows,
-            capCommits, capRows)
-      }
-    }
-    tailEnd(meta, base, head, commits0 = 0, rows0 = 0L, capCommits, capRows)
+    val end = CdcOffset(planner.plan(this, meta, headSeq(meta), st.slice, limit))
+    if (start == null && end == st) null
+    else { recordPlannedEnd(end, end.fileIdx >= 0); end }
   }
 
-  /** Unit-slice admission under the rows cap (the CDC source has no
-    * files cap): progress guarantee, memoization, and release are the
-    * shared [[graft.catalog.SliceDrain]]. */
-  private val drain = new graft.catalog.SliceDrain
+  /** A commit's answer under the rows cap. The incremental tail is
+    * commit-granular (a CDC batch is a seq-range diff, so a commit is
+    * its smallest REPLAYABLE unit). Appends count their EXACT added
+    * rows (manifest stats, chunk-cached) and split as `"added"` — the
+    * one-commit 10 TB backfill. `replace` (compaction) emits nothing
+    * and is free. A MOR commit that removes no data files and adds
+    * only POSITION deletes is BUDGETED exactly ([[morBudget]]), so
+    * bounded MOR traffic packs into capped triggers like appends, and a
+    * position-delete-ONLY commit splits by its added DELETE-FILE set
+    * (`"deleted"`: change rows bind to (parent file, pos), so a
+    * delete-file subset is an exact replayable slice). Everything else
+    * — COW, equality deletes — has no cheap row count: it closes the
+    * batch that admits it, so the cap is never silently inert. Under
+    * the `split-row-level` opt-in such a commit, and an over-cap MIXED
+    * MOR commit, instead split as a `"rows"` unit: the diff is
+    * materialized ONCE under the stream's checkpoint and its files
+    * slice (see the batch-bound note in STREAMING.md). The split paths
+    * re-assert the contiguity contract first: a slice batch bypasses
+    * [[Changes.between]], whose expired-base check is the changelog's
+    * only truncation guard on the unsplit path. */
+  override def admission(meta: TableMeta, base: Long, s: Snapshot): Admission = {
+    def split(unit: String, files: => Seq[DataFile]) = Some(Split(unit, () => {
+      assertSplitContiguous(meta, base, s)
+      planner.list(s.sequenceNumber, unit)(files)
+    }))
+    // the materialized diff is sized by the configured cap: a trigger
+    // that asks for admission carries it (ReadLimits.caps)
+    lazy val rows = Option.when(splitRowLevel)(Split(SliceOffsets.UnitRows,
+      () => rowUnitMaterialize(meta, base, s, maxRowsPerTrigger.get), spilled = true))
+    s.operation match {
+      case "replace" => Admission()
+      case "append" =>
+        val added = ops.addedFiles(s)
+        Admission(rows = added.map(_.records).sum, split = split(SliceOffsets.UnitAdded, added))
+      case _ =>
+        val added = ops.addedFiles(s)
+        morBudget(meta, s, added) match {
+          case None => Admission(bounded = false, split = rows)
+          case Some((r, dels)) =>
+            Admission(rows = r, split =
+              if (dels.nonEmpty && added.isEmpty) split(SliceOffsets.UnitDeleted, dels) else rows)
+        }
+    }
+  }
 
   /** Per-drain memo of a `unit:"deleted"` drain's parent file list
     * (the O(table-files) chunk walk [[deletedSlice]] reads against) —
-    * its own field rather than a [[SliceDrain]] entry because the
-    * drain memo is single-slot and alternating keys would thrash it.
-    * Cleared with the drain memo in [[commit]]. */
+    * its own field rather than a planner memo entry because that memo
+    * is single-slot and alternating keys would thrash it. Cleared with
+    * the drain memo in [[commit]]. */
   @volatile private var parentFilesMemo: Option[(Long, Seq[graft.meta.DataFile])] = None
-
-  /** Commit-granular admission over the main lineage above `base`,
-    * with `commits0`/`rows0` budget already consumed (by a completed
-    * unit slice). Returns the admitted end offset: a pure seq
-    * (== base when the budget is spent) — or, when the trigger's
-    * FIRST unit is an append whose added rows ALONE exceed the rows
-    * cap, a file-granular slice of that append's added set
-    * (`{"seq":N,"idx":K,"unit":"added"}`), so a one-commit 10 TB
-    * backfill landing mid-tail drains bounded exactly like the
-    * genesis state. Appends carry no delete files, so slices are
-    * exact insert-tagged subsets of the commit's rows. A trigger that
-    * already spent budget closes instead — a unit never piggybacks. */
-  private def tailEnd(meta: TableMeta, base: Long, head: Long,
-      commits0: Int, rows0: Long,
-      capCommits: Option[Int], capRows: Option[Long]): CdcOffset = {
-    val countRows = capRows.isDefined
-    var n = commits0; var rows = rows0; var end = base; var stop = false
-    var slice: Option[CdcOffset] = None
-    for (s <- lineageAbove(meta, base, head) if !stop) {
-      val isAppend = s.operation == "append"
-      val isReplace = s.operation == "replace"
-      val isRowLevel = !isAppend && !isReplace
-      lazy val addedList = ops.addedFiles(s)
-      // a row-level commit's exact change-row budget when metadata
-      // gives one cheaply (MOR position-delete traffic — the spelling
-      // STREAMING.md recommends for bounded row-level streams); None =
-      // COW or equality deletes, whose change-row count has no cheap
-      // upper bound
-      val mor: Option[(Long, Seq[DataFile])] =
-        if (countRows && isRowLevel) morBudget(meta, s, addedList) else None
-      val r =
-        if (!countRows) 0L
-        else if (isAppend) addedList.map(_.records).sum
-        else mor.map(_._1).getOrElse(0L)
-      val exceeds = capCommits.exists(n + 1 > _) || capRows.exists(rows + r > _)
-      if (exceeds && n > 0) stop = true
-      else if (exceeds && isAppend && capRows.exists(r > _) && addedList.nonEmpty) {
-        // the trigger's FIRST unit is an over-cap append (n == 0 here
-        // — the n > 0 case stopped above): split its added set at
-        // file granularity, seeding the memo with the list in hand.
-        // But FIRST re-assert the contiguity contract: a slice batch
-        // is served by addedSlice, BYPASSING Changes.between — whose
-        // expired-base check is the changelog's only truncation guard
-        // on the unsplit path — so without this, a restart whose
-        // checkpointed seq has been expired would advance the offset
-        // log straight past the expired commits' change rows (silent
-        // data loss where the unsplit path fails loudly)
-        assertSplitContiguous(meta, base, s)
-        val list = drain.list(s.sequenceNumber, SliceOffsets.UnitAdded)(addedList)
-        val (next, _, rAdm) = drain.admit(list, 0, None, capRows)
-        if (next < list.size) {
-          slice = Some(CdcOffset(s.sequenceNumber, next, SliceOffsets.UnitAdded))
-          stop = true
-        } else {
-          // the whole unit fit after all (one unsplittable file):
-          // admit it; the next iteration's exceeds check closes
-          n += 1; rows += rAdm; end = s.sequenceNumber
-        }
-      } else if (exceeds && capRows.exists(r > _) &&
-          mor.exists(_._2.nonEmpty) && addedList.isEmpty) {
-        // the trigger's FIRST unit is an over-cap MOR commit that is
-        // position-delete-ONLY (budgeted, no added data files): slice
-        // its added DELETE-FILE set — the change rows bind to
-        // (parent file, pos), so a delete-file subset is an exact
-        // replayable slice and a table-wide MOR DELETE drains bounded
-        // WITHOUT the split-row-level materialization spill. Same
-        // contiguity re-assertion as the added split: deletedSlice
-        // bypasses Changes.between's truncation guards.
-        assertSplitContiguous(meta, base, s)
-        val list = drain.list(s.sequenceNumber, SliceOffsets.UnitDeleted)(mor.get._2)
-        val (next, _, rAdm) = drain.admit(list, 0, None, capRows)
-        if (next < list.size) {
-          slice = Some(CdcOffset(s.sequenceNumber, next, SliceOffsets.UnitDeleted))
-          stop = true
-        } else {
-          // one unsplittable delete file: admit whole; next
-          // iteration's exceeds check closes
-          n += 1; rows += rAdm; end = s.sequenceNumber
-        }
-      } else if (countRows && isRowLevel && mor.isEmpty && splitRowLevel && n > 0) {
-        // under the opt-in an UNBUDGETED row-level commit NEVER
-        // piggybacks a trigger that already spent budget — its
-        // change-row count is unknown (r = 0 above), so
-        // admit-and-close here would be the exact unbounded batch the
-        // opt-in exists to prevent (e.g. a 10M-row MERGE right behind
-        // a completed drain). Deferred one trigger, it becomes the
-        // FIRST unit and splits. A BUDGETED (MOR) commit that fits
-        // the remaining budget rides like an append; one that
-        // doesn't was deferred by the exceeds check above.
-        stop = true
-      } else if (countRows && isRowLevel && splitRowLevel &&
-          (mor.isEmpty || exceeds)) {
-        // row-level commit as the trigger's FIRST unit with the
-        // split-row-level opt-in, either unbudgetable (COW/equality)
-        // or over-cap MIXED MOR (added data AND deletes — two file
-        // sets, no single-set slice): materialize the commit's
-        // change rows ONCE — bounded
-        // files via maxRecordsPerFile = the rows cap — and drain them
-        // as {"seq":N,"idx":K,"unit":"rows"} slices. All of
-        // Changes.between's own guards (expired base, truncation,
-        // rollback) run inside the materialization, so this path is
-        // exactly as loud as the unsplit one.
-        val list = rowUnitMaterialize(meta, end, s, capRows.get)
-        if (list.isEmpty) {
-          // empty diff: nothing to slice — admit-and-close (between
-          // recomputes the empty batch)
-          n += 1; end = s.sequenceNumber; stop = true
-        } else {
-          // even a diff that fits ONE batch is delivered from the
-          // spilled files (next == list.size then): the spill is the
-          // diff's single execution, not insurance beside a recompute
-          val (next, _, _) = drain.admit(list, 0, None, capRows)
-          slice = Some(CdcOffset(s.sequenceNumber, next, SliceOffsets.UnitRows))
-          stop = true
-        }
-      } else {
-        n += 1; rows += r; end = s.sequenceNumber
-        // row-level commit under a rows cap: a BUDGETED (MOR
-        // position-delete) commit that fits packs like an append —
-        // several small MOR deletes share one capped trigger; an
-        // UNBUDGETED one (COW/equality — unknown change-row count) or
-        // an over-cap MIXED one (no single-file-set slice, no opt-in)
-        // closes the batch here, so the cap is never silently inert
-        if (countRows && isRowLevel && (mor.isEmpty || exceeds)) stop = true
-      }
-    }
-    slice.getOrElse(CdcOffset(end))
-  }
 
   /** A row-level commit's EXACT change-row budget when the metadata
     * gives one cheaply, paired with its added position-delete file
@@ -596,8 +411,8 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     * position-delete file's manifest record count IS its (file, pos)
     * entry count — one delete row each; entries whose target was
     * already dead emit nothing, so the budget conservatively
-    * OVERCOUNTS (the same contract as [[graft.catalog.SliceDrain]]'s
-    * admit). None — no cheap bound — when the commit removes data
+    * OVERCOUNTS (the same contract as the planner's slice
+    * admission). None — no cheap bound — when the commit removes data
     * files (COW: the paired delete rows come from a state diff), adds
     * EQUALITY deletes (their stats count predicates, not matched
     * rows), or its parent has been expired (no delete-list diff).
@@ -646,37 +461,32 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
 
   // ---- unit slices (genesis state / oversized append) --------------
 
-  /** One metadata-backed admission UNIT's file list in stable path
-    * order — the genesis snapshot's full STATE (`unit = ""`), an
-    * oversized append's ADDED set (`unit = "added"`), or an oversized
-    * MOR position-delete commit's added DELETE-FILE set
-    * (`unit = "deleted"`; the offset carries which, because the same
-    * seq can be any of them depending on where the stream started;
-    * the materialized `"rows"` unit has its
-    * own loader, [[rowUnitList]]) —
-    * so (seq, fileIdx, unit) offsets slice it reproducibly across
-    * triggers, restarts, and checkpoint replays. Memoization and the
-    * end-of-drain release are the shared [[graft.catalog.SliceDrain]]
-    * (released by [[commit]] once offsets return to pure seqs; the
-    * memo holds the O(unit-files) DataFile list on the driver for the
-    * drain's duration, and a post-release replay just recomputes it).
-    * A mid-drain expiry of the snapshot fails loudly: the slice
-    * indices would otherwise silently re-bind to different files. */
+  /** One admission UNIT's file list in stable path order — the
+    * genesis snapshot's full STATE (`unit = ""`), an oversized append's
+    * ADDED set (`unit = "added"`), an oversized MOR position-delete
+    * commit's added DELETE-FILE set (`unit = "deleted"`), or a
+    * materialized row-level diff (`unit = "rows"`, [[rowUnitList]]);
+    * the offset carries which, because the same seq can be any of them
+    * depending on where the stream started. Memoized in the planner
+    * (released by [[commit]] once offsets return to pure seqs). A
+    * mid-drain expiry of the snapshot fails loudly: the slice indices
+    * would otherwise silently re-bind to different files. */
+  override def unitFiles(meta: TableMeta, seq: Long, unit: String): IndexedSeq[DataFile] =
+    if (unit == SliceOffsets.UnitRows) rowUnitList(seq)
+    else {
+      val s = unitSnap(meta, seq)
+      planner.list(seq, unit)(unit match {
+        case SliceOffsets.UnitAdded => ops.addedFiles(s)
+        case SliceOffsets.UnitDeleted => addedPosDeletes(meta, s)
+        case _ => ops.allFiles(s)
+      })
+    }
+
   private def unitSnap(meta: TableMeta, seq: Long): Snapshot =
     meta.snapshots.find(_.sequenceNumber == seq).getOrElse(
       throw new IllegalStateException(
         s"CDC catch-up snapshot (seq $seq) is no longer retained; " +
           "retention must cover streaming lag"))
-
-  private def unitFiles(meta: TableMeta, seq: Long,
-      unit: String): IndexedSeq[DataFile] = {
-    val s = unitSnap(meta, seq)
-    drain.list(seq, unit)(unit match {
-      case SliceOffsets.UnitAdded => ops.addedFiles(s)
-      case SliceOffsets.UnitDeleted => addedPosDeletes(meta, s)
-      case _ => ops.allFiles(s)
-    })
-  }
 
   /** The output-schema empty frame (nullable fields — unioned batch
     * legs must agree on nullability). */
@@ -781,7 +591,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     * own checkpoint dir instead of handed to the sink unbounded. */
   private def rowUnitMaterialize(meta: TableMeta, base: Long, s: Snapshot,
       cap: Long): IndexedSeq[DataFile] =
-    drain.list(s.sequenceNumber, SliceOffsets.UnitRows) {
+    planner.list(s.sequenceNumber, SliceOffsets.UnitRows) {
       val dir = rowUnitDir(s.sequenceNumber)
       val fs = hadoopFs(dir)
       if (!fs.exists(dir)) {
@@ -827,7 +637,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     * would silently change slice contents — a lost dir fails loudly
     * instead (the checkpoint was tampered with; restart the stream). */
   private def rowUnitList(seq: Long): IndexedSeq[DataFile] =
-    drain.list(seq, SliceOffsets.UnitRows) {
+    planner.list(seq, SliceOffsets.UnitRows) {
       val dir = rowUnitDir(seq)
       if (!hadoopFs(dir).exists(dir))
         throw new IllegalStateException(
@@ -1007,9 +817,9 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
           // start-seq: Spark replays the last committed batch's
           // (start, end) pair on restart, and a later start-seq
           // raised over an existing checkpoint must not silently
-          // skip the commits in between (planEnd's base clamp only
-          // shapes FUTURE planning; like Kafka's startingOffsets,
-          // the option is where a stream WITHOUT state begins)
+          // skip the commits in between (like Kafka's
+          // startingOffsets, the option is where a stream WITHOUT
+          // state begins)
           val lower = st.map(_.seq).getOrElse(startSeq)
           Changes
             .between(spark, ops, meta, lower, en.seq,
@@ -1028,7 +838,7 @@ class GraftCdcSource(spark: SparkSession, ops: TableOps,
     // O(files) memo (a later recovery replay of a metadata-backed
     // sliced range just recomputes it)
     val en = parseOffset(end.json)
-    if (en.fileIdx < 0) { drain.release(); parentFilesMemo = None }
+    if (en.fileIdx < 0) { planner.release(); parentFilesMemo = None }
     // gate on the spill ROOT, not the current opt-in: restarting the
     // same checkpoint with split-row-level removed must still sweep a
     // previously materialized unit and orphaned tmp dirs, or they
@@ -1090,4 +900,9 @@ case class CdcOffset(seq: Long, fileIdx: Int = -1, unit: String = "")
   extends OffsetV1 {
   override def json(): String =
     graft.catalog.SliceOffsets.render(seq, fileIdx, unit)
+  def slice: Slice = Slice(seq, fileIdx, unit)
+}
+
+object CdcOffset {
+  def apply(s: Slice): CdcOffset = CdcOffset(s.seq, s.fileIdx, s.unit)
 }

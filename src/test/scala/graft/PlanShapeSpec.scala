@@ -336,14 +336,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q_join_bloom: runtime bloom filter injected on the probe side") {
     // replicate the Decl's confs but skip its localCheckpoint (which
     // truncates lineage and hides the injected filter from the plan)
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    ops.Joins.setBloomConfs(spark)
-    try {
+    Dsl.withConf(spark, ops.Joins.bloomConfs: _*) {
       val df = ops.Joins.bloomJoin(spark, sf)
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain"),
@@ -353,8 +346,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // and the result must still be the plain-join answer
       val row = df.collect().head
       assert(row.getString(0) == "Brand#23" && row.getLong(1) > 0)
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("q_llm_substrdedup: the corpus-wide span shuffle is keyed on xxhash64, not raw strings") {

@@ -270,7 +270,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     // hit (the by-name loader must NOT re-evaluate), and prove
     // release() really frees the list — a weak reference is collected
     // once the memo was the last strong holder.
-    val drain = new graft.catalog.SliceDrain
+    val drain = new graft.streaming.AdmissionPlanner
     def mkFiles(): Seq[DataFile] = (0 until Chunks * PerChunk).map { i =>
       val c = i / PerChunk
       DataFile(s"p/bigt/data/k=$c/f${i % PerChunk}.parquet", records = 1000L,

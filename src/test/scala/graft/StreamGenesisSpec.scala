@@ -377,6 +377,44 @@ class StreamGenesisSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("a genesis snapshot with live position and equality deletes streams its live rows, split or not") {
+    freshWh("tcGenDel")
+    spark.sql("CREATE NAMESPACE tcGenDel.st")
+    spark.sql("CREATE TABLE tcGenDel.st.t (id BIGINT)")
+    (0 until 4).foreach(i =>
+      spark.range(i * 5, i * 5 + 5).coalesce(1).writeTo("tcGenDel.st.t").append())
+    import TestSpark.TableFiles
+    val t0 = gt("tcGenDel", "st", "t")
+    t0.commitDeletes(Seq(Seq(t0.positionsById(3L))), equalityIds = Seq(12L))
+    graft.catalog.Maintenance.expireSnapshots(gt("tcGenDel", "st", "t").ops,
+      keepLast = 1): Unit
+    val genesis = gt("tcGenDel", "st", "t").readSnapshot.get
+    assert(gt("tcGenDel", "st", "t").meta.snapshots.size == 1 &&
+      genesis.deleteFiles.count(graft.catalog.Mor.isEquality) == 1 &&
+      genesis.deleteFiles.count(!graft.catalog.Mor.isEquality(_)) == 1,
+      s"setup: the only retained snapshot carries one live delete of each kind")
+    val live = spark.table("tcGenDel.st.t").collect().map(_.getLong(0)).sorted.toList
+    assert(live == (0L until 20L).filterNot(Set(3L, 12L)).toList)
+    def drain(opts: (String, String)*): List[List[Long]] = {
+      val batches = scala.collection.mutable.ArrayBuffer.empty[List[Long]]
+      val q = spark.readStream.options(opts.toMap).table("tcGenDel.st.t")
+        .writeStream
+        .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) => {
+          val ids = df.collect().map(_.getLong(0)).toList
+          if (ids.nonEmpty) batches.synchronized { batches += ids }
+          ()
+        })
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      batches.synchronized(batches.toList)
+    }
+    val whole = drain()
+    assert(whole.size == 1 && whole.head.sorted == live, s"uncapped drain: $whole")
+    val split = drain("max-files-per-trigger" -> "1")
+    assert(split.size == 4, s"one batch per genesis file: $split")
+    assert(split.flatten.sorted == live, s"split drain: $split")
+  }
+
   test("streaming checkpoints survive warehouse relocation (offsets are seqs, not paths)") {
     // the reference's thesis extended to streaming state: a checkpoint
     // written against one warehouse location resumes against the MOVED
