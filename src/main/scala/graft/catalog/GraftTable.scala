@@ -416,11 +416,14 @@ object GraftTable {
 
 }
 
-/** ScanBuilder that (1) prunes the snapshot file list on pushed
-  * predicates vs per-file min/max bounds — the driver-side file
-  * skipping the reference's metadata enables (SURVEY §4) — and
-  * (2) delegates the surviving files to ParquetScanBuilder so parquet
-  * row-group pushdown and column pruning still happen below us.
+/** ScanBuilder that prunes the snapshot file list on pushed predicates
+  * vs per-file min/max bounds — the driver-side file skipping the
+  * reference's metadata enables (SURVEY §4) — and builds a
+  * [[MergeOnReadScan]] over the surviving files, which plans them
+  * through the parquet delegate so row-group pushdown and column
+  * pruning still happen below us. The scan may report the table's
+  * storage-partitioned layout ([[KeyGrouping]]) unless it reads
+  * removed rows or projects a metadata column.
   * `pinned` replaces the snapshot's (data files, delete files) and adds
   * a removed-rows read's added deletes: the incremental read's added
   * files, or [[Mor.liveRows]]' and [[Mor.removedRows]]' lists.
@@ -458,7 +461,7 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = {
+  override def build(): MergeOnReadScan = {
     val v1 = pushedExprs.flatMap(e => GraftFilterShim.translate(e))
     // two-level pruning: manifest chunks whose range keys can't match
     // are never even read (O(matching chunks) driver work on a
@@ -473,13 +476,11 @@ class GraftScanBuilder(table: GraftTable, options: CaseInsensitiveStringMap,
     // only delete files whose path range can reference a surviving
     // data file ride along (file-pruned scans skip unrelated deletes)
     val prunedDeletes = Mor.relevantDeletes(liveDeletes, pruned)
-    // the storage-partitioned scan serves only plain reads: no metadata
-    // column, no live delete, no add_files import, no removed rows
-    val plain = !required.fieldNames.exists(GraftTable.MetaColNames) &&
-      prunedDeletes.isEmpty && added.isEmpty && !pruned.exists(_.nameMapped.contains(true))
-    (if (plain) SpjScan.tryBuild(table, options, required, pushedExprs, pruned, spark) else None)
-      .getOrElse(new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes,
-        added = Mor.relevantDeletes(added, pruned)))
+    val grouping =
+      if (added.nonEmpty || required.fieldNames.exists(GraftTable.MetaColNames)) None
+      else KeyGrouping(spark, table.meta, required, pruned)
+    new MergeOnReadScan(table, options, required, pushedExprs, pruned, prunedDeletes,
+      added = Mor.relevantDeletes(added, pruned), grouping = grouping)
   }
 }
 
@@ -501,6 +502,22 @@ object FilePruning {
            _: FloatType | _: StringType | _: DateType | _: TimestampType => true
       case _ => false
     }
+  }
+
+  /** The one non-null value data file `f` holds of partition field
+    * `pf` (source column `col`), bound-encoded (a day as `yyyy-MM-dd`),
+    * or None when `f`'s metadata cannot prove one: identity and days
+    * from a zero null count and bounds that agree (on the day), bucket
+    * from the writer-stamped partition tuple — bucket membership does
+    * not follow from bounds. Runtime group filtering and key-grouped
+    * scans both stand on this proof. */
+  def uniformValue(f: DataFile, pf: PartField, col: String): Option[String] = pf.transform match {
+    case t if t.startsWith("bucket[") => f.partition.get(pf.name)
+    case t @ ("identity" | "days") if f.nullCount.get(col).contains(0L) =>
+      val cut: String => String = if (t == "days") _.take(10) else identity
+      for (mn <- f.minBound.get(col); mx <- f.maxBound.get(col) if cut(mn) == cut(mx))
+        yield cut(mn)
+    case _ => None
   }
 
   def keepFile(f: DataFile, filter: Filter): Boolean = {
@@ -546,21 +563,16 @@ object FilePruning {
     }
   }
 
-  private val tsFmt = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(java.time.ZoneOffset.UTC)
-
   /** compare stored bound (string) against the filter value; None = incomparable */
   private def compareBound(col: String, bound: String, v: Any): Option[Int] = v match {
     case n @ (_: Int | _: Long | _: Short | _: Byte | _: Double | _: Float | _: java.math.BigDecimal) =>
       scala.util.Try(BigDecimal(bound).compare(BigDecimal(n.toString))).toOption
     case s: String => Some(bound.compareTo(s))
     case d: java.sql.Date => Some(bound.compareTo(d.toString))
-    case t: java.sql.Timestamp =>
-      Some(bound.compareTo(tsFmt.format(t.toInstant)))
-    case t: java.time.LocalDateTime =>
-      Some(bound.compareTo(t.format(java.time.format.DateTimeFormatter
-        .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS"))))
-    case t: java.time.Instant => Some(bound.compareTo(tsFmt.format(t)))
+    case t: java.sql.Timestamp => Some(bound.compareTo(Writer.BoundTimestamp.format(t.toInstant)))
+    // a LocalDateTime has no instant: the formatter's zone leaves it as is
+    case t: java.time.LocalDateTime => Some(bound.compareTo(Writer.BoundTimestamp.format(t)))
+    case t: java.time.Instant => Some(bound.compareTo(Writer.BoundTimestamp.format(t)))
     case _ => None
   }
 }

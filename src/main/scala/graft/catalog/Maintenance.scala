@@ -592,10 +592,12 @@ object Maintenance {
     * min/max bounds regardless of spec), new writes cluster and fan
     * out by the new transforms. The spec-dependent optimizations
     * degrade gracefully on mixed tables: runtime group filtering and
-    * storage-partitioned joins both require per-file value-uniformity
-    * proofs, which old-layout files simply fail — so they fall back,
-    * never corrupt. A later full compaction rewrites everything into
-    * the new layout and the proofs hold again.
+    * key-grouped scans both require the per-file proof of one value of
+    * each spec field ([[FilePruning.uniformValue]]), which old-layout
+    * files simply fail — so the rewrite scan falls back to static
+    * pruning and the scan reports no grouping (a storage-partitioned
+    * join shuffles), never corrupt. A later full compaction rewrites
+    * everything into the new layout and the proofs hold again.
     *
     * `transforms`: (source column, "identity" | "days" | "bucket[N]").
     */

@@ -1,16 +1,17 @@
 package graft.catalog
 
-import graft.meta.{DataFile, RelPaths}
+import graft.meta.{DataFile, RelPaths, TableMeta}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Expression => V2Expression}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.execution.datasources.{FilePartition, GraftFilterShim, GraftManifestIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -24,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * field ids; they resolve through the table's name mapping), the
   * `_file`/`_pos` metadata columns (user queries and the DELTA row-id
   * scan of merge-on-read UPDATE/MERGE), [[Mor.liveRows]]' pinned reads,
-  * the copy-on-write rewrite scan and the change reads'
-  * [[Mor.removedRows]] — except the opt-in storage-partitioned
-  * [[SpjScan]].
+  * the copy-on-write rewrite scan, the change reads'
+  * [[Mor.removedRows]] and the storage-partitioned reads of a join on
+  * partition keys.
   *
   * Deletes are applied INSIDE the scan task, file by file, the way the
   * Iceberg spec's readers do (https://iceberg.apache.org/spec/#scan-planning):
@@ -46,11 +47,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * cached per JVM ([[MergeOnReadScan.parsed]]).
   *
   * A scan with no delete and no metadata column stays columnar: a
-  * plain read plans the parquet delegate's own partitions and reader,
-  * a read with imports routes the delegates' partitions per resolution
-  * mode ([[StreamDispatchReaderFactory]]). Otherwise every partition
-  * reads rows. Every predicate is still reported residual by the
-  * builder, so Spark re-filters above.
+  * plain read plans the parquet delegate's own partitions and reader;
+  * a read with imports or a partition key tags the delegates'
+  * partitions ([[MergeOnReadPartition]]) and routes each to the reader
+  * of its resolution mode ([[RoutedReaderFactory]]). Otherwise every
+  * partition reads rows. Every predicate is still reported residual by
+  * the builder, so Spark re-filters above.
+  *
+  * KEY GROUPING. Given a [[KeyGrouping]] (only [[GraftScanBuilder]]
+  * builds one, for a session that opts in and files that all prove
+  * their partition key), the scan reports `KeyGroupedPartitioning` and
+  * every partition holds the files of one key and carries it: the
+  * delegate bin-packs across keys, so its partitions are split by key.
+  * Two tables partitioned on their join key then join without a
+  * shuffle, under deletes and imports too. Otherwise the scan reports
+  * `UnknownPartitioning`.
   *
   * REMOVED ROWS. Given `added` deletes, the scan instead returns the
   * rows `deletes` keep and some delete of `added` kills, each once, by
@@ -74,15 +85,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    throws, and pruned files move to the operation's carryover.
   * The delete files are re-derived for the narrowed list
   * ([[Mor.relevantDeletes]]) and partitions are planned once per file
-  * set, so a filter that arrives between plannings is honoured. The
-  * reader factory stays the one built for the scan's own lists: Spark
-  * takes it when it plans the scan, before runtime filters arrive.
+  * set, so a filter that arrives between plannings is honoured; a
+  * key-grouped scan's narrowed partitions carry a subset of its keys.
+  * The reader factory stays the one built for the scan's own lists:
+  * Spark takes it when it plans the scan, before runtime filters
+  * arrive.
   */
 class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
     required: StructType, pushedExprs: Seq[Expression],
     files: Seq[DataFile], deletes: Seq[DataFile],
-    rewrite: Option[RewriteGroups] = None, added: Seq[DataFile] = Nil)
-  extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering {
+    rewrite: Option[RewriteGroups] = None, added: Seq[DataFile] = Nil,
+    grouping: Option[KeyGrouping] = None)
+  extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering
+  with SupportsReportPartitioning {
 
   import MergeOnReadScan._
 
@@ -107,6 +122,9 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
   override def planInputPartitions(): Array[InputPartition] = planned._2
 
   override def createReaderFactory(): PartitionReaderFactory = layout.factory
+
+  override def outputPartitioning(): Partitioning = grouping.fold[Partitioning](
+    new UnknownPartitioning(0))(g => new KeyGroupedPartitioning(g.clustering, g.keys.size))
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new DeleteFilesAppliedMetric, new PositionDeletedRowsMetric,
@@ -282,16 +300,16 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
       }
 
     // no delete and no metadata column: columnar, through the
-    // delegate's own factory when every file resolves by field id
+    // delegate's own partitions and factory unless a partition must be
+    // tagged with its resolution mode or key
     private val columnar = deletes.isEmpty && added.isEmpty &&
       !required.fieldNames.exists(GraftTable.MetaColNames)
-    private val routed = files.exists(isMapped)
+    private val tagged = files.exists(isMapped) || grouping.isDefined
+    private val routed = RoutedReaderFactory(idFactory, mappedFactory)
 
     val factory: PartitionReaderFactory =
-      if (columnar && !routed) idFactory.get
-      else if (columnar)
-        new StreamDispatchReaderFactory(idFactory.orElse(mappedFactory).get,
-          mappedFactory.orElse(idFactory).get)
+      if (columnar && !tagged) idFactory.get
+      else if (columnar) routed
       else {
         val (posFactory, posSources) = sources(posDeletes, Mor.deleteSchema)
         val eqParsed = eqGroups.map { case (keys, group) =>
@@ -308,8 +326,7 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
             case n => BoundReference(ordinal(n), readSchema(n).dataType, nullable = true)
           }
         }
-        MergeOnReadReaderFactory(idFactory, mappedFactory,
-          output, if (rowIndex) ordinal(RowIndexField.name) else -1,
+        MergeOnReadReaderFactory(routed, output, if (rowIndex) ordinal(RowIndexField.name) else -1,
           posFactory, posSources, eqParsed.map(_._1).toArray, eqSources.toArray,
           removedRows = added.nonEmpty)
       }
@@ -321,27 +338,33 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
       val (idScan, mappedScan) = if (fs eq files) scans else dataScans(fs)
       def filePartitions(scan: Option[Scan]) =
         scan.toArray.flatMap(_.toBatch.planInputPartitions()).map(_.asInstanceOf[FilePartition])
-      if (columnar && !routed)
+      if (columnar && !tagged)
         return (fs, filePartitions(idScan).map(p => p: InputPartition), 0)
-      if (columnar)
-        return (fs, filePartitions(idScan).map(StreamTaggedPartition(_, mapped = false): InputPartition) ++
-          filePartitions(mappedScan).map(StreamTaggedPartition(_, mapped = true)), 0)
 
-      val byPath = fs.map(f => keyOf(f) -> f).toMap
+      lazy val byPath = fs.map(f => keyOf(f) -> f).toMap
+      // one key's files per partition: the delegate packs across keys
+      def keyed(fp: FilePartition): Seq[(FilePartition, InternalRow)] = grouping match {
+        case None => Seq(fp -> null)
+        case Some(g) => fp.files.groupBy(pf => g.key(byPath(pf.filePath))).toSeq
+          .map { case (k, pfs) => FilePartition(fp.index, pfs) -> g.keys(k) }
+      }
       val applied = new java.util.BitSet()
       // (scan's, added) indices of the deletes in `ds` that may apply to `f`
       def applying(ds: Seq[DataFile], f: DataFile) =
         ds.indices.filter(i => Mor.mayApply(ds(i), f)).toArray.partition(i => !addedPaths(ds(i).path))
+      def tasks(fp: FilePartition): Array[FileTask] =
+        if (columnar) Array.empty
+        else fp.files.map { pf =>
+          val f = byPath(pf.filePath)
+          val (pos, addedPos) = applying(posDeletes, f)
+          val (eq, addedEq) = applying(eqFiles, f)
+          (pos ++ addedPos).foreach(applied.set)
+          (eq ++ addedEq).foreach(i => applied.set(posDeletes.size + i))
+          FileTask(f.path, pos, eq, addedPos, addedEq)
+        }
       def partitions(scan: Option[Scan], mapped: Boolean): Array[InputPartition] =
-        filePartitions(scan).map { fp =>
-          MergeOnReadPartition(fp, mapped, fp.files.map { pf =>
-            val f = byPath(pf.filePath)
-            val (pos, addedPos) = applying(posDeletes, f)
-            val (eq, addedEq) = applying(eqFiles, f)
-            (pos ++ addedPos).foreach(applied.set)
-            (eq ++ addedEq).foreach(i => applied.set(posDeletes.size + i))
-            FileTask(f.path, pos, eq, addedPos, addedEq)
-          })
+        filePartitions(scan).flatMap(keyed).map { case (fp, key) =>
+          MergeOnReadPartition(fp, mapped, tasks(fp), key)
         }
       (fs, partitions(idScan, mapped = false) ++ partitions(mappedScan, mapped = true),
         applied.cardinality())
@@ -355,6 +378,84 @@ class MergeOnReadScan(table: GraftTable, options: CaseInsensitiveStringMap,
   * (`_file`, or identity columns every affected file holds one value
   * of). */
 case class RewriteGroups(op: GraftRowLevelOperation, untouched: Seq[DataFile], columns: Seq[String])
+
+/** A key-grouped read's layout: the spec's transforms of their source
+  * columns (the clustering Spark aligns joins on), the distinct
+  * partition keys, and each planned file's key index. */
+final class KeyGrouping(val clustering: Array[V2Expression], val keys: IndexedSeq[InternalRow],
+    keyOf: Map[String, Int]) {
+  def key(f: DataFile): Int = keyOf(f.path)
+}
+
+/** Storage-partitioned reads. When every file proves its partition key
+  * ([[FilePruning.uniformValue]], the invariant the fanout writer
+  * keeps), a scan can report it, and two graft tables partitioned on
+  * their join key join without a shuffle — the join's most expensive
+  * stage at scale.
+  *
+  * Gated on both `spark.sql.sources.v2.bucketing.enabled` (Spark's
+  * switch, default true in 4.x) and the opt-in [[PreserveGroupingKey]]
+  * (default false, like Iceberg's preserve-data-grouping): one task per
+  * partition value loses byte-based bin-packing, which a full scan of a
+  * 100k-partition table needs, so grouping is preserved only when the
+  * session says its workload joins on partition keys. */
+object KeyGrouping {
+
+  val PreserveGroupingKey = "spark.graft.preserveDataGrouping"
+
+  /** The grouping of `files` read as `required`, or None: a gate is
+    * off, a spec field is neither identity (of a decodable type), days
+    * nor bucket, the read does not project its source column (Spark
+    * would drop the grouping), or a file cannot prove its key. */
+  def apply(spark: SparkSession, meta: TableMeta, required: StructType,
+      files: Seq[DataFile]): Option[KeyGrouping] = {
+    def on(key: String) = spark.conf.getOption(key).exists(_.toBoolean)
+    if (!on(PreserveGroupingKey) || !on("spark.sql.sources.v2.bucketing.enabled")) return None
+    val spec = meta.spec.fields
+    val fields = spec.flatMap(pf => meta.schema.fields.find(_.id == pf.sourceId)
+      .flatMap(src => required.find(_.name == src.name)).map(pf -> _))
+    if (spec.isEmpty || files.isEmpty || fields.size != spec.size ||
+        !fields.forall { case (pf, c) => groupable(pf.transform, c.dataType) }) return None
+    val values = files.map(f => fields.map { case (pf, c) => FilePruning.uniformValue(f, pf, c.name) })
+    if (values.exists(_.exists(_.isEmpty))) return None
+    val keys = values.map(_.flatten).distinct
+    val index = keys.zipWithIndex.toMap
+    Some(new KeyGrouping(
+      fields.map { case (pf, c) => transform(pf.transform, c.name) }.toArray,
+      keys.map(k => new GenericInternalRow(k.zip(fields).map { case (v, (pf, c)) =>
+        decode(pf.transform, v, c.dataType) }.toArray)).toIndexedSeq,
+      files.zip(values).map { case (f, v) => f.path -> index(v.flatten) }.toMap))
+  }
+
+  private def groupable(transform: String, dt: DataType): Boolean = (transform, dt) match {
+    case ("days", DateType | TimestampType) => true
+    case ("identity", IntegerType | LongType | ShortType | ByteType | StringType | DateType |
+        TimestampType) => true
+    case (t, _) => t.startsWith("bucket[")
+  }
+
+  private def transform(t: String, col: String): V2Expression =
+    if (t == "days") Expressions.days(col)
+    else if (t == "identity") Expressions.identity(col)
+    else Expressions.bucket(t.stripPrefix("bucket[").stripSuffix("]").toInt, col)
+
+  /** A key value in the transform's result type: days and bucket as
+    * [[GraftFunctions]] compute them, identity decoded from the bound
+    * encoding of [[Writer.entryOf]]. */
+  private def decode(t: String, v: String, dt: DataType): Any = (t, dt) match {
+    case ("days", _) => java.time.LocalDate.parse(v).toEpochDay
+    case ("identity", IntegerType) => v.toInt
+    case ("identity", LongType) => v.toLong
+    case ("identity", ShortType) => v.toShort
+    case ("identity", ByteType) => v.toByte
+    case ("identity", StringType) => UTF8String.fromString(v)
+    case ("identity", DateType) => java.time.LocalDate.parse(v).toEpochDay.toInt
+    case ("identity", TimestampType) =>
+      val ins = java.time.Instant.from(Writer.BoundTimestamp.parse(v))
+      ins.getEpochSecond * 1000000L + ins.getNano / 1000L
+    case _ => v.toInt // bucket[N]
+  }
+}
 
 object MergeOnReadScan {
   /** Spark's parquet reader fills a column of this name with each
@@ -409,15 +510,40 @@ case class EqualityGroup(factory: PartitionReaderFactory, types: Array[DataType]
 case class FileTask(path: String, positionDeletes: Array[Int], equalityDeletes: Array[Int],
     addedPositionDeletes: Array[Int], addedEqualityDeletes: Array[Int])
 
-case class MergeOnReadPartition(inner: FilePartition, mapped: Boolean, tasks: Array[FileTask])
-  extends InputPartition {
+/** A delegate partition tagged with its resolution mode (field-id
+  * native or name-mapped import), a row read's per-file tasks (none in
+  * a columnar read) and, in a key-grouped read, its partition key
+  * (null otherwise: Spark asks for keys only when the scan reports
+  * key-grouped partitioning). */
+case class MergeOnReadPartition(inner: FilePartition, mapped: Boolean, tasks: Array[FileTask],
+    key: InternalRow) extends InputPartition with HasPartitionKey {
+  override def partitionKey(): InternalRow = key
   override def preferredLocations(): Array[String] = inner.preferredLocations()
+}
+
+/** Routes a [[MergeOnReadPartition]] to the parquet delegate of its
+  * resolution mode — the two differ only in how column names bind, so
+  * their partitions coexist in one scan — and, as a columnar scan's
+  * factory, reads the untagged partition through it. */
+case class RoutedReaderFactory(idful: Option[PartitionReaderFactory],
+    nameMapped: Option[PartitionReaderFactory]) extends PartitionReaderFactory {
+  def of(p: MergeOnReadPartition): PartitionReaderFactory = (if (p.mapped) nameMapped else idful).get
+  private def route[T](p: InputPartition)(read: (PartitionReaderFactory, FilePartition) => T): T = {
+    val t = p.asInstanceOf[MergeOnReadPartition]
+    read(of(t), t.inner)
+  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    route(p)(_.createReader(_))
+  override def createColumnarReader(p: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    route(p)(_.createColumnarReader(_))
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    route(p)(_.supportColumnarReads(_))
 }
 
 /** Row reader factory of a scan with deletes, metadata columns or
   * removed rows: every partition reads rows, deletes applied. */
-case class MergeOnReadReaderFactory(
-    idful: Option[PartitionReaderFactory], nameMapped: Option[PartitionReaderFactory],
+case class MergeOnReadReaderFactory(data: RoutedReaderFactory,
     output: Seq[Expression], rowIndexOrdinal: Int,
     positionFactory: Option[PartitionReaderFactory], positionSources: Array[DeleteSource],
     equalityGroups: Array[EqualityGroup], equalitySources: Array[(Int, DeleteSource)],
@@ -425,9 +551,6 @@ case class MergeOnReadReaderFactory(
   extends PartitionReaderFactory {
 
   import MergeOnReadScan._
-
-  private[catalog] def dataFactory(p: MergeOnReadPartition): PartitionReaderFactory =
-    (if (p.mapped) nameMapped else idful).get
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new MergeOnReadPartitionReader(this, p.asInstanceOf[MergeOnReadPartition])
@@ -518,7 +641,7 @@ class MergeOnReadPartitionReader(f: MergeOnReadReaderFactory, p: MergeOnReadPart
     while (i < p.tasks.length && !start(p.tasks(i))) i += 1
     if (i >= p.tasks.length) return false
     fileRow.update(0, UTF8String.fromString(p.tasks(i).path))
-    cur = f.dataFactory(p).createReader(FilePartition(p.inner.index, Array(p.inner.files(i))))
+    cur = f.data.of(p).createReader(FilePartition(p.inner.index, Array(p.inner.files(i))))
     true
   }
 

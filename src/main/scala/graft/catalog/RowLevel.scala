@@ -130,23 +130,22 @@ object RowLevelScanBuilder {
     *     by the spec, so files are partition-local by construction);
     *   - a type whose string-encoded bounds compare exactly
     *     (numeric/string/date/timestamp — FilePruning's safe set);
-    *   - every affected file proves min == max and nullCount == 0
-    *     (absent bounds or unknown null counts disqualify).
+    *   - every affected file proves one non-null value
+    *     ([[FilePruning.uniformValue]]: min == max and nullCount == 0;
+    *     absent bounds or unknown null counts disqualify) — the proof
+    *     a key-grouped scan ([[KeyGrouping]]) stands on too.
     * Any other shape returns Nil and the operation falls back to the
     * statically-pruned scan — never wrong, just less pruned.
     */
   def runtimeFilterCols(table: GraftTable, affected: Seq[DataFile]): Seq[String] = {
     val meta = table.meta
     val spark = TableMeta.schemaToSpark(meta.schema)
-    val safe = meta.spec.fields.filter(_.transform == "identity").flatMap { pf =>
-      meta.schema.fields.find(_.id == pf.sourceId).map(_.name)
-    }.filter(name => spark.fields.find(_.name == name).exists(f => FilePruning.exactBoundType(f.dataType)))
-    val uniform = safe.filter { c =>
-      affected.forall { f =>
-        f.nullCount.get(c).contains(0L) &&
-          f.minBound.get(c).exists(mn => f.maxBound.get(c).contains(mn))
-      }
-    }
+    val uniform = for {
+      pf <- meta.spec.fields if pf.transform == "identity"
+      c <- meta.schema.fields.find(_.id == pf.sourceId).map(_.name)
+      if spark.fields.find(_.name == c).exists(f => FilePruning.exactBoundType(f.dataType))
+      if affected.forall(FilePruning.uniformValue(_, pf, c).isDefined)
+    } yield c
     if (uniform.isEmpty || affected.isEmpty) Nil else uniform
   }
 }

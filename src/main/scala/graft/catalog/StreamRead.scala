@@ -302,34 +302,6 @@ object SeqOffset {
     SeqOffset(s.seq, s.fileIdx, s.unit == SliceOffsets.UnitAdded)
 }
 
-/** Routes a partition to the reader factory of its resolution mode
-  * (field-id native vs name-mapped import) — the two parquet delegates
-  * differ only in how column names bind, so their partitions coexist in
-  * one columnar [[MergeOnReadScan]]. */
-case class StreamTaggedPartition(inner: InputPartition, mapped: Boolean)
-  extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-class StreamDispatchReaderFactory(idful: PartitionReaderFactory,
-    nameMapped: PartitionReaderFactory) extends PartitionReaderFactory {
-  private def pick(p: InputPartition): (PartitionReaderFactory, InputPartition) = {
-    val t = p.asInstanceOf[StreamTaggedPartition]
-    (if (t.mapped) nameMapped else idful, t.inner)
-  }
-  override def createReader(p: InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val (f, ip) = pick(p); f.createReader(ip)
-  }
-  override def createColumnarReader(p: InputPartition)
-      : org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val (f, ip) = pick(p); f.createColumnarReader(ip)
-  }
-  override def supportColumnarReads(p: InputPartition): Boolean = {
-    val (f, ip) = pick(p); f.supportColumnarReads(ip)
-  }
-}
-
 /** Native streaming SINK (`writeStream.toTable`): every micro-batch
   * epoch stages parquet under its own subdirectory through the fanout
   * writer (files stay partition-local) and commits one APPEND snapshot

@@ -311,9 +311,6 @@ object Writer {
   def equalityDeleteSpec(warehouse: String, schema: StructType, ids: List[Int]): FileSpec =
     FileSpec(schema, confFor(schema), warehouse, equalityIds = Some(ids))
 
-  private val tsFmt = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(java.time.ZoneOffset.UTC)
-
   /** Above this many staged files the footer pass DISTRIBUTES over the
     * cluster: a 1M-file 100 TB import's footer reads are executor
     * work, not a 16-thread driver bottleneck. Below it the threaded
@@ -363,6 +360,12 @@ object Writer {
     finally reader.close()
   }
 
+  /** The bound encoding of a timestamp: microseconds in UTC, fixed
+    * width, so a lexicographic bound compare is chronological. Every
+    * reader of timestamp bounds formats or parses through it. */
+  val BoundTimestamp: java.time.format.DateTimeFormatter = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS").withZone(java.time.ZoneOffset.UTC)
+
   /** THE footer → [[DataFile]] encoding: per-file record count, null
     * counts, and min/max bounds for every boundable top-level column of
     * `schema` (drives file skipping), as order-preserving strings.
@@ -403,8 +406,7 @@ object Writer {
               Some(java.time.LocalDate.ofEpochDay(i.longValue).toString)
             case (l: java.lang.Long, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
                 if t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-              // FIXED-WIDTH, so lexicographic bound compare is chronological
-              Some(tsFmt.format(java.time.Instant.ofEpochSecond(
+              Some(BoundTimestamp.format(java.time.Instant.ofEpochSecond(
                 Math.floorDiv(l.longValue, 1000000L),
                 Math.floorMod(l.longValue, 1000000L) * 1000L)))
             case (n @ (_: Integer | _: java.lang.Long | _: java.lang.Double |

@@ -1085,10 +1085,11 @@ object CatalogOps extends Pack {
         |ORDER BY o_orderstatus ASC NULLS FIRST""".stripMargin)),
 
     // Storage-partitioned join: both tables identity-partitioned on
-    // the join key, scans report KeyGroupedPartitioning, and the join
-    // aligns the key groups with NO exchange (CatalogSpec asserts the
-    // plan; this query verifies the aligned read returns exact
-    // results). Materialized eagerly while the SPJ confs are on.
+    // the join key, their MergeOnReadScans report
+    // KeyGroupedPartitioning (KeyGrouping), and the join aligns the key
+    // groups with NO exchange (CatalogSpec and MergeOnReadScanSpec
+    // assert the plan; this query verifies the aligned read returns
+    // exact results). Materialized eagerly while the SPJ confs are on.
     Decl("q_join_spj", (spark, dir) => {
       import org.apache.spark.sql.functions.col
       val c = cat(spark, dir)
@@ -1100,7 +1101,7 @@ object CatalogOps extends Pack {
       spark.sql(s"INSERT INTO $c.demo_spj.cust SELECT c_nationkey, c_custkey, c_acctbal FROM customer_src")
       spark.sql(s"INSERT INTO $c.demo_spj.nat SELECT n_nationkey, n_name FROM nation_src")
       withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
-          graft.catalog.SpjScan.PreserveGroupingKey -> "true",
+          graft.catalog.KeyGrouping.PreserveGroupingKey -> "true",
           "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         spark.sql(graft.Dsl.expandOracle(
           s"""SELECT n.n_name, COUNT(*) AS n_cust,

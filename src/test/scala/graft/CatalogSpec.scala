@@ -1470,7 +1470,7 @@ class CatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "true")
+    s.conf.set(graft.catalog.KeyGrouping.PreserveGroupingKey, "true")
     s.sql("DROP NAMESPACE IF EXISTS tcSd.s CASCADE")
     s.sql("CREATE NAMESPACE tcSd.s")
     s.sql("CREATE TABLE tcSd.s.a (ts TIMESTAMP, m BIGINT) PARTITIONED BY (days(ts))")
@@ -1511,7 +1511,7 @@ class CatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "true")
+    s.conf.set(graft.catalog.KeyGrouping.PreserveGroupingKey, "true")
     s.sql("DROP NAMESPACE IF EXISTS tcSb.s CASCADE")
     s.sql("CREATE NAMESPACE tcSb.s")
     s.sql("CREATE TABLE tcSb.s.a (k BIGINT, m BIGINT) PARTITIONED BY (bucket(4, k))")
@@ -1705,7 +1705,7 @@ class CatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "true")
+    s.conf.set(graft.catalog.KeyGrouping.PreserveGroupingKey, "true")
     s.sql("DROP NAMESPACE IF EXISTS tcS.s CASCADE")
     s.sql("CREATE NAMESPACE tcS.s")
     s.sql("CREATE TABLE tcS.s.fact (k INT, m BIGINT) PARTITIONED BY (k)")

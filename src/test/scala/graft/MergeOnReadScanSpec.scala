@@ -1,6 +1,6 @@
 package graft
 
-import graft.catalog.{Changes, GraftTable, MergeOnReadScan, Mor, Writer}
+import graft.catalog.{Changes, GraftTable, KeyGrouping, Maintenance, MergeOnReadPartition, MergeOnReadScan, Mor, Writer}
 import graft.meta.RelPaths
 import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.DataFrame
@@ -390,5 +390,98 @@ class MergeOnReadScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val at = gt.positionsById
     gt.commitDeletes(Seq(Seq(at(7L), at(8L))), equalityIds = Seq(8L, 30L))
     assert(lastCommitChanges(cat) == deleted(7, 8, 30))
+  }
+
+  test("storage-partitioned join under a position delete, an equality delete and an import") {
+    import org.apache.spark.sql.connector.read.HasPartitionKey
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    val cat = "tcSpjMor"
+    val wh = s"/tmp/graft_test_$cat"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
+    // isolated child session: the switches below are session-global
+    val s = spark.newSession()
+    Seq(s"spark.sql.catalog.$cat" -> "graft.catalog.RelativeCatalog",
+      s"spark.sql.catalog.$cat.warehouse" -> wh,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      KeyGrouping.PreserveGroupingKey -> "true",
+      // one split would take every file: plain bin-packing mixes keys
+      "spark.sql.files.maxPartitionBytes" -> "1g",
+      "spark.sql.files.minPartitionNum" -> "1").foreach { case (k, v) => s.conf.set(k, v) }
+    def load(name: String) = s.sessionState.catalogManager.catalog(cat).asInstanceOf[TableCatalog]
+      .loadTable(Identifier.of(Array("j"), name)).asInstanceOf[GraftTable]
+    // three appends of 4 keys: three small files per key
+    def create(name: String, cols: String, props: String, rowsPerAppend: Int, value: String): Unit = {
+      s.sql(s"CREATE TABLE $cat.j.$name (k INT, $cols) PARTITIONED BY (k) $props")
+      (0 until 3).foreach(i => s.sql(s"INSERT INTO $cat.j.$name SELECT CAST(id % 4 AS INT), $value " +
+        s"FROM range(${i * rowsPerAppend}, ${(i + 1) * rowsPerAppend})"))
+    }
+    s.sql(s"CREATE NAMESPACE $cat.j")
+    create("dim", "label STRING", "", 8, "CONCAT('d', id)")
+    create("pos", "id BIGINT", "", 40, "id")
+    val at = load("pos").positionsById
+    load("pos").commitDeletes(Seq(Seq(at(7L), at(14L), at(21L), at(100L))))
+    create("eq", "id BIGINT", "TBLPROPERTIES ('write.delete.mode'='merge-on-read', " +
+      "'write.delete.granularity'='equality')", 40, "id")
+    s.sql(s"DELETE FROM $cat.j.eq WHERE id IN (1, 2, 50, 119)")
+    create("imp", "id BIGINT", "", 40, "id")
+    import s.implicits._
+    (0 until 4).foreach(k => (200L until 205L).map(id => (k, id)).toDF("k", "id")
+      .coalesce(1).write.mode("append").parquet(s"$wh/staged_imp"))
+    assert(Maintenance.addFiles(s, load("imp"), "staged_imp") == 4)
+    assert(load("pos").readSnapshot.get.deleteFiles.exists(!Mor.isEquality(_)))
+    assert(load("eq").readSnapshot.get.deleteFiles.exists(Mor.isEquality))
+    assert(load("imp").currentFiles.exists(_.nameMapped.contains(true)))
+
+    def join(fact: String) =
+      s.sql(s"SELECT f.k, f.id, d.label FROM $cat.j.$fact f JOIN $cat.j.dim d ON f.k = d.k")
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq.sorted
+    def assertNoShuffle(what: String, plan: SparkPlan): Unit = {
+      val joins = plan.collect {
+        case j: SortMergeJoinExec => j: SparkPlan
+        case j: ShuffledHashJoinExec => j
+      }
+      assert(joins.nonEmpty, s"$what: expected a shuffled join in:\n$plan")
+      assert(joins.head.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"$what: storage-partitioned join still shuffled:\n$plan")
+    }
+    for (fact <- Seq("pos", "eq", "imp")) {
+      val df = join(fact)
+      val got = rows(df)
+      val plan = df.queryExecution.executedPlan
+      assertNoShuffle(fact, plan)
+      val keyOf = Seq("dim", fact).flatMap(load(_).currentFiles)
+        .map(f => new org.apache.hadoop.fs.Path(f.path).getName -> f.minBound("k").toInt).toMap
+      val batchScans = scans(plan)
+      assert(batchScans.size == 2)
+      for (b <- batchScans; p <- b.inputPartitions) {
+        assert(p.isInstanceOf[HasPartitionKey], s"$fact: partition $p carries no key")
+        val files = p.asInstanceOf[MergeOnReadPartition].inner.files
+        assert(files.map(pf => keyOf(pf.toPath.getName)).toSet ==
+          Set(p.asInstanceOf[HasPartitionKey].partitionKey().getInt(0)), s"$fact: a partition mixes keys")
+      }
+      assert(got.nonEmpty && got == Dsl.withConf(s, KeyGrouping.PreserveGroupingKey -> "false")(rows(join(fact))),
+        s"$fact: grouped join rows differ from the ungrouped join")
+    }
+
+    // a runtime filter narrows the grouped scan to one key's files
+    val filtered = s"SELECT f.k, f.id, d.label FROM $cat.j.pos f JOIN $cat.j.dim d ON f.k = d.k " +
+      "WHERE d.label = 'd5'"
+    Dsl.withConf(s, "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
+        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "100") {
+      val df = s.sql(filtered)
+      val got = rows(df)
+      assertNoShuffle("runtime-filtered", df.queryExecution.executedPlan)
+      val fact = scans(df.queryExecution.executedPlan).map(_.scan).collect {
+        case m: MergeOnReadScan if m.readSchema().fieldNames.contains("id") => m
+      }
+      assert(fact.size == 1 && fact.head.plannedFileCount == 3,
+        s"runtime filter left ${fact.map(_.plannedFileCount)} of 12 files:\n${df.queryExecution.executedPlan}")
+      assert(got.map(_._1).toSet == Set(1) &&
+        got == Dsl.withConf(s, KeyGrouping.PreserveGroupingKey -> "false")(rows(s.sql(filtered))))
+    }
   }
 }

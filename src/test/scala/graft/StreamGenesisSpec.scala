@@ -465,12 +465,11 @@ class StreamGenesisSpec extends AnyFunSuite {
     spark.sql("CREATE NAMESPACE tcGenSpj.st")
     spark.sql("CREATE TABLE tcGenSpj.st.t (id BIGINT, k INT) PARTITIONED BY (k)")
     spark.sql("INSERT INTO tcGenSpj.st.t VALUES (1, 1), (2, 2)")
-    spark.conf.set(graft.catalog.SpjScan.PreserveGroupingKey, "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    try {
-      // the batch scan routes to SpjScan in this session — the
-      // streaming surface must still be served, not throw Spark's
-      // unsupported-stream error
+    Dsl.withConf(spark, graft.catalog.KeyGrouping.PreserveGroupingKey -> "true",
+        "spark.sql.sources.v2.bucketing.enabled" -> "true") {
+      // the batch scan reports key-grouped partitioning in this
+      // session — the streaming surface must still be served, not
+      // throw Spark's unsupported-stream error
       val got = scala.collection.mutable.ArrayBuffer.empty[Long]
       val q = spark.readStream.table("tcGenSpj.st.t")
         .writeStream
@@ -483,9 +482,6 @@ class StreamGenesisSpec extends AnyFunSuite {
         q.processAllAvailable()
         assert(got.synchronized(got.toSet) == Set(1L, 2L))
       } finally q.stop()
-    } finally {
-      spark.conf.unset(graft.catalog.SpjScan.PreserveGroupingKey)
-      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
     }
   }
 
