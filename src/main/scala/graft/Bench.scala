@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
@@ -13,25 +12,16 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Split-sizing note (OPTIMIZATION_r21.md, "measured and rejected"):
-      // lowering spark.sql.files.openCostInBytes / AQE minPartitionSize
-      // to widen tiny-input scans was tried and REVERTED — every fixture
-      // parquet is a single row group, so extra splits produce footer-
-      // only no-op tasks (q_tpch_q1 scan stage wall 0.87 s → 1.75 s at
-      // 32 splits) and post-shuffle stages inflate task-constant CPU.
-      // Defaults stay; at 100 TB row groups abound and the stock
-      // bytes-per-core formula already adapts.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Split-sizing note (OPTIMIZATION_r21.md, "measured and rejected"):
+    // lowering spark.sql.files.openCostInBytes / AQE minPartitionSize
+    // to widen tiny-input scans was tried and REVERTED — every fixture
+    // parquet is a single row group, so extra splits produce footer-
+    // only no-op tasks (q_tpch_q1 scan stage wall 0.87 s → 1.75 s at
+    // 32 splits) and post-shuffle stages inflate task-constant CPU.
+    // Defaults stay; at 100 TB row groups abound and the stock
+    // bytes-per-core formula already adapts.
+    val spark = Dsl.devSession(Some("graft-bench"), defaultCpus = 32,
+      "spark.sql.adaptive.enabled" -> "true")
     // warm-up actions so JVM/codegen/streaming-engine startup isn't
     // billed to the first queries in the map
     spark.read.parquet(s"$sfDir/nation.parquet").count(): Unit

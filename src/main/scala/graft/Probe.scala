@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import java.nio.file.{Files, Paths}
@@ -19,17 +18,8 @@ object Probe {
     val tag = args.headOption.getOrElse("before")
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dsl.devSession(Some("graft-probe"), defaultCpus = 32,
+      "spark.sql.adaptive.enabled" -> "true")
     spark.read.parquet(s"$sfDir/nation.parquet").count(): Unit
 
     // per-stage accounting (thread-safe enough for a sequential probe)

@@ -19,21 +19,15 @@ object SparkEntry {
     ops.SortsSets,
     ops.ScalarFns,
     ops.Udx,
-    ops.LlmOps,
-    ops.LlmOps2,
-    ops.LlmOps3,
-    ops.LlmOps4,
-    ops.LlmOps5,
-    ops.LlmOps6,
-    ops.LlmOps7,
-    ops.LlmOps8,
-    ops.LlmOps9,
-    ops.LlmOps10,
+    ops.DedupOps,
+    ops.SimilarityOps,
+    ops.TextStatsOps,
+    ops.MultimodalOps,
+    ops.PipelineOps,
     ops.EventOps,
     ops.TpchOps,
     ops.StreamOps,
     ops.CatalogOps,
-    ops.CatalogOps2,
   )
 
   private lazy val allDecls: Seq[Decl] = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -8,15 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val wanted = args.drop(2).toSet  // optional subset for dev iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dsl.devSession(appName = None, defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // Parallel dump: the suite is 180+ queries and the driver's wall
     // budget is finite — run POOL at a time, each under its OWN

@@ -169,6 +169,15 @@ object RowLevelScanBuilder {
 trait PartitionedWriteLayout extends RequiresDistributionAndOrdering {
   def table: GraftTable
 
+  /** Names of the columns the written rows carry, when they are not the
+    * table's columns: the layout clusters and sorts on these only. A
+    * merge-on-read DELETE writes `(__row_operation, _file, _pos)` rows,
+    * which carry no table column at all. */
+  protected def rowColumns: Option[Set[String]] = None
+
+  private def carried(e: org.apache.spark.sql.connector.expressions.Expression): Boolean =
+    rowColumns.forall(cols => e.references.forall(r => cols(r.fieldNames.mkString("."))))
+
   override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution = {
     val exprs = specV2Exprs
     if (exprs.isEmpty)
@@ -190,7 +199,7 @@ trait PartitionedWriteLayout extends RequiresDistributionAndOrdering {
             if (sf.direction == "desc") SortDirection.DESCENDING else SortDirection.ASCENDING)
         }
       }
-    (specCols ++ sortCols).toArray
+    (specCols ++ sortCols.filter(o => carried(o.expression))).toArray
   }
 
   private def specV2Exprs: Seq[org.apache.spark.sql.connector.expressions.Expression] = {
@@ -212,7 +221,7 @@ trait PartitionedWriteLayout extends RequiresDistributionAndOrdering {
             : org.apache.spark.sql.connector.expressions.Expression
         }
       }
-    }
+    }.filter(carried)
   }
 }
 
@@ -509,6 +518,9 @@ class GraftDeltaWrite(val table: GraftTable, operation: String, rowSchema: Struc
   extends org.apache.spark.sql.connector.write.DeltaWrite
   with org.apache.spark.sql.connector.write.DeltaBatchWrite
   with PartitionedWriteLayout {
+
+  override protected def rowColumns: Option[Set[String]] =
+    Some(Option(rowSchema).fold(Set.empty[String])(_.fieldNames.toSet))
 
   private val data = Staging(table.meta, table.ops.warehouse, "data")
   private val deletes = Staging(table.meta, table.ops.warehouse, "deletes")

@@ -120,6 +120,17 @@ object Dsl {
     *   D4SUM(x) — the money-sum shape, [[d4]](SUM([[dec]](x)))
     *   D2(x)/D4(x)/D6(x) — ROUND to that scale, exact decimal(18,n),
     *     final cast to DOUBLE
+    *
+    * and the two text macros, the DuckDB halves of [[graft.ops.Text]]:
+    *
+    *   WORDS(x) — the words of `x`: split on single spaces, empty
+    *     tokens dropped, case kept ([[graft.ops.Text.words]])
+    *   GRAMS(ws, n) — the word n-grams of the word list `ws`, each
+    *     joined by one space, for an integer literal `n`; like
+    *     [[graft.ops.Text.grams]] it needs `len(ws) >= n`
+    *
+    * A macro name expands only at a word boundary (`KEYWORDS(` is left
+    * alone), and a call without its closing parenthesis throws.
     */
   def expandOracle(sql: String): String = {
     def expand(s: String, name: String, render: String => String): String = {
@@ -152,7 +163,14 @@ object Dsl {
     }
     def dN(n: Int)(x: String) =
       s"CAST(CAST(ROUND($x, $n) AS DECIMAL(18,$n)) AS DOUBLE)"
-    var r = expand(sql, "D4SUM",
+    def grams(args: String) = {
+      val k = args.lastIndexOf(',')
+      val (ws, n) = (args.take(k).trim, args.drop(k + 1).trim.toInt)
+      s"list_transform(range(1, len($ws) - ${n - 2}), i -> array_to_string($ws[i:i+${n - 1}], ' '))"
+    }
+    var r = expand(sql, "WORDS", x => s"list_filter(string_split($x, ' '), x -> x <> '')")
+    r = expand(r, "GRAMS", grams)
+    r = expand(r, "D4SUM",
       x => dN(4)(s"SUM(CAST($x AS DECIMAL(18,6)))"))
     r = expand(r, "D2", dN(2))
     r = expand(r, "D4", dN(4))
@@ -170,16 +188,23 @@ object Dsl {
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  def spark(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+  /** The session of the dev mains (Bench, Probe, Verify): local mode
+    * on `SPARK_GRAFT_CPUS` cores (default `defaultCpus`) with as many
+    * shuffle partitions, UTC, graft's extensions, no UI, WARN logging,
+    * plus `confs`. Without `appName` Spark names the app itself. */
+  def devSession(appName: Option[String], defaultCpus: Int,
+      confs: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+    appName.foreach(builder.appName)
+    val spark = (Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+      "spark.ui.enabled" -> "false") ++ confs)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Decl, Pack, Tables}
 import graft.Dsl.withConf
+import graft.ops.Warehouse.{dirTag, rmTree, withGraftCatalog}
 import org.apache.spark.sql.SparkSession
 
 /** End-to-end catalog flows through the DSv2 `RelativeCatalog` —
@@ -12,27 +13,13 @@ import org.apache.spark.sql.SparkSession
   */
 object CatalogOps extends Pack {
 
-  /** One catalog per sf dir (Spark caches catalog instances by name). */
-  private def cat(spark: SparkSession, dir: String): String = {
-    val name = s"graft${Integer.toHexString(dir.hashCode).takeRight(6)}"
-    spark.conf.set(s"spark.sql.catalog.$name", "graft.catalog.RelativeCatalog")
-    spark.conf.set(s"spark.sql.catalog.$name.warehouse", s"/tmp/graft_wh_$name")
-    name
-  }
-
-  private def freshNs(spark: SparkSession, c: String, ns: String): Unit = {
-    spark.sql(s"DROP NAMESPACE IF EXISTS $c.$ns CASCADE")
-    spark.sql(s"CREATE NAMESPACE $c.$ns")
-  }
-
   def decls: Seq[Decl] = Seq(
 
     // CREATE TABLE + INSERT INTO + SELECT — the reference's README demo
     // flow (C6/C12 + scan), aggregated so the oracle checks the data
     // actually round-tripped through parquet + snapshot commit.
     Decl("q_sink_insert", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_rt")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_rt"))
       spark.sql(s"CREATE TABLE $c.demo_rt.nat (n_nationkey INT, n_name STRING, n_regionkey INT)")
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
       spark.sql(s"INSERT INTO $c.demo_rt.nat SELECT * FROM nation_src")
@@ -49,8 +36,7 @@ object CatalogOps extends Pack {
     // Two commits, then VERSION AS OF over the snapshot chain
     // (README.md:67-108): v1 sees only the first insert.
     Decl("q_scan_timetravel", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_tt")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_tt"))
       spark.sql(s"CREATE TABLE $c.demo_tt.cust (c_custkey BIGINT, c_mktsegment STRING)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_tt.cust SELECT c_custkey, c_mktsegment FROM customer_src WHERE c_custkey % 2 = 0")
@@ -68,8 +54,7 @@ object CatalogOps extends Pack {
     // (old rows read NULL), rename it (metadata-only — field ids keep
     // old parquet columns resolving), then read the mixed history.
     Decl("q_cat_evolve", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_ev")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ev"))
       spark.sql(s"CREATE TABLE $c.demo_ev.cust (c_custkey BIGINT, c_acctbal DOUBLE)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_ev.cust SELECT c_custkey, c_acctbal FROM customer_src WHERE c_custkey % 2 = 0")
@@ -95,8 +80,7 @@ object CatalogOps extends Pack {
     // "as of yesterday's load" read). The second commit is forced onto
     // a LATER millisecond so the boundary is deterministic.
     Decl("q_scan_timetravel_ts", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_tts")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_tts"))
       spark.sql(s"CREATE TABLE $c.demo_tts.cust (c_custkey BIGINT, c_acctbal DOUBLE)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_tts.cust SELECT c_custkey, c_acctbal FROM customer_src WHERE c_custkey % 3 = 0")
@@ -116,8 +100,7 @@ object CatalogOps extends Pack {
     // Snapshots metadata table (q_meta_snapshots): stable columns only
     // (ids/timestamps are generation-dependent).
     Decl("q_meta_snapshots", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_ms")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ms"))
       spark.sql(s"CREATE TABLE $c.demo_ms.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_ms.reg SELECT * FROM region_src WHERE r_regionkey < 3")
@@ -138,8 +121,7 @@ object CatalogOps extends Pack {
     // scan, no stats pass (file_count/bytes are writer-parallelism
     // dependent, so only the exact columns are declared).
     Decl("q_meta_partitions", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mp")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mp"))
       spark.sql(s"CREATE TABLE $c.demo_mp.cust (c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE) " +
         "PARTITIONED BY (c_nationkey)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -158,8 +140,7 @@ object CatalogOps extends Pack {
     // Refs metadata table: named branches + tags incl. the implicit
     // `main` (snapshot ids are generation-dependent — name/type only).
     Decl("q_meta_refs", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mr")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mr"))
       spark.sql(s"CREATE TABLE $c.demo_mr.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_mr.reg SELECT * FROM region_src")
@@ -177,8 +158,7 @@ object CatalogOps extends Pack {
     // record_count sums are exact (one position row per deleted data
     // row); file counts are writer-parallelism dependent and excluded.
     Decl("q_meta_deletes", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_md")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_md"))
       spark.sql(s"CREATE TABLE $c.demo_md.cust (c_custkey BIGINT, c_nationkey INT) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -206,8 +186,7 @@ object CatalogOps extends Pack {
     // gracefully, never drop). No rewrite of existing data happens at
     // evolution time — that's the whole point of the feature.
     Decl("q_cat_evolve_spec", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_es")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_es"))
       spark.sql(s"CREATE TABLE $c.demo_es.ord (o_orderkey BIGINT, o_orderdate TIMESTAMP, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_es.ord SELECT o_orderkey, o_orderdate, o_totalprice FROM orders_src WHERE o_orderkey % 2 = 0")
@@ -231,8 +210,7 @@ object CatalogOps extends Pack {
     // is an HLL estimate (generation-stable but engine-specific) and
     // is bound-checked in MaintSpec instead.
     Decl("q_meta_stats", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mst")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mst"))
       spark.sql(s"CREATE TABLE $c.demo_mst.cust (c_custkey BIGINT, c_mktsegment STRING)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_mst.cust SELECT c_custkey, CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END FROM customer_src")
@@ -258,8 +236,7 @@ object CatalogOps extends Pack {
     // though every row-level read still passes. File counts and byte
     // sizes are writer-parallelism dependent and excluded.
     Decl("q_meta_files", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mf")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mf"))
       spark.sql(s"CREATE TABLE $c.demo_mf.cust (c_custkey BIGINT, c_nationkey INT)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_mf.cust SELECT c_custkey, c_nationkey FROM customer_src WHERE c_nationkey < 5")
@@ -285,8 +262,7 @@ object CatalogOps extends Pack {
     // (ids/timestamps themselves are generation-dependent; commits
     // are spaced >1 ms apart so the ms-resolution ordering is total).
     Decl("q_meta_history", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mh")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mh"))
       spark.sql(s"CREATE TABLE $c.demo_mh.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_mh.reg SELECT * FROM region_src WHERE r_regionkey < 3")
@@ -316,8 +292,7 @@ object CatalogOps extends Pack {
     // must produce the same rows (file pruning is plan-level; the
     // PruningSpec test asserts the file count shrinks too).
     Decl("q_scan_prune", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_pr")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_pr"))
       spark.sql(s"CREATE TABLE $c.demo_pr.cust (c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE) PARTITIONED BY (c_nationkey)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_pr.cust SELECT c_custkey, c_nationkey, c_acctbal FROM customer_src")
@@ -336,8 +311,7 @@ object CatalogOps extends Pack {
     // Row-level DELETE: copy-on-write rewrite of only the files the
     // predicate can touch (min/max carryover for the rest).
     Decl("q_cat_delete", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_del")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_del"))
       spark.sql(s"CREATE TABLE $c.demo_del.cust (c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_del.cust SELECT c_custkey, c_mktsegment, c_acctbal FROM customer_src")
@@ -361,8 +335,7 @@ object CatalogOps extends Pack {
     // the scan task, file by file. CatalogSpec proves the data files stay
     // byte-identical; this oracle row proves the subtraction is right.
     Decl("q_cat_delete_mor", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mor")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mor"))
       spark.sql(s"CREATE TABLE $c.demo_mor.cust (c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -391,8 +364,7 @@ object CatalogOps extends Pack {
     // re-inserted AFTER the delete is not retroactively swallowed —
     // the re-insert below is what the oracle's UNION ALL restores.
     Decl("q_cat_delete_eq", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_eq")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_eq"))
       spark.sql(s"CREATE TABLE $c.demo_eq.cust (c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read', 'write.delete.granularity'='equality')")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -421,8 +393,7 @@ object CatalogOps extends Pack {
 
     // Row-level UPDATE via group-based copy-on-write (ReplaceData).
     Decl("q_cat_update", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_up")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_up"))
       spark.sql(s"CREATE TABLE $c.demo_up.ord (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_up.ord SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders_src")
@@ -443,8 +414,7 @@ object CatalogOps extends Pack {
 
     // MERGE INTO: matched rows updated, unmatched inserted (COW).
     Decl("q_cat_merge", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mg")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mg"))
       spark.sql(s"CREATE TABLE $c.demo_mg.cust (c_custkey BIGINT, c_acctbal DOUBLE, c_mktsegment STRING)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_mg.cust SELECT c_custkey, c_acctbal, c_mktsegment FROM customer_src WHERE c_custkey % 3 <> 0")
@@ -477,8 +447,7 @@ object CatalogOps extends Pack {
     // expire old snapshots (orphan files physically deleted) → data
     // must still match 3× the source.
     Decl("q_cat_compact", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cp")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cp"))
       spark.sql(s"CREATE TABLE $c.demo_cp.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       (1 to 3).foreach(_ =>
@@ -502,8 +471,7 @@ object CatalogOps extends Pack {
     // in ONE range-clustered delete file (reading only delete rows,
     // never data) and the oracle proves the read set is unchanged.
     Decl("q_cat_rpd", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_rpd")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_rpd"))
       spark.sql(s"CREATE TABLE $c.demo_rpd.cust (c_custkey BIGINT, c_acctbal DOUBLE) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -531,8 +499,7 @@ object CatalogOps extends Pack {
     // back and executed.
     Decl("q_cat_view", (spark, dir) => {
       import org.apache.spark.sql.connector.catalog.{Identifier, ViewInfo}
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_vw")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_vw"))
       spark.sql(s"CREATE TABLE $c.demo_vw.nat (n_nationkey INT, n_name STRING, n_regionkey INT)")
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
       spark.sql(s"INSERT INTO $c.demo_vw.nat SELECT * FROM nation_src")
@@ -561,8 +528,7 @@ object CatalogOps extends Pack {
     // resolution rule, so this oracles the full parse→create→resolve
     // loop, not just the API.
     Decl("q_cat_view_sql", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_vsql")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_vsql"))
       spark.sql(s"CREATE TABLE $c.demo_vsql.nat (n_nationkey INT, n_name STRING, n_regionkey INT)")
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_vsql_src")
       spark.sql(s"INSERT INTO $c.demo_vsql.nat SELECT * FROM nation_vsql_src")
@@ -583,8 +549,7 @@ object CatalogOps extends Pack {
     // (CatalogSpec asserts byte-identity; this verifies the merged
     // read: data minus deletes plus new versions).
     Decl("q_cat_update_mor", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_umor")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_umor"))
       spark.sql(
         s"""CREATE TABLE $c.demo_umor.cust (c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE)
            |TBLPROPERTIES ('write.update.mode'='merge-on-read')""".stripMargin)
@@ -611,8 +576,7 @@ object CatalogOps extends Pack {
     // into delete+insert pairs, unmatched source rows append — the
     // format-v2 CDC economics (O(changed rows), never a file rewrite).
     Decl("q_cat_merge_mor", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_mmor")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mmor"))
       spark.sql(
         s"""CREATE TABLE $c.demo_mmor.nat (n_nationkey INT, n_name STRING)
            |TBLPROPERTIES ('write.merge.mode'='merge-on-read')""".stripMargin)
@@ -640,12 +604,11 @@ object CatalogOps extends Pack {
     // memory-sink contents after two waves must equal the batch read.
     Decl("q_str_tablesource", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_tail")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_tail"))
       spark.sql(s"CREATE TABLE $c.demo_tail.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_tail.reg SELECT * FROM region_src WHERE r_regionkey < 2")
-      val name = s"graft_tail_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_tail_${dirTag(dir)}"
       val q = spark.readStream.table(s"$c.demo_tail.reg")
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       val out = try {
@@ -672,15 +635,14 @@ object CatalogOps extends Pack {
     // content exactness against the batch read.
     Decl("q_str_genesis", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_gen")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_gen"))
       spark.sql(s"CREATE TABLE $c.demo_gen.nat (n_nationkey INT, n_name STRING)")
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
       (0 until 5).foreach(i =>
         spark.sql(s"INSERT INTO $c.demo_gen.nat SELECT n_nationkey, n_name " +
           s"FROM nation_src WHERE n_nationkey % 5 = $i"))
       spark.sql(s"CALL $c.system.expire_snapshots(tbl => 'demo_gen.nat', keep_last => 1)")
-      val name = s"graft_gen_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_gen_${dirTag(dir)}"
       val q = spark.readStream
         .option("max-rows-per-trigger", "5")
         .table(s"$c.demo_gen.nat")
@@ -711,15 +673,14 @@ object CatalogOps extends Pack {
     // insert-tagged.
     Decl("q_str_cdcgenesis", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cgen")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cgen"))
       spark.sql(s"CREATE TABLE $c.demo_cgen.nat (n_nationkey INT, n_name STRING)")
       Tables(spark, dir, "nation").createOrReplaceTempView("cgen_nation_src")
       (0 until 5).foreach(i =>
         spark.sql(s"INSERT INTO $c.demo_cgen.nat SELECT n_nationkey, n_name " +
           s"FROM cgen_nation_src WHERE n_nationkey % 5 = $i"))
       spark.sql(s"CALL $c.system.expire_snapshots(tbl => 'demo_cgen.nat', keep_last => 1)")
-      val name = s"graft_cgen_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_cgen_${dirTag(dir)}"
       val q = spark.readStream.format("graft-cdc")
         .option("table", s"$c.demo_cgen.nat")
         .option("max-rows-per-trigger", "5")
@@ -753,11 +714,10 @@ object CatalogOps extends Pack {
     // seed), then oracles content exactness against the batch read.
     Decl("q_str_oversized", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_osz")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_osz"))
       spark.sql(s"CREATE TABLE $c.demo_osz.cust (c_custkey BIGINT, c_mktsegment STRING)")
       spark.sql(s"INSERT INTO $c.demo_osz.cust VALUES (-1, 'seed')")
-      val name = s"graft_osz_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_osz_${dirTag(dir)}"
       val q = spark.readStream
         .option("max-files-per-trigger", "2")
         .table(s"$c.demo_osz.cust")
@@ -798,11 +758,10 @@ object CatalogOps extends Pack {
     // each within the cap), then oracles content exactness.
     Decl("q_str_cdcoversized", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cosz")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cosz"))
       spark.sql(s"CREATE TABLE $c.demo_cosz.cust (c_custkey BIGINT, c_mktsegment STRING)")
       spark.sql(s"INSERT INTO $c.demo_cosz.cust VALUES (-1, 'seed')")
-      val name = s"graft_cosz_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_cosz_${dirTag(dir)}"
       // a cap below one file's rows at every tested sf: each slice is
       // then 1-2 files, so the drain splits at sf0.001 through sf0.1
       val q = spark.readStream.format("graft-cdc")
@@ -855,14 +814,13 @@ object CatalogOps extends Pack {
     // exactness: exactly the deleted keys, delete-tagged.
     Decl("q_str_cdcrowsplit", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_crls")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_crls"))
       spark.sql(s"CREATE TABLE $c.demo_crls.nat (n_nationkey INT, n_name STRING)")
       Tables(spark, dir, "nation").createOrReplaceTempView("crls_nation_src")
       spark.sql(s"INSERT INTO $c.demo_crls.nat SELECT n_nationkey, n_name " +
         "FROM crls_nation_src")                                     // seq 1
       spark.sql(s"DELETE FROM $c.demo_crls.nat WHERE n_nationkey < 15") // seq 2, COW
-      val name = s"graft_crls_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_crls_${dirTag(dir)}"
       val q = spark.readStream.format("graft-cdc")
         .option("table", s"$c.demo_crls.nat")
         .option("start-seq", "1")
@@ -900,8 +858,7 @@ object CatalogOps extends Pack {
     // exactness: exactly the deleted keys, delete-tagged.
     Decl("q_str_cdcmorsplit", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cms")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cms"))
       spark.sql(s"CREATE TABLE $c.demo_cms.nat (n_nationkey INT, n_name STRING) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
       // range-clustered insert: keys < 15 land in exactly 3 of the 5
@@ -918,7 +875,7 @@ object CatalogOps extends Pack {
       }
       require(spark.table(s"$c.demo_cms.`nat$$snapshots`").count() == 2,
         "setup: insert + ONE MOR delete commit")
-      val name = s"graft_cms_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_cms_${dirTag(dir)}"
       val q = spark.readStream.format("graft-cdc")
         .option("table", s"$c.demo_cms.nat")
         .option("start-seq", "1")
@@ -954,15 +911,14 @@ object CatalogOps extends Pack {
     // rewritten rows (keys >= 10) must NOT surface.
     Decl("q_str_cdcupdates", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cup")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cup"))
       spark.sql(s"CREATE TABLE $c.demo_cup.nat (n_nationkey INT, n_name STRING)")
       Tables(spark, dir, "nation").createOrReplaceTempView("cup_nation_src")
       spark.sql(s"INSERT INTO $c.demo_cup.nat SELECT n_nationkey, n_name " +
         "FROM cup_nation_src")                                        // seq 1
       spark.sql(s"UPDATE $c.demo_cup.nat SET n_name = concat(n_name, '_U') " +
         "WHERE n_nationkey < 10")                                     // seq 2, COW
-      val name = s"graft_cup_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val name = s"graft_cup_${dirTag(dir)}"
       val q = spark.readStream.format("graft-cdc")
         .option("table", s"$c.demo_cup.nat")
         .option("start-seq", "1")
@@ -997,8 +953,7 @@ object CatalogOps extends Pack {
     // pipeline runs daily.
     Decl("q_scan_incremental", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_inc")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_inc"))
       spark.sql(s"CREATE TABLE $c.demo_inc.cust (c_custkey BIGINT, c_mktsegment STRING)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_inc.cust SELECT c_custkey, c_mktsegment FROM customer_src WHERE c_custkey % 3 = 0")
@@ -1015,8 +970,7 @@ object CatalogOps extends Pack {
     // row-level commits diff adjacent states, compactions emit nothing.
     Decl("q_scan_changelog", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_cdc")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_cdc"))
       spark.sql(s"CREATE TABLE $c.demo_cdc.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_cdc.reg SELECT * FROM region_src")           // seq 1
@@ -1047,8 +1001,7 @@ object CatalogOps extends Pack {
     Decl("q_cat_ivm", (spark, dir) => {
       import org.apache.spark.sql.functions._
       import graft.Dsl.{d4, dec}
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_ivm")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ivm"))
       spark.sql(s"CREATE TABLE $c.demo_ivm.ord (o_orderstatus STRING, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_ivm.ord SELECT o_orderstatus, o_totalprice FROM orders_src")
@@ -1092,8 +1045,7 @@ object CatalogOps extends Pack {
     // exact results). Materialized eagerly while the SPJ confs are on.
     Decl("q_join_spj", (spark, dir) => {
       import org.apache.spark.sql.functions.col
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_spj")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_spj"))
       spark.sql(s"CREATE TABLE $c.demo_spj.cust (c_nationkey INT, c_custkey BIGINT, c_acctbal DOUBLE) PARTITIONED BY (c_nationkey)")
       spark.sql(s"CREATE TABLE $c.demo_spj.nat (n_nationkey INT, n_name STRING) PARTITIONED BY (n_nationkey)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -1121,8 +1073,7 @@ object CatalogOps extends Pack {
 
     // INSERT OVERWRITE (truncate-capability write path).
     Decl("q_sink_overwrite", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_ow")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ow"))
       spark.sql(s"CREATE TABLE $c.demo_ow.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_ow.reg SELECT * FROM region_src")
@@ -1137,8 +1088,7 @@ object CatalogOps extends Pack {
     // DYNAMIC partition overwrite: only the partitions present in the
     // incoming data are replaced; everything else carries over.
     Decl("q_sink_overwrite_dyn", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_dyn")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_dyn"))
       spark.sql(s"CREATE TABLE $c.demo_dyn.cust (c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE) " +
         "PARTITIONED BY (c_nationkey)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -1169,8 +1119,7 @@ object CatalogOps extends Pack {
     // result proves all three read states: the branch saw everything,
     // main pre-publish saw only the base, main post-publish sees all.
     Decl("q_scan_branch", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_br")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_br"))
       spark.sql(s"CREATE TABLE $c.demo_br.o (o_orderkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_br.o SELECT o_orderkey, o_totalprice FROM orders_src WHERE o_orderkey % 2 = 0")
@@ -1208,8 +1157,7 @@ object CatalogOps extends Pack {
     // appends. (Writes to a tag are refused — MaintSpec pins that tags
     // stay immutable rather than silently becoming branches.)
     Decl("q_cat_tag", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_tag")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_tag"))
       spark.sql(s"CREATE TABLE $c.demo_tag.o (o_orderkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_tag.o SELECT o_orderkey, o_totalprice FROM orders_src WHERE o_orderkey % 3 = 0")
@@ -1234,8 +1182,7 @@ object CatalogOps extends Pack {
     // transform; the ts predicate prunes whole month files (the
     // fanout writer made them partition-local with tight ts bounds).
     Decl("q_scan_prune_months", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_pm")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_pm"))
       spark.sql(s"CREATE TABLE $c.demo_pm.ord (o_orderkey BIGINT, o_orderdate TIMESTAMP, o_totalprice DOUBLE) " +
         "PARTITIONED BY (months(o_orderdate))")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
@@ -1257,8 +1204,7 @@ object CatalogOps extends Pack {
     // semantics: update hits, insert new, delete rows gone from the
     // source — the CDC snapshot-sync shape).
     Decl("q_cat_merge_nmbs", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_nmbs")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_nmbs"))
       spark.sql(s"CREATE TABLE $c.demo_nmbs.cust (c_custkey BIGINT, c_acctbal DOUBLE)")
       Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
       spark.sql(s"INSERT INTO $c.demo_nmbs.cust SELECT c_custkey, c_acctbal FROM customer_src WHERE c_custkey % 3 <> 0")
@@ -1283,8 +1229,7 @@ object CatalogOps extends Pack {
     // Bin-pack compaction: only undersized files rewritten (the
     // O(small-files) maintenance pass); data must read back identical.
     Decl("q_cat_compact_binpack", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_bp")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_bp"))
       spark.sql(s"CREATE TABLE $c.demo_bp.nat (n_nationkey INT, n_name STRING)")
       Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
       (1 to 3).foreach(_ =>
@@ -1305,8 +1250,7 @@ object CatalogOps extends Pack {
     // Atomic CTAS (StagingTableCatalog): table + data published in one
     // metadata rename; the oracle checks the staged write round-trips.
     Decl("q_cat_ctas", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_ctas")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ctas"))
       Tables(spark, dir, "part").createOrReplaceTempView("part_src")
       spark.sql(
         s"""CREATE TABLE $c.demo_ctas.p AS
@@ -1325,8 +1269,7 @@ object CatalogOps extends Pack {
     // Atomic RTAS: one OCC commit swaps data AND schema (fresh field
     // ids); reads must see only the replacement.
     Decl("q_cat_rtas", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_rtas")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_rtas"))
       Tables(spark, dir, "supplier").createOrReplaceTempView("supplier_src")
       spark.sql(s"CREATE TABLE $c.demo_rtas.s AS SELECT s_suppkey, s_name FROM supplier_src")
       spark.sql(
@@ -1342,8 +1285,7 @@ object CatalogOps extends Pack {
     // Snapshot rollback: a bad batch lands, rollbackTo moves main back
     // (metadata-only) — reads must see exactly the pre-batch state.
     Decl("q_cat_rollback", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_rb")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_rb"))
       spark.sql(s"CREATE TABLE $c.demo_rb.o (o_orderkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_rb.o SELECT o_orderkey, o_totalprice FROM orders_src WHERE o_orderkey % 2 = 0")
@@ -1370,8 +1312,7 @@ object CatalogOps extends Pack {
     // BOTH dims — ZOrderSpec pins the file-skipping win). The oracle's
     // job here: the reorganization must be read-invisible.
     Decl("q_cat_zorder", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_zo")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_zo"))
       spark.sql(s"CREATE TABLE $c.demo_zo.ord (o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_zo.ord SELECT o_orderkey, o_custkey, o_totalprice FROM orders_src")
@@ -1395,8 +1336,7 @@ object CatalogOps extends Pack {
     // rollback threw out one good commit too many". Final state must
     // equal the pre-rollback state.
     Decl("q_cat_cherrypick", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_chp")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_chp"))
       spark.sql(s"CREATE TABLE $c.demo_chp.o (o_orderkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
       spark.sql(s"INSERT INTO $c.demo_chp.o SELECT o_orderkey, o_totalprice FROM orders_src WHERE o_orderkey % 2 = 0")
@@ -1422,8 +1362,7 @@ object CatalogOps extends Pack {
     // unreferenced file — every snapshot-referenced file survives and
     // the read set is untouched.
     Decl("q_cat_orphans", (spark, dir) => {
-      val c = cat(spark, dir)
-      freshNs(spark, c, "demo_orp")
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_orp"))
       spark.sql(s"CREATE TABLE $c.demo_orp.reg (r_regionkey INT, r_name STRING)")
       Tables(spark, dir, "region").createOrReplaceTempView("region_src")
       spark.sql(s"INSERT INTO $c.demo_orp.reg SELECT * FROM region_src")
@@ -1457,15 +1396,13 @@ object CatalogOps extends Pack {
     // reference cares about; `mv` + rewrite is setup, not the query.
     Decl("q_cat_relocate", (spark, dir) => {
       val whB = relocCache.computeIfAbsent("path:" + dir, _ => {
-        val run = s"${Integer.toHexString(dir.hashCode).takeRight(6)}r${relocN.incrementAndGet()}"
+        val run = s"${dirTag(dir)}r${relocN.incrementAndGet()}"
         val whA = s"/tmp/graft_wh_rel_a_$run"
         val b = s"/tmp/graft_wh_rel_b_$run"
         // a previous JVM's run may have left either root behind (the
         // counter restarts per process) — the move target must not exist
         Seq(whA, b).foreach(rmTree)
-        val ca = s"grela$run"
-        spark.conf.set(s"spark.sql.catalog.$ca", "graft.catalog.RelativeCatalog")
-        spark.conf.set(s"spark.sql.catalog.$ca.warehouse", whA)
+        val ca = withGraftCatalog(spark, s"grela$run", warehouse = Some(whA))
         spark.sql(s"CREATE NAMESPACE $ca.rel")
         spark.sql(s"CREATE TABLE $ca.rel.o (o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE) " +
           "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
@@ -1477,9 +1414,7 @@ object CatalogOps extends Pack {
           java.nio.file.Paths.get(whA), java.nio.file.Paths.get(b))
         b
       })
-      val cb = s"grelb${whB.split('_').last}"
-      spark.conf.set(s"spark.sql.catalog.$cb", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cb.warehouse", whB)
+      val cb = withGraftCatalog(spark, s"grelb${whB.split('_').last}", warehouse = Some(whB))
       spark.sql(graft.Dsl.expandOracle(
         s"""SELECT COUNT(*) AS n, COUNT(DISTINCT o_custkey) AS n_cust,
            |  D4SUM(o_totalprice) AS total
@@ -1500,15 +1435,13 @@ object CatalogOps extends Pack {
       // build + mv memoized per (dir, JVM) — see q_cat_relocate; the
       // cached value packs "catalogName|whB|dbPath"
       val cached = relocCache.computeIfAbsent("jdbc:" + dir, _ => {
-        val run = s"${Integer.toHexString(dir.hashCode).takeRight(6)}j${relocN.incrementAndGet()}"
+        val run = s"${dirTag(dir)}j${relocN.incrementAndGet()}"
         val whA = s"/tmp/graft_wh_relj_a_$run"
         val whB = s"/tmp/graft_wh_relj_b_$run"
         val db = s"/tmp/graft_db_relj_$run"
         Seq(whA, whB, db).foreach(rmTree)
-        val ca = s"grelja$run"
-        spark.conf.set(s"spark.sql.catalog.$ca", "graft.catalog.JdbcRelativeCatalog")
-        spark.conf.set(s"spark.sql.catalog.$ca.warehouse", whA)
-        spark.conf.set(s"spark.sql.catalog.$ca.uri", s"jdbc:derby:$db;create=true")
+        val ca = withGraftCatalog(spark, s"grelja$run", warehouse = Some(whA),
+          jdbcUri = Some(s"jdbc:derby:$db;create=true"))
         spark.sql(s"CREATE NAMESPACE $ca.rel")
         spark.sql(s"CREATE TABLE $ca.rel.c (c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE)")
         Tables(spark, dir, "customer").createOrReplaceTempView("customer_src")
@@ -1524,9 +1457,7 @@ object CatalogOps extends Pack {
       // over the new path — a fresh session supplies the fresh
       // CatalogManager a real re-deployment would have
       val reRooted = spark.newSession()
-      reRooted.conf.set(s"spark.sql.catalog.$ca", "graft.catalog.JdbcRelativeCatalog")
-      reRooted.conf.set(s"spark.sql.catalog.$ca.warehouse", whB)
-      reRooted.conf.set(s"spark.sql.catalog.$ca.uri", s"jdbc:derby:$db")
+      withGraftCatalog(reRooted, ca, warehouse = Some(whB), jdbcUri = Some(s"jdbc:derby:$db"))
       reRooted.sql(graft.Dsl.expandOracle(
         s"""SELECT c_mktsegment, COUNT(*) AS n, D4SUM(c_acctbal) AS total
            |FROM $ca.rel.c
@@ -1537,7 +1468,309 @@ object CatalogOps extends Pack {
         |FROM customer
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment ASC NULLS FIRST""".stripMargin)),
+
+    // rollback_to_timestamp: "make the table read as it did at 9am" —
+    // resolved through the snapshot LOG (what `main` pointed at), the
+    // recovery spelling when all you know is when things were still
+    // good, not which snapshot id that was.
+    Decl("q_cat_rollback_ts", (spark, dir) => {
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_rts"))
+      spark.sql(s"CREATE TABLE $c.demo_rts.o (o_orderkey BIGINT, o_totalprice DOUBLE)")
+      Tables(spark, dir, "orders").createOrReplaceTempView("orders_src")
+      spark.sql(s"INSERT INTO $c.demo_rts.o SELECT o_orderkey, o_totalprice FROM orders_src WHERE o_orderkey % 2 = 0")
+      val cata = spark.sessionState.catalogManager.catalog(c)
+        .asInstanceOf[graft.catalog.RelativeCatalog]
+      val ident = org.apache.spark.sql.connector.catalog.Identifier.of(Array("demo_rts"), "o")
+      val t1 = cata.loadTable(ident).asInstanceOf[graft.catalog.GraftTable]
+        .meta.currentSnapshot.get.timestampMs
+      // the second commit must land in a LATER millisecond than t1 or
+      // "current at t1" is ambiguous
+      while (System.currentTimeMillis() <= t1) Thread.sleep(1)
+      spark.sql(s"INSERT INTO $c.demo_rts.o SELECT o_orderkey + 1000000000, 0.0 FROM orders_src")
+      spark.sql(s"CALL $c.system.rollback_to_timestamp(tbl => 'demo_rts.o', timestamp_ms => $t1)")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT COUNT(*) AS n, D4SUM(o_totalprice) AS total
+           |FROM $c.demo_rts.o""".stripMargin))
+    }, Some(
+      """SELECT COUNT(*) AS n, D4SUM(o_totalprice) AS total
+        |FROM orders WHERE o_orderkey % 2 = 0""".stripMargin)),
+
+    // ancestors_of: the lineage chain as a queryable result set. The
+    // invariants are order-free (the compare sorts rows): 3 appends →
+    // 3 ancestors, exactly one root (no parent), and every non-root's
+    // parent_id resolves to another chain member (2 links in a
+    // 3-chain) — a broken or cyclic walk can't fake all three.
+    Decl("q_cat_ancestors", (spark, dir) => {
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_anc"))
+      spark.sql(s"CREATE TABLE $c.demo_anc.n (n_nationkey INT, n_name STRING)")
+      Tables(spark, dir, "nation").createOrReplaceTempView("nation_src")
+      spark.sql(s"INSERT INTO $c.demo_anc.n SELECT n_nationkey, n_name FROM nation_src WHERE n_nationkey % 3 = 0")
+      spark.sql(s"INSERT INTO $c.demo_anc.n SELECT n_nationkey, n_name FROM nation_src WHERE n_nationkey % 3 = 1")
+      spark.sql(s"INSERT INTO $c.demo_anc.n SELECT n_nationkey, n_name FROM nation_src WHERE n_nationkey % 3 = 2")
+      // the chain is metadata-scale (retained-snapshot count) — compute
+      // the invariants driver-side like the other catalog queries; a
+      // self-join of the CALL's CommandResult view trips Spark's
+      // attribute dedup inside a scalar subquery
+      val rows = spark.sql(s"CALL $c.system.ancestors_of(tbl => 'demo_anc.n')").collect()
+      val ids = rows.map(_.getLong(0)).toSet
+      val nLinked = rows.count(r => !r.isNullAt(1) && ids(r.getLong(1)))
+      val nAppends = rows.count(_.getString(3) == "append")
+      val nRoots = rows.count(_.isNullAt(1))
+      spark.sql(
+        s"""SELECT CAST(${rows.length} AS BIGINT) AS n_ancestors,
+           |  CAST($nAppends AS BIGINT) AS n_appends,
+           |  CAST($nRoots AS BIGINT) AS n_roots,
+           |  CAST($nLinked AS BIGINT) AS n_linked""".stripMargin)
+    }, Some(
+      """SELECT CAST(3 AS BIGINT) AS n_ancestors, CAST(3 AS BIGINT) AS n_appends,
+        |  CAST(1 AS BIGINT) AS n_roots, CAST(2 AS BIGINT) AS n_linked""".stripMargin)),
+
+    // add_files: zero-copy import of externally produced parquet into
+    // a partitioned table — one metadata commit, row counts and
+    // partition values from parquet FOOTERS (the data is never
+    // scanned, so onboarding 100 TB costs O(files) footer reads, not a
+    // rewrite). The oracle then reads the table: import must be
+    // exact-once and partition metadata correct (a wrong partition
+    // stamp would mis-prune the grouped read).
+    Decl("q_cat_addfiles", (spark, dir) => {
+      import org.apache.spark.sql.functions.col
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_addf"))
+      spark.sql(s"CREATE TABLE $c.demo_addf.cust (c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE) " +
+        "PARTITIONED BY (c_nationkey)")
+      val staging = s"staging_addf_${runN.incrementAndGet()}"
+      val stagingAbs = s"/tmp/graft_wh_$c/$staging"
+      rmTree(stagingAbs)
+      val src = Tables(spark, dir, "customer")
+        .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
+      // partition-clustered files, full schema in every file (hive-style
+      // column-dropping layouts are rejected by design — the scan reads
+      // files by schema, and a footer can't bound a missing column)
+      for (nk <- 0 until 5)
+        src.filter(col("c_nationkey") === nk).coalesce(1)
+          .write.mode("append").parquet(stagingAbs)
+      spark.sql(s"CALL $c.system.add_files(tbl => 'demo_addf.cust', source_dir => '$staging')")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT c_nationkey, COUNT(*) AS n, D4SUM(c_acctbal) AS total
+           |FROM $c.demo_addf.cust
+           |WHERE c_nationkey BETWEEN 1 AND 3
+           |GROUP BY c_nationkey
+           |ORDER BY c_nationkey ASC NULLS FIRST""".stripMargin))
+    }, Some(
+      """SELECT c_nationkey, COUNT(*) AS n, D4SUM(c_acctbal) AS total
+        |FROM customer WHERE c_nationkey BETWEEN 1 AND 3
+        |GROUP BY c_nationkey
+        |ORDER BY c_nationkey ASC NULLS FIRST""".stripMargin)),
+
+    // migrate: one-call adoption of a raw parquet directory — schema
+    // inferred from footers, table created, files imported zero-copy.
+    // The oracle reads the same fixture directly: migrate must be a
+    // pure re-housing, never a rewrite.
+    Decl("q_cat_migrate", (spark, dir) => {
+      import org.apache.spark.sql.functions.col
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_mig"))
+      val staging = s"landing_mig_${runN.incrementAndGet()}"
+      val stagingAbs = s"/tmp/graft_wh_$c/$staging"
+      rmTree(stagingAbs)
+      Tables(spark, dir, "supplier")
+        .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
+        .coalesce(2).write.parquet(stagingAbs)
+      spark.sql(s"CALL $c.system.migrate(source_dir => '$staging', tbl => 'demo_mig.supp')")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT s_nationkey, COUNT(*) AS n, D4SUM(s_acctbal) AS total
+           |FROM $c.demo_mig.supp
+           |GROUP BY s_nationkey
+           |ORDER BY s_nationkey ASC NULLS FIRST""".stripMargin))
+    }, Some(
+      """SELECT s_nationkey, COUNT(*) AS n, D4SUM(s_acctbal) AS total
+        |FROM supplier
+        |GROUP BY s_nationkey
+        |ORDER BY s_nationkey ASC NULLS FIRST""".stripMargin)),
+
+    // register_table: the catalog DATABASE is lost, the warehouse
+    // directory survived — a fresh JDBC catalog over the same files
+    // re-adopts the table from its latest metadata file with one
+    // pointer INSERT (nothing on disk is rewritten), and reads resume.
+    Decl("q_cat_register", (spark, dir) => {
+      val run = s"${dirTag(dir)}r${runN.incrementAndGet()}"
+      val wh = s"/tmp/graft_wh_reg_$run"
+      val dbA = s"/tmp/graft_db_rega_$run"
+      val dbB = s"/tmp/graft_db_regb_$run"
+      Seq(wh, dbA, dbB).foreach(rmTree)
+      val ca = withGraftCatalog(spark, s"grega$run", warehouse = Some(wh),
+        jdbcUri = Some(s"jdbc:derby:$dbA;create=true"))
+      spark.sql(s"CREATE NAMESPACE $ca.reg")
+      spark.sql(s"CREATE TABLE $ca.reg.s (s_suppkey BIGINT, s_nationkey INT, s_acctbal DOUBLE)")
+      Tables(spark, dir, "supplier").createOrReplaceTempView("supplier_src")
+      spark.sql(s"INSERT INTO $ca.reg.s SELECT s_suppkey, s_nationkey, s_acctbal FROM supplier_src")
+      // catalog-db loss: the NEW catalog knows nothing; the latest
+      // metadata file is found by its version-counter filename
+      val latest = new java.io.File(s"$wh/reg/s/metadata").listFiles()
+        .map(_.getName).filter(_.endsWith(".metadata.json"))
+        .maxBy(n => n.stripPrefix("v").takeWhile(_.isDigit).toInt)
+      val cb = withGraftCatalog(spark, s"gregb$run", warehouse = Some(wh),
+        jdbcUri = Some(s"jdbc:derby:$dbB;create=true"))
+      spark.sql(s"CREATE NAMESPACE $cb.reg")
+      spark.sql(s"CALL $cb.system.register_table(tbl => 'reg.s', " +
+        s"metadata_location => 'reg/s/metadata/$latest')")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT s_nationkey, COUNT(*) AS n, D4SUM(s_acctbal) AS total
+           |FROM $cb.reg.s
+           |GROUP BY s_nationkey
+           |ORDER BY s_nationkey ASC NULLS FIRST""".stripMargin))
+    }, Some(
+      """SELECT s_nationkey, COUNT(*) AS n, D4SUM(s_acctbal) AS total
+        |FROM supplier
+        |GROUP BY s_nationkey
+        |ORDER BY s_nationkey ASC NULLS FIRST""".stripMargin)),
+
+    // snapshot: the zero-copy dev copy. The copy diverges (an extra
+    // insert lands only in it) and the SOURCE must read back
+    // byte-identical — the isolation contract a team cloning a 100 TB
+    // table for experiments actually depends on (no bytes copied:
+    // the copy's initial snapshot references the source's files).
+    Decl("q_cat_snapshot", (spark, dir) => {
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_snp"))
+      spark.sql(s"CREATE TABLE $c.demo_snp.src (p_partkey BIGINT, p_retailprice DOUBLE)")
+      Tables(spark, dir, "part").createOrReplaceTempView("part_src")
+      spark.sql(s"INSERT INTO $c.demo_snp.src SELECT p_partkey, p_retailprice FROM part_src")
+      spark.sql(s"CALL $c.system.snapshot(source_tbl => 'demo_snp.src', tbl => 'demo_snp.dev')")
+      // the copy diverges; the source must not see it
+      spark.sql(s"INSERT INTO $c.demo_snp.dev SELECT p_partkey + 5000000, 1.0 FROM part_src WHERE p_partkey % 100 = 0")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT
+           |  (SELECT COUNT(*) FROM $c.demo_snp.src) AS src_n,
+           |  (SELECT D4SUM(p_retailprice) FROM $c.demo_snp.src) AS src_total,
+           |  (SELECT COUNT(*) FROM $c.demo_snp.dev) AS dev_n""".stripMargin))
+    }, Some(
+      """SELECT
+        |  (SELECT COUNT(*) FROM part) AS src_n,
+        |  (SELECT D4SUM(p_retailprice) FROM part) AS src_total,
+        |  (SELECT COUNT(*) + COUNT(*) FILTER (WHERE p_partkey % 100 = 0) FROM part) AS dev_n""".stripMargin)),
+
+    // write-audit-publish by id: the odd half of orders is written
+    // STAGED under spark.wap.id (invisible — the count the auditor's
+    // gate sees is still the even half), audited via VERSION AS OF,
+    // then published exactly-once by CALL publish_changes. The oracle
+    // pins all three states cross-engine: visible-while-staged count,
+    // audited staged count, and the published total.
+    Decl("q_cat_wap", (spark, dir) => {
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_wap"))
+      spark.sql(s"CREATE TABLE $c.demo_wap.t (o_orderkey BIGINT, o_totalprice DOUBLE) " +
+        "TBLPROPERTIES ('write.wap.enabled'='true')")
+      Tables(spark, dir, "orders").createOrReplaceTempView("orders_wap")
+      spark.sql(s"INSERT INTO $c.demo_wap.t " +
+        "SELECT o_orderkey, o_totalprice FROM orders_wap WHERE o_orderkey % 2 = 0")
+      spark.conf.set("spark.wap.id", "w-load")
+      val (stagedVisible, auditN) = try {
+        spark.sql(s"INSERT INTO $c.demo_wap.t " +
+          "SELECT o_orderkey, o_totalprice FROM orders_wap WHERE o_orderkey % 2 = 1")
+        val vis = spark.sql(s"SELECT COUNT(*) FROM $c.demo_wap.t")
+          .collect()(0).getLong(0)
+        val sid = spark.sql(s"CALL $c.system.publish_changes(" +
+          "tbl => 'demo_wap.t', wap_id => 'w-load')").collect()(0).getLong(0)
+        // the auditor's read of the staged snapshot, pre-publish shape
+        // (VERSION AS OF the staged id still resolves after publish)
+        val audit = spark.sql(
+          s"SELECT COUNT(*) FROM $c.demo_wap.t VERSION AS OF $sid")
+          .collect()(0).getLong(0)
+        (vis, audit)
+      } finally spark.conf.unset("spark.wap.id")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT
+           |  CAST($stagedVisible AS BIGINT) AS staged_visible,
+           |  CAST($auditN AS BIGINT) AS audited_n,
+           |  (SELECT COUNT(*) FROM $c.demo_wap.t) AS published_n,
+           |  (SELECT D4SUM(o_totalprice) FROM $c.demo_wap.t) AS total""".stripMargin))
+    }, Some(
+      """SELECT
+        |  (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 0) AS staged_visible,
+        |  (SELECT COUNT(*) FROM orders) AS audited_n,
+        |  (SELECT COUNT(*) FROM orders) AS published_n,
+        |  (SELECT D4SUM(o_totalprice) FROM orders) AS total""".stripMargin)),
+
+    // create_changelog_view: the CDC read packaged as a named view so
+    // downstream SQL (audits, incremental syncs) can query per-commit
+    // insert/delete rows without knowing the `t$changes` spelling.
+    // Same ground truth as q_scan_changelog, driven through the view.
+    Decl("q_cat_changelog_view", (spark, dir) => {
+      import org.apache.spark.sql.functions.col
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_clv"))
+      spark.sql(s"CREATE TABLE $c.demo_clv.reg (r_regionkey INT, r_name STRING)")
+      Tables(spark, dir, "region").createOrReplaceTempView("region_src")
+      spark.sql(s"INSERT INTO $c.demo_clv.reg SELECT * FROM region_src")           // seq 1
+      spark.sql(s"DELETE FROM $c.demo_clv.reg WHERE r_regionkey >= 3")             // seq 2
+      spark.sql(s"INSERT INTO $c.demo_clv.reg SELECT * FROM region_src WHERE r_regionkey = 4") // seq 3
+      val view = s"clv_changes_${runN.incrementAndGet()}"
+      spark.sql(s"CALL $c.system.create_changelog_view(tbl => 'demo_clv.reg', " +
+        s"view_name => '$view', start_snapshot_id => 1)")
+      spark.table(view)
+        .orderBy(col("_change_ordinal").asc_nulls_first, col("_change_type").asc_nulls_first,
+          col("r_regionkey").asc_nulls_first, col("r_name").asc_nulls_first)
+    }, Some(
+      """SELECT r_regionkey, r_name, 'delete' AS _change_type, 1 AS _change_ordinal
+        |FROM region WHERE r_regionkey >= 3
+        |UNION ALL
+        |SELECT r_regionkey, r_name, 'insert', 2 FROM region WHERE r_regionkey = 4
+        |ORDER BY _change_ordinal ASC NULLS FIRST, _change_type ASC NULLS FIRST,
+        |  r_regionkey ASC NULLS FIRST, r_name ASC NULLS FIRST""".stripMargin)),
+
+    // merge-schema ingest: an evolving pipeline appends a frame with a
+    // column the table has never seen; the table follows metadata-only
+    // (fresh field id, nullable) and pre-existing rows read NULL. The
+    // oracle pins row counts and the new column's population/sum.
+    Decl("q_cat_mergeschema", (spark, dir) => {
+      import org.apache.spark.sql.functions.col
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_ms"))
+      spark.sql(s"CREATE TABLE $c.demo_ms.o (o_orderkey BIGINT) " +
+        "TBLPROPERTIES ('write.merge-schema'='true')")
+      val src = Tables(spark, dir, "orders")
+      src.filter(col("o_orderkey") % 2 === 0).select(col("o_orderkey"))
+        .writeTo(s"$c.demo_ms.o").append()
+      src.filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .writeTo(s"$c.demo_ms.o").option("merge-schema", "true").append()
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT COUNT(*) AS n_all, COUNT(o_totalprice) AS n_priced,
+           |  D4SUM(o_totalprice) AS total
+           |FROM $c.demo_ms.o""".stripMargin))
+    }, Some(
+      """SELECT COUNT(*) AS n_all,
+        |  COUNT(*) FILTER (WHERE o_orderkey % 2 = 1) AS n_priced,
+        |  D4SUM(CASE WHEN o_orderkey % 2 = 1 THEN o_totalprice END) AS total
+        |FROM orders""".stripMargin)),
+
+    // create_changelog_view(compute_updates): the per-commit
+    // delete+insert pairs of an UPDATE refined into
+    // update_preimage/update_postimage rows keyed by the identifier
+    // column, with copy-on-write carry-over pairs cancelled first.
+    // The oracle pins count AND value per image side: preimages carry
+    // the OLD price, postimages the price after +1.
+    Decl("q_cat_changelog_updates", (spark, dir) => {
+      val c = withGraftCatalog(spark, s"graft${dirTag(dir)}", Some("demo_upd"))
+      spark.sql(s"CREATE TABLE $c.demo_upd.p (p_partkey BIGINT, p_retailprice DOUBLE)")
+      Tables(spark, dir, "part").createOrReplaceTempView("part_upd")
+      spark.sql(s"INSERT INTO $c.demo_upd.p SELECT p_partkey, p_retailprice FROM part_upd")
+      spark.sql(s"UPDATE $c.demo_upd.p SET p_retailprice = p_retailprice + 1 " +
+        "WHERE p_partkey % 10 = 0")
+      val view = s"upd_changes_${runN.incrementAndGet()}"
+      spark.sql(s"CALL $c.system.create_changelog_view(tbl => 'demo_upd.p', " +
+        s"view_name => '$view', start_snapshot_id => 1, identifier_columns => 'p_partkey')")
+      spark.sql(graft.Dsl.expandOracle(
+        s"""SELECT _change_type, COUNT(*) AS n, D4SUM(p_retailprice) AS total
+           |FROM $view
+           |GROUP BY _change_type
+           |ORDER BY _change_type ASC NULLS FIRST""".stripMargin))
+    }, Some(
+      """SELECT 'update_postimage' AS _change_type, COUNT(*) AS n,
+        |  D4SUM(p_retailprice + 1) AS total
+        |FROM part WHERE p_partkey % 10 = 0
+        |UNION ALL
+        |SELECT 'update_preimage', COUNT(*), D4SUM(p_retailprice)
+        |FROM part WHERE p_partkey % 10 = 0
+        |ORDER BY _change_type ASC NULLS FIRST""".stripMargin)),
   )
+
+  private val runN = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val relocN = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -1545,12 +1778,4 @@ object CatalogOps extends Pack {
     * per JVM: the bench's repeat runs must time the re-rooted READ,
     * not the warehouse build. */
   private val relocCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def rmTree(p: String): Unit = {
-    val root = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-  }
 }

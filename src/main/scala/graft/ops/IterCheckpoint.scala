@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Per-iteration lineage truncation for the iterative operators
-  * (connected-components label propagation in [[LlmOps2.duplicateGroups]]
-  * and [[LlmOps5.dupClusters]]).
+  * (connected-components label propagation in [[DedupOps.duplicateGroups]]
+  * and [[DedupOps.dupClusters]]).
   *
   * Default is `localCheckpoint()` — fast, no configuration — but its
   * blocks are NON-REPLICATED executor memory/disk: on a real cluster,

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The viral-bucket bound shared by all three LSH pair generators
-  * ([[LlmOps.minhashPairsDf]], [[LlmOps2.simhashPairsDf]],
-  * [[LlmOps3.embdupLshPairs]]): a bucket over `maxBucket` members is
+  * ([[DedupOps.minhashPairsDf]], [[DedupOps.simhashPairsDf]],
+  * [[DedupOps.embdupLshPairs]]): a bucket over `maxBucket` members is
   * star-capped — each member pairs only with the bucket's first
   * `maxBucket` members in rank order — so per-bucket pair work is
   * ≤ |bucket|·maxBucket instead of |bucket|²; small buckets keep full

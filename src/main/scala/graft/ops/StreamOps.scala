@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Decl, Pack, Tables}
 import graft.Dsl.{d4, withConf}
+import graft.ops.Warehouse.{dirTag, rmTree, withGraftCatalog}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -76,10 +77,6 @@ object StreamOps extends Pack {
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .foreach(p => Files.createLink(dst.resolve(s"$wave-${p.getFileName}"), p))
 
-  private def rmTree(p: Path): Unit =
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-
   /** Replay events through `build` (a streaming transform) into a
     * memory sink; returns the materialized sink table. The sink's temp
     * view is dropped before returning (result is localCheckpoint-ed
@@ -132,7 +129,7 @@ object StreamOps extends Pack {
     // then release the sink + replay hardlinks
     val out = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
-    rmTree(src)
+    rmTree(src.toString)
     out
   }
 
@@ -177,7 +174,7 @@ object StreamOps extends Pack {
     }
     val out = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
-    rmTree(src)
+    rmTree(src.toString)
     out
   }
 
@@ -387,11 +384,7 @@ object StreamOps extends Pack {
     // reads the committed table back through the catalog.
     Decl("q_str_sink", (spark, dir) => {
       import spark.implicits._
-      val cname = s"graftsink${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.sink CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.sink")
+      val cname = withGraftCatalog(spark, s"graftsink${dirTag(dir)}", Some("sink"))
       spark.sql(s"CREATE TABLE $cname.sink.ev " +
         "(event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE)")
       // two replay waves = two micro-batches = two OCC-committed append
@@ -414,7 +407,7 @@ object StreamOps extends Pack {
         waveB.foreach(p => Files.createLink(src.resolve(s"w1-${p.getFileName}"), p))
         q.processAllAvailable()
       } finally { q.stop(); graft.streaming.Hygiene.unload(q.runId) }
-      rmTree(src)
+      rmTree(src.toString)
       spark.table(s"$cname.sink.ev")
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .orderBy(col("event_type").asc_nulls_first, col("n").asc_nulls_first)
@@ -430,11 +423,7 @@ object StreamOps extends Pack {
     // main during the stream (the seeded base only), the branch after
     // the stream (everything), and main after publish (everything).
     Decl("q_str_branch", (spark, dir) => {
-      val cname = s"graftwap${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.wap CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.wap")
+      val cname = withGraftCatalog(spark, s"graftwap${dirTag(dir)}", Some("wap"))
       spark.sql(s"CREATE TABLE $cname.wap.ev " +
         "(event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE)")
       // the audited base: every 10th event lands batch-side pre-stream
@@ -460,7 +449,7 @@ object StreamOps extends Pack {
         .outputMode(OutputMode.Append()).start()
       try q.processAllAvailable()
       finally { q.stop(); graft.streaming.Hygiene.unload(q.runId) }
-      rmTree(src)
+      rmTree(src.toString)
       val mainDuring = spark.table(s"$cname.wap.ev").count()
       val branchDuring = spark.sql(s"SELECT COUNT(*) FROM $cname.wap.ev VERSION AS OF 'ingest'")
         .collect()(0).getLong(0)
@@ -487,11 +476,7 @@ object StreamOps extends Pack {
     // detection is oracled: the post-fork main batch carries marker
     // keys and the tail must contain zero of them.
     Decl("q_str_branchtail", (spark, dir) => {
-      val cname = s"graftwap${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.btl CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.btl")
+      val cname = withGraftCatalog(spark, s"graftwap${dirTag(dir)}", Some("btl"))
       spark.sql(s"CREATE TABLE $cname.btl.ord (o_orderkey BIGINT, o_totalprice DOUBLE)")
       Tables(spark, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
         .createOrReplaceTempView("orders_btl")
@@ -506,7 +491,7 @@ object StreamOps extends Pack {
       // main moves past the fork with marker keys the tail must not see
       spark.sql(s"INSERT INTO $cname.btl.ord " +
         "SELECT o_orderkey + 10000000, o_totalprice FROM orders_btl WHERE o_orderkey % 100 = 0")
-      val sink = s"btl_tail_${Integer.toHexString(dir.hashCode).takeRight(6)}"
+      val sink = s"btl_tail_${dirTag(dir)}"
       val q = spark.readStream.option("branch", "audit").table(s"$cname.btl.ord")
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Append()).start()
@@ -559,11 +544,7 @@ object StreamOps extends Pack {
     // oracle checks the accumulated change rows: every event exactly
     // once as an insert, every deleted event exactly once as a delete.
     Decl("q_str_cdc", (spark, dir) => {
-      val cname = s"graftcdc${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.cdc CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.cdc")
+      val cname = withGraftCatalog(spark, s"graftcdc${dirTag(dir)}", Some("cdc"))
       spark.sql(s"CREATE TABLE $cname.cdc.src " +
         "(event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE) " +
         "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
@@ -609,11 +590,7 @@ object StreamOps extends Pack {
     // exactness oracled cross-engine. This is "catch up on a 100 TB
     // table's change history without one unbounded batch".
     Decl("q_str_cdcrate", (spark, dir) => {
-      val cname = s"graftcdr${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.cdc CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.cdc")
+      val cname = withGraftCatalog(spark, s"graftcdr${dirTag(dir)}", Some("cdc"))
       spark.sql(s"CREATE TABLE $cname.cdc.nat (n_nationkey INT, n_name STRING)")
       spark.sql(s"CREATE TABLE $cname.cdc.log (n_nationkey INT, n_name STRING, batch_id BIGINT)")
       Tables(spark, dir, "nation").createOrReplaceTempView("cdcrate_nation_src")
@@ -656,11 +633,7 @@ object StreamOps extends Pack {
     // (runtime group filtering), not the whole table.
     Decl("q_str_upsert", (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val cname = s"graftups${Integer.toHexString(dir.hashCode).takeRight(6)}"
-      spark.conf.set(s"spark.sql.catalog.$cname", "graft.catalog.RelativeCatalog")
-      spark.conf.set(s"spark.sql.catalog.$cname.warehouse", s"/tmp/graft_wh_$cname")
-      spark.sql(s"DROP NAMESPACE IF EXISTS $cname.cdc CASCADE")
-      spark.sql(s"CREATE NAMESPACE $cname.cdc")
+      val cname = withGraftCatalog(spark, s"graftups${dirTag(dir)}", Some("cdc"))
       spark.sql(s"CREATE TABLE $cname.cdc.users " +
         "(user_id BIGINT, event_id BIGINT, ts TIMESTAMP_NTZ, event_type STRING, value DOUBLE)")
       val norm = eventsSrc(spark, dir)
@@ -694,7 +667,7 @@ object StreamOps extends Pack {
         waveB.foreach(p => Files.createLink(src.resolve(s"w1-${p.getFileName}"), p))
         q.processAllAvailable()
       } finally { q.stop(); graft.streaming.Hygiene.unload(q.runId) }
-      rmTree(src)
+      rmTree(src.toString)
       spark.table(s"$cname.cdc.users")
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"), col("value"))
@@ -736,30 +709,27 @@ object StreamOps extends Pack {
     // before counting, because streaming aggs can't COUNT(DISTINCT);
     // the dedup key is also the natural state shard key.
     Decl("q_str_contamination", (spark, dir) => {
-      val ws = filter(split(lower(col("text")), " "), w => w =!= "")
+      val ws = Text.words(lower(col("text")))
       val bench = Tables(spark, dir, "documents")
         .withColumn("ws", ws)
         .filter(col("doc_id") < 10 && size(col("ws")) >= 5)
-        .select(explode(expr(
-          "transform(sequence(0, size(ws)-5), i -> concat_ws(' ', slice(ws, i+1, 5)))")).as("g"))
+        .select(explode(Text.grams(col("ws"), 5)).as("g"))
         .distinct().localCheckpoint()
       streamedDocs(spark, dir) { docs =>
         docs.toDF()
           .withColumn("ws", ws)
           .filter(col("doc_id") >= 10 && size(col("ws")) >= 5)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(ws)-5), i -> concat_ws(' ', slice(ws, i+1, 5)))")).as("g"))
+          .select(col("doc_id"), explode(Text.grams(col("ws"), 5)).as("g"))
           .join(broadcast(bench), "g")
           .dropDuplicates("doc_id", "g")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("hits"))
       }.orderBy(col("doc_id").asc_nulls_first)
     }, Some(
       """WITH w AS (SELECT doc_id,
-        |            list_filter(string_split(lower(text), ' '), x -> x <> '') AS ws
+        |            WORDS(lower(text)) AS ws
         |          FROM documents),
         |g AS (SELECT doc_id,
-        |        unnest(list_transform(range(1, len(ws) - 3),
-        |          i -> array_to_string(ws[i:i+4], ' '))) AS g
+        |        unnest(GRAMS(ws, 5)) AS g
         |      FROM w WHERE len(ws) >= 5),
         |b AS (SELECT DISTINCT g FROM g WHERE doc_id < 10)
         |SELECT g.doc_id, CAST(COUNT(DISTINCT g.g) AS BIGINT) AS hits
@@ -833,7 +803,7 @@ object StreamOps extends Pack {
     }
     val out = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
-    rmTree(src)
+    rmTree(src.toString)
     out
   }
 }

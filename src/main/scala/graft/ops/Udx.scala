@@ -80,14 +80,12 @@ object Udx extends Pack {
       import spark.implicits._
       Tables(spark, dir, "documents")
         .filter(col("doc_id") < 100)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          text.split(" ").filter(_.nonEmpty).map(w => (id, w))
-        }
+        .select(col("doc_id"), Text.words(col("text"))).as[(Long, Seq[String])]
+        .flatMap { case (id, ws) => ws.map(w => (id, w)) }
         .toDF("doc_id", "word")
         .orderBy(col("doc_id").asc_nulls_first, col("word").asc_nulls_first)
     }, Some(
-      """SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS word
+      """SELECT doc_id, unnest(WORDS(text)) AS word
         |FROM documents WHERE doc_id < 100
         |ORDER BY doc_id ASC NULLS FIRST, word ASC NULLS FIRST""".stripMargin)),
   )

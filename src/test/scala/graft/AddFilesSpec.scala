@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `register_table` (catalog-DB disaster recovery), and the history
   * procedures (`rollback_to_timestamp`, `ancestors_of`) — the guard
   * rails and schema-evolution interactions the DuckDB oracles in
-  * CatalogOps2 can't reach.
+  * CatalogOps can't reach.
   */
 class AddFilesSpec extends AnyFunSuite {
 

@@ -90,7 +90,7 @@ class IterCheckpointSpec extends AnyFunSuite {
       chaos.setDaemon(true)
       chaos.start()
       try {
-        val groups = graft.ops.LlmOps2.duplicateGroups(pairs, maxRounds = 10)
+        val groups = graft.ops.DedupOps.duplicateGroups(pairs, maxRounds = 10)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(groups.size == 200 && groups.values.forall(_ == 0L),
           "closure under block loss must equal the undisturbed closure")

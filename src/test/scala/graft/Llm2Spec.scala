@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Fingerprints
-import graft.ops.LlmOps2
+import graft.ops.{DedupOps, SimilarityOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,7 @@ class Llm2Spec extends AnyFunSuite {
       .filter(col("doc_id") < 10).select(col("doc_id"), col("text"))
     val nearCopies = base.select((col("doc_id") + 20000).as("doc_id"),
       regexp_replace(col("text"), "^\\S+", "changedword").as("text"))
-    val pairs = LlmOps2.simhashPairsDf(base.unionByName(nearCopies)).collect()
+    val pairs = DedupOps.simhashPairsDf(base.unionByName(nearCopies)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue))
     val found = (0L until 10L).count(i => pairs.exists(p => p._1 == i && p._2 == i + 20000))
     // simhash is the coarse/cheap variant: one changed word in a short
@@ -27,13 +27,12 @@ class Llm2Spec extends AnyFunSuite {
 
   test("graft.iter.checkpoint-dir switches iteration boundaries to reliable checkpoints") {
     import spark.implicits._
-    import graft.ops.{LlmOps2, LlmOps5}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("doc_a", "doc_b")
     val docs = Tables(spark, TestSpark.sf, "documents")
       .filter(col("doc_id") < 40).select(col("doc_id"), col("text"))
-    def groups() = LlmOps2.duplicateGroups(pairs).collect()
+    def groups() = DedupOps.duplicateGroups(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def clusters() = LlmOps5.dupClusters(docs).collect()
+    def clusters() = DedupOps.dupClusters(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val (gLocal, cLocal) = (groups(), clusters())
     val dir = java.nio.file.Files.createTempDirectory("graft_iter_chk").toString
@@ -126,13 +125,12 @@ class Llm2Spec extends AnyFunSuite {
 
   test("minhash viral family: band buckets star-cap, connectivity and keeper exact") {
     import spark.implicits._
-    import graft.ops.LlmOps
     val n = 200
     val cap = 8
     val docs = (0L until n.toLong)
       .map(i => (i, "the same viral boilerplate text repeated across the minhash corpus"))
       .toDF("doc_id", "text")
-    val pairs = LlmOps.minhashPairsDf(docs, maxBucket = cap).collect()
+    val pairs = DedupOps.minhashPairsDf(docs, maxBucket = cap).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length <= n * cap,
       s"${pairs.length} pairs exceeds the n*cap=${n * cap} star-cap bound")
@@ -151,17 +149,16 @@ class Llm2Spec extends AnyFunSuite {
 
   test("embdup viral family: centroid lists star-cap, semDedup keeps exactly the min id") {
     import spark.implicits._
-    import graft.ops.LlmOps3
     val n = 100
     val vec = Array.fill(8)(0.5)
     val emb = (0L until n.toLong).map(i => (i, vec)).toDF("vec_id", "e")
-    val pairs = LlmOps3.embdupLshPairs(spark, emb, maxBucket = 8).collect()
+    val pairs = DedupOps.embdupLshPairs(spark, emb, maxBucket = 8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.length <= n * 8,
       s"${pairs.length} pairs exceeds the n*cap=${n * 8} star-cap bound")
     assert(pairs.forall(_._3 == 1.0))
     assert(pairs.forall(p => p._1 < p._2), "pair ids must stay (lower, higher)")
-    val survivors = LlmOps3.semDedup(spark, emb, maxBucket = 8)
+    val survivors = DedupOps.semDedup(spark, emb, maxBucket = 8)
       .collect().map(_.getLong(0)).toSet
     assert(survivors == Set(0L),
       s"keep-first must keep exactly the min id under capping: $survivors")
@@ -176,7 +173,7 @@ class Llm2Spec extends AnyFunSuite {
     val docs = (0L until n.toLong)
       .map(i => (i, "the same viral boilerplate text repeated across the corpus again and again"))
       .toDF("doc_id", "text")
-    val pairs = LlmOps2.simhashPairsDf(docs, maxBucket = cap).collect()
+    val pairs = DedupOps.simhashPairsDf(docs, maxBucket = cap).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.length <= n * cap,
       s"${pairs.length} pairs exceeds the n*cap=${n * cap} star-cap bound")
@@ -204,7 +201,7 @@ class Llm2Spec extends AnyFunSuite {
     val sats = (0 until 10).map(j => (1000L + j, famText.replace("vf_w0 ", s"chg$j ")))
     val docs = (fam ++ sats).toDF("doc_id", "text")
     def famLinks(cap: Int): Set[Long] =
-      LlmOps2.simhashPairsDf(docs, maxBucket = cap).collect()
+      DedupOps.simhashPairsDf(docs, maxBucket = cap).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
         .collect { case (a, b) if b >= 1000L && a < 150L => b }.toSet
     val uncapped = famLinks(1 << 20)
@@ -214,7 +211,7 @@ class Llm2Spec extends AnyFunSuite {
     // link may drop iff the satellite disagrees with the family on
     // the 8-bit next-chunk window in EVERY band whose chunk it
     // shares. Anything else lost = the cross-band suppression bug.
-    val sig = LlmOps2.simhashSigs(docs).collect()
+    val sig = DedupOps.simhashSigs(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val famSig = sig(0L)
     def chunk(s: Long, b: Int) = (s >>> (16 * b)) & 0xffffL
@@ -239,7 +236,7 @@ class Llm2Spec extends AnyFunSuite {
       (0 until n).map(i => (f * 1000L + i, text))
     }.toDF("doc_id", "text")
     def components(cap: Int): Map[Long, Long] = {
-      val pairs = LlmOps2.simhashPairsDf(docs, maxBucket = cap).collect()
+      val pairs = DedupOps.simhashPairsDf(docs, maxBucket = cap).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct
       val parent = scala.collection.mutable.Map(ids.map(i => i -> i).toSeq: _*)
@@ -257,7 +254,7 @@ class Llm2Spec extends AnyFunSuite {
   test("trained-centroid IVF top-k recall >= 0.8 vs exact brute force") {
     val exact = SparkEntry.queries("q_llm_simsearch")(spark, TestSpark.sf).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
-    val approx = LlmOps2.ivfTopK(spark, TestSpark.sf).collect()
+    val approx = SimilarityOps.ivfTopK(spark, TestSpark.sf).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.8, s"ivf recall $recall too low (${approx.size} approx rows)")
@@ -301,7 +298,7 @@ class Llm2Spec extends AnyFunSuite {
     import spark.implicits._
     // chain: 1-2, 2-3, 3-4 plus isolated pair 10-11 → components {1,2,3,4}, {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val groups = LlmOps2.duplicateGroups(pairs).collect()
+    val groups = DedupOps.duplicateGroups(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L, 4L).forall(groups(_) == 1L))
     assert(Seq(10L, 11L).forall(groups(_) == 10L))
@@ -312,13 +309,13 @@ class Llm2Spec extends AnyFunSuite {
     // a 200-node path: one-hop min propagation needs ~200 rounds, so a
     // 10-round budget proves pointer doubling is doing the work
     val pairs = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val groups = LlmOps2.duplicateGroups(pairs, maxRounds = 10).collect()
+    val groups = DedupOps.duplicateGroups(pairs, maxRounds = 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(groups.size == 200 && groups.values.forall(_ == 0L))
     // and cap exhaustion fails loudly instead of returning a partial
     // clustering as if it had converged
     assertThrows[IllegalStateException] {
-      LlmOps2.duplicateGroups(pairs, maxRounds = 1).collect()
+      DedupOps.duplicateGroups(pairs, maxRounds = 1).collect()
     }
   }
 

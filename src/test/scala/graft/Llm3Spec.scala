@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.LlmOps3
+import graft.ops.DedupOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +20,7 @@ class Llm3Spec extends AnyFunSuite {
     val planted = base.filter(col("vec_id") < 50)
       .select((col("vec_id") + 100000L).as("vec_id"), col("e"))
     val emb = base.unionByName(planted)
-    val found = LlmOps3.embdupLshPairs(spark, emb)
+    val found = DedupOps.embdupLshPairs(spark, emb)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (0L until 50L).map(i => (i, i + 100000L)).toSet
@@ -34,7 +34,7 @@ class Llm3Spec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val planted = base.filter(col("vec_id") < 50)
       .select((col("vec_id") + 100000L).as("vec_id"), col("e"))
-    val kept = LlmOps3.semDedup(spark, base.unionByName(planted))
+    val kept = DedupOps.semDedup(spark, base.unionByName(planted))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     // every planted twin (higher id) must drop; its original must survive
     val twinsDropped = (0L until 50L).count(i => !kept(i + 100000L))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** LlmOps4 invariants that the DuckDB oracle can't express (float
+/** Text-kernel and scalar-quantization invariants that the DuckDB oracle can't express (float
   * quantization) plus planted-input checks for the canonicalizer.
   */
 class Llm4Spec extends AnyFunSuite {
@@ -18,7 +18,7 @@ class Llm4Spec extends AnyFunSuite {
       (2L, "hello world 42"),
       (3L, "HELLO-world;42"),   // punctuation → space → same tokens
       (4L, "different doc")).toDF("doc_id", "text")
-    val normed = df.select(ops.LlmOps4.normText(col("text")).as("n"))
+    val normed = df.select(ops.Text.normText(col("text")).as("n"))
       .collect().map(_.getString(0))
     assert(normed(0) == "hello world 42")
     assert(normed.take(3).toSet.size == 1, s"variants must collapse: ${normed.toSeq}")
@@ -48,7 +48,7 @@ class Llm4Spec extends AnyFunSuite {
   }
 
   test("q_llm_sq: int8 codes in range, reconstruction error within half a step") {
-    val rows = graft.ops.LlmOps4.sqQuantize(spark, sf).collect()
+    val rows = graft.ops.SimilarityOps.sqQuantize(spark, sf).collect()
     assert(rows.size >= 100)
     rows.foreach { r =>
       val scale = r.getDouble(2)

@@ -12,7 +12,7 @@ class Llm5Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val model = ops.LlmOps5.pqModel(spark, sf)
+  private lazy val model = ops.SimilarityOps.pqModel(spark, sf)
   private lazy val coded = model._2.collect()
     .map(r => (r.getLong(0), r.getSeq[Int](1).toArray, r.getDouble(2)))
     .sortBy(_._1)
@@ -27,14 +27,14 @@ class Llm5Spec extends AnyFunSuite {
   }
 
   test("q_llm_pq is deterministic run-to-run") {
-    val again = ops.LlmOps5.pqCode(spark, sf).collect()
+    val again = ops.SimilarityOps.pqCode(spark, sf).collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toArray.toSeq, r.getDouble(2)))
       .sortBy(_._1)
     assert(coded.map(t => (t._1, t._2.toSeq, t._3)).toSeq == again.toSeq)
   }
 
   test("q_llm_pq distortion beats the K=1 (subspace-mean) baseline") {
-    val base = ops.LlmOps5.pqCode(spark, sf, k = 1)
+    val base = ops.SimilarityOps.pqCode(spark, sf, k = 1)
       .agg(avg(col("l2_err") * col("l2_err"))).collect()(0).getDouble(0)
     val pq = coded.map(t => t._3 * t._3).sum / coded.length
     assert(pq < base,
@@ -50,7 +50,7 @@ class Llm5Spec extends AnyFunSuite {
       "ivfpq recall invariant rows not all true")
     val exact = SparkEntry.queries("q_llm_simsearch")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
-    val approx = graft.ops.LlmOps5.ivfPqTopK(spark, sf).collect()
+    val approx = graft.ops.SimilarityOps.ivfPqTopK(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     assert(approx.keySet == exact.keySet)
     val recalls = exact.map { case (q, ids) =>
@@ -58,8 +58,8 @@ class Llm5Spec extends AnyFunSuite {
     }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.8, s"IVF-PQ recall too low: $mean")
-    val again = graft.ops.LlmOps5.ivfPqTopK(spark, sf).collect().toSeq
-    val first = graft.ops.LlmOps5.ivfPqTopK(spark, sf).collect().toSeq
+    val again = graft.ops.SimilarityOps.ivfPqTopK(spark, sf).collect().toSeq
+    val first = graft.ops.SimilarityOps.ivfPqTopK(spark, sf).collect().toSeq
     assert(again == first, "IVF-PQ result must be deterministic")
   }
 
@@ -128,7 +128,7 @@ class Llm5Spec extends AnyFunSuite {
   }
 
   test("PQ coding plan is shuffle-free whole-stage codegen") {
-    val plan = ops.LlmOps5.pqCode(spark, sf)
+    val plan = ops.SimilarityOps.pqCode(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"PQ encode must not shuffle the corpus:\n${plan.take(2000)}")
@@ -186,7 +186,7 @@ class Llm5Spec extends AnyFunSuite {
     val rare = (0 until 12).map(i => s"rare$i").mkString(" ")
     val dups = Seq((900L, s"$rare ${uniqueText(900)}"), (901L, s"$rare ${uniqueText(901)}"))
     val docs = (viral ++ dups).toDF("doc_id", "text")
-    val out = ops.LlmOps5.dupClusters(docs).collect()
+    val out = ops.DedupOps.dupClusters(docs).collect()
     // only the planted pair clusters; none of the 200 header docs appear
     assert(out.length == 1, s"expected 1 cluster, got ${out.toSeq}")
     assert(out(0).getLong(0) == 900L && out(0).getLong(1) == 2L &&
@@ -195,13 +195,13 @@ class Llm5Spec extends AnyFunSuite {
 
   test("dupClusters pairs at the df cap boundary: df=cap clusters, df=cap+1 does not") {
     import spark.implicits._
-    val cap = ops.LlmOps5.MaxGramDf
+    val cap = ops.DedupOps.MaxGramDf
     val atCap = (0 until 12).map(i => s"at$i").mkString(" ")
     val overCap = (0 until 12).map(i => s"ov$i").mkString(" ")
     val a = (0 until cap).map(i => (i.toLong, s"$atCap ${uniqueText(i)}"))
     val b = (0 until cap + 1).map(i => (1000L + i, s"$overCap ${uniqueText(1000 + i)}"))
     val docs = (a ++ b).toDF("doc_id", "text")
-    val out = ops.LlmOps5.dupClusters(docs).collect()
+    val out = ops.DedupOps.dupClusters(docs).collect()
     assert(out.length == 1 && out(0).getLong(0) == 0L && out(0).getLong(1) == cap.toLong,
       s"expected one cluster of the $cap at-cap docs, got ${out.toSeq}")
   }
@@ -212,11 +212,11 @@ class Llm5Spec extends AnyFunSuite {
     // in two null-doc_id rows. Counted, the nulls (one row after the
     // distinct) would push df to cap + 1 and drop every edge; the
     // null rows themselves never join a cluster.
-    val cap = ops.LlmOps5.MaxGramDf
+    val cap = ops.DedupOps.MaxGramDf
     val gram = (0 until 12).map(i => s"nd$i").mkString(" ")
     val real = (0 until cap).map(i => (Option(i.toLong), s"$gram ${uniqueText(i)}"))
     val nulls = Seq(2000, 2001).map(i => (Option.empty[Long], s"$gram ${uniqueText(i)}"))
-    val out = ops.LlmOps5.dupClusters((real ++ nulls).toDF("doc_id", "text")).collect()
+    val out = ops.DedupOps.dupClusters((real ++ nulls).toDF("doc_id", "text")).collect()
     assert(out.length == 1 && out(0).getLong(0) == 0L && out(0).getLong(1) == cap.toLong &&
       out(0).getLong(2) == cap - 1L,
       s"expected one cluster of the $cap real docs, got ${out.toSeq}")
@@ -233,11 +233,11 @@ class Llm5Spec extends AnyFunSuite {
       (i.toLong, s"$left$right${uniqueText(i)}")
     }.toDF("doc_id", "text")
     val ex = intercept[IllegalStateException] {
-      ops.LlmOps5.dupClusters(docs, maxRounds = 1).collect()
+      ops.DedupOps.dupClusters(docs, maxRounds = 1).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
     // and with the default budget the same chain converges to one cluster
-    val ok = ops.LlmOps5.dupClusters(docs).collect()
+    val ok = ops.DedupOps.dupClusters(docs).collect()
     assert(ok.length == 1 && ok(0).getLong(1) == 6L)
   }
 
@@ -259,7 +259,7 @@ class Llm5Spec extends AnyFunSuite {
     val header = (0 until 12).map(i => s"meg$i").mkString(" ")
     val docs = (0 until 300).map(i => (i.toLong, s"$header ${uniqueText(i)}"))
       .toDF("doc_id", "text")
-    val e = ops.LlmOps5.dupEdges(docs)
+    val e = ops.DedupOps.dupEdges(docs)
     val plan = e.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!plan.contains("Window"),

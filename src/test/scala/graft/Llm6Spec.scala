@@ -20,7 +20,7 @@ class Llm6Spec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("winnow").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ops.LlmOps6.decls.find(_.name == "q_llm_winnow").get.fn(spark, dir)
+    ops.DedupOps.decls.find(_.name == "q_llm_winnow").get.fn(spark, dir)
       .collect().map(r => (r.getLong(0), r.getString(1)))
   }
 
@@ -50,7 +50,7 @@ class Llm6Spec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("llm6").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ops.LlmOps6.decls.find(_.name == name).get.fn(spark, dir).collect()
+    SparkEntry.queries(name)(spark, dir).collect()
   }
 
   test("q_llm_entropy endpoints: constant doc = 0 bits, all-distinct doc = log2(n)") {

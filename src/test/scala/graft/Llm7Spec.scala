@@ -17,7 +17,7 @@ class Llm7Spec extends AnyFunSuite {
     val df = rows.toDF("doc_id", "text", "source")
     val dir = java.nio.file.Files.createTempDirectory("llm7").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ops.LlmOps7.decls.find(_.name == name).get.fn(spark, dir).collect()
+    SparkEntry.queries(name)(spark, dir).collect()
   }
 
   test("q_llm_toxicity: flag fires exactly at the 4% integer threshold") {
@@ -69,7 +69,7 @@ class Llm7Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("llm7knn").toString
     vecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val rows = ops.LlmOps7.decls.find(_.name == "q_llm_knnlabel").get
+    val rows = ops.SimilarityOps.decls.find(_.name == "q_llm_knnlabel").get
       .fn(spark, dir).collect()
     assert(rows.length == 50, s"50 query vectors expected, got ${rows.length}")
     assert(rows.forall(_.getInt(4) == 1),
@@ -85,7 +85,7 @@ class Llm7Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("llm7cent").toString
     vecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val r = ops.LlmOps7.decls.find(_.name == "q_llm_centroid").get
+    val r = ops.SimilarityOps.decls.find(_.name == "q_llm_centroid").get
       .fn(spark, dir).collect().head
     assert(r.getLong(1) == 20L)
     assert(r.getDouble(3) > 0.9999, s"tight cluster avg_cos ${r.getDouble(3)}")

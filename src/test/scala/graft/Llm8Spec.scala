@@ -16,7 +16,7 @@ class Llm8Spec extends AnyFunSuite {
     val df = rows.toDF("doc_id", "text", "source")
     val dir = java.nio.file.Files.createTempDirectory("llm8").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ops.LlmOps8.decls.find(_.name == name).get.fn(spark, dir).collect()
+    SparkEntry.queries(name)(spark, dir).collect()
   }
 
   test("q_llm_kldiv: identical-distribution source has KL = 0, divergent source KL > 0") {
@@ -59,7 +59,7 @@ class Llm8Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("llm8ham").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val rows = ops.LlmOps8.decls.find(_.name == "q_llm_hamming").get
+    val rows = ops.SimilarityOps.decls.find(_.name == "q_llm_hamming").get
       .fn(spark, dir).collect()
       .filter(_.getLong(0) == 0L)
       .map(r => r.getLong(2) -> r.getInt(3)).toMap

@@ -17,7 +17,7 @@ class Llm9Spec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("llm9").toString
     df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    ops.LlmOps9.trainBpe(spark, dir, k)
+    ops.TextStatsOps.trainBpe(spark, dir, k)
   }
 
   test("q_llm_bpe: merges follow hand-computed pair counts and stop when no pairs remain") {
@@ -56,7 +56,7 @@ class Llm9Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("llm9mmr").toString
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val picks = ops.LlmOps9.mmrRanks(spark, dir)
+    val picks = ops.SimilarityOps.mmrRanks(spark, dir)
     val order = picks.map(_.vecId)
     assert(order == Seq(1L, 3L, 2L),
       s"diverse vec must outrank the near-duplicate: $order")
@@ -74,13 +74,13 @@ class Llm9Spec extends AnyFunSuite {
       d
     }
     // 4 words x 2 chars; both bigrams merge within 10 steps → 1 token/word
-    val (_, syms) = ops.LlmOps9.trainBpe(spark, dir, 10)
+    val (_, syms) = ops.TextStatsOps.trainBpe(spark, dir, 10)
     val nToks = syms.iterator.map { case (f, s) => f * s.length }.sum
     assert(nToks == 4L, s"expected 1 token per word, got $nToks tokens")
     // and the declared contract rows: corpus pins exact words/chars
     // with the token bounds measured true; planted is the literal
     // known-answer row
-    val rows = ops.LlmOps9.decls.find(_.name == "q_llm_bpe_compress").get
+    val rows = ops.TextStatsOps.decls.find(_.name == "q_llm_bpe_compress").get
       .fn(spark, dir).collect()
     val c = rows.find(_.getString(0) == "corpus").get
     assert(c.getLong(1) == 4L && c.getLong(2) == 8L &&
@@ -113,7 +113,7 @@ class Llm9Spec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
       d
     }
-    val rows = ops.LlmOps9.decls.find(_.name == "q_llm_bpe").get
+    val rows = ops.TextStatsOps.decls.find(_.name == "q_llm_bpe").get
       .fn(spark, dir).filter(col("part") === "corpus").collect()
     assert(rows.length == 10, s"expected 10 padded corpus rows, got ${rows.length}")
     assert(rows(0).getString(2) == "a" && rows(0).getString(3) == "b" &&
@@ -123,14 +123,14 @@ class Llm9Spec extends AnyFunSuite {
         r.getBoolean(5) && r.getBoolean(6), s"padded/unpinned row shape: $r")
     }
     // and the compress corpus row counts codepoint chars exactly
-    val c = ops.LlmOps9.decls.find(_.name == "q_llm_bpe_compress").get
+    val c = ops.TextStatsOps.decls.find(_.name == "q_llm_bpe_compress").get
       .fn(spark, dir).collect().find(_.getString(0) == "corpus").get
     assert(c.getLong(1) == 4L && c.getLong(2) == 9L, s"4 words, 9 chars: $c")
   }
 
   test("q_llm_bpe planted part: the full 10-step prefix merge table, exactly") {
     import org.apache.spark.sql.functions.col
-    val rows = ops.LlmOps9.decls.find(_.name == "q_llm_bpe").get
+    val rows = ops.TextStatsOps.decls.find(_.name == "q_llm_bpe").get
       .fn(spark, TestSpark.sf)
       .filter(col("part") === "planted").collect()
     assert(rows.length == 10)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.TestSpark.TableFiles
-import graft.ops.LlmOps
+import graft.ops.DedupOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,7 +91,7 @@ class OpsSpec extends AnyFunSuite {
     val nearCopies = base.select((col("doc_id") + 20000).as("doc_id"),
       regexp_replace(col("text"), "^\\S+", "changedword").as("text"))
     val corpus = base.unionByName(exactCopies).unionByName(nearCopies)
-    val candidates = LlmOps.minhashPairsDf(corpus).collect()
+    val candidates = DedupOps.minhashPairsDf(corpus).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val missedExact = (0L until 10L).map(i => (i, i + 10000)).toSet -- candidates
     assert(missedExact.isEmpty, s"minhash missed exact dups: $missedExact")

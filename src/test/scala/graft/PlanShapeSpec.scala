@@ -385,8 +385,8 @@ class PlanShapeSpec extends AnyFunSuite {
       (i.toLong, (0 until 20).map(j => s"w${i % 37}t${(i + j) % 53}").mkString(" "))
     }.toDF("doc_id", "text")
     for ((tag, pairs) <- Seq(
-        "minhash" -> graft.ops.LlmOps.minhashPairsDf(docs),
-        "simhash" -> graft.ops.LlmOps2.simhashPairsDf(docs))) {
+        "minhash" -> graft.ops.DedupOps.minhashPairsDf(docs),
+        "simhash" -> graft.ops.DedupOps.simhashPairsDf(docs))) {
       // collect() (not write) so the FINAL adaptive plan lands on THIS
       // queryExecution — a write action plans its own execution and
       // leaves this one un-executed (isFinalPlan=false, no stages)

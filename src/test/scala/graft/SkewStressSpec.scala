@@ -62,7 +62,7 @@ class SkewStressSpec extends AnyFunSuite {
     val n = 50000
     val docs = corpus(n, 2000)
     val ((total, star), secs) = timed {
-      pairStats(graft.ops.LlmOps.minhashPairsDf(docs, maxBucket = 64))
+      pairStats(graft.ops.DedupOps.minhashPairsDf(docs, maxBucket = 64))
     }
     info(f"minhash 50k-family + 2k background: $total pairs in $secs%.1f s " +
       f"(uncapped would be ${n.toLong * (n - 1) / 2} pairs)")
@@ -79,7 +79,7 @@ class SkewStressSpec extends AnyFunSuite {
     val n = 50000
     val docs = corpus(n, 2000)
     val ((total, star), secs) = timed {
-      pairStats(graft.ops.LlmOps2.simhashPairsDf(docs, maxBucket = 64))
+      pairStats(graft.ops.DedupOps.simhashPairsDf(docs, maxBucket = 64))
     }
     info(f"simhash 50k-family + 2k background: $total pairs in $secs%.1f s")
     // exact duplicates share ALL simhash bits, so sub-splitting lands
@@ -106,7 +106,7 @@ class SkewStressSpec extends AnyFunSuite {
     }
     val emb = (fam ++ bg).toDF("vec_id", "e").repartition(8)
     val ((total, star), secs) = timed {
-      val pairs = graft.ops.LlmOps3.embdupLshPairs(spark, emb,
+      val pairs = graft.ops.DedupOps.embdupLshPairs(spark, emb,
         nlistOpt = Some(8), maxBucket = 64)
       val r = pairs.agg(
         count(lit(1)).as("n"),
@@ -124,11 +124,11 @@ class SkewStressSpec extends AnyFunSuite {
     val n = 2000
     val docs = corpus(n, 2000)
     val ((cappedTotal, cappedStar), cappedSecs) = timed {
-      pairStats(graft.ops.LlmOps.minhashPairsDf(docs, maxBucket = 64))
+      pairStats(graft.ops.DedupOps.minhashPairsDf(docs, maxBucket = 64))
     }
     val ((uncappedTotal, _), uncappedSecs) = timed {
       // a cap above any bucket size = the pre-cap all-pairs semantics
-      pairStats(graft.ops.LlmOps.minhashPairsDf(docs, maxBucket = 1 << 30))
+      pairStats(graft.ops.DedupOps.minhashPairsDf(docs, maxBucket = 1 << 30))
     }
     info(f"2k family: capped $cappedTotal pairs in $cappedSecs%.2f s; " +
       f"uncapped $uncappedTotal pairs in $uncappedSecs%.2f s " +
